@@ -188,8 +188,9 @@ object Dedup {
     * bucket (P(bucket hit) = 1-(1-1/B)^keys) and pruning degrades to the
     * full scan — a 1k-doc batch carries ~23k distinct shingle keys
     * (sf0.1 measured), so small-batch continuous ingest prunes hard while
-    * bulk batches saturate feasible bucket counts; IncCcBench measures
-    * both regimes.
+    * bulk batches saturate feasible bucket counts; both regimes are
+    * measured in `bench/scale_sweep_r14/iC*_*.json` (SCALING.md, Text
+    * dedup ladder).
     */
   def ngramPostingsBucketed(docs: DataFrame, idCol: String, textCol: String,
       k: Int, nBuckets: Int): DataFrame = {
@@ -265,7 +266,8 @@ object Dedup {
         idCol, textCol, k, threshold).select("i", "j"))
 
   /** The delta-sized LABEL-UPDATE set a production ingest persists —
-    * IncCcBench's step formulation, factored here so Round13Spec can pin
+    * the fixed-delta step formulation (`bench/scale_sweep_r13/iC_*.json`),
+    * factored here so Round13Spec can pin
     * it against q232's oracle-verified full relabel. Inputs: the persisted
     * (id, label) table, the MATERIALIZED (i, j) pair delta
     * ([[incrementalCcPairs]], checkpointed by the caller), and the batch's

@@ -1,5 +1,6 @@
 package graft.ext
 import graft.util.Pin._
+import graft.util.DevTiming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -82,23 +83,13 @@ object Graph {
     }
     def release(ids: Set[Int]): Unit =
       graft.util.CheckpointGen.release(sc, ids)
-    // stage wall-times to stderr when GRAFT_CORE_TIMING is set (the
-    // coreness dev knob, shared) — brackets the operator's three
-    // materializations so the per-phase budget is measured, not guessed
-    def prTimed[A](label: String)(f: => A): A =
-      if (!sys.env.contains("GRAFT_CORE_TIMING")) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[pr] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
     val result = locally {
       // materialize the caller-built edge list ONCE before doubling it:
       // the two union branches below would otherwise each recompute the
       // full upstream build (exchange reuse does not cross union branches
       // here — measured as the dominant cost of the whole operator)
       val (pairs0, pairs0Ids) = checkpointed {
-        prTimed("edge build ckpt")(spark.createDataFrame(
+        DevTiming("pr", "edge build ckpt")(spark.createDataFrame(
           undirectedEdges.select(col("src"), col("dst")).rdd,
           undirectedEdges.select(col("src"), col("dst")).schema)
           .pin())
@@ -112,11 +103,11 @@ object Graph {
       // edgesW is live — releasing pairs0 early with a live lazy `deg`
       // would lose its checkpoint blocks mid-broadcast.
       val (deg, degIds) = checkpointed {
-        prTimed("degree ckpt")(
+        DevTiming("pr", "degree ckpt")(
           both.groupBy("src").agg(count(lit(1)).as("deg")).pin())
       }
       val (edgesW, edgesWIds) = checkpointed {
-        prTimed("edgesW ckpt")(both.join(broadcast(deg), "src").pin())
+        DevTiming("pr", "edgesW ckpt")(both.join(broadcast(deg), "src").pin())
       }
       release(pairs0Ids) // edgesW is truncated — the raw pair copy is dead
       var ranks = deg.select(col("src").as("id"), lit(1000000L).as("r"))
@@ -124,7 +115,7 @@ object Graph {
       // materialize the final ranks (|V| rows) so the 2|E| weighted edge
       // list can be released NOW instead of staying pinned for the session,
       // and so downstream actions replay a table read, not the whole loop
-      val out = prTimed(s"$iterations rank rounds + final ckpt")(
+      val out = DevTiming("pr", s"$iterations rank rounds + final ckpt")(
         ranks.select(col("id"), (col("r") / 1000000.0).as("rank"))
           .pin())
       release(edgesWIds)
@@ -267,8 +258,9 @@ object Graph {
     *   peeling-tree and one-round-ring shapes, so production callers
     *   should not have to know their graph's shape), "delta", or "sync".
     *   sync re-evaluates every vertex each round and terminates on a
-    *   no-change round — the in-harness comparator CorenessBench times
-    *   against the delta schedule, and Round16Spec pins exact-equal to.
+    *   no-change round — the comparator the archived sweeps timed
+    *   against the delta schedule (`bench/scale_sweep_r16`…`r19`), and
+    *   Round16Spec pins exact-equal to.
     *   The restriction the delta schedule applies drops only
     *   provably-unchanged evaluations, so all schedules produce the same
     *   fixpoint; they differ only in per-round work (full |E| vs the
@@ -313,8 +305,9 @@ object Graph {
     * are supersets). On the ring the rule never fires before convergence
     * (Σ deg(changed) = 9M ≥ |V|/2 = 4M) → auto ≡ sync; on the tree it
     * fires as soon as the peel's frontier collapses → auto ≡ delta plus
-    * at most the pre-flip sync rounds. CorenessBench's
-    * SPARK_GRAFT_AUTO_COMPARE leg times it on both shapes.
+    * at most the pre-flip sync rounds. Its timings on both shapes are
+    * archived in `bench/scale_sweep_r18/core_*.json` and
+    * `bench/scale_sweep_r19/core_*.json`.
     */
   def corenessAdaptive(undirectedEdges: DataFrame, partitions: Int = 8,
                maxRounds: Int = 64,
@@ -467,7 +460,7 @@ object Graph {
   /** Shared no-op default for `onRoundStats` — a VAL, not a fresh lambda
     * per call, so [[corenessImpl]] can detect "no telemetry consumer" by
     * reference and keep the distributed loop whenever a caller (the
-    * schedule specs, CorenessBench) actually reads per-round vectors.
+    * schedule specs) actually reads per-round vectors.
     */
   private val noStats: (Int, Long) => Unit = (_, _) => ()
 
@@ -560,18 +553,6 @@ object Graph {
     val sc = spark.sparkContext
     def release(ids: Set[Int]): Unit =
       graft.util.CheckpointGen.release(sc, ids)
-    // stage wall-times to stderr when GRAFT_CORE_TIMING is set (dev knob
-    // for the scale sweeps; timings bracket ACTIONS, where lazy stages
-    // actually execute)
-    val timing = sys.env.contains("GRAFT_CORE_TIMING")
-    def timed[A](label: String)(f: => A): A =
-      if (!timing) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[coreness] $label: " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
     val result = locally {
       // edge source: in-memory (Left) doubles + pre-partitions +
       // checkpoints the caller's frame; bucketed (Right) reads the
@@ -587,9 +568,9 @@ object Graph {
             .pin()
           val pairs0Ids = graft.util.CheckpointGen.pinnedIds(pairs0)
           // guarded local fixpoint (see [[corenessLocal]]): only when no
-          // telemetry consumer is attached (the schedule specs and
-          // CorenessBench read per-round vectors from the distributed
-          // loop) and the checkpointed edge list probes driver-bounded
+          // telemetry consumer is attached (the schedule specs read
+          // per-round vectors from the distributed loop) and the
+          // checkpointed edge list probes driver-bounded
           if ((onRoundStats eq noStats) && (onRoundScan eq noScan) &&
               pairs0.schema.fields.forall(
                 _.dataType == org.apache.spark.sql.types.LongType)) {
@@ -617,11 +598,12 @@ object Graph {
           // window+groupBy, the next-active distinct), and localCheckpoint
           // preserves the physical partitioning, so the edge table pays its
           // exchange ONCE for the whole fixpoint instead of once per round.
-          val b = timed("setup: double+repartition edges")(pairs0.unionAll(
-              pairs0.select(col("dst").as("src"), col("src").as("dst")))
-            .select(col("src").as("v"), col("dst").as("u"))
-            .repartition(partitions, col("v"))
-            .pin())
+          val b = DevTiming("coreness", "setup: double+repartition edges")(
+            pairs0.unionAll(
+                pairs0.select(col("dst").as("src"), col("src").as("dst")))
+              .select(col("src").as("v"), col("dst").as("u"))
+              .repartition(partitions, col("v"))
+              .pin())
           val ids = graft.util.CheckpointGen.pinnedIds(b)
           release(pairs0Ids)
           (b, b, ids, 0)
@@ -636,7 +618,7 @@ object Graph {
       // exact incident-edge count (Σ deg over the frontier) a free
       // aggregate over the already-checkpointed frontier — the quantity
       // that decides each round's join direction (see scaladoc).
-      var c = timed("setup: degrees")(
+      var c = DevTiming("coreness", "setup: degrees")(
         both.groupBy("v").agg(count(lit(1)).as("c"))
           .select(col("v").as("id"), col("c"), col("c").as("deg"))
           .pin())
@@ -717,7 +699,7 @@ object Graph {
             if (!frontierLocal) (t, Set.empty[Int])
             else {
               val tPlan = t.select(col("v"), col("u"))
-              val tm = timed(s"round $rounds: touched")(
+              val tm = DevTiming("coreness", s"round $rounds: touched")(
                 tPlan.pin())
               if (bucketedMode) {
                 // scan telemetry off the just-executed plan (driver-side
@@ -771,7 +753,7 @@ object Graph {
           if (nActive <= broadcastVertexCeiling && nActive * 2 < nVerts)
             broadcast(evald)
           else evald
-        val merged = timed(s"round $rounds: eval+merge") {
+        val merged = DevTiming("coreness", s"round $rounds: eval+merge") {
           c.join(eSide, c("id") === eSide("v"), "left")
           .select(col("id"), coalesce(col("h"), col("c")).as("c"),
             col("deg"),
@@ -792,7 +774,7 @@ object Graph {
         def advanceFrontier(knownChanged: Option[Long]): Unit = {
           val changed = merged.filter(col("chg"))
             .select(col("id").as("chid"), col("c").as("cnew"))
-          val nextActive = timed(s"round $rounds: frontier")(
+          val nextActive = DevTiming("coreness", s"round $rounds: frontier")(
             if (frontierLocal) {
               // reuse the materialized touched edges: both is symmetric
               // and changed ⊆ active, so edges INTO the changed set are
@@ -822,11 +804,11 @@ object Graph {
               // full-shuffle-expensive — is one count job spent to
               // decide (skipped when the auto flip already measured it).
               // The count runs as its own TIMED val (visible in
-              // GRAFT_CORE_TIMING, computed exactly once per round)
+              // GRAFT_DEMO_TIMING, computed exactly once per round)
               // rather than inline in the broadcast condition.
               val chBounded = nActive <= broadcastVertexCeiling ||
                 knownChanged.getOrElse {
-                  timed(s"round $rounds: changed count")(
+                  DevTiming("coreness", s"round $rounds: changed count")(
                     merged.filter(col("chg")).count())
                 } <= broadcastVertexCeiling
               val chSide = if (chBounded) broadcast(changed) else changed
@@ -851,7 +833,7 @@ object Graph {
               Seq(collect_set(edgeBucket(col("v"), nBuckets)),
                 min(col("v")), max(col("v")))
             else Nil)
-          val stats = timed(s"round $rounds: stats")(
+          val stats = DevTiming("coreness", s"round $rounds: stats")(
             nextActive.agg(statAggs.head, statAggs.tail: _*).head())
           nActive = stats.getLong(0)
           nIncident = if (stats.isNullAt(1)) 0L else stats.getLong(1)
@@ -874,7 +856,7 @@ object Graph {
           // synchronous schedule: terminate on a no-change round, else
           // re-evaluate ALL vertices next round (active stays None = full
           // width); the frontier machinery never runs
-          val nChanged = timed(s"round $rounds: count changed")(
+          val nChanged = DevTiming("coreness", s"round $rounds: count changed")(
             merged.filter(col("chg")).count())
           nActive = if (nChanged == 0) 0 else nVerts
         } else {
@@ -884,7 +866,7 @@ object Graph {
           // candidate bound (Σ deg(changed): each changed vertex can
           // activate at most deg neighbors) against |V|/2 (see
           // corenessAdaptive's scaladoc for the measured rationale).
-          val chStats = timed(s"round $rounds: changed stats")(
+          val chStats = DevTiming("coreness", s"round $rounds: changed stats")(
             merged.filter(col("chg"))
               .agg(count(lit(1)), sum(col("deg"))).head())
           val nChanged = chStats.getLong(0)

@@ -958,7 +958,7 @@ object Similarity {
     * (ADVICE r11/r12 — the contract was documentation-only). Off by
     * default: production searches pay nothing; specs and debug sessions
     * set it. [[ExternalQueryIdOffset]] remains the one sanctioned qid
-    * construction (q236/q237/AnnSearchBench all route through
+    * construction (q236/q237/q238 all route through
     * VectorQueries.externalQueries, which applies it).
     */
   val AssertQidDisjointConf = "spark.graft.debug.assertQidDisjoint"
@@ -1435,7 +1435,8 @@ object Similarity {
     var assigned: DataFrame = null
     for (iter <- 0 until iterations) {
       // E-step: argmin distance, ties to the lowest cluster id. Shape
-      // history (KmEStepBench): the original crossJoin(broadcast) +
+      // history (SCALING.md, "Lloyd E-step shape"): the original
+      // crossJoin(broadcast) +
       // min(struct) aggregate multiplies every vector ×k through struct
       // churn and an exchange-bearing aggregate — 12.2 s/iteration at
       // k=1024 on 20k vectors. NearestInSetDot is the same argmin as ONE

@@ -150,7 +150,8 @@ case class NearestInSet(child: Expression, cands: Array[Double], dim: Int)
   * feeds oracle-hash-checked outputs (q104's dist column, boundary
   * assignments) — this variant is the drop-in that keeps every oracle
   * bit-exact while removing the ×k row multiplication and the argmin
-  * aggregate (KmEStepBench: 12.2 s → 2.7 s per iteration at k=1024 on
+  * aggregate (SCALING.md "Lloyd E-step shape": 12.2 s → 2.7 s per
+  * iteration at k=1024 on
   * 20k vectors). Same tie rule as the min(struct) it replaces: strict <
   * over candidates in index order ≡ lowest cid when the caller feeds the
   * matrix cid-sorted. Σc² per candidate is precomputed once

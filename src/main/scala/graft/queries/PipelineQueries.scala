@@ -1,5 +1,6 @@
 package graft.queries
 import graft.util.Pin._
+import graft.util.DevTiming
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -391,20 +392,6 @@ object PipelineQueries {
             "bin_offset", "r", "shard")
     snapshot
   }
-
-  /** Stage wall-times for the maintenance demos to stderr when
-    * GRAFT_DEMO_TIMING is set (dev knob, the Graph.GRAFT_CORE_TIMING
-    * pattern — the r18-verdict-#6 floor profile for q264; timings
-    * bracket ACTIONS, where the lazy stages actually execute).
-    */
-  private def demoTimed[A](label: String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_DEMO_TIMING")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[demo] $label: " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
   /** q263's SERVE: cut the training snapshot from state views only —
     * survivors (merge-on-read labels filtered to min-id cluster reps:
@@ -1868,7 +1855,8 @@ object PipelineQueries {
     // relabel — an oracle-output shape); this verifies the DELTA-SIZED
     // WRITE a production step actually persists: Dedup's changed ∪ fresh
     // ∪ singles update set against the persisted postings/sizes/labels
-    // state (the exact seam IncCcBench times and Round13Spec pins). The
+    // state (the seam Round13Spec pins; its fixed-delta step times are
+    // archived in bench/scale_sweep_r13/iC_*.json). The
     // DuckDB twin derives the same set from two reachability closures —
     // corpus-only (o_comp = the persisted labels) and full (comp = the
     // rebuild): changed = ids whose closure label moved, fresh = ids the
@@ -2028,8 +2016,9 @@ object PipelineQueries {
         |  WHERE d.doc_id % 5 = 0
         |    AND d.doc_id NOT IN (SELECT id FROM comp))
         |SELECT id, label FROM fin ORDER BY id""".stripMargin),
-      // v1 comparator loop: CcStoreBench owns its v1-vs-v2 measurement;
-      // the default bench tier skips it (r17 verdict #6)
+      // v1 comparator loop: its v1-vs-v2 measurement is archived in
+      // bench/scale_sweep_r17/ccstore_repl*.json and v1 ≡ v2 is pinned by
+      // Round16Spec, so the default bench tier skips it (r17 verdict #6)
       benchSkip = true),
 
     // ---- RESTART-RESUME for the streaming maintenance loop (r14 #1) ----
@@ -2663,9 +2652,9 @@ object PipelineQueries {
           // $root/in) and overlaps the whole init (guide §2.6).
           var schema: org.apache.spark.sql.types.StructType = null
           graft.util.Par.run(
-            () => schema = demoTimed("q264 stage-ingest")(
+            () => schema = DevTiming("demo", "q264 stage-ingest")(
               stageCcIngest(s, docs, root)),
-            () => demoTimed("q264 init: postings+pairs+coreness bases")(
+            () => DevTiming("demo", "q264 init: postings+pairs+coreness bases")(
               Streams.ccStoreInit(docs.filter(col("doc_id") % 5 =!= 0),
                 s"$root/state", k = 3, threshold = 0.3, nBuckets = 64,
                 onInitPairs = Some { pairs =>
@@ -2673,7 +2662,8 @@ object PipelineQueries {
                   // write disjoint stores — overlapped (guide §2.6); the
                   // label base (the init guard) still commits last,
                   // inside ccStoreInit
-                  demoTimed("q264 init: pairs+coreness bases (overlapped)")(
+                  DevTiming("demo",
+                      "q264 init: pairs+coreness bases (overlapped)")(
                     graft.util.Par.run(
                       () => bucketedPairs(pairs, 64).repartition(col("pb"))
                         .write.mode("overwrite").partitionBy("pb")
@@ -2690,7 +2680,7 @@ object PipelineQueries {
             coreStore.latestWinsView(s, bound, "id")
           val reduced = graft.util.BenchMode.reducedDemos
           val onPairs: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            (pairs, epoch) => demoTimed(s"q264 epoch $epoch onPairs") {
+            (pairs, epoch) => DevTiming("demo", s"q264 epoch $epoch onPairs") {
               // an epoch whose batch pairs with NOTHING changes no
               // component and no coreness: skip both delta writes
               // entirely (append-only content — a missing epoch is
@@ -2746,7 +2736,7 @@ object PipelineQueries {
                   .filter(col("pb").isInCollection(hit)).drop("pb"))
                 .join(hint(affected.select(col("id").as("i")), nAff),
                   Seq("i"), "left_semi")
-              demoTimed(s"q264 epoch $epoch pair delta + coreness " +
+              DevTiming("demo", s"q264 epoch $epoch pair delta + coreness " +
                   "(overlapped)")(
                 graft.util.Par.run(
                   () => bucketedPairs(pairs.select("i", "j"), 64)
@@ -2790,7 +2780,7 @@ object PipelineQueries {
           val q = demoIngest(s, schema, root, reduced)
             .writeStream.option("checkpointLocation", s"$root/ckpt")
             .foreachBatch(step).start()
-          demoTimed("q264 stream (ccStoreStep incl. onPairs)")(
+          DevTiming("demo", "q264 stream (ccStoreStep incl. onPairs)")(
             try q.processAllAvailable() finally q.stop())
           if (!reduced) {
             require(pairStore.latestCompleteBase() >= 1,
@@ -2798,7 +2788,7 @@ object PipelineQueries {
             require(coreStore.latestCompleteBase() >= 1,
               "the coreness fold did not fire mid-stream")
           }
-          demoTimed("q264 serve: coreness view")(
+          DevTiming("demo", "q264 serve: coreness view")(
             coreView(Long.MaxValue)
               .select(col("id").as("doc_id"), col("coreness"))
               .orderBy("doc_id")

@@ -27,9 +27,12 @@ case class QueryDef(
       * Correctness handling (Verify/oracle) is identical either way.
       */
     evalOnly: Boolean = false,
-    /** Comparator/demonstration query whose MEASUREMENT duty a dedicated
-      * bench harness already owns (q242: the v1 full-rewrite loop that
-      * CcStoreBench grades v2 against): Bench's default tier skips it —
+    /** Comparator/demonstration query whose measurement is archived and
+      * whose equality is spec-pinned. q242, the v1 full-rewrite loop the
+      * v2 store was graded against: its v1-vs-v2 write-cost claim is
+      * archived in `bench/scale_sweep_r17/ccstore_repl*.json` (SCALING.md,
+      * Text dedup ladder, r16/r17), and v1 ≡ v2 labels are pinned by
+      * Round16Spec. Bench's default tier skips it —
       * its ~9 s idle cost measures superseded-comparator scaffolding,
       * not engine capability — and stamps the skip into the JSON
       * (`bench_skipped`). GRAFT_BENCH_FULL_DEMOS=1 restores it.

@@ -607,7 +607,7 @@ object ScaleOpsQueries {
 
     // ---- incremental dedup against the BUCKET-PARTITIONED posting state --
     // q79 screens a batch against the corpus by re-shingling both sides;
-    // q240/IncCcBench probe a PERSISTED flat posting index. This runs the
+    // q240 probes a PERSISTED flat posting index. This runs the
     // round-14 storage layout end to end, driver-checked: the corpus
     // postings are persisted hive-partitioned by pmod(sk, 256)
     // (Dedup.ngramPostingsBucketed — one file per bucket dir), and the

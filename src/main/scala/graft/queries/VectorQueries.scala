@@ -2378,7 +2378,8 @@ object VectorQueries {
 
     // ---- k-means‖ seeding wired into the two-level PRODUCTION build ----
     // kmeansParallelCentroids existed, was spec-pinned and benched
-    // (KmInitBench: init 2.2/4.7/24.6 s vs ++'s 11.8/14.3/30.4 s across
+    // (bench/scale_sweep_r13/kmInit_*.json: init 2.2/4.7/24.6 s vs ++'s
+    // 11.8/14.3/30.4 s across
     // the 1×/10×/100× corpora at k=64), but no composed artifact used it
     // (r13 verdict #3). Here the ‖-seeded Lloyd centroids ARE the
     // fine-cell table of the two-level build (buildIvfPqIndexTwoLevelWith
@@ -2394,7 +2395,8 @@ object VectorQueries {
     // routing, build, ADC shortlist and exact rerank bit-identically end
     // to end (q227's argument with the seeding swapped in). Seeding
     // QUALITY at production knobs is measured territory —
-    // KmInitBench (seed cost/quality ±1% vs ++) and Round13Spec (>10×
+    // bench/scale_sweep_r13/kmInit_*.json (seed cost/quality ±1% vs ++)
+    // and Round13Spec (>10×
     // blob recovery vs first-n) — not oracle territory.
     QueryDef("q241_kmeans_par_seeded_index",
       (s, dir) => {
@@ -2507,7 +2509,8 @@ object VectorQueries {
     // deltas accumulate one small dir per epoch, and file COUNT is a
     // first-class scale variable (the r14 bucket-probe sweep measured
     // per-file open overhead EXCEEDING pruning savings at ~25 KB files —
-    // IncCcBench step_bucketed_s vs step_s). Here the fragmented store
+    // bench/scale_sweep_r14/iC*_*.json step_bucketed_s vs step_s). Here
+    // the fragmented store
     // (base written wide + two per-epoch deltas, the q223 append split
     // staged as parquet dirs) is compacted by one distributed rewrite —
     // Similarity.compactIndex: repartition to target file count, rows
@@ -3127,9 +3130,9 @@ object VectorQueries {
 
   /** The 20 deterministic external query vectors (q225's md5-parity ±0.025
     * jitter of the first corpus vectors, ids offset by
-    * [[Similarity.ExternalQueryIdOffset]]) — package-visible so
-    * AnnSearchBench times search over the same query set q236/q237/q238
-    * verify.
+    * [[Similarity.ExternalQueryIdOffset]]) — package-visible so the
+    * persisted-index search split (bench/scale_sweep_r13/aS_*.json) timed
+    * the same query set q236/q237/q238 verify.
     */
   private[graft] def externalQueries(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {

@@ -1,5 +1,7 @@
 package graft.streaming
 import graft.util.Pin._
+import graft.util.DevTiming
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,20 +17,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object Streams {
 
   import org.apache.spark.sql.types._
-
-  /** Stage wall-times of the v2-store init/step to stderr when
-    * GRAFT_DEMO_TIMING is set — the PipelineQueries.demoTimed /
-    * Graph.GRAFT_CORE_TIMING dev pattern, brought inside the store loop
-    * so the per-epoch job budget is measurable without guessing.
-    */
-  private def stepTimed[A](label: String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_DEMO_TIMING")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[step] $label: " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
 
   /** Canonical events schema — single owner for every source format that
     * must declare it up front (kafka's from_json, external landing zones).
@@ -504,23 +492,31 @@ object Streams {
     }.start()
   }
 
-  /** O7 error-passthrough host around a per-batch pipeline: on any failure
-    * the ORIGINAL batch is forwarded untouched (batch-atomic), mirroring
-    * `/root/reference/plugin.cpp:295-310`. For streaming use inside
-    * foreachBatch; also applicable to batch DataFrames.
+  /** O7 error-passthrough host around a per-batch pipeline: on any
+    * non-fatal failure the ORIGINAL batch is forwarded untouched
+    * (batch-atomic), mirroring `/root/reference/plugin.cpp:295-310`. The
+    * failed attempt's cache entry is released before the passthrough (the
+    * caller only ever sees `batch`, so it could not release it). Fatal
+    * throwables — an interrupt from stopping the query included —
+    * propagate instead of delivering a passthrough batch. For streaming
+    * use inside foreachBatch; also applicable to batch DataFrames.
     */
-  def guardedBatch(pipeline: DataFrame => DataFrame)(batch: DataFrame): DataFrame =
+  def guardedBatch(pipeline: DataFrame => DataFrame)(batch: DataFrame): DataFrame = {
+    var cached: Option[DataFrame] = None
     try {
       val out = pipeline(batch)
       out.cache()
+      cached = Some(out) // the cache entry exists once cache() returns
       out.count() // force evaluation so runtime errors trigger the fallback
       out
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
+        cached.foreach(_.unpersist(blocking = false))
         org.slf4j.LoggerFactory.getLogger("graft")
           .warn(s"batch pipeline failed, passing through original: ${e.getMessage}")
         batch
     }
+  }
 
   /** Exactly-once parquet sink via idempotent per-batch overwrite: every
     * micro-batch writes (only) its own `batch=<id>` directory with
@@ -693,8 +689,8 @@ object Streams {
     *   slightly UNDERSTATES the rewrite (r17 ADVICE). Step wall-clock at
     *   bench scale is dominated by the shared probe/shingle floor both
     *   loops pay, so the v1-vs-v2 claim needs the label-write path
-    *   timed in isolation (r16 verdict #6); CcStoreBench stamps these
-    *   into its JSON.
+    *   timed in isolation (r16 verdict #6); the archived per-epoch
+    *   times are in `bench/scale_sweep_r17/ccstore_repl*.json`.
     */
   def ccMaintenanceDiskStep(stateRoot: String, k: Int = 3,
       threshold: Double = 0.5,
@@ -753,7 +749,8 @@ object Streams {
     // shared posting path. The kill-point contract ("after the label
     // write, before the posting/size writes") is untouched: the kill
     // check above still precedes both, and the label-path timing window
-    // (onLabelWrite — the v1-vs-v2 comparison CcStoreBench stamps)
+    // (onLabelWrite — the v1-vs-v2 comparison archived in
+    // bench/scale_sweep_r17/ccstore_repl*.json)
     // closed before either branch starts.
     graft.util.Par.run(
       () => writePostingGen(bp, s"$gens/postings/epoch=$epoch", nBuckets),
@@ -838,14 +835,14 @@ object Streams {
     if (java.nio.file.Files.exists(java.nio.file.Paths
         .get(s"$stateRoot/gens/label_base/g=-1/_SUCCESS"))) return
     val sc = s.sparkContext
-    val postings = stepTimed("init postings ckpt")(graft.ext.Dedup
+    val postings = DevTiming("step", "init postings ckpt")(graft.ext.Dedup
       .ngramPostings(corpus, "doc_id", "text", k).pin())
     val pins = graft.util.CheckpointGen.pinnedIds(postings)
     // the two base writes both read the checkpointed postings and write
     // disjoint dirs — overlapped (guide §2.6) so the size aggregate's
     // tasks back-fill the posting write's task tail; the label base (the
     // init guard) still commits strictly last, below
-    stepTimed("init posting+size base writes (overlapped)")(
+    DevTiming("step", "init posting+size base writes (overlapped)")(
       graft.util.Par.run(
         () => writePostingGen(postings,
           s"$stateRoot/gens/posting_base/g=-1", nBuckets),
@@ -861,17 +858,17 @@ object Streams {
     onInitPairs match {
       case None =>
         // the lazy pair join materializes once, inside CC's first round
-        stepTimed("init pairs+CC+label_base write")(
+        DevTiming("step", "init pairs+CC+label_base write")(
           graft.ext.Dedup.connectedComponents(pairsLazy)
             .write.mode("overwrite")
             .parquet(s"$stateRoot/gens/label_base/g=-1"))
       case Some(hook) =>
         // composed init: checkpoint the pair set ONCE; the hook and CC
         // both read the materialized frame (label base still last)
-        val pairs = stepTimed("init pairs ckpt")(
+        val pairs = DevTiming("step", "init pairs ckpt")(
           pairsLazy.select("i", "j").pin())
-        stepTimed("init onInitPairs hook")(hook(pairs))
-        stepTimed("init CC+label_base write")(
+        DevTiming("step", "init onInitPairs hook")(hook(pairs))
+        DevTiming("step", "init CC+label_base write")(
           graft.ext.Dedup.connectedComponents(pairs)
             .write.mode("overwrite")
             .parquet(s"$stateRoot/gens/label_base/g=-1"))
@@ -1040,24 +1037,24 @@ object Streams {
     val sc = s.sparkContext
     import graft.ext.Dedup
     import graft.util.CheckpointGen
-    val b = stepTimed(s"e$epoch batch ckpt")(batch.pin())
+    val b = DevTiming("step", s"e$epoch batch ckpt")(batch.pin())
     val bPins = CheckpointGen.pinnedIds(b)
-    val bp = stepTimed(s"e$epoch batch postings ckpt")(
+    val bp = DevTiming("step", s"e$epoch batch postings ckpt")(
       Dedup.ngramPostings(b, "doc_id", "text", k).pin())
     val bpPins = CheckpointGen.pinnedIds(bp)
     val postingsAll = ccStorePostingsView(s, stateRoot, epoch)
     val postings =
       if (nBuckets <= 0) postingsAll
-      else stepTimed(s"e$epoch bucket prune")(
+      else DevTiming("step", s"e$epoch bucket prune")(
         Dedup.pruneToBatchBuckets(postingsAll, bp, nBuckets))
     val sizes = ccStoreSizesView(s, stateRoot, epoch)
     val labels = ccStoreLabelsView(s, stateRoot, epoch)
-    val newPairs = stepTimed(s"e$epoch pair delta ckpt")(
+    val newPairs = DevTiming("step", s"e$epoch pair delta ckpt")(
       Dedup.incrementalCcPairs(postings, sizes, b,
           "doc_id", "text", k, threshold)
         .pin())
     val pairPins = CheckpointGen.pinnedIds(newPairs)
-    val updates = stepTimed(s"e$epoch label updates")(
+    val updates = DevTiming("step", s"e$epoch label updates")(
       Dedup.incrementalCcLabelUpdates(labels, newPairs,
         b.select(col("doc_id").as("id"))))
     val labelWriteT0 = System.nanoTime()
@@ -1069,7 +1066,7 @@ object Streams {
     // commit; a crash in between leaves a complete delta whose readers
     // heal by counting once (GenStore.deltaRows).
     val updObs = org.apache.spark.sql.Observation(s"cc_upd_rows_$epoch")
-    stepTimed(s"e$epoch update delta write")(
+    DevTiming("step", s"e$epoch update delta write")(
       updates.observe(updObs, count(lit(1)).as("n"))
         .write.mode("overwrite").parquet(s"$stateRoot/updates/batch=$epoch"))
     ccLabelStore(stateRoot).writeDeltaRowsSidecar(epoch,
@@ -1092,14 +1089,14 @@ object Streams {
     // disjoint epoch dirs — overlapped (guide §2.6). The kill-point
     // contract ("after the update delta, before the posting/size deltas")
     // is untouched: the kill check above still precedes both.
-    stepTimed(s"e$epoch posting+size delta writes (overlapped)")(
+    DevTiming("step", s"e$epoch posting+size delta writes (overlapped)")(
       graft.util.Par.run(
         () => writePostingGen(bp,
           s"$stateRoot/gens/postings/epoch=$epoch", nBuckets),
         () => Dedup.ngramPostingSizes(bp).write.mode("overwrite")
           .parquet(s"$stateRoot/gens/sizes/epoch=$epoch")))
     CheckpointGen.release(sc, bPins ++ bpPins)
-    val folded = stepTimed(s"e$epoch fold")(
+    val folded = DevTiming("step", s"e$epoch fold")(
       ccStoreFoldIfNeeded(s, stateRoot, epoch, nBuckets,
         maxLabelDeltas, maxPostingGens, maxLabelDeltaRows))
     if (gcAfterFold && folded.nonEmpty) { ccStoreGc(stateRoot); () }

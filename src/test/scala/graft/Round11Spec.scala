@@ -183,12 +183,16 @@ class Round11Spec extends SparkSpec {
         .select("qid", "rn", "nid").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
         .sortBy(t => (t._1, t._2))
-      val viaIndex = rows(
+      def search() = rows(
         Similarity.ivfPqSearchQueries(index, xq, qcells, 3, rerank = n))
+      val viaIndex = search()
       val brute = rows(Similarity.bruteForceTopK(
         xq.select(col("qid").as("vec_id"), col("qv").as("embedding")),
         emb, 3))
       assert(viaIndex.length == 15 && viaIndex.sameElements(brute))
+      // a second (warm) search over the same persisted index returns the
+      // same rows as the first (cold) one
+      assert(search().sameElements(viaIndex))
     } finally index.unpersist(blocking = false)
   }
 

@@ -11,7 +11,7 @@ import graft.ext.{Dedup, Similarity}
 class Round13Spec extends SparkSpec {
 
   private val Dir = "/root/testdata/sf0.001"
-  // the q232 / IncCcBench split: every 5th doc is the ingest batch
+  // the q232 split: every 5th doc is the ingest batch
   private def split() = {
     val docs = graft.sources.Tables.documents(spark, Dir)
     val isBatch = col("doc_id") % 5 === 0

@@ -36,6 +36,8 @@ class Round14Spec extends SparkSpec {
     val pruned = pairs(Dedup.pruneToBatchBuckets(bucketed, bPost, 64))
     assert(full.nonEmpty, "fixture produced no cross-corpus pairs")
     assert(pruned.sameElements(full))
+    // the bucketed layout probed WITHOUT pruning is the same state too
+    assert(pairs(bucketed.drop("bucket")).sameElements(full))
   }
 
   test("bucket pruning reaches the parquet scan: only the batch's bucket " +

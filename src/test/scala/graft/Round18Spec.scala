@@ -109,6 +109,10 @@ class Round18Spec extends SparkSpec {
       assert(autoOut.nonEmpty && autoOut == deltaOut && autoOut == syncOut,
         s"[$name] adaptive output diverged from a fixed schedule")
       if (name == "ring") {
+        // known values: every vertex sits in an 8-clique (coreness >= 7)
+        // and no 8-core exists (intra degree 7) — coreness 7 everywhere
+        assert(autoOut.forall(_._2 == 7L) && autoOut.size == 6 * 8,
+          s"[$name] ring of 8-cliques must be coreness-7 everywhere")
         // ring of 8-cliques: round-1 changed set = the clique heads,
         // Σ deg(changed) = 9·nCliques ≥ |V|/2 = 4·nCliques → the flip
         // rule never fires; auto runs the sync schedule verbatim

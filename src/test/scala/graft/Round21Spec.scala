@@ -12,7 +12,10 @@ import org.apache.spark.sql.functions._
   *     unwrapped;
   *   - fold_baseline.py's cal-consistent fold math (r20 verdict #9): a
   *     slow-day run's minima enter normalized to the stamp, a fast-day
-  *     run moves the stamp and its own entries fold raw.
+  *     run moves the stamp and its own entries fold raw;
+  *   - the set of runnable mains under src/main is exactly the driver
+  *     contract plus the spec-driven drivers: measurements go through
+  *     Bench and perfbench/, never a new per-round harness main.
   */
 class Round21Spec extends SparkSpec {
 
@@ -136,5 +139,35 @@ class Round21Spec extends SparkSpec {
       w.sorted(java.util.Comparator.reverseOrder())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))
     }
+  }
+
+  test("src/main defines exactly the known mains (no per-round harness)") {
+    // Bench/Verify/SmokeEntry are the driver contract, Plans/PlanProbes
+    // dump plans, and the three *Driver objects are child JVMs the
+    // store specs launch. A new measurement belongs in Bench or
+    // perfbench/; adding a main here means editing this list on purpose.
+    val expected = Set("Bench", "Verify", "SmokeEntry", "Plans",
+      "PlanProbes", "CcServeDriver", "CcRestartDriver", "GenServeDriver")
+    val objectDecl = """(?m)^\s*(?:private\S*\s+|case\s+)*object\s+(\w+)""".r
+    val mainDecl = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
+    val files = scala.util.Using.resource(java.nio.file.Files
+        .walk(java.nio.file.Paths.get("src/main"))) { w =>
+      import scala.jdk.CollectionConverters._
+      w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+    assert(files.nonEmpty, "src/main not found from the working directory")
+    val mains = files.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      val objs = objectDecl.findAllMatchIn(src)
+        .map(m => (m.start, m.group(1))).toList
+      // each main belongs to the nearest object declared above it
+      mainDecl.findAllMatchIn(src).map { m =>
+        objs.takeWhile(_._1 < m.start).lastOption.map(_._2)
+          .getOrElse(s"<no object> in $f")
+      }
+    }.toSet
+    assert(mains == expected,
+      s"unexpected: ${(mains -- expected).toSeq.sorted}; " +
+        s"missing: ${(expected -- mains).toSeq.sorted}")
   }
 }

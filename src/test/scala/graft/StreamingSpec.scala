@@ -100,15 +100,37 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("guardedBatch falls back to the original batch on runtime error") {
+    val boom = udf((d: Double) => {
+      if (d == 0.0) throw new IllegalStateException("runtime boom")
+      d
+    })
     val batch = Seq(("a", 1.0), ("b", 0.0)).toDF("k", "v")
     val out = Streams.guardedBatch { df =>
-      df.withColumn("bad", udf((d: Double) => {
-        if (d == 0.0) throw new IllegalStateException("runtime boom")
-        d
-      }).apply(col("v")))
+      df.withColumn("bad", boom(col("v")))
     }(batch)
     assert(out.columns.toSeq == Seq("k", "v")) // original, not the failed pipeline
     assert(out.count() == 2)
+    // a non-local input fails in count(), after cache() registered the
+    // attempt: the fallback must release that entry, since the caller
+    // only ever sees the original batch
+    val rangeBatch = spark.range(2).select(col("id").cast("double").as("v"))
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    var attempt: org.apache.spark.sql.DataFrame = null
+    val out2 = Streams.guardedBatch { df =>
+      attempt = df.withColumn("bad", boom(col("v")))
+      attempt
+    }(rangeBatch)
+    assert(out2.columns.toSeq == Seq("v") && out2.count() == 2)
+    assert(attempt.storageLevel ==
+      org.apache.spark.storage.StorageLevel.NONE,
+      "failed attempt is still registered in the cache")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(rddsBefore),
+      "failed attempt left a persisted RDD behind")
+    // stopping a query interrupts its batch: that must propagate, not
+    // deliver a passthrough batch
+    intercept[InterruptedException] {
+      Streams.guardedBatch(_ => throw new InterruptedException("stop"))(batch)
+    }
   }
 
   test("O9 hot reconfigure: checkpointed state survives a config swap (vs reference losing globals)") {

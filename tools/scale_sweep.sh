@@ -1,25 +1,33 @@
 #!/bin/bash
-# 1x/10x/100x wall-clock sweep of the heavy vector/dedup/CC/graph families
-# (round-9/10 scale-validation; see README "Scale validation"). Runs each
-# family batch at three corpus scales via Bench (SPARK_GRAFT_REPS=1 — at
-# these run lengths real work dominates, and growth RATIOS across scales use
-# the same configuration so subset warmup inflation cancels). Corpora:
-#   1x    /root/testdata/sf0.1      (5k docs / 2k vectors / 600k lineitem)
-#   10x   /tmp/sf10salt, /tmp/sf10rel
-#   100x  /tmp/sf100x,   /tmp/sf100rel
-# built by tools/make_stress_corpus.py (textsalt = linear-regime near-dup:
-# replicas share no shingles, embeddings rotate+sign-flip so all replicas
-# stay distinct; rel = FK-consistent key offsets).
+# Wall-clock scale sweep: runs Bench over query subsets at chosen corpus
+# scales, one leg per argument, and writes each leg's last two Bench lines
+# to OUT/<tag>.json (SPARK_GRAFT_REPS=1 — at these run lengths real work
+# dominates, and growth RATIOS across scales use the same configuration so
+# subset warmup inflation cancels).
 #
-# Ordered scale-ascending ACROSS families (all 1x, then all 10x, then 100x)
-# so an interrupted sweep still yields complete lower-scale curves; the
-# by-design candidate-mass blowup (b3 = isotropic-knob banded LSH at 100x)
-# runs dead last. Run from a SEPARATE clone (REPO=...) while developing —
-# each sbt invocation compiles the working tree it runs in.
+#   tools/scale_sweep.sh OUT tag:sfdir:queries:timeout_s[:heap] ...
+#
+# e.g. `tools/scale_sweep.sh /tmp/sweep b4_1x:/root/testdata/sf0.1:q131:1200
+# b4_100x:/tmp/sf100rel:q131:5400:48g`. `queries` is a SPARK_GRAFT_ONLY list
+# (comma-separated). The leg lists of the archived sweeps are in SCALING.md
+# ("Reproducing a sweep"). Stress corpora (/tmp/sf10salt, /tmp/sf10rel,
+# /tmp/sf100x, /tmp/sf100rel) are built by tools/make_stress_corpus.py
+# (textsalt = linear-regime near-dup: replicas share no shingles, embeddings
+# rotate+sign-flip so all replicas stay distinct; rel = FK-consistent key
+# offsets).
+#
+# Legs run in argument order: list them scale-ascending across families so
+# an interrupted sweep still yields complete lower-scale curves. Run from a
+# SEPARATE clone (REPO=...) while developing — each sbt invocation compiles
+# the working tree it runs in.
 set -u
+if [ $# -lt 2 ]; then
+  echo "usage: $0 OUT tag:sfdir:queries:timeout_s[:heap] ..." >&2
+  exit 2
+fi
 REPO=${REPO:-/root/repo}
 cd "$REPO"
-OUT=${1:-/tmp/scale_sweep_r10}
+OUT=$1; shift
 mkdir -p "$OUT"
 
 run() { # run <tag> <sfdir> <only> <timeout_s> [heap]
@@ -42,31 +50,13 @@ run() { # run <tag> <sfdir> <only> <timeout_s> [heap]
   echo "rc=$rc tail:"; cat "$OUT/$tag.json"
 }
 
-# B1: CC dedup + autoscaled semantic dedup (q222 flat n², q226 two-level n^1.5)
-# B2: IVF-PQ family                            B3: banded LSH, isotropic 48x6 knob
-# B4: PageRank (relational)
-run b1_1x   /root/testdata/sf0.1 q65,q222,q226 1200
-run b2_1x   /root/testdata/sf0.1 q216,q221,q223,q227 1200
-run b3_1x   /root/testdata/sf0.1 q205          1200
-run b4_1x   /root/testdata/sf0.1 q131          1200
-run b5_1x   /root/testdata/sf0.1 q21,q41,q85,q118 1200
-run b6_1x   /root/testdata/sf0.1 q01,q03,q06,q09 1200
-
-run b1_10x  /tmp/sf10salt        q65,q222,q226 2400
-run b2_10x  /tmp/sf10salt        q216,q221,q223,q227 2400
-run b3_10x  /tmp/sf10salt        q205          2400
-run b4_10x  /tmp/sf10rel         q131          2400
-run b5_10x  /tmp/sf10rel         q21,q41,q85,q118 2400
-run b6_10x  /tmp/sf10rel         q01,q03,q06,q09 2400
-
-run b1_100x /tmp/sf100x          q65,q222,q226 5400 48g
-run b2_100x /tmp/sf100x          q216,q221,q223,q227 5400 48g
-run b4_100x /tmp/sf100rel        q131          5400 48g
-run b5_100x /tmp/sf100rel        q21,q41,q85,q118 5400 48g
-run b6_100x /tmp/sf100rel        q01,q03,q06,q09 5400 48g
-# the 48x6 isotropic-geometry knob pays ~half of all pairs as candidate mass
-# (q225 quantifies; the production 32x16 knob is 2 orders cheaper) — run it
-# last so a blowup cannot cost any other family its measurement
-run b3_100x /tmp/sf100x          q205          5400 48g
+for leg in "$@"; do
+  IFS=: read -r tag sfdir only to mem <<< "$leg"
+  if [ -z "$tag" ] || [ -z "$sfdir" ] || [ -z "$only" ] || [ -z "$to" ]; then
+    echo "bad leg '$leg' (want tag:sfdir:queries:timeout_s[:heap])" >&2
+    exit 2
+  fi
+  run "$tag" "$sfdir" "$only" "$to" $mem
+done
 
 echo "=== sweep done ==="
