@@ -222,14 +222,15 @@ object Dedup {
   }
 
   /** [[crossCorpusJaccardPairs]] against a PREBUILT (persisted) corpus
-    * posting index — the seam incremental maintenance actually runs: per
-    * ingest, only the BATCH is shingled (batch-sized work); the corpus
-    * side is a streamed map-side probe of the persisted postings (AQE
-    * broadcasts the batch postings, so no corpus-sized shuffle — the
+    * posting index: only the BATCH is shingled (batch-sized work); the
+    * corpus side is a streamed map-side probe of the persisted postings
+    * (AQE broadcasts the batch postings, so no corpus-sized shuffle — the
     * per-ingest floor is one embarrassingly parallel scan of the posting
     * state, and every shuffle-bearing stage is delta-sized). Output
     * identical to [[crossCorpusJaccardPairs]] over the same corpus
-    * (spec-pinned, Round13Spec "indexed cross-corpus pairs").
+    * (spec-pinned, Round13Spec "indexed cross-corpus pairs"). The
+    * maintenance step runs [[incrementalCcPairsFromPostings]] instead,
+    * which probes batch postings it has already materialized.
     */
   def crossCorpusJaccardPairsIndexed(postings: DataFrame, sizes: DataFrame,
       incoming: DataFrame, idCol: String, textCol: String,
@@ -251,27 +252,49 @@ object Dedup {
       .select("i", "j", "jaccard")
   }
 
-  /** Per-ingest pair delta against PERSISTED dedup state: within-batch
-    * pairs ∪ cross corpus↔batch pairs via the posting index — the pairs
-    * seam of the incremental-CC maintenance step ([[ngramJaccardPairs]] +
-    * [[crossCorpusJaccardPairsIndexed]]; both inverted-index equi-joins,
-    * never all-pairs). Lazy (i, j) frame; callers materialize it once
-    * (localCheckpoint) — [[incrementalCcLabelUpdates]] reads it four times.
+  /** Per-ingest pair delta against PERSISTED dedup state — the pairs seam
+    * of the incremental-CC maintenance step: within-batch pairs (i < j)
+    * ∪ cross corpus↔batch pairs (corpus i, batch j), as ONE probe.
+    * `batchPostings` is the batch's [[ngramPostings]] (i, sk), passed
+    * MATERIALIZED (the step pins it once and also appends it to the
+    * posting state): corpus postings ∪ batch postings (tagged `own`)
+    * equi-join the batch postings on sk, `!own || i < j` keeps each
+    * within-batch pair once, and the intersection is counted in one
+    * aggregate. Sizes: the corpus `sizes` ((i, na), the persisted
+    * [[ngramPostingSizes]]) ∪ the batch's own. Nothing is re-shingled and
+    * nothing is cached. Output (i, j) ≡ [[ngramJaccardPairs]](batch) ∪
+    * [[crossCorpusJaccardPairsIndexed]] as a set (spec-pinned,
+    * Round13Spec). Lazy; callers pin it once —
+    * [[incrementalCcLabelUpdates]] reads it more than once.
     */
-  def incrementalCcPairs(postings: DataFrame, sizes: DataFrame,
-      batch: DataFrame, idCol: String, textCol: String,
-      k: Int, threshold: Double): DataFrame =
-    ngramJaccardPairs(batch, idCol, textCol, k, threshold).select("i", "j")
-      .unionByName(crossCorpusJaccardPairsIndexed(postings, sizes, batch,
-        idCol, textCol, k, threshold).select("i", "j"))
+  def incrementalCcPairsFromPostings(postings: DataFrame, sizes: DataFrame,
+      batchPostings: DataFrame, threshold: Double): DataFrame = {
+    val bs = ngramPostingSizes(batchPostings)
+    postings.select(col("i"), col("sk"), lit(false).as("own"))
+      .unionByName(batchPostings.select(col("i"), col("sk"),
+        lit(true).as("own")))
+      .join(batchPostings.select(col("i").as("j"), col("sk")), "sk")
+      .filter(!col("own") || col("i") < col("j"))
+      .groupBy(col("i"), col("j"))
+      .agg(count(lit(1)).as("inter"))
+      // plain joins, no broadcast hint — the ngramJaccardPairs rationale:
+      // sizes is O(|corpus|), AQE broadcasts whichever side actually fits.
+      // j is always a batch doc, so nb needs only the batch's sizes.
+      .join(sizes.select("i", "na").unionByName(bs), "i")
+      .join(bs.select(col("i").as("j"), col("na").as("nb")), "j")
+      .withColumn("jaccard",
+        col("inter") / (col("na") + col("nb") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select("i", "j")
+  }
 
   /** The delta-sized LABEL-UPDATE set a production ingest persists —
     * the fixed-delta step formulation (`bench/scale_sweep_r13/iC_*.json`),
     * factored here so Round13Spec can pin
     * it against q232's oracle-verified full relabel. Inputs: the persisted
     * (id, label) table, the MATERIALIZED (i, j) pair delta
-    * ([[incrementalCcPairs]], checkpointed by the caller), and the batch's
-    * id column. Returns (id, label) rows =
+    * ([[incrementalCcPairsFromPostings]], pinned by the caller), and the
+    * batch's id column. Returns (id, label) rows =
     *   changed — members of merged components whose canonical label moves
     *             (the label table STREAMS against the broadcast delta
     *             relabel — nothing corpus-sized crosses an exchange);
@@ -283,12 +306,71 @@ object Dedup {
     * rebuild's labels on every doc the rebuild labels, plus explicit
     * self-labels for the batch singletons (min-label canonicality — the
     * q232 argument; spec-pinned, Round13Spec "incremental label updates").
-    * Memory discipline: the result is localCheckpointed (ONE delta-sized
-    * generation the caller owns) and every intermediate generation is
-    * released before returning (CheckpointGen).
+    *
+    * Guarded local fold (the [[connectedComponentsCounted]] guard, same
+    * [[LocalCcMaxEdges]] cap): a long-keyed, null-free pair delta of at
+    * most that many rows is collected, its endpoint labels fetched by one
+    * broadcast semi-join collect, the collapsed graph folded by the driver
+    * union-find, and fresh/singles built from driver-side sets — leaving
+    * ONE distributed scan, the label table against the broadcast set of
+    * moved labels. Larger deltas run
+    * [[incrementalCcLabelUpdatesDistributed]] (≡, spec-pinned,
+    * Round13Spec). Memory discipline: the result is pinned (ONE
+    * delta-sized generation the caller owns).
     */
   def incrementalCcLabelUpdates(labels: DataFrame, newPairs: DataFrame,
       batchIds: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val s = labels.sparkSession
+    val probed =
+      if (!labels.select("id", "label").schema.fields
+          .forall(_.dataType == LongType)) None
+      else localEdges(newPairs.select("i", "j"))
+    probed match {
+      case None =>
+        incrementalCcLabelUpdatesDistributed(labels, newPairs, batchIds)
+      case Some(pairs) =>
+        import scala.jdk.CollectionConverters._
+        def local(names: Seq[String], rows: Iterable[Seq[Long]]) =
+          s.createDataFrame(
+            rows.map(org.apache.spark.sql.Row.fromSeq).toSeq.asJava,
+            StructType(names.map(StructField(_, LongType))))
+        val ends = pairs.iterator.flatMap { case (i, j) => Iterator(i, j) }
+          .toSet
+        val endsDf = local(Seq("id"), ends.map(Seq(_)))
+        val endLabel: Map[Long, Long] =
+          if (ends.isEmpty) Map.empty
+          else labels.join(broadcast(endsDf), Seq("id"), "left_semi")
+            .select("id", "label").collect()
+            .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        // the collapsed graph: each endpoint stands in for its component
+        val root = unionFindMinRoots(pairs.iterator.map { case (i, j) =>
+          (endLabel.getOrElse(i, i), endLabel.getOrElse(j, j)) })
+        val moved = root.filter { case (l, r) => l != r }
+        val changed =
+          if (moved.isEmpty) local(Seq("id", "label"), Nil)
+          else labels
+            .join(broadcast(local(Seq("dl", "nlabel"),
+              moved.map { case (l, r) => Seq(l, r) })),
+              col("label") === col("dl"))
+            .select(col("id"), col("nlabel").as("label"))
+        val fresh = local(Seq("id", "label"), (ends -- endLabel.keySet)
+          .map(e => Seq(e, root.getOrElse(e, e))))
+        val singles = batchIds.select(col(batchIds.columns.head).as("id"))
+          .join(broadcast(endsDf), Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("label"))
+        changed.unionByName(fresh).unionByName(singles).pin()
+    }
+  }
+
+  /** The distributed body of [[incrementalCcLabelUpdates]], for pair
+    * deltas past the local-fold guard: endpoint labels by a broadcast
+    * semi-join, the collapsed graph through [[connectedComponents]], and
+    * every intermediate generation released before returning
+    * (CheckpointGen).
+    */
+  private[graft] def incrementalCcLabelUpdatesDistributed(labels: DataFrame,
+      newPairs: DataFrame, batchIds: DataFrame): DataFrame = {
     val sc = labels.sparkSession.sparkContext
     var pins = Set.empty[Int]
     def ckpt(df: DataFrame): DataFrame = {
@@ -477,10 +559,10 @@ object Dedup {
     * the (in-memory, checkpointed) table in the degenerate case where no
     * observed generation materialized.
     */
-  /** Edge cap for the guarded LOCAL fixpoint inside
-    * [[connectedComponentsCounted]]: a pair list at or under this many
-    * rows (≈ 8 MB of (long, long) — the repo's bounded-driver-state
-    * class, same budget family as
+  /** Edge cap for the guarded LOCAL folds ([[connectedComponentsCounted]]'s
+    * fixpoint, [[incrementalCcLabelUpdates]]): a pair list at or under
+    * this many rows (≈ 8 MB of (long, long) — the repo's
+    * bounded-driver-state class, same budget family as
     * [[graft.streaming.Streams.CcLabelBroadcastMaxRows]]) is collected
     * once from its checkpoint and folded by a driver union-find instead
     * of running ~8 sub-second distributed jobs whose data never exceeds
@@ -492,6 +574,53 @@ object Dedup {
     * edges, never an unbounded collect.
     */
   private[graft] val LocalCcMaxEdges: Int = 1 << 19
+
+  /** The guarded local folds' probe: a two-column edge frame collected as
+    * long pairs when both columns are long-typed, no endpoint is null and
+    * it has at most [[LocalCcMaxEdges]] rows — a limit(cap+1) over an
+    * already-materialized frame, never an unbounded collect. None sends
+    * the caller down its distributed path.
+    */
+  private def localEdges(edges: DataFrame): Option[Array[(Long, Long)]] =
+    if (!edges.schema.fields.forall(
+        _.dataType == org.apache.spark.sql.types.LongType)) None
+    else Some(edges.limit(LocalCcMaxEdges + 1).collect())
+      .filter(h => h.length <= LocalCcMaxEdges &&
+        !h.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      .map(_.map(r => (r.getLong(0), r.getLong(1))))
+
+  /** Driver union-find over a long-keyed edge list with min-id roots: a
+    * union always hangs the larger root under the smaller, so every
+    * vertex maps to its component's min id — EXACTLY the min-label
+    * propagation fixpoint of [[connectedComponents]]. Returns vertex →
+    * root for every vertex the edges touch. The one fold behind both
+    * guarded local paths ([[connectedComponentsCounted]],
+    * [[incrementalCcLabelUpdates]]).
+    */
+  private def unionFindMinRoots(
+      edges: Iterator[(Long, Long)]): collection.Map[Long, Long] = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def add(x: Long): Unit =
+      if (!parent.containsKey(x)) { parent.put(x, x); () }
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (parent.get(c) != r) {
+        val n = parent.get(c); parent.put(c, r); c = n
+      }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      add(a); add(b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent.put(rb, ra)
+      else if (rb < ra) parent.put(ra, rb)
+    }
+    val roots = collection.mutable.LinkedHashMap.empty[Long, Long]
+    parent.keySet().forEach(x => roots(x) = find(x))
+    roots
+  }
 
   def connectedComponentsCounted(pairs: DataFrame, maxRounds: Int = 50,
                                  partitions: Int = 4): (DataFrame, Long) = {
@@ -538,50 +667,24 @@ object Dedup {
       }
       // guarded local fixpoint (see [[LocalCcMaxEdges]]): probe the
       // checkpointed edge list; a driver-bounded long-keyed graph folds
-      // in one union-find pass with min-id roots — EXACTLY the min-label
-      // propagation fixpoint (a union always hangs the larger root under
-      // the smaller, so every root is its component's min id). Non-long
-      // key types or any null endpoint keep the distributed loop.
-      val longKeyed = base.schema.fields.forall(
-        _.dataType == org.apache.spark.sql.types.LongType)
-      val probed =
-        if (!longKeyed) None
-        else Some(base.limit(LocalCcMaxEdges + 1).collect())
-          .filter(h => h.length <= LocalCcMaxEdges &&
-            !h.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-      probed match {
+      // in one union-find pass ([[unionFindMinRoots]] — EXACTLY the
+      // min-label propagation fixpoint). Non-long key types or any null
+      // endpoint keep the distributed loop.
+      localEdges(base) match {
         case Some(edgeRows) =>
           release(baseIds)
-          val parent = new java.util.HashMap[Long, Long]()
-          def add(x: Long): Unit =
-            if (!parent.containsKey(x)) { parent.put(x, x); () }
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.get(r) != r) r = parent.get(r)
-            var c = x
-            while (parent.get(c) != r) {
-              val n = parent.get(c); parent.put(c, r); c = n
-            }
-            r
-          }
-          edgeRows.foreach { e =>
-            val (a, b) = (e.getLong(0), e.getLong(1))
-            add(a); add(b)
-            val (ra, rb) = (find(a), find(b))
-            if (ra < rb) parent.put(rb, ra)
-            else if (rb < ra) parent.put(ra, rb)
-          }
+          val root = unionFindMinRoots(edgeRows.iterator)
           import scala.jdk.CollectionConverters._
           val labelRows: java.util.List[org.apache.spark.sql.Row] =
-            parent.keySet().asScala.toSeq
-              .map(x => org.apache.spark.sql.Row(x, find(x))).asJava
+            root.toSeq
+              .map { case (x, r) => org.apache.spark.sql.Row(x, r) }.asJava
           val schema = org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("id",
               org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField("label",
               org.apache.spark.sql.types.LongType)))
           return (caller.createDataFrame(labelRows, schema),
-            parent.size().toLong)
+            root.size.toLong)
         case None => ()
       }
       val (edges, edgeIds) = checkpointed {

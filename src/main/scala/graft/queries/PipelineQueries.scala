@@ -1879,8 +1879,10 @@ object PipelineQueries {
         val labels = Dedup.connectedComponents(
             Dedup.ngramJaccardPairsFromPostings(postings, sizes, 0.5))
           .pin()
-        val newPairs = Dedup.incrementalCcPairs(postings, sizes,
-            docs.filter(isNew), "doc_id", "text", 3, 0.5)
+        val bp = Dedup.ngramPostings(docs.filter(isNew), "doc_id", "text", 3)
+          .pin()
+        val newPairs = Dedup.incrementalCcPairsFromPostings(postings, sizes,
+            bp, 0.5)
           .pin()
         Dedup.incrementalCcLabelUpdates(labels, newPairs,
             docs.filter(isNew).select(col("doc_id").as("id")))
@@ -1957,8 +1959,13 @@ object PipelineQueries {
             (batch, epoch) => {
               val b = batch.pin()
               val bPins = CheckpointGen.pinnedIds(b)
-              val newPairs = Dedup.incrementalCcPairs(postings, sizes, b,
-                  "doc_id", "text", 3, 0.5)
+              // the batch's postings, pinned once: the pair probe's batch
+              // side and (below) the posting-state append
+              val bp = Dedup.ngramPostings(b, "doc_id", "text", 3)
+                .pin()
+              postPins ++= CheckpointGen.pinnedIds(bp)
+              val newPairs = Dedup.incrementalCcPairsFromPostings(postings,
+                  sizes, bp, 0.5)
                 .pin()
               val pairPins = CheckpointGen.pinnedIds(newPairs)
               val updates = Dedup.incrementalCcLabelUpdates(labels, newPairs,
@@ -1989,9 +1996,6 @@ object PipelineQueries {
               // sized for postings/sizes; generation count is bounded by
               // compaction cadence in production (q246) and by the 3
               // epochs here.
-              val bp = Dedup.ngramPostings(b, "doc_id", "text", 3)
-                .pin()
-              postPins ++= CheckpointGen.pinnedIds(bp)
               postings = postings.unionByName(bp)
               val bs = Dedup.ngramPostingSizes(bp).pin()
               sizePins ++= CheckpointGen.pinnedIds(bs)

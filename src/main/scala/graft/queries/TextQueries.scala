@@ -1387,7 +1387,7 @@ object TextQueries {
     // The maintenance-step counterpart of q248, composing the incremental
     // dedup machinery with the graph depth: an ingest batch lands, the
     // delta pair set arrives via the persisted posting index
-    // (Dedup.incrementalCcPairs — within-batch ∪ cross, the same
+    // (Dedup.incrementalCcPairsFromPostings — within-batch ∪ cross, the same
     // inverted-index equi-joins as CC maintenance), and coreness is
     // recomputed ONLY on the components the delta touches. The soundness
     // argument is structural: coreness is COMPONENT-LOCAL (the h-index
@@ -1416,8 +1416,10 @@ object TextQueries {
         val postings = Dedup.ngramPostings(docs.filter(!isNew),
           "doc_id", "text", 3).pin()
         val sizes = Dedup.ngramPostingSizes(postings).pin()
-        val newPairs = Dedup.incrementalCcPairs(postings, sizes,
-            docs.filter(isNew), "doc_id", "text", 3, 0.3)
+        val bp = Dedup.ngramPostings(docs.filter(isNew), "doc_id", "text", 3)
+          .pin()
+        val newPairs = Dedup.incrementalCcPairsFromPostings(postings, sizes,
+            bp, 0.3)
           .pin()
         // affected scope: components touched by any delta endpoint — the
         // delta-sized endpoint set broadcasts, labels stream map-side

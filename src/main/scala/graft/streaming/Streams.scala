@@ -705,8 +705,9 @@ object Streams {
     val gens = s"$stateRoot/gens"
     val b = batch.pin()
     val bPins = CheckpointGen.pinnedIds(b)
-    // the batch's own postings: the state-append delta AND (bucketed
-    // mode) the prune key set — shingled once, used twice
+    // the batch's own postings: the pair probe's batch side, the
+    // state-append delta AND (bucketed mode) the prune key set — shingled
+    // once, used three times
     val bp = Dedup.ngramPostings(b, "doc_id", "text", k).pin()
     val bpPins = CheckpointGen.pinnedIds(bp)
     val postingsAll = s.read.parquet(s"$gens/postings")
@@ -722,8 +723,8 @@ object Streams {
       .filter(col("epoch") < epoch).drop("epoch")
     val labelGen = latestGenBelow(s"$gens/labels", epoch)
     val labels = s.read.parquet(s"$gens/labels/epoch=$labelGen")
-    val newPairs = Dedup.incrementalCcPairs(postings, sizes, b,
-        "doc_id", "text", k, threshold)
+    val newPairs = Dedup.incrementalCcPairsFromPostings(postings, sizes, bp,
+        threshold)
       .pin()
     val pairPins = CheckpointGen.pinnedIds(newPairs)
     val updates = Dedup.incrementalCcLabelUpdates(labels, newPairs,
@@ -799,12 +800,21 @@ object Streams {
   // The three (base, delta) pairs of the v2 layout, each a
   // [[graft.util.GenStore]] — the shared seam carries the _SUCCESS
   // gating, the latest-complete-base rule, the fold-lag reasoning, and GC.
+  // Each declares the schema its writers emit — (id, label), (i, sk) and
+  // (i, na), all longs — so resolving a view launches no schema-inference
+  // job; the bucketed layout's `bucket` column is a partition column,
+  // discovered from the directory names as before.
+  private def longSchema(names: String*) = StructType(
+    names.map(StructField(_, LongType)))
   private def ccLabelStore(stateRoot: String) = graft.util.GenStore(
-    s"$stateRoot/gens/label_base", s"$stateRoot/updates", "g=", "batch=")
+    s"$stateRoot/gens/label_base", s"$stateRoot/updates", "g=", "batch=",
+    Some(longSchema("id", "label")))
   private def ccPostingStore(stateRoot: String) = graft.util.GenStore(
-    s"$stateRoot/gens/posting_base", s"$stateRoot/gens/postings")
+    s"$stateRoot/gens/posting_base", s"$stateRoot/gens/postings",
+    schema = Some(longSchema("i", "sk")))
   private def ccSizeStore(stateRoot: String) = graft.util.GenStore(
-    s"$stateRoot/gens/size_base", s"$stateRoot/gens/sizes")
+    s"$stateRoot/gens/size_base", s"$stateRoot/gens/sizes",
+    schema = Some(longSchema("i", "na")))
 
   /** Broadcast cap for the merge-on-read label probe, in ROWS: an explicit
     * broadcast() bypasses Spark's size safety, and a HashedRelation of
@@ -850,9 +860,10 @@ object Streams {
           .write.mode("overwrite")
           .parquet(s"$stateRoot/gens/size_base/g=-1")))
     graft.util.CheckpointGen.release(sc, pins)
-    val p = s.read.parquet(s"$stateRoot/gens/posting_base/g=-1")
-      .select("i", "sk")
-    val z = s.read.parquet(s"$stateRoot/gens/size_base/g=-1")
+    val post = ccPostingStore(stateRoot)
+    val p = post.read(s, post.basePath(-1)).select("i", "sk")
+    val siz = ccSizeStore(stateRoot)
+    val z = siz.read(s, siz.basePath(-1))
     val pairsLazy = graft.ext.Dedup
       .ngramJaccardPairsFromPostings(p, z, threshold)
     onInitPairs match {
@@ -1050,8 +1061,7 @@ object Streams {
     val sizes = ccStoreSizesView(s, stateRoot, epoch)
     val labels = ccStoreLabelsView(s, stateRoot, epoch)
     val newPairs = DevTiming("step", s"e$epoch pair delta ckpt")(
-      Dedup.incrementalCcPairs(postings, sizes, b,
-          "doc_id", "text", k, threshold)
+      Dedup.incrementalCcPairsFromPostings(postings, sizes, bp, threshold)
         .pin())
     val pairPins = CheckpointGen.pinnedIds(newPairs)
     val updates = DevTiming("step", s"e$epoch label updates")(

@@ -2,6 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** The generational on-disk store seam — ONE implementation of the layout
   * and crash semantics that three stores previously each carried a copy
@@ -38,9 +39,17 @@ import org.apache.spark.sql.functions.col
   *     resolved a view just before a fold+GC sweep still holds a stable
   *     snapshot (r16 verdict #4); `retainBases = 1` reproduces the
   *     original keep-only-current layout exactly.
+  *
+  * `schema` is the data schema the store's writers emit (partition columns
+  * excluded). When given, every view scan uses it instead of inferring it:
+  * an inferring `spark.read.parquet` launches a one-task footer job per
+  * directory, two per view resolution (base and delta dir). Partition
+  * columns (the delta epoch, a bucketed layout's `bucket`) are still
+  * discovered from the directory names and pruned at the scan.
   */
 final case class GenStore(baseDir: String, deltaDir: String,
-    basePrefix: String = "g=", deltaPrefix: String = "epoch=") {
+    basePrefix: String = "g=", deltaPrefix: String = "epoch=",
+    schema: Option[StructType] = None) {
 
   /** The delta partition column name the parquet scan sees. */
   val deltaCol: String = deltaPrefix.stripSuffix("=")
@@ -61,6 +70,10 @@ final case class GenStore(baseDir: String, deltaDir: String,
         .toSeq
     }
   }
+
+  /** A scan of `path` under the declared [[schema]], else inferred. */
+  def read(s: SparkSession, path: String): DataFrame =
+    schema.fold(s.read)(s.read.schema(_)).parquet(path)
 
   def listBases(requireSuccess: Boolean): Seq[Long] =
     listDirs(baseDir, basePrefix, requireSuccess)
@@ -92,10 +105,10 @@ final case class GenStore(baseDir: String, deltaDir: String,
     */
   def unionView(s: SparkSession, bound: Long = Long.MaxValue): DataFrame = {
     val g = latestCompleteBase(bound)
-    val base = s.read.parquet(basePath(g))
+    val base = read(s, basePath(g))
     val live = completeDeltaEpochs(g, bound)
     if (live.isEmpty) base
-    else base.unionByName(s.read.parquet(deltaDir)
+    else base.unionByName(read(s, deltaDir)
       .filter(col(deltaCol).isin(live: _*)).drop(deltaCol))
   }
 
@@ -112,11 +125,11 @@ final case class GenStore(baseDir: String, deltaDir: String,
       hintProbe: DataFrame => DataFrame = identity): DataFrame = {
     import org.apache.spark.sql.functions.row_number
     val g = latestCompleteBase(bound)
-    val base = s.read.parquet(basePath(g))
+    val base = read(s, basePath(g))
     val live = completeDeltaEpochs(g, bound)
     if (live.isEmpty) base
     else {
-      val latest = s.read.parquet(deltaDir)
+      val latest = read(s, deltaDir)
         .filter(col(deltaCol).isin(live: _*))
         .withColumn("rn", row_number().over(org.apache.spark.sql
           .expressions.Window.partitionBy(idCol)
@@ -170,7 +183,7 @@ final case class GenStore(baseDir: String, deltaDir: String,
       if (!java.nio.file.Files.exists(p)) None
       else new String(java.nio.file.Files.readAllBytes(p),
         java.nio.charset.StandardCharsets.UTF_8).trim.toLongOption
-    fromSidecar.getOrElse(s.read.parquet(deltaPath(e)).count())
+    fromSidecar.getOrElse(read(s, deltaPath(e)).count())
   }
 
   // ---- GC ----

@@ -36,6 +36,46 @@ class Round13Spec extends SparkSpec {
     assert(indexed.sameElements(direct))
   }
 
+  test("postings probe == within-batch ngramJaccardPairs ∪ indexed " +
+      "cross-corpus pairs, flat and bucket-pruned (64 buckets); a doc " +
+      "shorter than k and two identical batch docs included") {
+    import spark.implicits._
+    val (corpus, batch0) = split()
+    val copied = corpus.orderBy("doc_id").select("text").head().getString(0)
+    val batch = batch0.select("doc_id", "text").unionByName(Seq(
+      (900001L, "too short"), (900002L, copied), (900003L, copied))
+      .toDF("doc_id", "text"))
+    val postings = Dedup.ngramPostings(corpus, "doc_id", "text", 3)
+      .localCheckpoint(true)
+    val sizes = Dedup.ngramPostingSizes(postings).localCheckpoint(true)
+    def ij(df: org.apache.spark.sql.DataFrame) =
+      df.select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1)))
+    val want = (ij(Dedup.ngramJaccardPairs(batch, "doc_id", "text", 3, 0.5)) ++
+      ij(Dedup.crossCorpusJaccardPairsIndexed(postings, sizes, batch,
+        "doc_id", "text", 3, 0.5))).toSet
+    assert(want.contains((900002L, 900003L)),
+      "the identical batch docs must pair with each other")
+    assert(want.exists(_._2 == 900002L) && !want.exists(p =>
+      p._1 == 900001L || p._2 == 900001L), "fixture edge cases missing")
+    val bp = Dedup.ngramPostings(batch, "doc_id", "text", 3)
+      .localCheckpoint(true)
+    val probed = ij(Dedup.incrementalCcPairsFromPostings(postings, sizes, bp,
+      0.5))
+    assert(probed.length == probed.toSet.size, "duplicate pairs")
+    assert(probed.toSet == want)
+    // the bucketed layout, pruned to the batch's buckets at the scan
+    val state = java.nio.file.Files
+      .createTempDirectory("graft_r13_probe").toString
+    try {
+      Dedup.ngramPostingsBucketed(corpus, "doc_id", "text", 3, 64)
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(state)
+      val pruned = Dedup.pruneToBatchBuckets(spark.read.parquet(state), bp, 64)
+      assert(ij(Dedup.incrementalCcPairsFromPostings(pruned, sizes, bp, 0.5))
+        .toSet == want)
+    } finally graft.util.Dirs.rmTree(state)
+  }
+
   test("incremental label updates applied to the persisted state == the " +
       "full CC rebuild (changed ∪ fresh ∪ singles vs q232's relabel)") {
     val (corpus, batch) = split()
@@ -47,8 +87,10 @@ class Round13Spec extends SparkSpec {
         Dedup.ngramJaccardPairs(corpus, "doc_id", "text", 3, 0.5))
       .localCheckpoint(true)
     // the per-ingest step under test
-    val newPairs = Dedup.incrementalCcPairs(postings, sizes, batch,
-        "doc_id", "text", 3, 0.5)
+    val bp = Dedup.ngramPostings(batch, "doc_id", "text", 3)
+      .localCheckpoint(true)
+    val newPairs = Dedup.incrementalCcPairsFromPostings(postings, sizes, bp,
+        0.5)
       .localCheckpoint(true)
     assert(newPairs.count() > 0, "fixture produced no delta pairs")
     val updates = Dedup.incrementalCcLabelUpdates(labels, newPairs,
@@ -78,6 +120,58 @@ class Round13Spec extends SparkSpec {
     // was labeled into an existing component or merged across one
     val nontrivial = updates.filter(col("label") =!= col("id")).count()
     assert(nontrivial > 0, "update set is all self-labels — fixture too weak")
+  }
+
+  test("incrementalCcLabelUpdates local fold == the distributed body, on " +
+      "the split fixture and on edge-case pair deltas") {
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "label").as[(Long, Long)].collect().toSeq.sorted
+    def same(name: String, labels: org.apache.spark.sql.DataFrame,
+        pairs: org.apache.spark.sql.DataFrame,
+        batchIds: org.apache.spark.sql.DataFrame): Unit = {
+      val p = pairs.localCheckpoint(true)
+      val local = rows(Dedup.incrementalCcLabelUpdates(labels, p, batchIds))
+      val dist = rows(Dedup.incrementalCcLabelUpdatesDistributed(labels, p,
+        batchIds))
+      assert(local == dist, s"$name: local fold diverges\nlocal: $local" +
+        s"\ndist:  $dist")
+    }
+    // the q232 split fixture
+    val (corpus, batch) = split()
+    val postings = Dedup.ngramPostings(corpus, "doc_id", "text", 3)
+      .localCheckpoint(true)
+    val sizes = Dedup.ngramPostingSizes(postings).localCheckpoint(true)
+    val fixtureLabels = Dedup.connectedComponents(Dedup
+        .ngramJaccardPairsFromPostings(postings, sizes, 0.5))
+      .localCheckpoint(true)
+    val bp = Dedup.ngramPostings(batch, "doc_id", "text", 3)
+      .localCheckpoint(true)
+    same("split fixture", fixtureLabels,
+      Dedup.incrementalCcPairsFromPostings(postings, sizes, bp, 0.5),
+      batch.select(col("doc_id").as("id")))
+    // components {1, 2} → 1, {3, 4} → 3, {7, 8} → 7; corpus doc 6 has no
+    // label row; batch docs 10..15
+    val labels = Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L), (7L, 7L),
+      (8L, 7L)).toDF("id", "label")
+    val batchIds = (10L to 15L).toDF("id")
+    val cases = Seq(
+      "empty pair delta" -> Seq.empty[(Long, Long)],
+      "bridge merging two labelled components" -> Seq((2L, 12L), (4L, 12L)),
+      "pair touching an unlabelled corpus doc" -> Seq((6L, 13L)),
+      "self-loop after collapse (li == lj)" -> Seq((7L, 8L), (8L, 14L)),
+      "join, bridge, fresh corpus doc and self-loop together" ->
+        Seq((2L, 10L), (4L, 11L), (10L, 11L), (6L, 13L), (6L, 3L),
+          (7L, 8L)))
+    for ((name, pairs) <- cases) {
+      same(name, labels, pairs.toDF("i", "j"), batchIds)
+      // batch docs in no pair come back self-labelled on both paths
+      val inPair = pairs.flatMap(p => Seq(p._1, p._2)).toSet
+      val got = rows(Dedup.incrementalCcLabelUpdates(labels,
+        pairs.toDF("i", "j").localCheckpoint(true), batchIds)).toMap
+      assert((10L to 15L).filterNot(inPair).forall(id => got(id) == id),
+        s"$name: a batch doc in no pair is not self-labelled")
+    }
   }
 
   test("a colliding external qid fails loudly under the debug gate " +

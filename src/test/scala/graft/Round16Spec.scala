@@ -10,6 +10,8 @@ import org.apache.spark.sql.functions._
 class Round16Spec extends SparkSpec {
 
   private val Dir = "/root/testdata/sf0.001"
+  /** Jobs of one non-folding ccStoreStep on this fixture, by nBuckets. */
+  private val StepJobBudget = Map(0 -> 25, 8 -> 28)
 
   /** Stage the shared 3-epoch CC ingest (the stageCcIngest layout: "new"
     * docs doc_id%5=0 split by doc_id%15 into one parquet file per epoch)
@@ -215,6 +217,64 @@ class Round16Spec extends SparkSpec {
         "the mid-stream policy left superseded state behind")
       assert(labelsOf(rootA) == gcd)
     } finally { rmTree(rootA); rmTree(rootB) }
+  }
+
+  test("v2 store job budget: ccStoreStep epochs leave no cache entry " +
+      "behind, resolving the three views launches no job, a serving read " +
+      "launches at most 4, a non-folding step stays within its measured " +
+      "count; the bucketed posting view still carries a prunable bucket " +
+      "column") {
+    for (nBuckets <- Seq(0, 8)) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_r16_budget").toString
+      try {
+        stage(root, nBuckets)
+        val state = s"$root/state"
+        val sc = spark.sparkContext
+        // the benchmark's fold policy: epochs 0 and 1 add deltas only,
+        // epoch 2 folds and sweeps
+        def step(e: Long): Unit = graft.streaming.Streams.ccStoreStep(state,
+          3, 0.5, nBuckets, maxLabelDeltas = 1, maxPostingGens = 1,
+          gcAfterFold = true)(spark.read.parquet(s"$root/in/e$e.parquet"), e)
+        val before = sc.getPersistentRDDs.size
+        step(0)
+        val (_, stepJobs) = withJobCount(step(1))
+        step(2)
+        assert(sc.getPersistentRDDs.size == before,
+          s"nBuckets=$nBuckets: 3 epochs left " +
+            s"${sc.getPersistentRDDs.size - before} cache entries behind")
+        assert(java.nio.file.Files.exists(java.nio.file.Paths
+          .get(s"$state/gens/label_base/g=1/_SUCCESS")), "no fold fired")
+        val (views, viewJobs) = withJobCount(Seq(
+          graft.streaming.Streams.ccStorePostingsView(spark, state, 3),
+          graft.streaming.Streams.ccStoreSizesView(spark, state, 3),
+          graft.streaming.Streams.ccStoreLabelsView(spark, state, 3)))
+        assert(viewJobs == 0,
+          s"nBuckets=$nBuckets: resolving the views launched $viewJobs jobs")
+        val (labels, readJobs) = withJobCount(
+          graft.streaming.Streams.ccStoreLabels(spark, state).collect())
+        assert(labels.nonEmpty && readJobs <= 4,
+          s"nBuckets=$nBuckets: a serving read launched $readJobs jobs")
+        assert(stepJobs <= StepJobBudget(nBuckets),
+          s"nBuckets=$nBuckets: a non-folding step launched $stepJobs jobs " +
+            s"(budget ${StepJobBudget(nBuckets)})")
+        // the declared-schema scan still discovers and prunes the layout's
+        // partition column
+        val postings = views.head
+        assert(postings.columns.contains("bucket") == (nBuckets > 0))
+        if (nBuckets > 0) {
+          import spark.implicits._
+          // a one-shingle batch: it hits exactly one bucket
+          val bp = graft.ext.Dedup.ngramPostings(
+              Seq((999999L, "alpha beta gamma")).toDF("doc_id", "text"),
+              "doc_id", "text", 3)
+            .localCheckpoint(true)
+          assert(filesRead(graft.ext.Dedup
+              .pruneToBatchBuckets(postings, bp, nBuckets)) <
+            filesRead(postings), "bucket pruning did not reach the scan")
+        }
+      } finally rmTree(root)
+    }
   }
 
   test("separate-PROCESS restart: the v2 loop killed mid-epoch-1 resumes " +

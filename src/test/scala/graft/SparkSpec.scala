@@ -31,4 +31,39 @@ trait SparkSpec extends AnyFunSuite {
     assert(scans.nonEmpty, s"no FileSourceScan in:\n$plan")
     scans.map(_.metrics("numFiles").value).sum
   }
+
+  /** `f`'s result and the Spark jobs it launched, on any thread. A
+    * listener counts job starts between two marker jobs: the listener bus
+    * delivers in order, so every job `f` submitted arrives between the
+    * markers' starts (job counts of a fixed plan on a fixed fixture are
+    * deterministic).
+    */
+  def withJobCount[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = s"job-count-marker-${System.nanoTime()}"
+    val markers = new java.util.concurrent.Semaphore(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var counting = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == marker)) {
+          counting = !counting; markers.release()
+        } else if (counting) { jobs.incrementAndGet(); () }
+    }
+    def markerJob(): Unit = {
+      sc.setJobGroup(marker, "job-count marker")
+      try { sc.parallelize(Seq(1), 1).count(); () } finally sc.clearJobGroup()
+      assert(markers.tryAcquire(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never delivered the marker job")
+    }
+    sc.addSparkListener(listener)
+    try {
+      markerJob()
+      val out = f
+      markerJob()
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
