@@ -41,10 +41,11 @@ object PlanProbes {
     val n = emb.count()
     val cells = math.max(8L, n / 100L).toInt
     val nCoarse = math.max(4, math.ceil(math.sqrt(cells.toDouble)).toInt)
+    import graft.ext.Similarity.{buildIvfPqIndexWith, ivfCentroids, TwoLevel}
     dump("q216_index_build",
-      graft.ext.Similarity.buildIvfPqIndex(emb, 32, 24))
+      buildIvfPqIndexWith(emb, ivfCentroids(emb, 32), 24))
     dump("q227_twolevel_index_build",
-      graft.ext.Similarity.buildIvfPqIndexTwoLevel(emb, cells, 4, nCoarse, 2))
+      buildIvfPqIndexWith(emb, TwoLevel.firstN(emb, cells, nCoarse, 2), 4))
     spark.stop()
   }
 }

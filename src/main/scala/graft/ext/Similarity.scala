@@ -58,13 +58,15 @@ object Similarity {
     * scored set through one shuffle, which is the part that cannot survive
     * a billion-vector corpus; the aggregate's shuffle is O(|queries|·k).
     */
-  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
-    scored.groupBy("qid")
+  private def topKPerQuery(scored: DataFrame, k: Int,
+      keys: Seq[String] = Nil): DataFrame = {
+    val group = (keys :+ "qid").map(col)
+    scored.groupBy(group: _*)
       .agg(graft.functions.TopKNeighborsAgg
         .topkNeighbors(col("cos"), col("nid"), k).as("top"))
-      .select(col("qid"), posexplode(col("top")).as(Seq("pos", "n")))
-      .select(col("qid"), (col("pos") + 1).cast("int").as("rn"),
-        col("n.nid").as("nid"), col("n.cos").as("cos"))
+      .select(group :+ posexplode(col("top")).as(Seq("pos", "n")): _*)
+      .select(group ++ Seq((col("pos") + 1).cast("int").as("rn"),
+        col("n.nid").as("nid"), col("n.cos").as("cos")): _*)
   }
 
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus
@@ -153,7 +155,7 @@ object Similarity {
     * data-adaptively).
     */
   def ivfAssign(emb: DataFrame, nCentroids: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val e = asV(emb)
     val c = e.filter(col("vec_id") < nCentroids)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
     // argmax as a hash aggregate (max_by on (cos, -cid)), not a window:
@@ -187,43 +189,69 @@ object Similarity {
     * p ≪ cells, so the cell count can rise with the corpus while recall
     * holds — the knob pairing q210's scaladoc demands.
     */
-  def ivfAssignProbes(emb: DataFrame, nCentroids: Int, nProbe: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    assignProbesWith(e,
-      e.filter(col("vec_id") < nCentroids)
-        .select(col("vec_id").as("cid"), col("v").as("cv")),
-      nProbe)
+  def ivfAssignProbes(emb: DataFrame, nCentroids: Int, nProbe: Int): DataFrame =
+    Flat(ivfCentroids(emb, nCentroids)).assign(asV(emb), nProbe)
+
+  /** (vec_id, v): the double-cast vector every assignment and build reads. */
+  private[graft] def asV(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+
+  /** How an IVF index routes a vector to its probed cells — the one knob
+    * that differs between the flat and the two-level index, so build,
+    * append and query routing take it as a value instead of one entry
+    * point per variant. `assign(e, nProbe)` maps `e` = (vec_id, v double[])
+    * to the [[ivfAssignProbes]] shape (vec_id, cells, v), cells in
+    * probe-rank order. A routing holds the EXPLICIT centroid tables an
+    * index was built with — the seam incremental maintenance needs: an
+    * append batch (or an external query) is assigned against the tables
+    * the existing index was built from, never its own, so append and full
+    * rebuild agree bit-for-bit (q223/q230).
+    */
+  sealed trait IvfRouting {
+    def assign(e: DataFrame, nProbe: Int): DataFrame
+
+    /** (qid, cell): external queries (qid, qv double[]) routed to their
+      * `nProbe` probed cells — the `qcells` of [[ivfPqSearchQueries]].
+      */
+    def queryCells(queries: DataFrame, nProbe: Int): DataFrame =
+      assign(queries.select(col("qid").as("vec_id"), col("qv").as("v")),
+          nProbe)
+        .select(col("vec_id").as("qid"), explode(col("cells")).as("cell"))
   }
 
-  /** Probe assignment against an EXPLICIT centroid table (cid, cv) — the
-    * seam incremental index maintenance needs: a new batch is assigned
-    * against the centroids the existing index was built with, never its
-    * own, so append and full rebuild agree by construction (q223).
-    * `e` must be (vec_id, v) with v already double[].
+  /** Flat routing over a (cid, cv) centroid table: every vector scores
+    * every centroid (n·cells cosines), top-`nProbe` by cosine DESC, ties to
+    * the lowest cid.
     */
-  private[graft] def assignProbesWith(e: DataFrame, centroids: DataFrame,
-      nProbe: Int): DataFrame =
-    e.crossJoin(broadcast(centroids))
-      .withColumn("ccos", cosine(col("v"), col("cv")))
-      .groupBy("vec_id")
-      .agg(graft.functions.TopKNeighborsAgg
-             .topkNeighbors(col("ccos"), col("cid"), nProbe).as("top"),
-           first(col("v")).as("v"))
-      .select(col("vec_id"),
-        transform(col("top"), _.getField("nid")).as("cells"), col("v"))
+  final case class Flat(centroids: DataFrame) extends IvfRouting {
+    def assign(e: DataFrame, nProbe: Int): DataFrame =
+      e.crossJoin(broadcast(centroids))
+        .withColumn("ccos", cosine(col("v"), col("cv")))
+        .groupBy("vec_id")
+        .agg(graft.functions.TopKNeighborsAgg
+               .topkNeighbors(col("ccos"), col("cid"), nProbe).as("top"),
+             first(col("v")).as("v"))
+        .select(col("vec_id"),
+          transform(col("top"), _.getField("nid")).as("cells"), col("v"))
+  }
 
-  /** Two-level (coarse-quantized) multi-probe IVF assignment — the missing
-    * autoscale companion: once the cell count tracks the corpus
-    * (cells ∝ n, q222's knob law), the FLAT assignment crossJoin performs
-    * n·cells cosines — QUADRATIC in n. The 100× sweep measures exactly
-    * that term dominating q222's leg. Standard fix (IVF-on-IVF): the
-    * first `nCoarse` vectors act as coarse centroids; each FINE centroid
-    * routes to its argmax coarse cell (cells·nCoarse cosines — tiny),
-    * each vector probes its top-`gProbe` coarse cells (n·nCoarse cosines)
-    * and scores ONLY the fine centroids routed there
+  /** Two-level (coarse-quantized) routing — the missing autoscale
+    * companion: once the cell count tracks the corpus (cells ∝ n, q222's
+    * knob law), the FLAT assignment crossJoin performs n·cells cosines —
+    * QUADRATIC in n. The 100× sweep measures exactly that term dominating
+    * q222's leg. Standard fix (IVF-on-IVF): each FINE centroid routes to
+    * its argmax coarse cell ([[routeFineCentroids]], cells·nCoarse cosines
+    * — tiny), each vector probes its top-`gProbe` coarse cells
+    * (n·nCoarse cosines) and scores ONLY the fine centroids routed there
     * (n·gProbe·cells/nCoarse expected). With nCoarse ≈ √cells both terms
     * are n·O(√cells) — an n^1.5 total growth law under cells ∝ n, vs the
     * flat path's n².
+    *
+    * `coarse` is (gid, gv); `fineRouted` is (cid, cv, gid). Both are part
+    * of a two-level index's persisted state: derive them ONCE at build
+    * time, persist them beside the index, and every append/refresh batch
+    * reuses them — a batch then pays n·O(√cells) cosines instead of the
+    * flat path's n·cells.
     *
     * Approximation contract: a fine centroid routed to none of a vector's
     * `gProbe` coarse cells is invisible to that vector; P(miss) falls
@@ -239,31 +267,67 @@ object Similarity {
     * degrades gracefully to a shuffle equi-join on gid, which both sides
     * can partition on. Both top-k reductions are the bounded mergeable
     * [[graft.functions.TopKNeighborsAgg]] (map-side partials; the score
-    * streams never shuffle). Output shape = [[ivfAssignProbes]]:
-    * (vec_id, cells, v), cells in probe-rank order.
+    * streams never shuffle).
     */
-  def ivfAssignProbesTwoLevel(emb: DataFrame, nCentroids: Int, nProbe: Int,
-      nCoarse: Int, gProbe: Int): DataFrame = {
-    // the drop-on-empty-probe contract makes a zero/negative knob look like
-    // "every vector dropped" downstream — fail loudly instead (ADVICE r10)
-    require(nCentroids >= 1 && nProbe >= 1 && nCoarse >= 1 && gProbe >= 1,
-      s"ivfAssignProbesTwoLevel needs all knobs >= 1 (got nCentroids=" +
-        s"$nCentroids, nProbe=$nProbe, nCoarse=$nCoarse, gProbe=$gProbe)")
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val coarse = e.filter(col("vec_id") < nCoarse)
-      .select(col("vec_id").as("gid"), col("v").as("gv"))
-    val fine = e.filter(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    assignProbesTwoLevelWith(e, coarse, routeFineCentroids(fine, coarse),
-      nProbe, gProbe)
+  final case class TwoLevel(coarse: DataFrame, fineRouted: DataFrame,
+      gProbe: Int) extends IvfRouting {
+    def assign(e: DataFrame, nProbe: Int): DataFrame = {
+      require(nProbe >= 1 && gProbe >= 1,
+        s"TwoLevel.assign needs nProbe >= 1 and gProbe >= 1 " +
+          s"(got nProbe=$nProbe, gProbe=$gProbe)")
+      // vector → its top-gProbe coarse cells (cosine DESC, ties to lowest gid)
+      val vecRouted = e.crossJoin(broadcast(coarse))
+        .withColumn("gcos", cosine(col("v"), col("gv")))
+        .groupBy("vec_id")
+        .agg(graft.functions.TopKNeighborsAgg
+               .topkNeighbors(col("gcos"), col("gid"), gProbe).as("gtop"),
+             first(col("v")).as("v"))
+        .select(col("vec_id"), col("v"),
+          explode(transform(col("gtop"), _.getField("nid"))).as("gid"))
+      // score only co-routed (vector, fine-centroid) pairs — unique by
+      // construction (each fine centroid lives in exactly one coarse cell),
+      // so no dedupe pass before the bounded top-k
+      vecRouted.join(fineRouted, "gid")
+        .withColumn("fcos", cosine(col("v"), col("cv")))
+        .groupBy("vec_id")
+        .agg(graft.functions.TopKNeighborsAgg
+               .topkNeighbors(col("fcos"), col("cid"), nProbe).as("top"),
+             first(col("v")).as("v"))
+        .select(col("vec_id"),
+          transform(col("top"), _.getField("nid")).as("cells"), col("v"))
+    }
   }
 
+  object TwoLevel {
+    /** The first-`nCoarse` coarse and first-`nCentroids` fine centroids
+      * (the deterministic stand-ins every oracle mirrors), fine routed.
+      */
+    def firstN(emb: DataFrame, nCentroids: Int, nCoarse: Int,
+        gProbe: Int): TwoLevel = {
+      // the drop-on-empty-probe contract makes a zero/negative knob look
+      // like "every vector dropped" downstream — fail loudly instead
+      // (ADVICE r10; assign guards nProbe and gProbe)
+      require(nCentroids >= 1 && nCoarse >= 1,
+        s"TwoLevel.firstN needs nCentroids >= 1 and nCoarse >= 1 " +
+          s"(got nCentroids=$nCentroids, nCoarse=$nCoarse)")
+      val coarse = ivfCoarseCentroids(emb, nCoarse)
+      TwoLevel(coarse, routeFineCentroids(ivfCentroids(emb, nCentroids),
+        coarse), gProbe)
+    }
+  }
+
+  /** [[Flat]] routing over an explicit centroid table. */
+  private[graft] def assignProbesWith(e: DataFrame, centroids: DataFrame,
+      nProbe: Int): DataFrame = Flat(centroids).assign(e, nProbe)
+
+  /** [[TwoLevel.firstN]] routing. Output shape = [[ivfAssignProbes]]. */
+  def ivfAssignProbesTwoLevel(emb: DataFrame, nCentroids: Int, nProbe: Int,
+      nCoarse: Int, gProbe: Int): DataFrame =
+    TwoLevel.firstN(emb, nCentroids, nCoarse, gProbe).assign(asV(emb), nProbe)
+
   /** Fine centroid → its argmax coarse cell (the ivfAssign max_by shape:
-    * highest cosine, ties to the lowest gid): (cid, cv, gid). This routing
-    * table is part of a two-level index's persisted state — derive it ONCE
-    * at build time (cells·nCoarse cosines — tiny), persist it beside the
-    * coarse/fine centroid tables, and every append/refresh batch reuses it
-    * ([[appendToIvfPqIndexTwoLevel]]).
+    * highest cosine, ties to the lowest gid): (cid, cv, gid) — the
+    * [[TwoLevel]] routing table.
     */
   def routeFineCentroids(fine: DataFrame, coarse: DataFrame): DataFrame =
     fine.crossJoin(broadcast(coarse))
@@ -273,42 +337,20 @@ object Similarity {
              .as("gid"),
            first(col("cv")).as("cv"))
 
-  /** Two-level probe assignment against EXPLICIT coarse (gid, gv) and
-    * routed-fine (cid, cv, gid — [[routeFineCentroids]]) tables — the seam
-    * the two-level index LIFECYCLE needs, exactly as [[assignProbesWith]]
-    * is the flat lifecycle's: an append batch must be assigned against the
-    * centroid tables the existing index was built with (never its own), so
-    * append and full rebuild agree bit-for-bit while the batch pays
-    * n·O(√cells) cosines instead of the flat path's n·cells. `e` must be
-    * (vec_id, v) with v already double[]. Output shape = [[ivfAssignProbes]]:
-    * (vec_id, cells, v), cells in probe-rank order.
+  /** The first-`nCentroids` centroid table (cid, cv) — the deterministic
+    * [[Flat]] stand-in; persist it beside the index for appends.
     */
-  private[graft] def assignProbesTwoLevelWith(e: DataFrame, coarse: DataFrame,
-      fineRouted: DataFrame, nProbe: Int, gProbe: Int): DataFrame = {
-    require(nProbe >= 1 && gProbe >= 1,
-      s"assignProbesTwoLevelWith needs nProbe >= 1 and gProbe >= 1 " +
-        s"(got nProbe=$nProbe, gProbe=$gProbe)")
-    // vector → its top-gProbe coarse cells (cosine DESC, ties to lowest gid)
-    val vecRouted = e.crossJoin(broadcast(coarse))
-      .withColumn("gcos", cosine(col("v"), col("gv")))
-      .groupBy("vec_id")
-      .agg(graft.functions.TopKNeighborsAgg
-             .topkNeighbors(col("gcos"), col("gid"), gProbe).as("gtop"),
-           first(col("v")).as("v"))
-      .select(col("vec_id"), col("v"),
-        explode(transform(col("gtop"), _.getField("nid"))).as("gid"))
-    // score only co-routed (vector, fine-centroid) pairs — unique by
-    // construction (each fine centroid lives in exactly one coarse cell),
-    // so no dedupe pass before the bounded top-k
-    vecRouted.join(fineRouted, "gid")
-      .withColumn("fcos", cosine(col("v"), col("cv")))
-      .groupBy("vec_id")
-      .agg(graft.functions.TopKNeighborsAgg
-             .topkNeighbors(col("fcos"), col("cid"), nProbe).as("top"),
-           first(col("v")).as("v"))
-      .select(col("vec_id"),
-        transform(col("top"), _.getField("nid")).as("cells"), col("v"))
-  }
+  def ivfCentroids(emb: DataFrame, nCentroids: Int): DataFrame =
+    asV(emb).filter(col("vec_id") < nCentroids)
+      .select(col("vec_id").as("cid"), col("v").as("cv"))
+
+  /** The first-`nCoarse` coarse centroid table (gid, gv) — [[TwoLevel]]'s
+    * second persisted table, alongside [[ivfCentroids]] routed through
+    * [[routeFineCentroids]].
+    */
+  def ivfCoarseCentroids(emb: DataFrame, nCoarse: Int): DataFrame =
+    asV(emb).filter(col("vec_id") < nCoarse)
+      .select(col("vec_id").as("gid"), col("v").as("gv"))
 
   /** IVF with nprobe > 1: each query searches its `nprobe` closest cells
     * (not just the argmax cell), trading candidate volume for recall — the
@@ -339,9 +381,7 @@ object Similarity {
   private[graft] def ivfProbeSearch(assigned: DataFrame, emb: DataFrame,
       nCentroids: Int, k: Int, queryPred: Column, nprobe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val c = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .filter(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    val c = ivfCentroids(emb, nCentroids)
     val wProbe = Window.partitionBy("qid").orderBy(col("ccos").desc, col("cid").asc)
     val q = assigned.filter(queryPred)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -633,8 +673,8 @@ object Similarity {
     * and rerank ~4k of billions hold ≥0.9 recall at ~0.1% candidate
     * mass — the knobs, not the operator, encode the corpus geometry.
     *
-    * Memory contract: [[buildIvfPqIndex]] is the classic one-time index
-    * build (probe assignment + codes, one joined table) — a production
+    * Memory contract: [[buildIvfPqIndexWith]] is the classic one-time
+    * index build (probe assignment + codes, one table) — a production
     * deployment persists it ONCE (parquet/cached table) and runs every
     * search against it via [[ivfPqSearchIndexed]]. This convenience
     * wrapper builds the index, pins it only for the duration of the
@@ -644,26 +684,39 @@ object Similarity {
     * (spec-asserted via `getPersistentRDDs` in Round8Spec). The trade of
     * that contract: the returned frame is EAGER (localCheckpoint), so
     * search cost is paid at call time and downstream predicates never
-    * prune the build — use [[buildIvfPqIndex]] + [[ivfPqSearchIndexed]]
-    * for lazy composition over a caller-owned index.
+    * prune the build — use [[buildIvfPqIndexWith]] +
+    * [[ivfPqSearchIndexed]] for lazy composition over a caller-owned index.
     */
   def ivfPqTopK(emb: DataFrame, nCentroids: Int, k: Int, queryPred: Column,
                 nprobe: Int, rerank: Int): DataFrame = {
-    val index = buildIvfPqIndex(emb, nCentroids, nprobe).persist()
+    val index = buildIvfPqIndexWith(emb, ivfCentroids(emb, nCentroids), nprobe)
+      .persist()
     try ivfPqSearchIndexed(index, k, queryPred, rerank).pin()
     finally index.unpersist(blocking = false)
   }
 
-  /** One-time IVF-PQ index build: (vec_id, cells, v, pq_code) — each
-    * vector's `nprobe` nearest coarse cells (cells(0) is its home cell),
-    * its full vector, and its 8-byte PQ code. ONE corpus-wide
-    * centroid-scoring pass + one encode pass; the caller persists the
-    * result (cache for a session, parquet table for a corpus) and amortizes
-    * it across every subsequent [[ivfPqSearchIndexed]] call — the operator
-    * itself holds no state.
+  /** The one IVF-PQ index build: (vec_id, cells, v, pq_code) — each
+    * vector's `nprobe` probed cells under `routing` (cells(0) is its home
+    * cell), its full vector, and its 8-byte PQ code. ONE corpus-wide
+    * centroid-scoring pass + one encode projection; the caller persists
+    * the result (cache for a session, parquet table for a corpus) and
+    * amortizes it across every subsequent search — the operator itself
+    * holds no state. [[Flat]] over [[ivfCentroids]] is the first-n build,
+    * over [[kmeansCentroids]] the refresh (a refresh re-cells the whole
+    * corpus: the full re-index the append scaladoc names). [[TwoLevel]]
+    * is the build the autoscale law needs: with cells ∝ n the flat
+    * assignment is n·cells = n²/100 cosines, the two-level one
+    * n·O(√cells), while search is unchanged — it reads whatever `cells`
+    * list the index carries (q227 end-to-end, q231 with k-means-refreshed
+    * fine centroids).
     */
-  def buildIvfPqIndex(emb: DataFrame, nCentroids: Int, nprobe: Int): DataFrame =
-    withPqCode(ivfAssignProbes(emb, nCentroids, nprobe))
+  def buildIvfPqIndexWith(emb: DataFrame, routing: IvfRouting,
+      nprobe: Int): DataFrame =
+    withPqCode(routing.assign(asV(emb), nprobe))
+
+  /** [[Flat]] over a (cid, cv) `centroids` table. */
+  def buildIvfPqIndexWith(emb: DataFrame, centroids: DataFrame,
+      nprobe: Int): DataFrame = buildIvfPqIndexWith(emb, Flat(centroids), nprobe)
 
   /** PQ code as a POST-ASSIGNMENT projection over the carried double
     * vector — the build/append shape fix (r21, guide §2.4): every index
@@ -683,23 +736,26 @@ object Similarity {
     assigned.withColumn("pq_code",
       graft.functions.PqExpressions.pqEncode(col("v")).getField("pq_code"))
 
-  /** Incremental index maintenance: assign + encode ONLY the new batch
-    * against the centroid table the existing index was built from, and
-    * union it on. Work is O(|batch|·nCentroids) — the existing index is
-    * touched only by the (lazy, schema-preserving) union, so appending a
-    * day's ingest to a 100 TB index never rescans the corpus. Because the
-    * batch scores against the SAME centroids, append-then-search is
-    * bit-identical to a full rebuild over old ∪ new (q223 proves this
-    * against q216's oracle). Centroid drift is the caller's policy knob:
-    * re-deriving centroids (periodic k-means refresh) changes cell
-    * geometry and requires the classic full re-index.
+  /** Incremental index maintenance: build ONLY the new batch under the
+    * routing the existing index was built with, and union it on. Work is
+    * O(|batch|·cells) flat, |batch|·O(√cells) two-level — the existing
+    * index is touched only by the (lazy, schema-preserving) union, so
+    * appending a day's ingest to a 100 TB index never rescans the corpus.
+    * Because the batch routes against the SAME tables, append-then-search
+    * is bit-identical to a full rebuild over old ∪ new (q223 proves this
+    * against q216's oracle, q230 against q227's). Centroid drift is the
+    * caller's policy knob: re-deriving centroids (periodic k-means
+    * refresh) changes cell geometry and requires the classic full
+    * re-index. A per-epoch delta for an index store is the build alone.
     */
+  def appendToIvfPqIndex(index: DataFrame, routing: IvfRouting,
+      newEmb: DataFrame, nprobe: Int): DataFrame =
+    index.unionByName(buildIvfPqIndexWith(newEmb, routing, nprobe))
+
+  /** [[Flat]] over a (cid, cv) `centroids` table. */
   def appendToIvfPqIndex(index: DataFrame, centroids: DataFrame,
-      newEmb: DataFrame, nprobe: Int): DataFrame = {
-    val e = newEmb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val appended = withPqCode(assignProbesWith(e, centroids, nprobe))
-    index.unionByName(appended)
-  }
+      newEmb: DataFrame, nprobe: Int): DataFrame =
+    appendToIvfPqIndex(index, Flat(centroids), newEmb, nprobe)
 
   /** Compact a fragmented index store into `nFiles` cell-clustered output
     * partitions — the maintenance op every per-epoch append sink needs:
@@ -879,65 +935,10 @@ object Similarity {
   def gcStore(storeRoot: String, retainBases: Int = 1): Int =
     genStore(storeRoot).gc(retainBases)
 
-  /** [[buildIvfPqIndex]] with the two-level (coarse-quantized) assignment —
-    * the composition the autoscale law needs: with cells ∝ n (constant
-    * cell occupancy, the production knob for corpus-sized workloads), the
-    * flat build's assignment is n·cells = n²/100 cosines; routing it
-    * through ~√cells coarse cells ([[ivfAssignProbesTwoLevel]]) makes the
-    * build n·O(√cells) while the search side
-    * ([[ivfPqSearchIndexed]]) is unchanged — it reads whatever `cells`
-    * list the index carries. q227 drives this end-to-end against a DuckDB
-    * oracle replicating the routing CTE-for-CTE.
-    */
-  def buildIvfPqIndexTwoLevel(emb: DataFrame, nCentroids: Int, nprobe: Int,
-      nCoarse: Int, gProbe: Int): DataFrame =
-    withPqCode(ivfAssignProbesTwoLevel(emb, nCentroids, nprobe, nCoarse,
-      gProbe))
-
-  /** The centroid table (cid, cv) [[buildIvfPqIndex]] derives internally —
-    * persist it beside the index; [[appendToIvfPqIndex]] consumes it.
-    */
-  def ivfCentroids(emb: DataFrame, nCentroids: Int): DataFrame =
-    emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .filter(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-
-  /** The coarse centroid table (gid, gv) [[buildIvfPqIndexTwoLevel]] derives
-    * internally — the two-level index's second persisted table (alongside
-    * [[ivfCentroids]] and the [[routeFineCentroids]] routing);
-    * [[appendToIvfPqIndexTwoLevel]] consumes it.
-    */
-  def ivfCoarseCentroids(emb: DataFrame, nCoarse: Int): DataFrame =
-    emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .filter(col("vec_id") < nCoarse)
-      .select(col("vec_id").as("gid"), col("v").as("gv"))
-
-  /** [[appendToIvfPqIndex]] under the two-level assignment — the lifecycle
-    * composition the autoscale law demands: once cells ∝ n, the flat
-    * append's O(|batch|·cells) assignment re-imports the n² term
-    * [[buildIvfPqIndexTwoLevel]] removed from the build (a daily 1% ingest
-    * against a 10⁹-vector / 10⁷-cell index is 10¹⁴ flat cosines; two-level
-    * it is |batch|·O(√cells)). The batch routes against the SAME persisted
-    * coarse table and fine-routing table the index was built with
-    * ([[ivfCoarseCentroids]] / [[routeFineCentroids]] — never its own), so
-    * append-then-search is bit-identical to a two-level rebuild over
-    * old ∪ new, exactly [[appendToIvfPqIndex]]'s q223 proof shape (q230
-    * proves it against q227's oracle). The existing index is touched only
-    * by the lazy schema-preserving union — never rescanned.
-    */
-  def appendToIvfPqIndexTwoLevel(index: DataFrame, coarse: DataFrame,
-      fineRouted: DataFrame, newEmb: DataFrame, nProbe: Int,
-      gProbe: Int): DataFrame = {
-    val e = newEmb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val appended = withPqCode(assignProbesTwoLevelWith(e, coarse, fineRouted,
-      nProbe, gProbe))
-    index.unionByName(appended)
-  }
-
-  /** IVF-PQ search against a prebuilt (ideally persisted) [[buildIvfPqIndex]]
-    * table. Lazy — consumes the index four times (corpus cells, query
-    * probes, query vectors, rerank re-fetch), so an unpersisted index
-    * recomputes its build per consumer.
+  /** IVF-PQ search against a prebuilt (ideally persisted)
+    * [[buildIvfPqIndexWith]] table. Lazy — consumes the index four times
+    * (corpus cells, query probes, query vectors, rerank re-fetch), so an
+    * unpersisted index recomputes its build per consumer.
     */
   def ivfPqSearchIndexed(index: DataFrame, k: Int, queryPred: Column,
                          rerank: Int): DataFrame =
@@ -967,11 +968,11 @@ object Similarity {
     * query vectors need not be index members (a user searching a corpus
     * with NEW embeddings). `queries` is (qid, qv double[]); `qcells` is
     * (qid, cell), the queries' probe assignment against the SAME centroid
-    * geometry the index was built with (flat [[assignProbesWith]] or
-    * two-level [[assignProbesTwoLevelWith]] against the persisted tables,
-    * exploded) — assignment stays a seam so the caller picks the routing
-    * that matches the index's scale knob. [[ivfPqSearchIndexed]] is now
-    * this with queries drawn from the index itself. Caller contract: qids
+    * geometry the index was built with (the index's [[IvfRouting]]
+    * `assign` over the persisted tables, exploded) — assignment stays a
+    * seam so the caller picks the routing that matches the index's scale
+    * knob. [[ivfPqSearchIndexed]] is this with queries drawn from the
+    * index itself. Caller contract: qids
     * disjoint from corpus vec_ids (the nid ≠ qid guard only suppresses
     * literal id collisions, it cannot de-alias a query that IS a corpus
     * row under a different id). Scale shape unchanged: queries/LUTs/
@@ -994,13 +995,31 @@ object Similarity {
     ivfPqSearchImpl(index, queries, qcells, k, rerank)
   }
 
-  private def ivfPqSearchImpl(index: DataFrame, queries: DataFrame,
-                              qcells: DataFrame, k: Int, rerank: Int): DataFrame = {
-    val corpus = index
-      .select(col("vec_id").as("nid"), col("cells").getItem(0).as("cell"),
-        col("pq_code"))
+  /** (nid, cell, pq_code): every index row under its home cell — the
+    * candidate side of a search. The candidate join carries the 8-BYTE
+    * CODE, never the 256-byte vector (asserted by plan test).
+    */
+  private[graft] def ivfCodes(index: DataFrame): DataFrame =
+    index.select(col("vec_id").as("nid"), col("cells").getItem(0).as("cell"),
+      col("pq_code"))
+
+  /** The one probe → ADC shortlist → exact rerank chain behind every
+    * IVF-PQ search. `corpus` is the candidate side, [[ivfCodes]] of the
+    * index unless given; `index` supplies the rerank vectors (vec_id, v).
+    * Optional leading `keys` columns on `qcells`, `corpus` and the output
+    * run several independent searches in one pass (q238's legs): a
+    * candidate meets only the probes of its own key and both top-k
+    * reductions group by (keys…, qid), so each key's rows equal its own
+    * unkeyed search (Round11Spec pins it), while the rerank still reads
+    * (vec_id, v) once, joined on nid, not once per key. Output:
+    * (keys…, qid, rn, nid, cos).
+    */
+  private[graft] def ivfPqSearchImpl(index: DataFrame, queries: DataFrame,
+      qcells: DataFrame, k: Int, rerank: Int, keys: Seq[String] = Nil,
+      corpus: Option[DataFrame] = None): DataFrame = {
+    val group = (keys :+ "qid").map(col)
     val qv = queries.select(col("qid"), col("qv"))
-    val cand = qcells.join(corpus, Seq("cell"))
+    val cand = qcells.join(corpus.getOrElse(ivfCodes(index)), keys :+ "cell")
       .filter(col("nid") =!= col("qid"))
     // ADC table on the broadcast query side (|queries| rows pay the full
     // codebook expression once); candidates pay nSub lookups each — see
@@ -1009,16 +1028,17 @@ object Similarity {
     val scored = cand.join(broadcast(qlut), Seq("qid"))
       .withColumn("nadc",
         (-adcDist2MicroLut(col("lut"), col("pq_code"))).cast("double"))
-    val short = scored.groupBy("qid")
+    val short = scored.groupBy(group: _*)
       .agg(graft.functions.TopKNeighborsAgg
         .topkNeighbors(col("nadc"), col("nid"), rerank).as("top"))
-      .select(col("qid"), explode(col("top")).as("n"))
-      .select(col("qid"), col("n").getField("nid").as("nid"))
+      .select(group :+ explode(col("top")).as("n"): _*)
+      .select(group :+ col("n").getField("nid").as("nid"): _*)
     val nvec = index.select(col("vec_id").as("nid"), col("v").as("nv"))
     val rescored = nvec.join(broadcast(short), Seq("nid"))
       .join(broadcast(qv), Seq("qid"))
       .withColumn("cos", cosine(col("qv"), col("nv")))
-    topKPerQuery(rescored.select("qid", "nid", "cos"), k)
+    topKPerQuery(rescored.select(group ++ Seq(col("nid"), col("cos")): _*),
+      k, keys)
   }
 
   /** Iterative Lloyd k-means over an embedding column (Euclidean).
@@ -1039,7 +1059,7 @@ object Similarity {
     */
   def kmeans(emb: DataFrame, k: Int, iterations: Int): DataFrame = {
     require(k > 0 && iterations > 0, s"kmeans needs k > 0 and iterations > 0 (got k=$k, iterations=$iterations)")
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v")).cache()
+    val e = asV(emb).cache()
     try {
       // M-step skipped after the FINAL E-step — those centroids would be
       // discarded (a full corpus-wide shuffle + collect for nothing)
@@ -1062,7 +1082,7 @@ object Similarity {
   def kmeansCentroids(emb: DataFrame, k: Int, iterations: Int): DataFrame = {
     require(k > 0 && iterations > 0, s"kmeansCentroids needs k > 0 and iterations > 0 (got k=$k, iterations=$iterations)")
     val spark = emb.sparkSession
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v")).cache()
+    val e = asV(emb).cache()
     try {
       val (_, centroids) = lloyd(e, firstNInit(e, k), iterations,
         mAfterLast = true)
@@ -1103,8 +1123,9 @@ object Similarity {
     * Points at D² = 0 (exact duplicates of a chosen centroid) draw E = ∞
     * and are picked only when every remaining point is a duplicate.
     * Returns the (cid, cv) centroid table (cid = 0..k-1 in pick order) —
-    * feed it to [[buildIvfPqIndexWith]]/[[buildIvfPqIndexTwoLevelWith]]/
-    * [[assignProbesWith]], or let [[kmeansPlusPlusCentroids]] refine it.
+    * route a [[buildIvfPqIndexWith]] build through it ([[Flat]], or as
+    * [[TwoLevel]]'s fine table), or let [[kmeansPlusPlusCentroids]]
+    * refine it.
     * Oracle-checked queries keep the first-n path (a DuckDB twin of the
     * race would re-implement xxhash64); specs pin this path's determinism
     * and its quantization-error win instead (Round12Spec).
@@ -1157,7 +1178,7 @@ object Similarity {
       val m = ob.get("m").asInstanceOf[org.apache.spark.sql.Row]
       (m.getLong(1), m.getSeq[Double](2))
     }
-    val e0 = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val e0 = asV(emb)
     // first centroid: a uniform seeded pick (the race with all weights 1).
     // The n >= k guard rides the SAME aggregate (count piggybacked on the
     // race min — ADVICE r13: a separate count() was a full corpus pass
@@ -1221,7 +1242,7 @@ object Similarity {
     val init = kmeansPlusPlusInit(emb, k, seed)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1)
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v")).cache()
+    val e = asV(emb).cache()
     try {
       val (_, centroids) = lloyd(e, init, iterations, mAfterLast = true)
       import spark.implicits._
@@ -1279,7 +1300,7 @@ object Similarity {
         .nearestInSet(col("v"), batch.flatten.toArray, dim)
         .getField("d2")
     }
-    val e0 = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val e0 = asV(emb)
     // seed candidate: the uniform race pick (all weights 1); the n >= k
     // guard rides the same aggregate — no separate count() pass (ADVICE r13)
     val first = e0
@@ -1411,7 +1432,7 @@ object Similarity {
     val init = kmeansParallelInit(emb, k, seed, oversample, rounds)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1)
-    val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v")).cache()
+    val e = asV(emb).cache()
     try {
       val (_, centroids) = lloyd(e, init, iterations, mAfterLast = true)
       import spark.implicits._
@@ -1484,48 +1505,4 @@ object Similarity {
     }
     (assigned, centroids)
   }
-
-  /** [[buildIvfPqIndex]] with an EXPLICIT centroid table — pairs with
-    * [[kmeansCentroids]] for the refresh path (a refresh re-cells the
-    * whole corpus: this is the full re-index the append scaladoc names).
-    */
-  def buildIvfPqIndexWith(emb: DataFrame, centroids: DataFrame,
-      nprobe: Int): DataFrame =
-    withPqCode(assignProbesWith(
-      emb.select(col("vec_id"), asDouble(col("embedding")).as("v")),
-      centroids, nprobe))
-
-  /** [[buildIvfPqIndexTwoLevel]] with EXPLICIT fine (cid, cv) and coarse
-    * (gid, gv) centroid tables — the two-level REFRESH path: when drift
-    * degrades cell balance, re-derive the fine centroids
-    * ([[kmeansCentroids]]) and run the full re-index through the two-level
-    * routing instead of the flat [[buildIvfPqIndexWith]], whose
-    * O(n·cells) assignment is the n² trap under cells ∝ n — a refresh
-    * rescans the whole corpus BY DEFINITION, which is exactly when the
-    * assignment term matters most. Derives the [[routeFineCentroids]]
-    * routing from the given tables (cells·nCoarse cosines — tiny); persist
-    * that routing beside the index so subsequent appends
-    * ([[appendToIvfPqIndexTwoLevel]]) reuse it. q231 proves
-    * refresh-then-search hash-exact with k-means-refreshed fine centroids.
-    */
-  def buildIvfPqIndexTwoLevelWith(emb: DataFrame, fine: DataFrame,
-      coarse: DataFrame, nProbe: Int, gProbe: Int): DataFrame =
-    withPqCode(assignProbesTwoLevelWith(
-      emb.select(col("vec_id"), asDouble(col("embedding")).as("v")),
-      coarse, routeFineCentroids(fine, coarse), nProbe, gProbe))
-
-  /** [[buildIvfPqIndexTwoLevelWith]] taking the PERSISTED routing table
-    * directly — the build twin of [[appendToIvfPqIndexTwoLevel]]'s seam:
-    * callers that already checkpoint coarse + fineRouted for the append
-    * path (q253/q259, the external-search setup) used to hand the build
-    * only the raw centroid tables, so the build re-derived the routing
-    * (and re-filtered the centroid tables out of the corpus scan) that
-    * sat materialized next to it. Same output, fewer jobs in the build
-    * materialization.
-    */
-  def buildIvfPqIndexTwoLevelRouted(emb: DataFrame, coarse: DataFrame,
-      fineRouted: DataFrame, nProbe: Int, gProbe: Int): DataFrame =
-    withPqCode(assignProbesTwoLevelWith(
-      emb.select(col("vec_id"), asDouble(col("embedding")).as("v")),
-      coarse, fineRouted, nProbe, gProbe))
 }

@@ -185,22 +185,17 @@ object VectorQueries {
       |      WHERE vec_id < (SELECT ncoarse FROM g))""".stripMargin)
 
   /** One micro-batch of the streaming semantic-dedup ingest screen
-    * (q233/q235): two-level-assign the batch against the persisted
-    * coarse/fine-routing tables, find shared-probed-cell corpus candidates
-    * (corpProbes carries its vector — cosine streams as a filter, no
-    * pair-sized vector shuffle), and emit the integer-only verdict per
-    * ingest vector. Package-visible so the batch-boundary-independence
+    * (q233/q235): assign the batch under the persisted index's `routing`,
+    * find shared-probed-cell corpus candidates (corpProbes carries its
+    * vector — cosine streams as a filter, no pair-sized vector shuffle),
+    * and emit the integer-only verdict per ingest vector. Package-visible so the batch-boundary-independence
     * spec can drive the SAME code over multi-epoch delivery.
     */
   private[graft] def ingestScreenBatch(batch: org.apache.spark.sql.DataFrame,
-      coarse: org.apache.spark.sql.DataFrame,
-      froute: org.apache.spark.sql.DataFrame,
+      routing: Similarity.IvfRouting,
       corpProbes: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val asg = Similarity.assignProbesTwoLevelWith(
-      batch.select(col("vec_id"),
-        Similarity.asDouble(col("embedding")).as("v")),
-      coarse, froute, SemDedupProbes, 2)
+    val asg = routing.assign(Similarity.asV(batch), SemDedupProbes)
     val dups = Similarity.cellLocalScreen(asg, corpProbes, SemDedupTau)
       .groupBy("vec_id")
       .agg(count(lit(1)).as("n_dup_matches"))
@@ -1318,7 +1313,7 @@ object VectorQueries {
         |ORDER BY kk.qid""".stripMargin)),
 
     // ---- IVF-PQ search over a PERSISTED index (the production path) ----
-    // The round-8 memory-contract split made explicit: buildIvfPqIndex runs
+    // The round-8 memory-contract split made explicit: the build runs
     // ONCE, the table lands on storage (parquet here — on a cluster, a
     // partitioned table the scheduler can co-locate), and every search is
     // a plain read of (ids, cells, codes, vectors) with NO session pin and
@@ -1336,7 +1331,8 @@ object VectorQueries {
         // run in /tmp, and a failed search must not leak the dir either
         // (ADVICE r9); the walk stream is closed via the Using bracket.
         try {
-          Similarity.buildIvfPqIndex(emb, IvfPqCells, IvfPqProbes)
+          Similarity.buildIvfPqIndexWith(emb,
+              Similarity.ivfCentroids(emb, IvfPqCells), IvfPqProbes)
             .write.mode("overwrite").parquet(idxDir.toString)
           val index = s.read.parquet(idxDir.toString)
           Similarity.ivfPqSearchIndexed(index, 5,
@@ -1433,10 +1429,10 @@ object VectorQueries {
         val emb = Tables.embeddings(s, dir)
         val isNew = col("vec_id") >= IvfPqCells && col("vec_id") % 5 === 0
         val old = emb.filter(!isNew)
+        val cents = Similarity.ivfCentroids(old, IvfPqCells)
         val index = Similarity.appendToIvfPqIndex(
-            Similarity.buildIvfPqIndex(old, IvfPqCells, IvfPqProbes),
-            Similarity.ivfCentroids(old, IvfPqCells),
-            emb.filter(isNew), IvfPqProbes)
+            Similarity.buildIvfPqIndexWith(old, cents, IvfPqProbes),
+            cents, emb.filter(isNew), IvfPqProbes)
           .persist()
         try Similarity.ivfPqSearchIndexed(index, 5,
             col("vec_id") % 50 === 0, IvfPqRerank)
@@ -1662,7 +1658,7 @@ object VectorQueries {
     // corpus × query-batch; the production knob for corpus-tracking
     // workloads is cells ∝ n — and under that law the flat index BUILD
     // becomes the n² assignment q226 just retired for dedup. This query
-    // composes the full fix: buildIvfPqIndexTwoLevel (cells = n/100
+    // composes the full fix: a TwoLevel-routed build (cells = n/100
     // autoscaled, assignment routed through √cells coarse cells, PQ codes
     // unchanged) + the UNCHANGED ivfPqSearchIndexed (the search reads
     // whatever probe list the index carries — its candidate mass is
@@ -1676,8 +1672,8 @@ object VectorQueries {
         val emb = Tables.embeddings(s, dir)
         val cells = math.max(8L, emb.count() / 100L).toInt
         val nCoarse = math.max(4, math.ceil(math.sqrt(cells.toDouble)).toInt)
-        val index = Similarity
-          .buildIvfPqIndexTwoLevel(emb, cells, SemDedupProbes, nCoarse, 2)
+        val index = Similarity.buildIvfPqIndexWith(emb,
+            Similarity.TwoLevel.firstN(emb, cells, nCoarse, 2), SemDedupProbes)
           .persist()
         try Similarity.ivfPqSearchIndexed(index, 5,
             col("vec_id") % 50 === 0, IvfPqRerank)
@@ -1824,7 +1820,7 @@ object VectorQueries {
     // the maintenance path (r10 verdict's one substantive gap). Here the
     // two-level index AND its three state tables (coarse centroids, fine
     // routing, the index itself) round-trip through parquet, a held-out
-    // ingest batch is appended via assignProbesTwoLevelWith against the
+    // ingest batch is appended via TwoLevel routing against the
     // PERSISTED tables (batch·O(√cells) work), and search runs over the
     // merged index. Because the batch routes against the same coarse/fine
     // tables the build used, append-then-search is bit-identical to a
@@ -1842,19 +1838,17 @@ object VectorQueries {
         val idxDir = java.nio.file.Files
           .createTempDirectory("graft_ivfpq2_index")
         try {
-          val coarse = Similarity.ivfCoarseCentroids(old, nCoarse)
-          Similarity.buildIvfPqIndexTwoLevel(old, cells, SemDedupProbes,
-              nCoarse, 2)
+          val routing = Similarity.TwoLevel.firstN(old, cells, nCoarse, 2)
+          Similarity.buildIvfPqIndexWith(old, routing, SemDedupProbes)
             .write.mode("overwrite").parquet(s"$idxDir/index")
-          coarse.write.mode("overwrite").parquet(s"$idxDir/coarse")
-          Similarity
-            .routeFineCentroids(Similarity.ivfCentroids(old, cells), coarse)
-            .write.mode("overwrite").parquet(s"$idxDir/froute")
-          val index = Similarity.appendToIvfPqIndexTwoLevel(
+          routing.coarse.write.mode("overwrite").parquet(s"$idxDir/coarse")
+          routing.fineRouted.write.mode("overwrite")
+            .parquet(s"$idxDir/froute")
+          val index = Similarity.appendToIvfPqIndex(
               s.read.parquet(s"$idxDir/index"),
-              s.read.parquet(s"$idxDir/coarse"),
-              s.read.parquet(s"$idxDir/froute"),
-              emb.filter(isNew), SemDedupProbes, 2)
+              Similarity.TwoLevel(s.read.parquet(s"$idxDir/coarse"),
+                s.read.parquet(s"$idxDir/froute"), 2),
+              emb.filter(isNew), SemDedupProbes)
             .persist()
           try Similarity.ivfPqSearchIndexed(index, 5,
               col("vec_id") % 50 === 0, IvfPqRerank)
@@ -1876,11 +1870,11 @@ object VectorQueries {
     // ---- two-level centroid REFRESH → re-index → search (drift policy) --
     // q224's refresh leg under the two-level routing: a refresh re-cells
     // the WHOLE corpus by definition — exactly when the flat
-    // buildIvfPqIndexWith's O(n·cells) assignment hurts most under
+    // Flat-routed build's O(n·cells) assignment hurts most under
     // cells ∝ n — so the production refresh must route two-level too.
     // Fine centroids are k-means-refreshed (kmeansCentroids, 2 Lloyd
     // rounds — arbitrary non-prefix-id centroid geometry, proving the
-    // assignProbesTwoLevelWith seam is centroid-agnostic, not an artifact
+    // TwoLevel routing seam is centroid-agnostic, not an artifact
     // of the first-n stand-in); coarse stays the deterministic first-6
     // stand-in (ceil(√32) — the autoscale pairing at the pinned k). Knobs
     // are PINNED (k = 32) because the oracle unrolls Lloyd at compile time
@@ -1894,8 +1888,9 @@ object VectorQueries {
         val refreshed = Similarity.kmeansCentroids(emb, IvfPqCells,
           iterations = 2)
         val coarse = Similarity.ivfCoarseCentroids(emb, 6)
-        val index = Similarity.buildIvfPqIndexTwoLevelWith(emb, refreshed,
-            coarse, SemDedupProbes, 2)
+        val index = Similarity.buildIvfPqIndexWith(emb, Similarity.TwoLevel(
+            coarse, Similarity.routeFineCentroids(refreshed, coarse), 2),
+            SemDedupProbes)
           .persist()
         try Similarity.ivfPqSearchIndexed(index, 5,
             col("vec_id") % 50 === 0, IvfPqRerank)
@@ -1942,8 +1937,9 @@ object VectorQueries {
         val froute = Similarity
           .routeFineCentroids(Similarity.ivfCentroids(old, cells), coarse)
           .pin()
-        val index = Similarity.buildIvfPqIndexTwoLevelRouted(old, coarse,
-            froute, SemDedupProbes, 2)
+        val routing = Similarity.TwoLevel(coarse, froute, 2)
+        val index = Similarity.buildIvfPqIndexWith(old, routing,
+            SemDedupProbes)
           .persist()
         val outRoot = java.nio.file.Files
           .createTempDirectory("graft_ingest_screen")
@@ -1959,7 +1955,7 @@ object VectorQueries {
             .filter(isNew)
           val screen: (org.apache.spark.sql.DataFrame, Long) => Unit =
             (batch, epoch) => {
-              ingestScreenBatch(batch, coarse, froute, corpProbes)
+              ingestScreenBatch(batch, routing, corpProbes)
                 .write.mode("overwrite").parquet(s"$outRoot/batch=$epoch")
             }
           val q = ingest.writeStream.foreachBatch(screen).start()
@@ -2004,8 +2000,8 @@ object VectorQueries {
     // store actually runs: each micro-batch is screened against the
     // ORIGINAL persisted index (dup iff any shared-probed-cell corpus
     // neighbor at cosine ≥ τ), the survivors are two-level-assigned +
-    // PQ-encoded as a per-epoch INDEX DELTA (appendToIvfPqIndexTwoLevel
-    // against an empty base — the idempotent overwrite-by-epoch sink
+    // PQ-encoded as a per-epoch INDEX DELTA (the batch's own build under
+    // the index's routing — the idempotent overwrite-by-epoch sink
     // discipline applied to index maintenance itself), and search runs
     // over original ∪ deltas. Because the screen verdict is vs the
     // original index only, the final index is independent of batch
@@ -2027,8 +2023,9 @@ object VectorQueries {
         val froute = Similarity
           .routeFineCentroids(Similarity.ivfCentroids(old, cells), coarse)
           .pin()
-        val index0 = Similarity.buildIvfPqIndexTwoLevelRouted(old, coarse,
-            froute, SemDedupProbes, 2)
+        val routing = Similarity.TwoLevel(coarse, froute, 2)
+        val index0 = Similarity.buildIvfPqIndexWith(old, routing,
+            SemDedupProbes)
           .persist()
         val outRoot = java.nio.file.Files
           .createTempDirectory("graft_ingest_append")
@@ -2042,10 +2039,7 @@ object VectorQueries {
           val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
             (batch, epoch) => {
               val b = batch.pin() // screened AND encoded below
-              val asg = Similarity.assignProbesTwoLevelWith(
-                b.select(col("vec_id"),
-                  Similarity.asDouble(col("embedding")).as("v")),
-                coarse, froute, SemDedupProbes, 2)
+              val asg = routing.assign(Similarity.asV(b), SemDedupProbes)
               // the shared score-then-distinct screen shape
               // (Similarity.cellLocalScreen), reduced to the dup id set
               val dupIds = Similarity
@@ -2053,8 +2047,8 @@ object VectorQueries {
                 .select(col("vec_id").as("dup_id")).distinct()
               val survivors = b.join(dupIds,
                 col("vec_id") === col("dup_id"), "left_anti")
-              Similarity.appendToIvfPqIndexTwoLevel(index0.limit(0),
-                  coarse, froute, survivors, SemDedupProbes, 2)
+              Similarity.buildIvfPqIndexWith(survivors, routing,
+                  SemDedupProbes)
                 .write.mode("overwrite").parquet(s"$outRoot/batch=$epoch")
             }
           val q = ingest.writeStream.foreachBatch(step).start()
@@ -2096,7 +2090,7 @@ object VectorQueries {
     // qvec seam) — hash-exact end to end.
     QueryDef("q236_ann_external_queries",
       (s, dir) => {
-        val (xq, index, qcells, _, _) = externalAnnSetup(s, dir)
+        val (xq, index, qcells, _) = externalAnnSetup(s, dir)
         try Similarity.ivfPqSearchQueries(index, xq, qcells, 5, IvfPqRerank)
           .orderBy("qid", "rn").pin()
         finally index.unpersist(blocking = false)
@@ -2119,7 +2113,7 @@ object VectorQueries {
     // semi-joined to the lang predicate.
     QueryDef("q237_filtered_ann_search",
       (s, dir) => {
-        val (xq, index, qcells, _, _) = externalAnnSetup(s, dir)
+        val (xq, index, qcells, _) = externalAnnSetup(s, dir)
         val allowed = Tables.documents(s, dir)
           .filter(col("lang") === "en").select(col("doc_id"))
         val fIndex = index.join(allowed,
@@ -2167,13 +2161,10 @@ object VectorQueries {
       (s, dir) => {
         import org.apache.spark.sql.DataFrame
         import org.apache.spark.sql.expressions.Window
-        val (xq, index, qc4, coarse, froute) = externalAnnSetup(s, dir)
+        val (xq, index, qc4, routing) = externalAnnSetup(s, dir)
         val emb = Tables.embeddings(s, dir)
         val docs = Tables.documents(s, dir)
-        val qc8 = Similarity.assignProbesTwoLevelWith(
-            xq.select(col("qid").as("vec_id"), col("qv").as("v")),
-            coarse, froute, 8, 2)
-          .select(col("vec_id").as("qid"), explode(col("cells")).as("cell"))
+        val qc8 = routing.queryCells(xq, 8)
         val tags = Seq("en", "de", "zh3")
         try {
           // COMPOSITE restructure (r21, guide §1.2/§2.4): the original
@@ -2211,10 +2202,9 @@ object VectorQueries {
               explode(transform(col("top"), _.getField("nid"))).as("nid"))
           // ONE composite IVF-PQ search over leg-tagged corpus/probe
           // rows: leg "over" = the shared unfiltered overfetch, legs
-          // "p4_<tag>"/"p8_<tag>" = the pre-filtered searches. Same
-          // stages as ivfPqSearchImpl with (qid) → (leg, qid).
-          val corpusAll = index.select(col("vec_id").as("nid"),
-            col("cells").getItem(0).as("cell"), col("pq_code"))
+          // "p4_<tag>"/"p8_<tag>" = the pre-filtered searches — the one
+          // search chain keyed by leg.
+          val corpusAll = Similarity.ivfCodes(index)
           val corpusTag = corpusAll
             .join(tagged, col("nid") === col("doc_id"))
             .select(col("tag"), col("nid"), col("cell"), col("pq_code"))
@@ -2235,29 +2225,9 @@ object VectorQueries {
                 col("cell"))
               .select(concat(lit("p8_"), col("tag")).as("leg"), col("qid"),
                 col("cell")))
-          val qlut = qb.withColumn("lut", Similarity.adcLut(col("qv")))
-          val short = legCells.join(legCorpus, Seq("leg", "cell"))
-            .filter(col("nid") =!= col("qid"))
-            .join(broadcast(qlut.select(col("qid"), col("lut"))), Seq("qid"))
-            .withColumn("nadc", (-Similarity
-              .adcDist2MicroLut(col("lut"), col("pq_code"))).cast("double"))
-            .groupBy("leg", "qid")
-            .agg(graft.functions.TopKNeighborsAgg
-              .topkNeighbors(col("nadc"), col("nid"), IvfPqRerank).as("top"))
-            .select(col("leg"), col("qid"), explode(col("top")).as("n"))
-            .select(col("leg"), col("qid"), col("n").getField("nid").as("nid"))
-          val nvec = index.select(col("vec_id").as("nid"), col("v").as("nv"))
-          val resLazy = nvec.join(broadcast(short), Seq("nid"))
-            .join(broadcast(qb), Seq("qid"))
-            .withColumn("cos", Similarity.cosine(col("qv"), col("nv")))
-            .groupBy("leg", "qid")
-            .agg(graft.functions.TopKNeighborsAgg
-              .topkNeighbors(col("cos"), col("nid"), PostOverfetch).as("top"))
-            .select(col("leg"), col("qid"),
-              posexplode(col("top")).as(Seq("pos", "n")))
-            .select(col("leg"), col("qid"),
-              (col("pos") + 1).cast("int").as("rn"),
-              col("n.nid").as("nid"), col("n.cos").as("cos"))
+          val resLazy = Similarity.ivfPqSearchImpl(index, qb, legCells,
+            PostOverfetch, IvfPqRerank, keys = Seq("leg"),
+            corpus = Some(legCorpus))
           // the composite truth pass (brute force over emb) and the
           // composite search pass (ADC chain over the index) are
           // independent once `tagged` is pinned — they only meet in the
@@ -2382,7 +2352,7 @@ object VectorQueries {
     // 11.8/14.3/30.4 s across
     // the 1×/10×/100× corpora at k=64), but no composed artifact used it
     // (r13 verdict #3). Here the ‖-seeded Lloyd centroids ARE the
-    // fine-cell table of the two-level build (buildIvfPqIndexTwoLevelWith
+    // fine-cell table of the two-level build (a TwoLevel-routed build
     // — the index a production corpus builds at the autoscale law's
     // k ~ 10⁴, where ++'s k sequential barrier jobs are exactly what ‖
     // exists to remove). The ‖ race is seeded xxhash64 — the
@@ -2408,8 +2378,9 @@ object VectorQueries {
           iterations = 2, seed = 7L, rounds = 3)
         val coarse = Similarity.ivfCoarseCentroids(emb, nCoarse)
           .pin()
-        val index = Similarity.buildIvfPqIndexTwoLevelWith(emb, fine,
-            coarse, cells, nCoarse)
+        val index = Similarity.buildIvfPqIndexWith(emb, Similarity.TwoLevel(
+            coarse, Similarity.routeFineCentroids(fine, coarse), nCoarse),
+            cells)
           .persist()
         try Similarity.ivfPqSearchIndexed(index, 5,
             col("vec_id") % 50 === 0, rerank = n)
@@ -2448,7 +2419,7 @@ object VectorQueries {
     // its routed cells only — no per-epoch index scan, no stream state.
     QueryDef("q245_stream_ann_search",
       (s, dir) => {
-        val (xq, index, _, coarse, froute) = externalAnnSetup(s, dir)
+        val (xq, index, _, routing) = externalAnnSetup(s, dir)
         val sc = s.sparkContext
         import graft.util.CheckpointGen
         val root = java.nio.file.Files
@@ -2479,11 +2450,7 @@ object VectorQueries {
               val b = batch.pin()
               val bPins = CheckpointGen.pinnedIds(b)
               try {
-                val qcells = Similarity.assignProbesTwoLevelWith(
-                    b.select(col("qid").as("vec_id"), col("qv").as("v")),
-                    coarse, froute, SemDedupProbes, 2)
-                  .select(col("vec_id").as("qid"),
-                    explode(col("cells")).as("cell"))
+                val qcells = routing.queryCells(b, SemDedupProbes)
                 Similarity.ivfPqSearchQueries(index, b, qcells, 5,
                     IvfPqRerank)
                   .write.mode("overwrite").parquet(s"$root/out/batch=$epoch")
@@ -2527,16 +2494,17 @@ object VectorQueries {
         val old = emb.filter(!isNew)
         val cents = Similarity.ivfCentroids(old, IvfPqCells)
           .pin()
-        val base = Similarity.buildIvfPqIndex(old, IvfPqCells, IvfPqProbes)
+        val base = Similarity.buildIvfPqIndexWith(old,
+          Similarity.ivfCentroids(old, IvfPqCells), IvfPqProbes)
         val root = java.nio.file.Files
           .createTempDirectory("graft_index_compact").toString
         try {
           base.repartition(6).write.mode("overwrite")
             .parquet(s"$root/frag/base")
           for (e <- Seq(0, 5)) {
-            Similarity.appendToIvfPqIndex(base.limit(0), cents,
+            Similarity.buildIvfPqIndexWith(
                 emb.filter(isNew && pmod(col("vec_id"), lit(10)) === e),
-                IvfPqProbes)
+                cents, IvfPqProbes)
               .repartition(3).write.mode("overwrite")
               .parquet(s"$root/frag/delta$e")
           }
@@ -2597,8 +2565,9 @@ object VectorQueries {
         val froute = Similarity
           .routeFineCentroids(Similarity.ivfCentroids(old, cells), coarse)
           .pin()
-        val index0 = Similarity.buildIvfPqIndexTwoLevelRouted(old, coarse,
-            froute, SemDedupProbes, 2)
+        val routing = Similarity.TwoLevel(coarse, froute, 2)
+        val index0 = Similarity.buildIvfPqIndexWith(old, routing,
+            SemDedupProbes)
           .persist()
         val sc = s.sparkContext
         import graft.util.CheckpointGen
@@ -2636,17 +2605,14 @@ object VectorQueries {
               val b = batch.pin()
               val bPins = CheckpointGen.pinnedIds(b)
               try {
-                val asg = Similarity.assignProbesTwoLevelWith(
-                  b.select(col("vec_id"),
-                    Similarity.asDouble(col("embedding")).as("v")),
-                  coarse, froute, SemDedupProbes, 2)
+                val asg = routing.assign(Similarity.asV(b), SemDedupProbes)
                 val dupIds = Similarity
                   .cellLocalScreen(asg, corpProbes, SemDedupTau)
                   .select(col("vec_id").as("dup_id")).distinct()
                 val survivors = b.join(dupIds,
                   col("vec_id") === col("dup_id"), "left_anti")
-                Similarity.appendToIvfPqIndexTwoLevel(index0.limit(0),
-                    coarse, froute, survivors, SemDedupProbes, 2)
+                Similarity.buildIvfPqIndexWith(survivors, routing,
+                    SemDedupProbes)
                   .repartition(3)
                   .write.mode("overwrite")
                   .parquet(s"$root/store/deltas/epoch=$epoch")
@@ -2799,7 +2765,7 @@ object VectorQueries {
     // leg over the allowed-only assignment.
     QueryDef("q257_filtered_ann_cost_rule",
       (s, dir) => {
-        val (xq, index, qc4, _, _) = externalAnnSetup(s, dir)
+        val (xq, index, qc4, _) = externalAnnSetup(s, dir)
         val emb = Tables.embeddings(s, dir)
         try {
           // the cost rule consumes only (|corpus|, |allowed|); both legs'
@@ -2904,8 +2870,9 @@ object VectorQueries {
         val froute = Similarity
           .routeFineCentroids(Similarity.ivfCentroids(old, cells), coarse)
           .pin()
-        val index0 = Similarity.buildIvfPqIndexTwoLevelRouted(old, coarse,
-            froute, SemDedupProbes, 2)
+        val routing = Similarity.TwoLevel(coarse, froute, 2)
+        val index0 = Similarity.buildIvfPqIndexWith(old, routing,
+            SemDedupProbes)
           .persist()
         val sc = s.sparkContext
         import graft.util.CheckpointGen
@@ -2929,17 +2896,14 @@ object VectorQueries {
               val b = batch.pin()
               val bPins = CheckpointGen.pinnedIds(b)
               try {
-                val asg = Similarity.assignProbesTwoLevelWith(
-                  b.select(col("vec_id"),
-                    Similarity.asDouble(col("embedding")).as("v")),
-                  coarse, froute, SemDedupProbes, 2)
+                val asg = routing.assign(Similarity.asV(b), SemDedupProbes)
                 val dupIds = Similarity
                   .cellLocalScreen(asg, corpProbes, SemDedupTau)
                   .select(col("vec_id").as("dup_id")).distinct()
                 val survivors = b.join(dupIds,
                   col("vec_id") === col("dup_id"), "left_anti")
-                Similarity.appendToIvfPqIndexTwoLevel(index0.limit(0),
-                    coarse, froute, survivors, SemDedupProbes, 2)
+                Similarity.buildIvfPqIndexWith(survivors, routing,
+                    SemDedupProbes)
                   .repartition(3)
                   .write.mode("overwrite")
                   .parquet(s"$root/store/deltas/epoch=$epoch")
@@ -3099,16 +3063,16 @@ object VectorQueries {
 
   /** Shared Spark-side scaffold for the external-query searches
     * (q236/q237/q238): the 20 deterministic jittered queries, the
-    * persisted two-level centroid/routing tables (returned so q238 can
-    * derive probe assignments at other widths), the autoscaled two-level
-    * index (PERSISTED — the caller owns the unpersist), and the queries'
-    * default probe assignment. One definition so the filtered variants
-    * cannot drift from the unfiltered one.
+    * autoscaled two-level index (PERSISTED — the caller owns the
+    * unpersist), the queries' default probe assignment, and the index's
+    * routing over its pinned centroid/routing tables (returned so q238 can
+    * derive probe assignments at other widths). One definition so the
+    * filtered variants cannot drift from the unfiltered one.
     */
   private def externalAnnSetup(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+        Similarity.TwoLevel) = {
     val emb = Tables.embeddings(s, dir)
     val cells = math.max(8L, emb.count() / 100L).toInt
     val nCoarse = math.max(4, math.ceil(math.sqrt(cells.toDouble)).toInt)
@@ -3118,14 +3082,11 @@ object VectorQueries {
     val froute = Similarity
       .routeFineCentroids(Similarity.ivfCentroids(emb, cells), coarse)
       .pin()
-    val index = Similarity.buildIvfPqIndexTwoLevelRouted(emb, coarse,
-        froute, SemDedupProbes, 2)
+    val routing = Similarity.TwoLevel(coarse, froute, 2)
+    val index = Similarity.buildIvfPqIndexWith(emb, routing, SemDedupProbes)
       .persist()
-    val qcells = Similarity.assignProbesTwoLevelWith(
-        xq.select(col("qid").as("vec_id"), col("qv").as("v")),
-        coarse, froute, SemDedupProbes, 2)
-      .select(col("vec_id").as("qid"), explode(col("cells")).as("cell"))
-    (xq, index, qcells, coarse, froute)
+    val qcells = routing.queryCells(xq, SemDedupProbes)
+    (xq, index, qcells, routing)
   }
 
   /** The 20 deterministic external query vectors (q225's md5-parity ±0.025

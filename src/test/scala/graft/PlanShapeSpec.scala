@@ -484,9 +484,10 @@ class PlanShapeSpec extends SparkSpec {
       // opaque ExistingRDD scan) — assert on the SEARCH plan itself, built
       // against a persisted index exactly as the wrapper runs it
       import org.apache.spark.sql.functions.col
-      val index = graft.ext.Similarity.buildIvfPqIndex(
-        graft.sources.Tables.embeddings(spark, dir),
-        graft.queries.VectorQueries.IvfPqCells,
+      val emb = graft.sources.Tables.embeddings(spark, dir)
+      val index = graft.ext.Similarity.buildIvfPqIndexWith(emb,
+        graft.ext.Similarity.ivfCentroids(emb,
+          graft.queries.VectorQueries.IvfPqCells),
         graft.queries.VectorQueries.IvfPqProbes).persist()
       val df = graft.ext.Similarity.ivfPqSearchIndexed(
         index, 5, col("vec_id") % 50 === 0,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import graft.ops.CoreOps
 import graft.ext.Dedup
+import graft.streaming.Streams
 
 /** Property-based checks (SURVEY.md §5.4): algebraic laws of the operator
   * library under randomized inputs (plain ScalaCheck generators; seeds vary
@@ -321,5 +322,65 @@ class PropertySpec extends SparkSpec {
     }
     val base = rows.toDF("user_id", "event_type", "ts", "event_id")
     assert(run(base) == run(base.repartition(6)))
+  }
+
+  test("guardedBatch passes clean reading batches through the pipeline and " +
+      "malformed ones through untouched, leaving no cache entry behind") {
+    import org.apache.spark.sql.DataFrame
+    // the readings_stream benchmark's datapoint pipeline: an ANSI cast gate
+    // on the integer datapoint `k`, the Reading model's map encoding of the
+    // scaled value, and the promoted typed column back
+    def pipeline(out: DataFrame): DataFrame = {
+      val gated = out
+        .transform(CoreOps.exprFilter(
+          "cast(get_json_object(props, '$.k') as int) >= 0"))
+        .withColumn("value", col("scaled"))
+      graft.model.Reading.promote(graft.model.Reading.fromEvents(gated).toDF(),
+          Seq("value", "user_id"))
+        .transform(CoreOps.renameDatapoint("value", "scaled"))
+        .transform(CoreOps.dropDatapoint("reading"))
+    }
+    // spark.range-derived, not local: the cast runs (and fails) inside the
+    // guard's evaluation, never while planning; a malformed reading's `k`
+    // is text the cast rejects
+    def batch(n: Int, bad: Set[Long]): DataFrame = spark.range(n).select(
+        col("id").as("event_id"),
+        timestamp_seconds(lit(1700000000L) + col("id")).as("ts"),
+        (col("id") % 7).as("user_id"),
+        when(col("id") % 2 === 0, "pump-01").otherwise("valve-02")
+          .as("event_type"),
+        (col("id") * 0.25).as("value"),
+        when(col("id").isin(bad.toSeq: _*),
+            concat(lit("{\"k\": \""), col("id"), lit("x\"}")))
+          .otherwise(concat(lit("{\"k\": "), col("id") % 100, lit("}")))
+          .as("props"))
+      .withColumn("scaled", col("value") * 2.0 + 1.0)
+    // half the cases clean, half holding 1..3 malformed readings
+    def gen(minBad: Int, maxBad: Int) = for {
+      n <- Gen.choose(1, 40)
+      nBad <- Gen.choose(minBad, maxBad)
+      bad <- Gen.listOfN(nBad, Gen.choose(0L, n - 1L))
+    } yield (n, bad.toSet)
+    val cases = samples(gen(0, 0), 6) ++ samples(gen(1, 3), 6)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val sc = spark.sparkContext
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try cases.foreach { case (n, bad) =>
+      val in = batch(n, bad)
+      val before = sc.getPersistentRDDs.size
+      val out = Streams.guardedBatch(pipeline)(in)
+      if (bad.nonEmpty) {
+        assert(sc.getPersistentRDDs.size == before,
+          "the failed attempt's cache entry survived the passthrough")
+        assert(out.columns.toSeq == in.columns.toSeq && rows(out) == rows(in))
+      } else {
+        val want = pipeline(in)
+        assert(out.columns.toSeq == want.columns.toSeq)
+        assert(rows(out) == rows(want))
+      }
+      out.unpersist(blocking = true) // the caller releases what guard returns
+      assert(sc.getPersistentRDDs.size == before)
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 }

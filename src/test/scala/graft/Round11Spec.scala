@@ -13,14 +13,13 @@ class Round11Spec extends SparkSpec {
 
   private def emb = Tables.embeddings(spark, dir)
 
-  test("assignProbesTwoLevelWith(derived tables) == ivfAssignProbesTwoLevel") {
+  test("TwoLevel(derived tables).assign == ivfAssignProbesTwoLevel") {
     val e = emb.select(col("vec_id"),
       Similarity.asDouble(col("embedding")).as("v"))
     val coarse = Similarity.ivfCoarseCentroids(emb, 4)
     val froute = Similarity
       .routeFineCentroids(Similarity.ivfCentroids(emb, 16), coarse)
-    val viaSeam = Similarity
-      .assignProbesTwoLevelWith(e, coarse, froute, 4, 2)
+    val viaSeam = Similarity.TwoLevel(coarse, froute, 2).assign(e, 4)
       .select(col("vec_id"), col("cells")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1)
     val direct = Similarity.ivfAssignProbesTwoLevel(emb, 16, 4, 4, 2)
@@ -41,27 +40,31 @@ class Round11Spec extends SparkSpec {
       .select(col("vec_id"), col("cells"), col("pq_code")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
       .sortBy(_._1)
-    val appended = rows(Similarity.appendToIvfPqIndexTwoLevel(
-      Similarity.buildIvfPqIndexTwoLevel(old, cells, 4, nCoarse, 2),
-      coarse, froute, emb.filter(isNew), 4, 2))
-    val rebuilt = rows(
-      Similarity.buildIvfPqIndexTwoLevel(emb, cells, 4, nCoarse, 2))
+    val routing = Similarity.TwoLevel(coarse, froute, 2)
+    val appended = rows(Similarity.appendToIvfPqIndex(
+      Similarity.buildIvfPqIndexWith(old, routing, 4),
+      routing, emb.filter(isNew), 4))
+    val rebuilt = rows(Similarity.buildIvfPqIndexWith(emb,
+      Similarity.TwoLevel.firstN(emb, cells, nCoarse, 2), 4))
     assert(appended.length == rebuilt.length && appended.length > cells)
     assert(appended.sameElements(rebuilt))
   }
 
   test("two-level refresh path (explicit kmeans fine centroids) == " +
       "derived path when fed the same first-n tables") {
-    val fine = Similarity.ivfCentroids(emb, 16)
-    val coarse = Similarity.ivfCoarseCentroids(emb, 4)
+    // explicit = materialized tables, as a refresh persists them; derived
+    // = the lazy first-n derivation
+    val fine = Similarity.ivfCentroids(emb, 16).localCheckpoint(true)
+    val coarse = Similarity.ivfCoarseCentroids(emb, 4).localCheckpoint(true)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("cells"), col("pq_code")).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
       .sortBy(_._1)
-    val withTables = rows(
-      Similarity.buildIvfPqIndexTwoLevelWith(emb, fine, coarse, 4, 2))
-    val derived = rows(
-      Similarity.buildIvfPqIndexTwoLevel(emb, 16, 4, 4, 2))
+    val withTables = rows(Similarity.buildIvfPqIndexWith(emb,
+      Similarity.TwoLevel(coarse, Similarity.routeFineCentroids(fine, coarse),
+        2), 4))
+    val derived = rows(Similarity.buildIvfPqIndexWith(emb,
+      Similarity.TwoLevel.firstN(emb, 16, 4, 2), 4))
     assert(withTables.nonEmpty && withTables.sameElements(derived))
   }
 
@@ -77,9 +80,9 @@ class Round11Spec extends SparkSpec {
       val e = emb.select(col("vec_id"),
         Similarity.asDouble(col("embedding")).as("v"))
       val coarse = Similarity.ivfCoarseCentroids(emb, 4)
-      Similarity.assignProbesTwoLevelWith(e, coarse,
+      Similarity.TwoLevel(coarse,
         Similarity.routeFineCentroids(Similarity.ivfCentroids(emb, 16),
-          coarse), nProbe = 0, gProbe = 2)
+          coarse), gProbe = 2).assign(e, nProbe = 0)
     }
   }
 
@@ -110,14 +113,15 @@ class Round11Spec extends SparkSpec {
     val froute = Similarity
       .routeFineCentroids(Similarity.ivfCentroids(old, cells), coarse)
       .localCheckpoint(true)
-    val index = Similarity
-      .buildIvfPqIndexTwoLevel(old, cells, 4, nCoarse, 2).persist()
+    val routing = Similarity.TwoLevel(coarse, froute, 2)
+    val index = Similarity.buildIvfPqIndexWith(old,
+      Similarity.TwoLevel.firstN(old, cells, nCoarse, 2), 4).persist()
     val corpProbes = index.select(col("vec_id").as("nid"),
       explode(col("cells")).as("cell"), col("v").as("nv"))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(_._1)
     val single = rows(graft.queries.VectorQueries
-      .ingestScreenBatch(emb.filter(isNew), coarse, froute, corpProbes))
+      .ingestScreenBatch(emb.filter(isNew), routing, corpProbes))
     val srcDir = java.nio.file.Files.createTempDirectory("graft_ing_parts")
     val outDir = java.nio.file.Files.createTempDirectory("graft_ing_out")
     try {
@@ -135,7 +139,7 @@ class Round11Spec extends SparkSpec {
         (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
           epochs.add(epoch)
           graft.queries.VectorQueries
-            .ingestScreenBatch(batch, coarse, froute, corpProbes)
+            .ingestScreenBatch(batch, routing, corpProbes)
             .write.mode("overwrite").parquet(s"$outDir/batch=$epoch")
       }.start()
       try q.processAllAvailable() finally q.stop()
@@ -153,32 +157,40 @@ class Round11Spec extends SparkSpec {
     }
   }
 
-  test("external-query IVF-PQ search with exhaustive knobs == brute force") {
-    val emb = Tables.embeddings(spark, dir)
-    val n = emb.count().toInt
-    val cells = 8
-    val nCoarse = 4
-    // external queries: first 5 corpus vectors nudged +0.01 on dim 0, ids
-    // offset far outside the corpus id space
+  // the external-query fixture's 8 fine and 4 coarse first-n centroids
+  private val (extCells, extCoarse) = (8, 4)
+
+  /** External queries — the first 5 corpus vectors nudged +0.01 on dim 0,
+    * ids offset far outside the corpus id space — and the persisted
+    * two-level index over the corpus (the caller unpersists it).
+    */
+  private def externalFixture()
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val xq = emb.filter(col("vec_id") < 5)
       .select((col("vec_id") + lit(1000000L)).as("qid"),
         Similarity.asDouble(col("embedding")).as("qv"))
       .withColumn("qv", concat(array(element_at(col("qv"), 1) + lit(0.01)),
         slice(col("qv"), 2, 63)))
       .localCheckpoint(true)
-    val coarse = Similarity.ivfCoarseCentroids(emb, nCoarse)
-    val froute = Similarity
-      .routeFineCentroids(Similarity.ivfCentroids(emb, cells), coarse)
-    val index = Similarity
-      .buildIvfPqIndexTwoLevel(emb, cells, 4, nCoarse, 2).persist()
+    val index = Similarity.buildIvfPqIndexWith(emb,
+      Similarity.TwoLevel.firstN(emb, extCells, extCoarse, 2), 4).persist()
+    (xq, index)
+  }
+
+  /** The queries' probe cells (qid, cell) at the given knobs. */
+  private def queryCells(xq: org.apache.spark.sql.DataFrame, nProbe: Int,
+      gProbe: Int) =
+    Similarity.TwoLevel.firstN(emb, extCells, extCoarse, gProbe)
+      .queryCells(xq, nProbe)
+
+  test("external-query IVF-PQ search with exhaustive knobs == brute force") {
+    val n = emb.count().toInt
+    val (xq, index) = externalFixture()
     try {
       // probe EVERY coarse cell and EVERY fine cell, rerank the whole
       // corpus: the approximation collapses and the result must equal the
       // exact brute-force top-k over the same (query, corpus) pair
-      val qcells = Similarity.assignProbesTwoLevelWith(
-          xq.select(col("qid").as("vec_id"), col("qv").as("v")),
-          coarse, froute, nProbe = cells, gProbe = nCoarse)
-        .select(col("vec_id").as("qid"), explode(col("cells")).as("cell"))
+      val qcells = queryCells(xq, nProbe = extCells, gProbe = extCoarse)
       def rows(df: org.apache.spark.sql.DataFrame) = df
         .select("qid", "rn", "nid").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
@@ -193,6 +205,65 @@ class Round11Spec extends SparkSpec {
       // a second (warm) search over the same persisted index returns the
       // same rows as the first (cold) one
       assert(search().sameElements(viaIndex))
+    } finally index.unpersist(blocking = false)
+  }
+
+  test("keyed search: each leg == its own ivfPqSearchQueries call, and " +
+      "the unkeyed search == the reference probe/ADC/rerank chain") {
+    import org.apache.spark.sql.DataFrame
+    val (xq, index) = externalFixture()
+    try {
+      // leg A: the full index at 2 probes; leg B: a semi-joined filtered
+      // index at 4 probes — the q238 leg shapes, at a shortlist (12) that
+      // actually cuts candidates
+      val (k, rerank) = (3, 12)
+      val fIndex = index.join(emb.filter(col("vec_id") % 3 =!= 0)
+        .select("vec_id"), Seq("vec_id"), "left_semi")
+      val (qcA, qcB) = (queryCells(xq, 2, 2), queryCells(xq, 4, 2))
+      def leg(name: String, df: DataFrame) =
+        df.select(lit(name).as("leg") +: df.columns.toSeq.map(col): _*)
+      val keyed = Similarity.ivfPqSearchImpl(index, xq,
+        leg("A", qcA).unionAll(leg("B", qcB)), k, rerank, keys = Seq("leg"),
+        corpus = Some(leg("A", Similarity.ivfCodes(index))
+          .unionAll(leg("B", Similarity.ivfCodes(fIndex))))).persist()
+      def rows(df: DataFrame) = df.select("qid", "rn", "nid", "cos")
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+          r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
+      val legA = rows(keyed.filter(col("leg") === "A"))
+      val legB = rows(keyed.filter(col("leg") === "B"))
+      keyed.unpersist(blocking = false)
+      assert(legA.length == 15 && legB.length == 15)
+      assert(legA == rows(Similarity.ivfPqSearchQueries(index, xq, qcA, k,
+        rerank)))
+      assert(legB == rows(Similarity.ivfPqSearchQueries(fIndex, xq, qcB, k,
+        rerank)))
+      assert(legA != legB, "the filtered leg must differ from the full one")
+      // the chain as it ran before search took key columns, spelled out:
+      // home-cell candidates, ADC shortlist per qid, exact rerank
+      def reference(qcells: DataFrame): DataFrame = {
+        val qlut = xq.withColumn("lut", Similarity.adcLut(col("qv")))
+        val short = qcells.join(Similarity.ivfCodes(index), Seq("cell"))
+          .filter(col("nid") =!= col("qid"))
+          .join(broadcast(qlut), Seq("qid"))
+          .withColumn("nadc", (-Similarity.adcDist2MicroLut(col("lut"),
+            col("pq_code"))).cast("double"))
+          .groupBy("qid")
+          .agg(graft.functions.TopKNeighborsAgg
+            .topkNeighbors(col("nadc"), col("nid"), rerank).as("top"))
+          .select(col("qid"), explode(col("top")).as("n"))
+          .select(col("qid"), col("n").getField("nid").as("nid"))
+        index.select(col("vec_id").as("nid"), col("v").as("nv"))
+          .join(broadcast(short), Seq("nid")).join(broadcast(xq), Seq("qid"))
+          .withColumn("cos", Similarity.cosine(col("qv"), col("nv")))
+          .groupBy("qid")
+          .agg(graft.functions.TopKNeighborsAgg
+            .topkNeighbors(col("cos"), col("nid"), k).as("top"))
+          .select(col("qid"), posexplode(col("top")).as(Seq("pos", "n")))
+          .select(col("qid"), (col("pos") + 1).cast("int").as("rn"),
+            col("n.nid").as("nid"), col("n.cos").as("cos"))
+      }
+      assert(rows(Similarity.ivfPqSearchImpl(index, xq, qcA, k, rerank)) ==
+        rows(reference(qcA)))
     } finally index.unpersist(blocking = false)
   }
 

@@ -177,7 +177,8 @@ class Round13Spec extends SparkSpec {
   test("a colliding external qid fails loudly under the debug gate " +
       "instead of silently dropping the corpus row") {
     val emb = graft.sources.Tables.embeddings(spark, Dir)
-    val index = Similarity.buildIvfPqIndex(emb, 8, 2).localCheckpoint(true)
+    val index = Similarity.buildIvfPqIndexWith(emb,
+      Similarity.ivfCentroids(emb, 8), 2).localCheckpoint(true)
     def queriesFrom(offset: Long) = {
       val q = index.filter(col("vec_id") < 5)
       (q.select((col("vec_id") + offset).as("qid"), col("v").as("qv")),

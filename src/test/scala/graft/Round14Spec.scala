@@ -132,7 +132,8 @@ class Round14Spec extends SparkSpec {
       "(the q246 layout claim)") {
     import graft.ext.Similarity
     val emb = graft.sources.Tables.embeddings(spark, Dir)
-    val base = Similarity.buildIvfPqIndex(emb, 8, 4)
+    val base = Similarity.buildIvfPqIndexWith(emb,
+      Similarity.ivfCentroids(emb, 8), 4)
     val root = java.nio.file.Files
       .createTempDirectory("graft_compact_spec").toString
     try {

@@ -87,7 +87,8 @@ class Round15Spec extends SparkSpec {
       "the view (the q253 store mechanics)") {
     import graft.ext.Similarity
     val emb = graft.sources.Tables.embeddings(spark, Dir)
-    val base = Similarity.buildIvfPqIndex(emb, 8, 4)
+    val base = Similarity.buildIvfPqIndexWith(emb,
+      Similarity.ivfCentroids(emb, 8), 4)
     val root = java.nio.file.Files
       .createTempDirectory("graft_policy_spec").toString
     val store = s"$root/store"

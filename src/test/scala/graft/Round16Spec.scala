@@ -358,7 +358,8 @@ class Round16Spec extends SparkSpec {
     try {
       val store = s"$root/store"
       val emb = graft.sources.Tables.embeddings(spark, Dir)
-      val base = Similarity.buildIvfPqIndex(emb, 8, 4)
+      val base = Similarity.buildIvfPqIndexWith(emb,
+        Similarity.ivfCentroids(emb, 8), 4)
       def contents() = Similarity.indexStoreView(spark, store)
         .select(col("vec_id"), col("pq_code"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
@@ -399,7 +400,8 @@ class Round16Spec extends SparkSpec {
       "cache them (r15 verdict #8)") {
     import graft.ext.Similarity
     val emb = graft.sources.Tables.embeddings(spark, Dir)
-    val index = Similarity.buildIvfPqIndex(emb, 8, 2).localCheckpoint(true)
+    val index = Similarity.buildIvfPqIndexWith(emb,
+      Similarity.ivfCentroids(emb, 8), 2).localCheckpoint(true)
     try {
       val q = index.filter(col("vec_id") < 5)
       val xq = q.select((col("vec_id") + Similarity.ExternalQueryIdOffset)

@@ -48,7 +48,8 @@ class Round21Spec extends SparkSpec {
 
   test("index build: fused pq_encode(v) == the retired productQuantize join") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val built = graft.ext.Similarity.buildIvfPqIndex(emb, 8, 4)
+    val built = graft.ext.Similarity.buildIvfPqIndexWith(emb,
+        graft.ext.Similarity.ivfCentroids(emb, 8), 4)
       .select("vec_id", "pq_code")
     val joined = graft.ext.Similarity.ivfAssignProbes(emb, 8, 4)
       .join(graft.ext.Similarity.productQuantize(emb)

@@ -41,13 +41,14 @@ class Round8Spec extends SparkSpec {
       }
     }
 
-  test("buildIvfPqIndex + ivfPqSearchIndexed == ivfPqTopK (same results)") {
+  test("buildIvfPqIndexWith + ivfPqSearchIndexed == ivfPqTopK (same results)") {
     val emb = graft.sources.Tables.embeddings(spark, dir)
     val pred = col("vec_id") % 50 === 0
     val viaWrapper = graft.ext.Similarity
       .ivfPqTopK(emb, 32, 5, pred, 24, 480)
       .select("qid", "rn", "nid").collect().map(_.toSeq).toSet
-    val index = graft.ext.Similarity.buildIvfPqIndex(emb, 32, 24).persist()
+    val index = graft.ext.Similarity.buildIvfPqIndexWith(emb,
+      graft.ext.Similarity.ivfCentroids(emb, 32), 24).persist()
     try {
       val viaIndex = graft.ext.Similarity
         .ivfPqSearchIndexed(index, 5, pred, 480)
@@ -107,7 +108,8 @@ class Round8Spec extends SparkSpec {
 
   test("index schema: (vec_id, cells, v, pq_code), home cell = cells(0)") {
     val emb = graft.sources.Tables.embeddings(spark, dir)
-    val index = graft.ext.Similarity.buildIvfPqIndex(emb, 32, 4)
+    val index = graft.ext.Similarity.buildIvfPqIndexWith(emb,
+      graft.ext.Similarity.ivfCentroids(emb, 32), 4)
     assert(index.columns.toSeq == Seq("vec_id", "cells", "v", "pq_code"))
     assert(index.count() == emb.count())
     // cells(0) must equal the single-probe argmax assignment
@@ -115,5 +117,37 @@ class Round8Spec extends SparkSpec {
     val argmax = graft.ext.Similarity.ivfAssignProbes(emb, 32, 1)
       .select(col("vec_id"), col("cells").getItem(0).as("cell"))
     assert(home.exceptAll(argmax).isEmpty && argmax.exceptAll(home).isEmpty)
+  }
+
+  // Spark jobs each ANN index query launched at this fixture while the
+  // index API still had one build/append entry point per routing variant
+  // (one SparkEntry query call plus collecting its result). The one-build,
+  // one-append, one-search API may not add any. Measured in one session no
+  // other suite has touched, with adaptive execution off: under AQE the
+  // count moves by a job or two between identical runs (re-planning races
+  // whichever query stage finishes first) and with session state (q216
+  // read 18 instead of 17 after the other suites had run in the shared
+  // session), while the static plan's count is a property of the plan.
+  private val annJobBudget = Seq(
+    "q216_ivf_pq_search" -> 8,
+    "q221_ivf_pq_persisted_index" -> 11,
+    "q223_ivf_pq_incremental_append" -> 8,
+    "q227_ivf_pq_autoscale_two_level" -> 9,
+    "q230_ivf_pq_two_level_lifecycle" -> 18,
+    "q231_ivf_pq_two_level_refresh" -> 11,
+    "q236_ann_external_queries" -> 15,
+    "q238_filtered_ann_recall_eval" -> 35)
+
+  test("ANN index queries launch no more Spark jobs than their budget") {
+    val session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.enabled", "false")
+    for ((name, budget) <- annJobBudget) {
+      spark.catalog.clearCache()
+      val (rows, jobs) = withJobCount(
+        SparkEntry.queries(name)(session, dir).collect())
+      info(s"$name: $jobs jobs (budget $budget)")
+      assert(rows.nonEmpty, s"$name returned no rows")
+      assert(jobs <= budget, s"$name launched $jobs Spark jobs (budget $budget)")
+    }
   }
 }
