@@ -139,12 +139,10 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }.min
     }
-    // benchSkip tier (r17 verdict #6): superseded comparators whose
-    // measurement is archived and whose equality is spec-pinned leave
-    // the default tier — still in Verify/CORRECTNESS and tests. q242's
-    // v1-vs-v2 write-cost claim is archived in
-    // bench/scale_sweep_r17/ccstore_repl*.json, and v1 ≡ v2 labels are
-    // pinned by Round16Spec.
+    // benchSkip tier (r17 verdict #6): demonstrations whose bench-depth
+    // run duplicates another benched query leave the default tier —
+    // still in Verify/CORRECTNESS and tests. At bench depth q242 runs the
+    // same one-trigger flat store stream as q252.
     // GRAFT_BENCH_FULL_DEMOS=1 restores them; the skip is stamped into
     // the JSON (`bench_skipped`) so no artifact can be misread.
     val benchSkipped = SparkEntry.allDefs

@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Separate-PROCESS restart leg for the CC maintenance loop (r15 verdict
-  * #3): q252/q259/q260 proved restart-resume within one JVM (same
-  * SparkSession) and q261 on a fresh session; this main closes the last
-  * gap — a restart whose driver shares NOTHING with the killed run but
-  * the disk. Round16Spec stages the state and kills the first leg
-  * in-process, then spawns this as `java -cp <spark jars + classes>`
+  * #3): q252/q260/q261 prove restart-resume within one JVM on a fresh
+  * session (q259 proves it for the vector store on the same session);
+  * this main closes the last gap — a restart whose driver shares
+  * NOTHING with the killed run but the disk. Round16Spec stages the
+  * state and kills the first leg in-process, then spawns this as
+  * `java -cp <spark jars + classes>`
   * with its own SparkSession; the stream resumes from the checkpoint,
   * re-delivers the killed epoch, and the step recomputes from persisted
   * generations only. Exit 0 = drained; the spec then compares the final

@@ -412,10 +412,12 @@ object Dedup {
     updates
   }
 
-  /** Apply an [[incrementalCcLabelUpdates]] set to the persisted label
-    * table: updated ids override, new ids insert — the delta-sized parquet
-    * upsert a production step writes (the label table streams against the
-    * broadcast update keys; nothing corpus-sized shuffles).
+  /** Apply an [[incrementalCcLabelUpdates]] set to a label table: updated
+    * ids override, new ids insert (the label table streams against the
+    * broadcast update keys; nothing corpus-sized shuffles). The sequential
+    * fold that the CC store's merge-on-read label view
+    * ([[graft.streaming.Streams.ccStoreLabelsView]]) must equal;
+    * Round13Spec checks one step of it against the full rebuild.
     */
   def applyCcLabelUpdates(labels: DataFrame, updates: DataFrame): DataFrame =
     labels.join(broadcast(updates.select("id")), Seq("id"), "left_anti")

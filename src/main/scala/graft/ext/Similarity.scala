@@ -850,13 +850,13 @@ object Similarity {
   // The view = current generation ∪ deltas with epoch > its fold point.
   // Folded deltas and old generations are never deleted here (GC cadence
   // is a deployment policy); they simply leave the view, so compaction is
-  // crash-safe the same way the q252 generations are: readers key on the
-  // last COMPLETE generation and every write is epoch-keyed.
+  // crash-safe the same way the CC store's generations are: readers key on
+  // the last COMPLETE generation and every write is epoch-keyed.
 
   // the store's (base, delta) pair as the shared generational seam — one
   // implementation of the _SUCCESS gating, latest-complete-base rule, and
-  // GC for this store, the v1 CC generations, and the v2 CC store
-  // (r16 verdict #2; crash semantics documented once on GenStore)
+  // GC for this store and the CC store (r16 verdict #2; crash semantics
+  // documented once on GenStore)
   private def genStore(storeRoot: String) = graft.util.GenStore(
     s"$storeRoot/gens", s"$storeRoot/deltas", "g=", "epoch=")
 

@@ -71,12 +71,27 @@ object PipelineQueries {
 
   private val ccOracleCte = ccCtesFor("", "TRUE")
 
-  /** Stage the q242/q252 streamed ingest: the "new" docs (doc_id % 5 = 0)
-    * split into 3 epoch files (doc_id % 15 = e·5), ONE parquet file each
-    * under `$root/in`, so maxFilesPerTrigger=1 delivers exactly 3
-    * micro-batches in a deterministic order. Shared by the in-memory
-    * (q242) and disk-state restartable (q252) maintenance loops so their
-    * batch boundaries cannot drift apart. Returns the ingest schema.
+  /** The oracle of the CC stream demos (q242, q252, q260, q261): the
+    * full closure's components ∪ a self-label for each streamed doc
+    * (doc_id % 5 = 0) that never pairs. The final labels are
+    * batch-boundary independent, so every ingest split, fold cadence and
+    * kill/restart must land on this one table.
+    */
+  private val ccStreamOracle = s"""WITH RECURSIVE $ccOracleCte,
+    |fin AS (
+    |  SELECT id, label FROM comp
+    |  UNION ALL
+    |  SELECT d.doc_id AS id, d.doc_id AS label FROM documents d
+    |  WHERE d.doc_id % 5 = 0
+    |    AND d.doc_id NOT IN (SELECT id FROM comp))
+    |SELECT id, label FROM fin ORDER BY id""".stripMargin
+
+  /** Stage the maintenance demos' streamed ingest: the "new" docs
+    * (doc_id % 5 = 0) split into 3 epoch files (doc_id % 15 = e·5), ONE
+    * parquet file each under `$root/in`, so maxFilesPerTrigger=1 delivers
+    * exactly 3 micro-batches in a deterministic order. Shared by every
+    * maintenance demo so their batch boundaries cannot drift apart.
+    * Returns the ingest schema.
     */
   private def stageCcIngest(s: org.apache.spark.sql.SparkSession,
       docs: org.apache.spark.sql.DataFrame, root: String,
@@ -100,49 +115,36 @@ object PipelineQueries {
       .parquet(s"$root/in/*")
   }
 
-  /** The demo stream protocol, shared by every kill/restart
-    * demonstration: reduced bench depth runs ONE uninterrupted stream
-    * (the kill + restart leg is a correctness-run exercise — Round17Spec
-    * pins reduced ≡ full); full depth runs the kill leg, require()s the
-    * injected kill actually fired (a silently-surviving first run would
-    * demote the demo to a plain uninterrupted test), then the resume
-    * leg.
-    */
-  private def runDemoStream(reduced: Boolean,
-      armed: java.util.concurrent.atomic.AtomicBoolean,
-      startKill: () => org.apache.spark.sql.streaming.StreamingQuery,
-      startResume: () => org.apache.spark.sql.streaming.StreamingQuery)
-      : Unit =
-    if (reduced) {
-      val q = startResume()
-      try q.processAllAvailable() finally q.stop()
-    } else {
-      val q1 = startKill()
-      val died =
-        try { q1.processAllAvailable(); false }
-        catch { case _: Throwable => true }
-        finally q1.stop()
-      require(died && !armed.get, "the injected epoch-1 kill did not fire")
-      val q2 = startResume()
-      try q2.processAllAvailable() finally q2.stop()
-    }
-
-  /** The full v2-store maintenance run over a `(doc_id, text)` corpus —
-    * shared by q261 (text 3-gram) and q262 (media frame tokens, k=1), so
-    * the modality-blind claim is BY CONSTRUCTION: the media loop runs the
-    * byte-identical code path, only the corpus prep differs. Stages the
-    * 3-epoch ingest, inits the v2 store, runs the stream with the
-    * mid-epoch-1 kill, restarts on a FRESH SESSION (r15 verdict #3),
-    * requires both mid-stream folds fired (labels at epoch 2 via
-    * maxLabelDeltas=1; postings every epoch via maxPostingGens=0 — so
-    * epoch 2's probe reads across a fold boundary) with GC running as
-    * the gcAfterFold policy inside the stream, and serves the
-    * merge-on-read labels. The oracle hash over the returned labels
-    * therefore also pins fold- and mid-stream-GC view-invariance.
+  /** The v2-store maintenance run over a `(doc_id, text)` corpus — the
+    * one loop body of every CC stream demo (q242, q252, q260 and q261 on
+    * text 3-grams, q262 on media frame tokens with k=1), so the demos
+    * differ only in the knobs below and the corpus prep; the
+    * modality-blind claim holds BY CONSTRUCTION. Stages the 3-epoch
+    * ingest, inits the store from the rest of the corpus, runs the
+    * stream, and serves the merge-on-read labels.
+    *   - `nBuckets`: posting layout, flat (0) or hive-bucketed.
+    *   - `kill`: at full depth, inject the mid-epoch-1 kill, require()
+    *     that it fired (a silently-surviving first run would demote the
+    *     demo to a plain uninterrupted test), then resume from the
+    *     checkpoint.
+    *   - `midStreamFolds`: at full depth, force both folds to fire
+    *     mid-stream (labels at epoch 2 via maxLabelDeltas=1; postings
+    *     every epoch via maxPostingGens=0 — so epoch 2's probe reads
+    *     across a fold boundary) and require() that they did. Otherwise
+    *     the production cadence runs, which folds nothing in 3 epochs.
+    * Reduced bench depth ([[graft.util.BenchMode]]) runs ONE
+    * uninterrupted one-trigger stream at the production cadence
+    * (Round17Spec pins reduced ≡ full). The uninterrupted or resume leg
+    * always starts on a FRESH SESSION (r15 verdict #3): recovery — and,
+    * uninterrupted, the whole run — depends on disk state + checkpoint
+    * only, nothing session-held. GC runs as the gcAfterFold policy, so
+    * the oracle hash over the returned labels also pins fold and
+    * mid-stream GC view-invariance.
     */
   private def ccStoreLoopRun(s: org.apache.spark.sql.SparkSession,
-      corpus: org.apache.spark.sql.DataFrame, k: Int,
-      nBuckets: Int): org.apache.spark.sql.DataFrame = {
+      corpus: org.apache.spark.sql.DataFrame, k: Int, nBuckets: Int,
+      kill: Boolean, midStreamFolds: Boolean)
+      : org.apache.spark.sql.DataFrame = {
     import graft.streaming.Streams
     val root = java.nio.file.Files
       .createTempDirectory("graft_cc_store").toString
@@ -157,29 +159,32 @@ object PipelineQueries {
           s"$root/state", k = k, nBuckets = nBuckets))
       val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
       val reduced = graft.util.BenchMode.reducedDemos
-      def start(sess: org.apache.spark.sql.SparkSession, kill: Boolean) = {
-        // bench depth (BenchMode): production fold cadence (the
-        // every-epoch/next-epoch folds exist to exercise fold boundaries
-        // mid-demonstration, a correctness-run concern)
+      val folds = midStreamFolds && !reduced
+      def start(killLeg: Boolean) = {
+        val killAt = if (killLeg) Some((1L, armed)) else None
         val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-          if (reduced) Streams.ccStoreStep(s"$root/state", k, 0.5, nBuckets,
-            gcAfterFold = true)
-          else Streams.ccStoreStep(s"$root/state", k, 0.5, nBuckets,
+          if (folds) Streams.ccStoreStep(s"$root/state", k, 0.5, nBuckets,
             maxLabelDeltas = 1, maxPostingGens = 0, gcAfterFold = true,
-            killOnceAt = if (kill) Some((1L, armed)) else None)
-        demoIngest(sess, schema, root, reduced)
+            killOnceAt = killAt)
+          else Streams.ccStoreStep(s"$root/state", k, 0.5, nBuckets,
+            gcAfterFold = true, killOnceAt = killAt)
+        demoIngest(if (killLeg) s else s.newSession(), schema, root, reduced)
           .writeStream.option("checkpointLocation", s"$root/ckpt")
           .foreachBatch(step).start()
       }
-      // the resume/only leg always starts on a FRESH session (r15
-      // verdict #3): recovery — and, in reduced depth, the whole run —
-      // depends on disk state + checkpoint only, nothing session-held
-      runDemoStream(reduced, armed,
-        startKill = () => start(s, kill = true),
-        startResume = () => start(s.newSession(), kill = false))
+      if (kill && !reduced) {
+        val q1 = start(killLeg = true)
+        val died =
+          try { q1.processAllAvailable(); false }
+          catch { case _: Throwable => true }
+          finally q1.stop()
+        require(died && !armed.get, "the injected epoch-1 kill did not fire")
+      }
+      val q = start(killLeg = false)
+      try q.processAllAvailable() finally q.stop()
       def committed(p: String) = java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$root/state/$p/_SUCCESS"))
-      if (!reduced) {
+      if (folds) {
         require(committed("gens/label_base/g=1"),
           "the label fold did not fire mid-stream")
         require(committed("gens/posting_base/g=1"),
@@ -1904,273 +1909,77 @@ object PipelineQueries {
 
     // ---- STREAMING incremental-CC maintenance, end to end (r13 #6) ----
     // q240 oracle-checks ONE label-update write; this runs the whole
-    // maintenance loop AS A STREAM — the last uncomposed seam of the
-    // production dedup story. The ingest arrives as a multi-epoch file
-    // stream (3 staged files, maxFilesPerTrigger=1); each foreachBatch
-    // epoch runs the exact library seams against the CURRENT persisted
-    // state: delta pairs (within-batch ∪ cross-corpus via the posting
-    // index), the changed ∪ fresh ∪ singles label-update set, an
-    // idempotent per-epoch delta write (overwrite keyed by epoch — the
-    // production parquet artifact; the state upsert reads the WRITTEN
-    // delta back, so the write IS the handoff), then label upsert +
-    // posting/size append so the NEXT epoch screens against corpus ∪
-    // all prior epochs. Batch-boundary independence: the Round13Spec
-    // step ≡ rebuild equivalence holds at every state the induction
-    // visits (a self-labeled singleton collapses identically to an
-    // unlabeled endpoint), so the final label table equals the full
-    // rebuild regardless of how the ingest splits — which makes it
-    // SQL-oracle-able: full-closure components ∪ self-labels for
-    // streamed docs that never pair. Lifecycle: the LABEL table (small,
-    // pair-endpoint-sized) is re-checkpointed per epoch with its
-    // predecessor released; the POSTING/SIZE state is an append of
-    // delta-sized generations (pins grow by one delta per epoch — the
-    // parquet-delta-file analogue, bounded by compaction cadence in
-    // production), all released when the stream's final labels
-    // materialize (CheckpointGen throughout).
+    // maintenance loop AS A STREAM. The ingest arrives as a multi-epoch
+    // file stream (3 staged files, maxFilesPerTrigger=1); each
+    // foreachBatch epoch runs the store step against the CURRENT
+    // persisted state: delta pairs (within-batch ∪ cross-corpus via the
+    // posting index), the changed ∪ fresh ∪ singles label-update set, an
+    // idempotent per-epoch delta write, then the posting/size deltas so
+    // the NEXT epoch screens against corpus ∪ all prior epochs.
+    // Batch-boundary independence: the Round13Spec step ≡ rebuild
+    // equivalence holds at every state the induction visits (a
+    // self-labeled singleton collapses identically to an unlabeled
+    // endpoint), so the final label table equals the full rebuild
+    // regardless of how the ingest splits — which makes it
+    // SQL-oracle-able: full-closure components ∪ self-labels for streamed
+    // docs that never pair. Flat postings, no kill, and the default fold
+    // cadence (no fold in 3 epochs): the plainest run of the store.
     QueryDef("q242_stream_cc_maintenance",
-      (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        val isNew = col("doc_id") % 5 === 0
-        val sc = s.sparkContext
-        import graft.util.CheckpointGen
-        var postings = Dedup.ngramPostings(docs.filter(!isNew),
-            "doc_id", "text", 3)
-          .pin()
-        var sizes = Dedup.ngramPostingSizes(postings).pin()
-        // initial labels from the persisted index (one shingle pass —
-        // the q240 rebuild-from-index discipline)
-        var labels = Dedup.connectedComponents(
-            Dedup.ngramJaccardPairsFromPostings(postings, sizes, 0.5))
-          .pin()
-        var postPins = CheckpointGen.pinnedIds(postings)
-        var sizePins = CheckpointGen.pinnedIds(sizes)
-        var labelPins = CheckpointGen.pinnedIds(labels)
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_stream_cc").toString
-        try {
-          val schema = stageCcIngest(s, docs, root)
-          // batch-boundary independence is this query's oracle-pinned
-          // claim — exactly what makes the two demo depths
-          // interchangeable (no kill leg here: this is the in-memory v1
-          // comparator)
-          val ingest = demoIngest(s, schema, root,
-            graft.util.BenchMode.reducedDemos)
-          val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            (batch, epoch) => {
-              val b = batch.pin()
-              val bPins = CheckpointGen.pinnedIds(b)
-              // the batch's postings, pinned once: the pair probe's batch
-              // side and (below) the posting-state append
-              val bp = Dedup.ngramPostings(b, "doc_id", "text", 3)
-                .pin()
-              postPins ++= CheckpointGen.pinnedIds(bp)
-              val newPairs = Dedup.incrementalCcPairsFromPostings(postings,
-                  sizes, bp, 0.5)
-                .pin()
-              val pairPins = CheckpointGen.pinnedIds(newPairs)
-              val updates = Dedup.incrementalCcLabelUpdates(labels, newPairs,
-                b.select(col("doc_id").as("id")))
-              updates.write.mode("overwrite")
-                .parquet(s"$root/updates/batch=$epoch")
-              CheckpointGen.release(sc,
-                pairPins ++ CheckpointGen.pinnedIds(updates))
-              val persisted = s.read.parquet(s"$root/updates/batch=$epoch")
-              val nextLabels = Dedup.applyCcLabelUpdates(labels, persisted)
-                .pin()
-              val nlp = CheckpointGen.pinnedIds(nextLabels)
-              CheckpointGen.release(sc, labelPins -- nlp)
-              labels = nextLabels; labelPins = nlp
-              // the POSTING/SIZE handoff is an APPEND, not a rewrite:
-              // each epoch checkpoints only its DELTA-sized postings/
-              // sizes and the state becomes a lazy union of materialized
-              // generations — the in-memory mirror of production's
-              // parquet delta-file append (q223/q246). Checkpointing the
-              // union here would re-materialize the corpus-sized state
-              // EVERY epoch, the exact full-rewrite-per-batch this
-              // pipeline exists to avoid at 100 TB. The LABEL handoff in
-              // this loop (and in q252/q260's disk twin) is NOT delta-
-              // sized — nextLabels above materializes the full table per
-              // epoch; the delta-sized label path is the v2 store loop
-              // (q261, Streams.ccStoreStep: merge-on-read label view +
-              // threshold fold). Per-epoch pinned bytes here are delta-
-              // sized for postings/sizes; generation count is bounded by
-              // compaction cadence in production (q246) and by the 3
-              // epochs here.
-              postings = postings.unionByName(bp)
-              val bs = Dedup.ngramPostingSizes(bp).pin()
-              sizePins ++= CheckpointGen.pinnedIds(bs)
-              sizes = sizes.unionByName(bs)
-              CheckpointGen.release(sc, bPins)
-            }
-          val q = ingest.writeStream.foreachBatch(step).start()
-          try q.processAllAvailable() finally q.stop()
-          val out = labels.orderBy("id").pin()
-          CheckpointGen.release(sc, postPins ++ sizePins ++
-            (labelPins -- CheckpointGen.pinnedIds(out)))
-          out
-        } finally {
-          graft.util.Dirs.rmTree(root)
-        }
-      },
-      Some(s"""WITH RECURSIVE $ccOracleCte,
-        |fin AS (
-        |  SELECT id, label FROM comp
-        |  UNION ALL
-        |  SELECT d.doc_id AS id, d.doc_id AS label FROM documents d
-        |  WHERE d.doc_id % 5 = 0
-        |    AND d.doc_id NOT IN (SELECT id FROM comp))
-        |SELECT id, label FROM fin ORDER BY id""".stripMargin),
-      // v1 comparator loop: its v1-vs-v2 measurement is archived in
-      // bench/scale_sweep_r17/ccstore_repl*.json and v1 ≡ v2 is pinned by
-      // Round16Spec, so the default bench tier skips it (r17 verdict #6)
+      (s, dir) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
+        nBuckets = 0, kill = false, midStreamFolds = false),
+      Some(ccStreamOracle),
+      // at bench depth this is the same one-trigger flat store stream as
+      // q252 (whose kill leg only runs at full depth), so the default
+      // bench tier skips the duplicate (r17 verdict #6)
       benchSkip = true),
 
     // ---- RESTART-RESUME for the streaming maintenance loop (r14 #1) ----
-    // q242 proved the streamed loop batch-boundary independent, but its
-    // state lived in driver vars — one JVM, no restart story, and at
-    // 100 TB the ingest WILL restart. Here every piece of state is ON
-    // DISK (Streams.ccMaintenanceInit/DiskStep: epoch-keyed posting/size/
-    // label generations + the per-epoch update deltas) and the ingest
-    // runs with a REAL checkpointLocation. The query kills its own stream
-    // mid-epoch-1 — after the label generation commits but BEFORE the
-    // posting/size generations do, the nastiest partial-commit point —
-    // then restarts from the checkpoint: the file source re-delivers the
+    // q242's loop with a REAL checkpointLocation, killed mid-epoch-1 —
+    // after the update delta commits but BEFORE the posting/size deltas
+    // do, the nastiest partial-commit point — then restarted from the
+    // checkpoint on a FRESH SESSION: the file source re-delivers the
     // failed epoch (same batch id, same file), the step recomputes from
-    // strictly-prior generations only, every write is an epoch-keyed
+    // state strictly below it, and every write is an epoch-keyed
     // overwrite, so the re-run converges to the uninterrupted answer.
-    // Round15Spec pins killed+restarted ≡ uninterrupted ≡ q242; the
-    // oracle is q242's (full closure ∪ batch-singleton self-labels).
+    // Round15Spec pins killed+restarted ≡ uninterrupted q242; the oracle
+    // is q242's (full closure ∪ batch-singleton self-labels).
     QueryDef("q252_stream_cc_restart_resume",
-      (s, dir) => {
-        import graft.streaming.Streams
-        val docs = Tables.documents(s, dir)
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_cc_restart").toString
-        try {
-          // stage ∥ init: disjoint dirs, same static corpus (guide §2.6)
-          var schema: org.apache.spark.sql.types.StructType = null
-          graft.util.Par.run(
-            () => schema = stageCcIngest(s, docs, root),
-            () => Streams.ccMaintenanceInit(
-              docs.filter(col("doc_id") % 5 =!= 0), s"$root/state"))
-          val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
-          val reduced = graft.util.BenchMode.reducedDemos
-          def start(kill: Boolean) = {
-            val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-              Streams.ccMaintenanceDiskStep(s"$root/state", 3, 0.5,
-                if (kill) Some((1L, armed)) else None)
-            demoIngest(s, schema, root, reduced)
-              .writeStream.option("checkpointLocation", s"$root/ckpt")
-              .foreachBatch(step).start()
-          }
-          runDemoStream(reduced, armed,
-            startKill = () => start(kill = true),
-            startResume = () => start(kill = false))
-          // materialize before the temp state dir is deleted
-          Streams.ccMaintenanceLabels(s, s"$root/state")
-            .orderBy("id").pin()
-        } finally {
-          graft.util.Dirs.rmTree(root)
-        }
-      },
-      Some(s"""WITH RECURSIVE $ccOracleCte,
-        |fin AS (
-        |  SELECT id, label FROM comp
-        |  UNION ALL
-        |  SELECT d.doc_id AS id, d.doc_id AS label FROM documents d
-        |  WHERE d.doc_id % 5 = 0
-        |    AND d.doc_id NOT IN (SELECT id FROM comp))
-        |SELECT id, label FROM fin ORDER BY id""".stripMargin)),
+      (s, dir) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
+        nBuckets = 0, kill = true, midStreamFolds = false),
+      Some(ccStreamOracle)),
 
     // ---- the PRODUCTION-SHAPED maintenance loop: restartable AND
     // delta-read-sized ----
     // q252 proved restart-resume over the FLAT posting state; the r15
     // win-regime measurement (SCALING.md: bucket-pruned 3.72 s vs compact
     // 60.4 s once the state outgrows a single scan) says the 100 TB state
-    // must be BUCKETED. This composes both: the posting generations land
-    // hive-partitioned as epoch=E/bucket=pmod(sk,B), every epoch's probe
-    // prunes to (epoch < E ∧ bucket ∈ batch's set) AT THE SCAN — the
-    // q244 invariance argument per generation — and the same mid-epoch-1
-    // kill + checkpoint restart runs on top. Result must equal q242/q252
-    // exactly (pruned buckets hold no batch key; the bucket dimension is
-    // invisible to the pairs), so the oracle is theirs, shared.
+    // must be BUCKETED. Here the posting generations land hive-partitioned
+    // by bucket = pmod(sk, 64), every epoch's probe prunes to the batch's
+    // bucket set AT THE SCAN — the q244 invariance argument per
+    // generation — and the same mid-epoch-1 kill + fresh-session restart
+    // runs on top. Result must equal q242/q252 exactly (pruned buckets
+    // hold no batch key; the bucket dimension is invisible to the pairs),
+    // so the oracle is theirs, shared.
     QueryDef("q260_stream_cc_bucketed_restart",
-      (s, dir) => {
-        import graft.streaming.Streams
-        val docs = Tables.documents(s, dir)
-        val nBuckets = 64
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_cc_bucketed").toString
-        try {
-          // stage ∥ init: disjoint dirs, same static corpus (guide §2.6)
-          var schema: org.apache.spark.sql.types.StructType = null
-          graft.util.Par.run(
-            () => schema = stageCcIngest(s, docs, root),
-            () => Streams.ccMaintenanceInit(
-              docs.filter(col("doc_id") % 5 =!= 0), s"$root/state",
-              nBuckets = nBuckets))
-          val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
-          val reduced = graft.util.BenchMode.reducedDemos
-          def start(kill: Boolean) = {
-            val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-              Streams.ccMaintenanceDiskStep(s"$root/state", 3, 0.5,
-                if (kill) Some((1L, armed)) else None, nBuckets = nBuckets)
-            // the bucket-pruned probe runs at either depth, against the
-            // full init generation
-            demoIngest(s, schema, root, reduced)
-              .writeStream.option("checkpointLocation", s"$root/ckpt")
-              .foreachBatch(step).start()
-          }
-          runDemoStream(reduced, armed,
-            startKill = () => start(kill = true),
-            startResume = () => start(kill = false))
-          Streams.ccMaintenanceLabels(s, s"$root/state")
-            .orderBy("id").pin()
-        } finally {
-          graft.util.Dirs.rmTree(root)
-        }
-      },
-      Some(s"""WITH RECURSIVE $ccOracleCte,
-        |fin AS (
-        |  SELECT id, label FROM comp
-        |  UNION ALL
-        |  SELECT d.doc_id AS id, d.doc_id AS label FROM documents d
-        |  WHERE d.doc_id % 5 = 0
-        |    AND d.doc_id NOT IN (SELECT id FROM comp))
-        |SELECT id, label FROM fin ORDER BY id""".stripMargin)),
+      (s, dir) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
+        nBuckets = 64, kill = true, midStreamFolds = false),
+      Some(ccStreamOracle)),
 
-    // ---- the maintenance loop with EVERY state table delta-sized ----
-    // q260 closed restart + bucketed pruning but still rewrote the FULL
-    // label table every epoch (the r15 verdict's #1 scale gap: a
-    // ~TB-class write per micro-batch at 100B docs). This runs the v2
-    // store loop (Streams.ccStoreStep): the ONLY per-epoch label write is
-    // the delta-sized update set; labels are served MERGE-ON-READ (base
-    // generation ∪ update deltas, latest-epoch-wins — provably the
-    // sequential applyCcLabelUpdates fold); threshold-triggered folds
-    // materialize new bases MID-STREAM (maxPostingGens=0 folds postings
-    // at every epoch, so epoch 2's probe reads ACROSS a fold boundary;
+    // ---- the maintenance loop with folds and GC firing MID-STREAM ----
+    // q260's bucketed, killed run with threshold-triggered folds forced
+    // to fire inside the stream (maxPostingGens=0 folds postings at every
+    // epoch, so epoch 2's probe reads ACROSS a fold boundary;
     // maxLabelDeltas=1 folds labels once, at epoch 2); GC runs as the
     // gcAfterFold POLICY inside the stream, sweeping what each fold
     // retired while later epochs still probe the store — so the oracle
-    // hash also pins mid-stream GC's view-invariance (and the loop
-    // require()s a post-stream sweep finds nothing left).
-    // The same mid-epoch-1 kill runs on top, and the restart leg starts
-    // on a FRESH SESSION (s.newSession() — r15 verdict #3): recovery
-    // provably depends on the disk state + checkpoint only, nothing
-    // session-held. (Round16Spec adds the separate-PROCESS restart.)
-    // Labels are bitwise the q242/q252/q260 answer — the oracle is
-    // theirs, shared.
+    // hash also pins fold and mid-stream GC view-invariance (and the loop
+    // require()s both folds fired and a post-stream sweep finds nothing
+    // left). (Round16Spec adds the separate-PROCESS restart.) Labels are
+    // bitwise the q242/q252/q260 answer — the oracle is theirs, shared.
     QueryDef("q261_stream_cc_store_fold_gc",
-      (s, dir) => ccStoreLoopRun(s, Tables.documents(s, dir),
-        k = 3, nBuckets = 64),
-      Some(s"""WITH RECURSIVE $ccOracleCte,
-        |fin AS (
-        |  SELECT id, label FROM comp
-        |  UNION ALL
-        |  SELECT d.doc_id AS id, d.doc_id AS label FROM documents d
-        |  WHERE d.doc_id % 5 = 0
-        |    AND d.doc_id NOT IN (SELECT id FROM comp))
-        |SELECT id, label FROM fin ORDER BY id""".stripMargin)),
+      (s, dir) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
+        nBuckets = 64, kill = true, midStreamFolds = true),
+      Some(ccStreamOracle)),
 
     // ---- MODALITY-BLIND maintenance: the media ingest runs the SAME
     // v2 store loop (r15 verdict #7) ----
@@ -2196,7 +2005,8 @@ object PipelineQueries {
           .agg(concat_ws(" ", sort_array(collect_set(col("frame_md5"))))
             .as("text"))
           .select(col("media_id").as("doc_id"), col("text"))
-        ccStoreLoopRun(s, ftext, k = 1, nBuckets = 16)
+        ccStoreLoopRun(s, ftext, k = 1, nBuckets = 16, kill = true,
+          midStreamFolds = true)
       },
       Some("""WITH RECURSIVE f AS (
         |  SELECT DISTINCT doc_id AS i,

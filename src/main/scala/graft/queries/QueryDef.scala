@@ -27,16 +27,13 @@ case class QueryDef(
       * Correctness handling (Verify/oracle) is identical either way.
       */
     evalOnly: Boolean = false,
-    /** Comparator/demonstration query whose measurement is archived and
-      * whose equality is spec-pinned. q242, the v1 full-rewrite loop the
-      * v2 store was graded against: its v1-vs-v2 write-cost claim is
-      * archived in `bench/scale_sweep_r17/ccstore_repl*.json` (SCALING.md,
-      * Text dedup ladder, r16/r17), and v1 ≡ v2 labels are pinned by
-      * Round16Spec. Bench's default tier skips it —
-      * its ~9 s idle cost measures superseded-comparator scaffolding,
-      * not engine capability — and stamps the skip into the JSON
-      * (`bench_skipped`). GRAFT_BENCH_FULL_DEMOS=1 restores it.
-      * Verify/CORRECTNESS and the ScalaTest suites always run it
-      * (r17 verdict #6).
+    /** Demonstration query whose bench-depth run duplicates another
+      * benched query. q242, the uninterrupted flat CC store stream: at
+      * bench depth ([[graft.util.BenchMode]]) q252 runs the same
+      * one-trigger flat store stream (its kill leg is full-depth only),
+      * so timing both measures one loop twice. Bench's default tier
+      * skips it and stamps the skip into the JSON (`bench_skipped`).
+      * GRAFT_BENCH_FULL_DEMOS=1 restores it. Verify/CORRECTNESS and the
+      * ScalaTest suites always run it (r17 verdict #6).
       */
     benchSkip: Boolean = false)

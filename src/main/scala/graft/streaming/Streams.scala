@@ -577,202 +577,9 @@ object Streams {
     s.read.parquet(outRoot).drop("batch")
   }
 
-  // ---- Restartable (disk-state) incremental-CC maintenance ----
-  // q242 proved the streamed maintenance loop batch-boundary independent,
-  // but its state lived in driver vars — one JVM, no restart story. These
-  // three seams put EVERY piece of state on disk as epoch-keyed
-  // generations, so a killed ingest resumes from the stream checkpoint +
-  // persisted state and converges to the uninterrupted answer (q252
-  // drives a real kill + restart; Round15Spec pins killed ≡ uninterrupted
-  // ≡ q242). The recovery argument is structural, not lucky timing: a
-  // step derives ONLY from strictly-prior generations (epoch < E scans;
-  // max-gen-BELOW-E label lookup), so re-delivery of a failed epoch —
-  // whatever partial writes it left — recomputes byte-identical artifacts,
-  // and every write is an idempotent overwrite keyed by its epoch. At
-  // 100 TB this is the parquet-delta-file discipline verbatim: per-epoch
-  // delta dirs accumulate under a partition column (the epoch < E filter
-  // prunes AT THE SCAN), bounded by compaction cadence (q246).
-
-  /** Initialize the on-disk dedup state at generation -1: corpus postings,
-    * posting sizes, and the initial label table REBUILT FROM the persisted
-    * postings (the q240 one-shingle-pass discipline — labels derive from
-    * the read-back index, never a corpus re-shingle). Idempotent: skipped
-    * when the root already carries generations, so a restarting driver
-    * cannot clobber live state.
-    */
-  /** Write a posting generation: flat when nBuckets = 0, hive-bucketed by
-    * pmod(sk, nBuckets) otherwise — the win-regime layout
-    * (SCALING.md r15: the pruned probe beats the compact scan 16× once
-    * the state outgrows a single scan), giving the maintenance step
-    * partition pruning on BOTH dims (epoch < E ∧ bucket ∈ batch's set).
-    */
-  private def writePostingGen(postings: DataFrame, dir: String,
-      nBuckets: Int): Unit =
-    if (nBuckets <= 0) postings.write.mode("overwrite").parquet(dir)
-    else postings
-      .withColumn("bucket",
-        graft.ext.Dedup.postingBucket(col("sk"), nBuckets))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-
-  def ccMaintenanceInit(corpus: DataFrame, stateRoot: String,
-      k: Int = 3, threshold: Double = 0.5, nBuckets: Int = 0): Unit = {
-    val s = corpus.sparkSession
-    // idempotency gate keyed on the _SUCCESS marker, not bare existence:
-    // a driver crash DURING the init label write leaves a torn
-    // labels/epoch=-1 whose directory already exists — skipping on
-    // existence would silently maintain labels on top of a partial table.
-    // Requiring the commit marker makes a torn init re-run (every init
-    // write is an idempotent overwrite), matching the discipline every
-    // other generation reader here uses (r15 ADVICE #1).
-    if (java.nio.file.Files.exists(java.nio.file.Paths
-        .get(s"$stateRoot/gens/labels/epoch=-1/_SUCCESS"))) return
-    val sc = s.sparkContext
-    val postings = graft.ext.Dedup
-      .ngramPostings(corpus, "doc_id", "text", k).pin()
-    val pins = graft.util.CheckpointGen.pinnedIds(postings)
-    // both generation writes read the checkpointed postings and write
-    // disjoint dirs — overlapped (guide §2.6), the same treatment the v2
-    // ccStoreInit got; the label generation (the init guard, below) still
-    // commits strictly last
-    graft.util.Par.run(
-      () => writePostingGen(postings,
-        s"$stateRoot/gens/postings/epoch=-1", nBuckets),
-      () => graft.ext.Dedup.ngramPostingSizes(postings).write
-        .mode("overwrite").parquet(s"$stateRoot/gens/sizes/epoch=-1"))
-    graft.util.CheckpointGen.release(sc, pins)
-    // labels from the WRITTEN state (materialized on disk — the
-    // pass-postings-materialized contract of the self-join)
-    val p = s.read.parquet(s"$stateRoot/gens/postings/epoch=-1")
-      .select("i", "sk") // drop a bucket partition col if present
-    val z = s.read.parquet(s"$stateRoot/gens/sizes/epoch=-1")
-    graft.ext.Dedup.connectedComponents(
-        graft.ext.Dedup.ngramJaccardPairsFromPostings(p, z, threshold))
-      .write.mode("overwrite").parquet(s"$stateRoot/gens/labels/epoch=-1")
-  }
-
-  /** Largest COMPLETE (_SUCCESS-marked) generation strictly below `bound`
-    * — the [[graft.util.GenStore]] base-resolution rule (the v1 label
-    * table is a pure-generation store: full generations, no deltas). The
-    * marker gate means a torn write — a crash between directory creation
-    * and commit — is invisible: under the in-order file-source contract
-    * the only torn generation can be the epoch being retried, and the
-    * retry reads the previous complete generation, exactly what an
-    * un-crashed first attempt would have read.
-    */
-  private def latestGenBelow(dir: String, bound: Long): Long =
-    graft.util.GenStore(dir, dir, "epoch=", "epoch=")
-      .latestCompleteBase(bound)
-
-  /** One maintenance epoch against the DISK state — the foreachBatch body.
-    * Reads postings/sizes generations `epoch < E` (partition-pruned at the
-    * scan) and the latest label generation below E; computes the delta
-    * pairs → label-update set; persists the update delta
-    * (`updates/batch=E`, the production artifact — the state upsert reads
-    * the WRITTEN delta back, so the write IS the handoff), the next label
-    * generation, and the batch's posting/size deltas — every write an
-    * overwrite keyed by E. NOTE the label generation here is a FULL-TABLE
-    * rewrite per epoch (corpus-sized at scale); [[ccStoreStep]] is the v2
-    * that drops it — labels served merge-on-read from the update deltas
-    * with a threshold fold (q261). `killOnceAt = (E, armed)` injects a one-shot
-    * crash at the nastiest partial-commit point (label generation E
-    * committed, posting/size generations NOT) to prove recovery.
-    */
-  /** @param onLabelWrite called with the wall-clock seconds of this
-    *   epoch's complete LABEL-PATH writes — the update-delta write plus
-    *   the full-table `applyCcLabelUpdates` generation rewrite. The v2
-    *   twin ([[ccStoreStep]]) times its own label path (the delta write
-    *   + `_rows` sidecar count), so v1 − v2 APPROXIMATES the full-table
-    *   rewrite the v2 store eliminates — not exactly: v1's window also
-    *   carries the persisted-delta re-read + a CheckpointGen release,
-    *   v2's carries the sidecar's footer-count job, so the difference
-    *   slightly UNDERSTATES the rewrite (r17 ADVICE). Step wall-clock at
-    *   bench scale is dominated by the shared probe/shingle floor both
-    *   loops pay, so the v1-vs-v2 claim needs the label-write path
-    *   timed in isolation (r16 verdict #6); the archived per-epoch
-    *   times are in `bench/scale_sweep_r17/ccstore_repl*.json`.
-    */
-  def ccMaintenanceDiskStep(stateRoot: String, k: Int = 3,
-      threshold: Double = 0.5,
-      killOnceAt: Option[(Long, java.util.concurrent.atomic.AtomicBoolean)] =
-        None, nBuckets: Int = 0,
-      onLabelWrite: Double => Unit = _ => ())(
-      batch: DataFrame, epoch: Long): Unit = {
-    val s = batch.sparkSession
-    val sc = s.sparkContext
-    import graft.ext.Dedup
-    import graft.util.CheckpointGen
-    val gens = s"$stateRoot/gens"
-    val b = batch.pin()
-    val bPins = CheckpointGen.pinnedIds(b)
-    // the batch's own postings: the pair probe's batch side, the
-    // state-append delta AND (bucketed mode) the prune key set — shingled
-    // once, used three times
-    val bp = Dedup.ngramPostings(b, "doc_id", "text", k).pin()
-    val bpPins = CheckpointGen.pinnedIds(bp)
-    val postingsAll = s.read.parquet(s"$gens/postings")
-      .filter(col("epoch") < epoch).drop("epoch")
-    // bucketed mode: prune the probe to the batch's bucket set — with the
-    // hive layout epoch=E/bucket=B the scan skips non-hit bucket dirs in
-    // EVERY prior generation (the q244 invariance argument: a pruned
-    // bucket holds no batch key, so it can never equi-join the batch)
-    val postings =
-      if (nBuckets <= 0) postingsAll
-      else Dedup.pruneToBatchBuckets(postingsAll, bp, nBuckets)
-    val sizes = s.read.parquet(s"$gens/sizes")
-      .filter(col("epoch") < epoch).drop("epoch")
-    val labelGen = latestGenBelow(s"$gens/labels", epoch)
-    val labels = s.read.parquet(s"$gens/labels/epoch=$labelGen")
-    val newPairs = Dedup.incrementalCcPairsFromPostings(postings, sizes, bp,
-        threshold)
-      .pin()
-    val pairPins = CheckpointGen.pinnedIds(newPairs)
-    val updates = Dedup.incrementalCcLabelUpdates(labels, newPairs,
-      b.select(col("doc_id").as("id")))
-    val labelWriteT0 = System.nanoTime()
-    updates.write.mode("overwrite").parquet(s"$stateRoot/updates/batch=$epoch")
-    CheckpointGen.release(sc, pairPins ++ CheckpointGen.pinnedIds(updates))
-    val persisted = s.read.parquet(s"$stateRoot/updates/batch=$epoch")
-    Dedup.applyCcLabelUpdates(labels, persisted)
-      .write.mode("overwrite").parquet(s"$gens/labels/epoch=$epoch")
-    onLabelWrite((System.nanoTime() - labelWriteT0) / 1e9)
-    killOnceAt.foreach { case (at, armed) =>
-      if (epoch == at && armed.compareAndSet(true, false)) {
-        CheckpointGen.release(sc, bPins ++ bpPins)
-        throw new IllegalStateException(
-          s"injected kill: epoch $epoch died after its label write, " +
-            "before its posting/size writes")
-      }
-    }
-    // both delta writes read the checkpointed batch postings and write
-    // disjoint epoch dirs — overlapped (guide §2.6), mirroring the v2
-    // ccStoreStep so the v1/v2 comparison stays apples-to-apples on the
-    // shared posting path. The kill-point contract ("after the label
-    // write, before the posting/size writes") is untouched: the kill
-    // check above still precedes both, and the label-path timing window
-    // (onLabelWrite — the v1-vs-v2 comparison archived in
-    // bench/scale_sweep_r17/ccstore_repl*.json)
-    // closed before either branch starts.
-    graft.util.Par.run(
-      () => writePostingGen(bp, s"$gens/postings/epoch=$epoch", nBuckets),
-      () => Dedup.ngramPostingSizes(bp).write.mode("overwrite")
-        .parquet(s"$gens/sizes/epoch=$epoch"))
-    CheckpointGen.release(sc, bPins ++ bpPins)
-  }
-
-  /** The current label table: the latest persisted generation. */
-  def ccMaintenanceLabels(s: SparkSession, stateRoot: String): DataFrame = {
-    val g = latestGenBelow(s"$stateRoot/gens/labels", Long.MaxValue)
-    s.read.parquet(s"$stateRoot/gens/labels/epoch=$g")
-  }
-
-  // ---- CC maintenance v2: EVERY state table delta-sized + folded ----
-  // [[ccMaintenanceDiskStep]]'s one remaining corpus-sized write is the
-  // label table: it persists the delta-sized update set and then STILL
-  // materializes the full `applyCcLabelUpdates` result as a complete
-  // label generation every epoch — a ~TB-class rewrite per micro-batch at
-  // 100B docs (r15 verdict #1). This v2 applies the q253 store discipline
-  // to all three state tables. Layout under `stateRoot`:
+  // ---- Restartable incremental-CC maintenance: the v2 store ----
+  // Every piece of dedup state lives on disk as epoch-keyed generations,
+  // and every per-epoch write is delta-sized. Layout under `stateRoot`:
   //   gens/label_base/g=F    — folded label base (init −1; _SUCCESS-gated)
   //   updates/batch=E        — per-epoch label-update deltas (THE only
   //                            per-epoch label write — delta-sized)
@@ -782,20 +589,45 @@ object Streams {
   // Serving is MERGE-ON-READ: a view = latest complete base ∪ the deltas
   // past its fold point (labels latest-epoch-wins per id — exactly the
   // sequential `applyCcLabelUpdates` fold, since the final label of an id
-  // is its row in the LARGEST epoch that touched it). A threshold-
-  // triggered fold materializes the view into a new base mid-stream (the
+  // is its row in the LARGEST epoch that touched it). No full label table
+  // is written after init. A threshold-triggered fold materializes the
+  // view into a new base mid-stream (the
   // [[graft.ext.Similarity.compactStoreIfNeeded]] shape) and
-  // [[ccStoreGc]] deletes what left the read path.
+  // [[ccStoreGc]] deletes what left the read path. At 100 TB this is the
+  // parquet-delta-file discipline: per-epoch delta dirs accumulate,
+  // bounded by the fold cadence.
   //
-  // RECOVERY inherits q252's structural argument with one extra rule:
-  // a fold at epoch E covers epochs <= E-1 ONLY (named g = E-1). Inside
-  // foreachBatch at E every epoch < E is checkpoint-committed (in-order
-  // single-stream file source), so nothing at or below the fold point can
-  // ever re-deliver — a re-delivered E reads the base g=E-1, which is
-  // content-identical to the pre-fold view it read on the first attempt,
-  // and recomputes byte-identical artifacts. That rule is also what makes
-  // GC safe mid-stream: only state no future (re-)delivery can read is
-  // deleted.
+  // RECOVERY is structural, not lucky timing. A step at epoch E derives
+  // ONLY from state strictly below E (every view resolves complete bases
+  // and deltas with epoch < E; a torn write — a crash between directory
+  // creation and its _SUCCESS marker — is invisible), and every write is
+  // an idempotent overwrite keyed by E. So re-delivery of a failed epoch,
+  // whatever partial writes it left, recomputes byte-identical artifacts:
+  // a replayable source plus epoch-keyed idempotent writes gives
+  // exactly-once output. q252/q260/q261 kill their own stream and resume
+  // on a fresh session; Round15Spec pins killed ≡ uninterrupted. Folds add
+  // one rule: a fold at epoch E covers epochs <= E-1 ONLY (named
+  // g = E-1). Inside foreachBatch at E every epoch < E is
+  // checkpoint-committed (in-order single-stream file source), so nothing
+  // at or below the fold point can ever re-deliver — a re-delivered E
+  // reads the base g=E-1, which is content-identical to the pre-fold view
+  // it read on the first attempt. That rule is also what makes GC safe
+  // mid-stream: only state no future (re-)delivery can read is deleted.
+
+  /** Write a posting generation: flat when nBuckets = 0, hive-bucketed by
+    * pmod(sk, nBuckets) otherwise — the win-regime layout
+    * (SCALING.md r15: the pruned probe beats the compact scan 16× once
+    * the state outgrows a single scan), giving the maintenance step
+    * partition pruning on the batch's bucket set in every generation.
+    */
+  private def writePostingGen(postings: DataFrame, dir: String,
+      nBuckets: Int): Unit =
+    if (nBuckets <= 0) postings.write.mode("overwrite").parquet(dir)
+    else postings
+      .withColumn("bucket",
+        graft.ext.Dedup.postingBucket(col("sk"), nBuckets))
+      .repartition(col("bucket"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
 
   // The three (base, delta) pairs of the v2 layout, each a
   // [[graft.util.GenStore]] — the shared seam carries the _SUCCESS
@@ -827,9 +659,12 @@ object Streams {
   /** Initialize the v2 store: postings/sizes/labels each land as base
     * generation −1 (labels rebuilt from the WRITTEN postings — the q240
     * one-shingle-pass discipline). Idempotent on the label base's
-    * _SUCCESS marker (torn init re-runs; every write overwrites).
-    */
-  /** @param onInitPairs composed-init seam (q264): called with the
+    * _SUCCESS marker, not on bare existence: a crash during the init
+    * label write leaves a torn g=-1 whose directory already exists, so
+    * the marker gate makes a torn init re-run (every write overwrites)
+    * instead of maintaining labels on top of a partial table.
+    *
+    * @param onInitPairs composed-init seam (q264): called with the
     *   MATERIALIZED (i, j) pair set of the init corpus so a composed
     *   store (pairs/coreness bases) reuses the one posting self-join
     *   this init already pays instead of re-deriving it from the
@@ -998,13 +833,15 @@ object Streams {
     folded.toSeq
   }
 
-  /** One v2 maintenance epoch — the foreachBatch body. Identical pair /
-    * update computation to [[ccMaintenanceDiskStep]], but the label write
-    * is ONLY the delta (`updates/batch=E`) — the full-table label
-    * generation is gone — and the step ends with the threshold fold.
-    * `killOnceAt` dies after the update delta commits and before the
-    * posting/size deltas do (the v1 nastiest-partial-commit point
-    * transposed to the delta-label layout).
+  /** One maintenance epoch — the foreachBatch body. Shingles the batch
+    * once, probes its postings against the posting view below E for the
+    * delta pairs, and derives the label-update set (changed ∪ fresh ∪
+    * batch singles). The only label write is that delta
+    * (`updates/batch=E`) — no full label table — then the batch's
+    * posting/size deltas land and the step ends with the threshold fold.
+    * `killOnceAt = (E, armed)` injects a one-shot crash after the update
+    * delta commits and before the posting/size deltas do — the nastiest
+    * partial-commit point — to prove recovery.
     *
     * `gcAfterFold` makes [[ccStoreGc]] a mid-stream POLICY instead of a
     * manual post-stream operator: whenever a fold fires, the step sweeps
@@ -1015,18 +852,12 @@ object Streams {
     * content-identical to the pre-fold view it read on the first
     * attempt). Round16Spec pins policy-on ≡ policy-off labels and that
     * the swept layout matches the explicit-GC one.
-    */
-  /** @param onLabelWrite called with the wall-clock seconds of this
-    *   epoch's complete LABEL-PATH writes — here the DELTA write
-    *   (update set + `_rows` sidecar, INCLUDING the sidecar's
-    *   footer-count read-back job, which v1 never pays). The
-    *   [[ccMaintenanceDiskStep]] twin hook times v1's label path
-    *   (update delta + persisted-delta re-read + the full-table
-    *   rewrite), so v1 − v2 approximates — slightly understates, by
-    *   (v1's re-read − v2's sidecar count) — the rewrite this store
-    *   eliminates (r16 verdict #6, wording per r17 ADVICE).
-    */
-  /** @param onEpochPairs called once per epoch with the MATERIALIZED
+    *
+    * @param onLabelWrite called with the wall-clock seconds of this
+    *   epoch's complete LABEL-PATH writes: the update-delta write (its row
+    *   count observed on the write job itself) plus the `_rows` sidecar.
+    *   The `cc_maintenance` benchmark reports it as `cc.label_write_s`.
+    * @param onEpochPairs called once per epoch with the MATERIALIZED
     *   (localCheckpointed) delta pair set and the epoch id, after the
     *   label update delta + `_rows` sidecar commit (so
     *   [[ccStoreLabelsView]] at bound `epoch + 1` reflects this epoch's

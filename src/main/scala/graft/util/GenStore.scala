@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** The generational on-disk store seam — ONE implementation of the layout
-  * and crash semantics that three stores previously each carried a copy
-  * of (r16 verdict #2): the vector index store
-  * ([[graft.ext.Similarity.indexStoreView]]), the v1 CC maintenance
-  * generations, and the v2 CC store ([[graft.streaming.Streams]]).
+  * and crash semantics that the stores previously each carried a copy of
+  * (r16 verdict #2): the vector index store
+  * ([[graft.ext.Similarity.indexStoreView]]) and the CC maintenance store
+  * ([[graft.streaming.Streams]]).
   *
   * Layout:
   *   `<baseDir>/<basePrefix><g>`   — base generations (_SUCCESS-gated)

@@ -368,7 +368,12 @@ class PropertySpec extends SparkSpec {
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try cases.foreach { case (n, bad) =>
       val in = batch(n, bad)
-      val before = sc.getPersistentRDDs.size
+      // SparkContext tracks persisted RDDs by weak reference, so a GC
+      // during the case would drop unreachable entries left by earlier
+      // tests and shrink the count; holding the map keeps them reachable
+      // and the count exact
+      val held = sc.getPersistentRDDs
+      val before = held.size
       val out = Streams.guardedBatch(pipeline)(in)
       if (bad.nonEmpty) {
         assert(sc.getPersistentRDDs.size == before,
@@ -381,6 +386,7 @@ class PropertySpec extends SparkSpec {
       }
       out.unpersist(blocking = true) // the caller releases what guard returns
       assert(sc.getPersistentRDDs.size == before)
+      java.lang.ref.Reference.reachabilityFence(held)
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 }

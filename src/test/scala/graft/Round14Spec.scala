@@ -116,15 +116,7 @@ class Round14Spec extends SparkSpec {
         spark, Dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
     val docs = graft.sources.Tables.documents(spark, Dir)
-    val comp = Dedup.connectedComponents(
-        Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val compIds = comp.map(_._1).toSet
-    val singles = docs.filter(col("doc_id") % 5 === 0)
-      .select("doc_id").collect().map(_.getLong(0))
-      .filterNot(compIds).map(id => (id, id))
-    val truth = (comp ++ singles).sorted
-    assert(comp.nonEmpty, "fixture produced no components")
+    val truth = ccRebuildLabels(docs, docs.filter(col("doc_id") % 5 === 0))
     assert(result.sameElements(truth))
   }
 

@@ -68,9 +68,9 @@ class Round15Spec extends SparkSpec {
     // is the intended outcome, not a flake to chase.
     //
     // q252 IS the killed+restarted run (it require()s the kill fired);
-    // q242 is the uninterrupted in-memory loop over the same staged
-    // epochs. Equality here + both queries' shared DuckDB oracle closes
-    // the restart story: recovery from checkpoint + persisted generations
+    // q242 is the same flat store loop, uninterrupted, over the same
+    // staged epochs. Equality here + both queries' shared DuckDB oracle
+    // closes the restart story: recovery from checkpoint + persisted generations
     // reaches exactly the state the crash never happened to.
     val resumed = SparkEntry.queries("q252_stream_cc_restart_resume")(
         spark, Dir)

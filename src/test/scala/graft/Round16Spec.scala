@@ -80,44 +80,23 @@ class Round16Spec extends SparkSpec {
   }
 
   test("v2 store loop: merge-on-read labels (base ∪ latest-wins deltas) " +
-      "with mid-stream folds == the v1 full-rewrite loop's labels, and " +
-      "the per-epoch label writes are DELTA-sized (no full label table " +
-      "is ever written after init)") {
+      "with mid-stream folds == the full CC rebuild ∪ batch-singleton " +
+      "self-labels, and the per-epoch label writes are DELTA-sized (no " +
+      "full label table is ever written after init)") {
     val rootA = java.nio.file.Files
       .createTempDirectory("graft_r16_v2").toString
-    val rootB = java.nio.file.Files
-      .createTempDirectory("graft_r16_v1").toString
     try {
       // v2, folds firing mid-stream (labels at epoch 2, postings every
       // epoch)
       stage(rootA, nBuckets = 8)
       assert(!runStream(rootA, 8, maxLabelDeltas = 1, maxPostingGens = 0,
         killOnceAt = None))
-      // v1 (full label rewrite per epoch) over the same staged epochs
       val docs = graft.sources.Tables.documents(spark, Dir)
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$rootB/in"))
-      for (e <- 0 until 3)
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$rootA/in/e$e.parquet"),
-          java.nio.file.Paths.get(s"$rootB/in/e$e.parquet"))
-      graft.streaming.Streams.ccMaintenanceInit(
-        docs.filter(col("doc_id") % 5 =!= 0), s"$rootB/state")
-      val schema = spark.read.parquet(s"$rootB/in/e0.parquet").schema
-      val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-        graft.streaming.Streams.ccMaintenanceDiskStep(s"$rootB/state", 3, 0.5)
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$rootB/in/*")
-        .writeStream.option("checkpointLocation", s"$rootB/ckpt")
-        .foreachBatch(step).start()
-      try q.processAllAvailable() finally q.stop()
-      val v1 = graft.streaming.Streams
-        .ccMaintenanceLabels(spark, s"$rootB/state")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      val truth = ccRebuildLabels(docs, docs.filter(col("doc_id") % 5 === 0))
       val v2 = labelsOf(rootA)
-      assert(v2.nonEmpty && v2 == v1,
-        s"merge-on-read labels diverged from the sequential fold " +
-          s"(v2=${v2.size} rows, v1=${v1.size})")
+      assert(v2.nonEmpty && v2 == truth,
+        s"merge-on-read labels diverged from the full rebuild " +
+          s"(v2=${v2.size} rows, rebuild=${truth.size})")
       // delta-sized pin: the v2 layout has NO per-epoch label tables at
       // all, and every update delta is strictly smaller than the label
       // table it updates
@@ -144,7 +123,7 @@ class Round16Spec extends SparkSpec {
         .get(s"$rootA/state/gens/label_base/g=1/_SUCCESS")))
       assert(java.nio.file.Files.exists(java.nio.file.Paths
         .get(s"$rootA/state/gens/posting_base/g=1/_SUCCESS")))
-    } finally { rmTree(rootA); rmTree(rootB) }
+    } finally rmTree(rootA)
   }
 
   test("v2 store: fold thresholds change the LAYOUT only — fold-heavy == " +
@@ -325,10 +304,10 @@ class Round16Spec extends SparkSpec {
       "re-folds the store; a torn (un-committed) delta epoch is " +
       "invisible to the store view until its overwrite commits") {
     import graft.ext.Similarity
-    // (1) torn ccMaintenanceInit: labels/epoch=-1 exists WITHOUT the
-    // _SUCCESS marker (the crash-during-init leftover) — the idempotency
-    // gate must RE-RUN init, not maintain labels on top of a partial
-    // table (r15 ADVICE #1)
+    // (1) torn ccStoreInit: label_base/g=-1 exists WITHOUT the _SUCCESS
+    // marker (the crash-during-init leftover) — the idempotency gate must
+    // RE-RUN init, not maintain labels on top of a partial table (r15
+    // ADVICE #1)
     val rootA = java.nio.file.Files
       .createTempDirectory("graft_r16_torninit").toString
     val rootB = java.nio.file.Files
@@ -336,17 +315,17 @@ class Round16Spec extends SparkSpec {
     try {
       val docs = graft.sources.Tables.documents(spark, Dir)
         .filter(col("doc_id") % 5 =!= 0)
-      val torn = s"$rootA/state/gens/labels/epoch=-1"
+      val torn = s"$rootA/state/gens/label_base/g=-1"
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(torn))
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$torn/part-garbage.parquet"), "torn")
-      graft.streaming.Streams.ccMaintenanceInit(docs, s"$rootA/state")
+      graft.streaming.Streams.ccStoreInit(docs, s"$rootA/state")
       assert(java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$torn/_SUCCESS")),
-        "init skipped on a torn (marker-less) label table")
-      graft.streaming.Streams.ccMaintenanceInit(docs, s"$rootB/state")
+        "init skipped on a torn (marker-less) label base")
+      graft.streaming.Streams.ccStoreInit(docs, s"$rootB/state")
       def labs(r: String) = graft.streaming.Streams
-        .ccMaintenanceLabels(spark, s"$r/state")
+        .ccStoreLabels(spark, s"$r/state")
         .collect().map(x => (x.getLong(0), x.getLong(1))).sorted.toSeq
       val a = labs(rootA)
       assert(a.nonEmpty && a == labs(rootB),

@@ -36,13 +36,11 @@ class Round17Spec extends SparkSpec {
   test("merge storm: one batch doc bridging two components makes a " +
       "component-sized update delta; the ROW-based fold trigger fires at " +
       "the very next step (epoch count alone never would), labels stay " +
-      "exact vs the v1 full-rewrite loop, and GC retention keeps a " +
+      "exact vs the full CC rebuild, and GC retention keeps a " +
       "pre-fold reader's snapshot alive") {
     import spark.implicits._
     val root = java.nio.file.Files
       .createTempDirectory("graft_r17_storm").toString
-    val rootV1 = java.nio.file.Files
-      .createTempDirectory("graft_r17_storm_v1").toString
     try {
       import graft.streaming.Streams
       // 3-shingle Jaccard(bridge, A-doc) = 2/6 — the bridge connects at
@@ -105,24 +103,20 @@ class Round17Spec extends SparkSpec {
         !exists(s"$root/state/updates/batch=0"))
       assert(Streams.ccStoreGc(s"$root/state") == 0)
 
-      // exactness: the v1 full-label-rewrite loop over the same epochs
-      Streams.ccMaintenanceInit(stormCorpus, s"$rootV1/state", k = 3,
+      // exactness: the full CC rebuild over corpus ∪ both epochs, at the
+      // same threshold
+      val batches = bridge.unionByName(quiet)
+      val truth = ccRebuildLabels(stormCorpus.unionByName(batches), batches,
         threshold = 0.3)
-      val v1Step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-        Streams.ccMaintenanceDiskStep(s"$rootV1/state", 3, 0.3)
-      v1Step(bridge, 0L)
-      v1Step(quiet, 1L)
-      val v1 = Streams.ccMaintenanceLabels(spark, s"$rootV1/state")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       val v2 = Streams.ccStoreLabels(spark, s"$root/state")
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(v2.nonEmpty && v2 == v1,
-        s"storm-folded v2 labels diverged from v1 (v2=${v2.size}, " +
-          s"v1=${v1.size})")
+      assert(v2.nonEmpty && v2 == truth,
+        s"storm-folded v2 labels diverged from the full rebuild " +
+          s"(v2=${v2.size}, rebuild=${truth.size})")
       // and the merge really happened: every A/B/bridge doc labeled 0
       assert(v2.filter(t => t._1 < 130L || t._1 == 500L)
         .forall(_._2 == 0L))
-    } finally { rmTree(root); rmTree(rootV1) }
+    } finally rmTree(root)
   }
 
   test("label-view broadcast is count-guarded: past the row cap the " +
@@ -172,8 +166,8 @@ class Round17Spec extends SparkSpec {
   test("reduced-demo bench depth is a measurement choice, not a " +
       "semantic one: the one-trigger uninterrupted stream (BenchMode) " +
       "serves output identical to the full kill+restart demonstration, " +
-      "on EVERY reduced-aware demo — v1 plain/bucketed (q242 q252 " +
-      "q260), v2 text/media (q261 q262)") {
+      "on EVERY reduced-aware demo — flat/bucketed (q242 q252 q260), " +
+      "folding text/media (q261 q262)") {
     val dir = "/root/testdata/sf0.001"
     // EXPECTED LOG NOISE: the full-depth runs below inject kills, so
     // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND traces from the killed sessions'

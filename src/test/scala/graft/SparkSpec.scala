@@ -32,6 +32,29 @@ trait SparkSpec extends AnyFunSuite {
     scans.map(_.metrics("numFiles").value).sum
   }
 
+  /** The reference answer of incremental CC maintenance: the full
+    * rebuild — connected components of the whole corpus's k-shingle
+    * Jaccard graph — plus a self-label for each batch doc that never
+    * pairs (a maintenance step labels every batch doc; the rebuild labels
+    * only pair endpoints). Batch-boundary independence makes this every
+    * maintenance loop's final label table, however the ingest splits.
+    * `docs` is the whole corpus, batch docs included; `batch` holds the
+    * streamed docs' `doc_id`s. Sorted (id, label) pairs.
+    */
+  def ccRebuildLabels(docs: org.apache.spark.sql.DataFrame,
+      batch: org.apache.spark.sql.DataFrame, k: Int = 3,
+      threshold: Double = 0.5): Seq[(Long, Long)] = {
+    import graft.ext.Dedup
+    val comp = Dedup.connectedComponents(
+        Dedup.ngramJaccardPairs(docs, "doc_id", "text", k, threshold))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(comp.nonEmpty, "fixture produced no components")
+    val compIds = comp.map(_._1).toSet
+    val singles = batch.select("doc_id").collect().map(_.getLong(0))
+      .filterNot(compIds).map(id => (id, id))
+    (comp ++ singles).sorted.toSeq
+  }
+
   /** `f`'s result and the Spark jobs it launched, on any thread. A
     * listener counts job starts between two marker jobs: the listener bus
     * delivers in order, so every job `f` submitted arrives between the

@@ -2,6 +2,7 @@
 """Local pre-check of the driver's DuckDB-oracle gate.
 
 Usage: compare_oracle.py <sfDir> <verifyOutDir> [query...]
+(a query is named in full or by its qNN prefix)
 Runs each oracle_sql.json entry in DuckDB over the parquet tables and
 compares (column-sorted, row-sorted, exact) with the Spark parquet dump
 written by graft.Verify. Dev tooling only — not part of the shipped library.
@@ -35,7 +36,9 @@ def main():
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     n_ok = n_bad = 0
     for name in sorted(oracle):
-        if only and name not in only:
+        # a query is selected by its full name or its qNN prefix (the
+        # SPARK_GRAFT_ONLY form)
+        if only and name not in only and name.split("_")[0] not in only:
             continue
         try:
             exp = norm(con.sql(oracle[name]).df())
