@@ -139,6 +139,17 @@ object Dedup {
   def ngramPostingSizes(postings: DataFrame): DataFrame =
     postings.groupBy("i").agg(count(lit(1)).as("na"))
 
+  /** The same (i, na) rows as [[ngramPostingSizes]] over [[ngramPostings]]
+    * of `docs`, straight from the shingle sets: shingles are distinct and
+    * empty sets are dropped, so a set's size IS its posting count — no
+    * aggregate, no shuffle. `docs` must hold one row per id (the postings
+    * aggregate would sum a repeated id's sets).
+    */
+  def ngramSetSizes(docs: DataFrame, idCol: String, textCol: String,
+      k: Int): DataFrame =
+    shingleSets(docs, idCol, textCol, k)
+      .select(col("sid").as("i"), col("n_sh").cast("long").as("na"))
+
   /** Within-corpus Jaccard pairs derived from the PERSISTED posting index
     * (plus its [[ngramPostingSizes]] table) instead of re-shingling the
     * documents — output ≡ [[ngramJaccardPairs]] over the docs the index

@@ -743,17 +743,23 @@ object Streams {
     * provably the sequential [[graft.ext.Dedup.applyCcLabelUpdates]]
     * fold, because that fold's final label for an id is its row in the
     * largest epoch whose update set touched it (each apply = anti-join ∪
-    * union). The delta union is fold-threshold-bounded, so in the common
-    * regime its ids BROADCAST into the base anti-join — the corpus-sized
-    * base streams map-side, nothing corpus-sized shuffles, and the
-    * per-epoch label write this view replaces is gone entirely. The hint
-    * is COUNT-GUARDED (r16 verdict #1): "delta-sized" is an EPOCH bound,
+    * union). The merge is [[graft.util.GenStore.latestWinsView]]'s one
+    * anti-join: base ∪ live update deltas, each row dropped when a live
+    * delta of a LARGER epoch holds its id. It is exact because each
+    * update delta holds ONE ROW PER ID (changed ∪ fresh ∪ batch singles
+    * are disjoint by construction — the GenStore writers' contract;
+    * Round16Spec pins it over whole streams). The live deltas are
+    * fold-threshold-bounded, so in the common regime their (id, epoch)
+    * probe BROADCASTS into that anti-join — the corpus-sized base streams
+    * map-side, nothing shuffles, and a read costs one broadcast job plus
+    * its own action however many deltas are live. The hint is
+    * COUNT-GUARDED (r16 verdict #1): "delta-sized" is an EPOCH bound,
     * not a row bound — a single epoch that bridges two large components
     * rewrites every label of the losing side
     * ([[graft.ext.Dedup.incrementalCcLabelUpdates]]), component-sized on
     * a template-farm megacomponent. The guard sums the `_rows` sidecars
-    * of the live update deltas (driver-side file reads — no job; an
-    * upper bound on the latest-wins set) and drops the hint past
+    * of the live update deltas once per view (driver-side file reads —
+    * no job; exactly the probe's row count) and drops the hint past
     * [[CcLabelBroadcastMaxRows]], letting the planner fall back to a
     * shuffle join: correct-but-slower for the one view a merge storm is
     * live in, instead of a driver OOM — and the row-based fold trigger
@@ -763,15 +769,10 @@ object Streams {
   def ccStoreLabelsView(s: SparkSession, stateRoot: String,
       bound: Long): DataFrame = {
     val st = ccLabelStore(stateRoot)
-    // the latest-wins merge itself is the shared GenStore seam (one
-    // implementation, r18 review); this view contributes only the
-    // store-specific count-guarded probe hint described above
-    st.latestWinsView(s, bound, "id", ids => {
-      val g = st.latestCompleteBase(bound)
-      val updRows = st.completeDeltaEpochs(g, bound)
-        .map(e => st.deltaRows(s, e)).sum
-      if (updRows <= CcLabelBroadcastMaxRows) broadcast(ids) else ids
-    })
+    val updRows = st.completeDeltaEpochs(st.latestCompleteBase(bound), bound)
+      .map(e => st.deltaRows(s, e)).sum
+    st.latestWinsView(s, bound, "id",
+      if (updRows <= CcLabelBroadcastMaxRows) broadcast(_) else identity)
   }
 
   /** The current label table (post-stream serving read). */
@@ -926,15 +927,18 @@ object Streams {
             "write, before its posting/size writes")
       }
     }
-    // both delta writes read the checkpointed batch postings and write
-    // disjoint epoch dirs — overlapped (guide §2.6). The kill-point
-    // contract ("after the update delta, before the posting/size deltas")
-    // is untouched: the kill check above still precedes both.
+    // the posting delta reads the checkpointed batch postings, the size
+    // delta the pinned batch's shingle sets (ngramSetSizes: no aggregate
+    // shuffle); they write disjoint epoch dirs — overlapped (guide §2.6).
+    // The kill-point contract ("after the update delta, before the
+    // posting/size deltas") is untouched: the kill check above still
+    // precedes both.
     DevTiming("step", s"e$epoch posting+size delta writes (overlapped)")(
       graft.util.Par.run(
         () => writePostingGen(bp,
           s"$stateRoot/gens/postings/epoch=$epoch", nBuckets),
-        () => Dedup.ngramPostingSizes(bp).write.mode("overwrite")
+        () => Dedup.ngramSetSizes(b, "doc_id", "text", k)
+          .write.mode("overwrite")
           .parquet(s"$stateRoot/gens/sizes/epoch=$epoch")))
     CheckpointGen.release(sc, bPins ++ bpPins)
     val folded = DevTiming("step", s"e$epoch fold")(

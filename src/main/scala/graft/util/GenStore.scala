@@ -71,9 +71,10 @@ final case class GenStore(baseDir: String, deltaDir: String,
     }
   }
 
+  private def reader(s: SparkSession) = schema.fold(s.read)(s.read.schema(_))
+
   /** A scan of `path` under the declared [[schema]], else inferred. */
-  def read(s: SparkSession, path: String): DataFrame =
-    schema.fold(s.read)(s.read.schema(_)).parquet(path)
+  def read(s: SparkSession, path: String): DataFrame = reader(s).parquet(path)
 
   def listBases(requireSuccess: Boolean): Seq[Long] =
     listDirs(baseDir, basePrefix, requireSuccess)
@@ -99,9 +100,8 @@ final case class GenStore(baseDir: String, deltaDir: String,
   /** The store's contents visible to epoch `bound` for APPEND-ONLY
     * content: latest complete base ∪ complete delta epochs past its fold
     * point, delta scan partition-pruned to the live epoch set at the
-    * source. Stores whose merge is not a plain union (e.g. latest-wins
-    * label reconciliation) compose [[latestCompleteBase]] /
-    * [[completeDeltaEpochs]] themselves.
+    * source. Latest-wins content (per-id reconciliation) reads through
+    * [[latestWinsView]] instead.
     */
   def unionView(s: SparkSession, bound: Long = Long.MaxValue): DataFrame = {
     val g = latestCompleteBase(bound)
@@ -118,25 +118,49 @@ final case class GenStore(baseDir: String, deltaDir: String,
     * — provably the sequential apply-updates fold (each apply =
     * anti-join ∪ union; see [[graft.streaming.Streams.ccStoreLabelsView]],
     * whose merge this generalizes — one implementation, r18 review).
-    * `hintProbe` decorates the delta id set before the base anti-join
-    * (e.g. a count-guarded broadcast); default no hint.
+    *
+    * The merge is ONE ANTI-JOIN, not a per-id ranking. Base ∪ live
+    * deltas, each row tagged with its epoch (the base's is its
+    * generation, below every live epoch), minus the rows for which a
+    * live delta of a LARGER epoch holds the same id. That keeps:
+    *   - the newest live delta whole;
+    *   - each older delta's rows whose id no newer delta holds;
+    *   - the base's rows whose id no live delta holds.
+    * The delta root is scanned once, under the live-epoch partition
+    * filter, and the live deltas' (id, epoch) rows are the one probe. A
+    * store without a declared [[schema]] infers each scan's schema once
+    * and resolving the view launches no job. When the probe broadcasts,
+    * nothing shuffles and a read costs that broadcast plus its own
+    * action, however many deltas are live.
+    *
+    * WRITERS' CONTRACT: each delta holds AT MOST ONE ROW PER `idCol`.
+    * Under it the merge is exact; a delta with a duplicate id serves both
+    * rows. The CC update set (changed ∪ fresh ∪ batch singles) and q264's
+    * per-vertex coreness deltas meet it.
+    *
+    * `hintProbe` decorates the probe before it is anti-joined (e.g. a
+    * count-guarded broadcast); default no hint.
     */
   def latestWinsView(s: SparkSession, bound: Long, idCol: String,
       hintProbe: DataFrame => DataFrame = identity): DataFrame = {
-    import org.apache.spark.sql.functions.row_number
     val g = latestCompleteBase(bound)
-    val base = read(s, basePath(g))
     val live = completeDeltaEpochs(g, bound)
-    if (live.isEmpty) base
+    if (live.isEmpty) read(s, basePath(g))
     else {
-      val latest = read(s, deltaDir)
-        .filter(col(deltaCol).isin(live: _*))
-        .withColumn("rn", row_number().over(org.apache.spark.sql
-          .expressions.Window.partitionBy(idCol)
-          .orderBy(col(deltaCol).desc)))
-        .filter(col("rn") === 1).drop("rn", deltaCol)
-      base.join(hintProbe(latest.select(idCol)), Seq(idCol), "left_anti")
-        .unionByName(latest)
+      val deltas = read(s, deltaDir).filter(col(deltaCol).isin(live: _*))
+      val newer = hintProbe(deltas.select(col(idCol).as("newer_id"),
+        col(deltaCol).as("newer_epoch")))
+      // The optimizer pushes the anti-join into both sides of the union.
+      // The base's epoch is its generation as a partition column (the
+      // basePath option), not a literal: against a literal the base side's
+      // condition would become a filter on the probe, and the two sides
+      // would probe different plans, each with its own broadcast.
+      reader(s).option("basePath", baseDir).parquet(basePath(g))
+        .withColumnRenamed(basePrefix.stripSuffix("="), deltaCol)
+        .unionByName(deltas)
+        .join(newer, col(idCol) === col("newer_id") &&
+          col("newer_epoch") > col(deltaCol), "left_anti")
+        .drop(deltaCol)
     }
   }
 

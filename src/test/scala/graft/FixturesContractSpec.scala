@@ -16,8 +16,28 @@ import org.apache.spark.sql.types._
   * `nanosAsLong`) or a timestamp type — both are handled by the adaptive
   * reader in [[graft.sources.Tables.events]]; anything else is drift.
   */
-class FixturesContractSpec extends SparkSpec {
+class FixturesContractSpec extends SparkSpec
+    with org.scalatest.BeforeAndAfterAll {
   private val dir = "/root/testdata/sf0.001"
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  /** The session's value before this suite touched it. */
+  private var nanosBefore: Option[String] = None
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    nanosBefore = spark.conf.getOption(NanosAsLong)
+  }
+
+  /** `f` with nanosAsLong on (the loaders' setting), the session's value
+    * restored after — later suites must not inherit it.
+    */
+  private def withNanosAsLong[T](f: => T): T = {
+    val prior = spark.conf.getOption(NanosAsLong)
+    spark.conf.set(NanosAsLong, "true")
+    try f
+    finally prior.fold(spark.conf.unset(NanosAsLong))(
+      spark.conf.set(NanosAsLong, _))
+  }
 
   /** name -> expected (column, acceptable types) in on-disk order */
   private val contract: Seq[(String, Seq[(String, Set[DataType])])] = {
@@ -59,8 +79,8 @@ class FixturesContractSpec extends SparkSpec {
   for ((table, cols) <- contract) test(s"fixture schema contract: $table") {
     // read through the raw scanner (nanosAsLong on, like the loaders) so the
     // assertion is about the FILE, not about any loader normalization
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val actual = spark.read.parquet(s"$dir/$table.parquet").schema
+    val actual = withNanosAsLong(
+      spark.read.parquet(s"$dir/$table.parquet").schema)
     assert(actual.fields.map(_.name).toSeq == cols.map(_._1),
       s"FIXTURE DRIFT in $table: column names/order changed — " +
         s"expected ${cols.map(_._1).mkString(",")}, " +
@@ -79,7 +99,8 @@ class FixturesContractSpec extends SparkSpec {
   }
 
   test("fixture contract: loader-normalized events.ts is TIMESTAMP (UTC instants)") {
-    val dt = graft.sources.Tables.events(spark, dir).schema("ts").dataType
+    val dt = withNanosAsLong(
+      graft.sources.Tables.events(spark, dir).schema("ts").dataType)
     assert(dt == TimestampType,
       s"Tables.events must normalize ts to TimestampType for downstream " +
         s"unix_micros/window/watermark operators; got $dt")
@@ -100,11 +121,17 @@ class FixturesContractSpec extends SparkSpec {
       (2L, 1704067201999999999L, 8L, "click", 2.5, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(tmp)
-    val got = graft.sources.Tables
+    val got = withNanosAsLong(graft.sources.Tables
       .events(spark, tmp.stripSuffix("/events.parquet"))
       .select(col("event_id"), unix_micros(col("ts")).as("us"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap)
     assert(got(1L) == 1704067200123456L, s"ns->us truncation drifted: $got")
     assert(got(2L) == 1704067201999999L, s"ns->us truncation drifted: $got")
+  }
+
+  // registered last, so it runs after every read above
+  test("the suite leaves spark.sql.legacy.parquet.nanosAsLong as it " +
+      "found it") {
+    assert(spark.conf.getOption(NanosAsLong) == nanosBefore)
   }
 }

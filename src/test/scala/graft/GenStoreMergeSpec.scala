@@ -1,0 +1,117 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.util.{Dirs, GenStore}
+
+/** `GenStore.latestWinsView`'s epoch-ordered anti-join equals the per-id
+  * ranking it replaced ([[SparkSpec.latestWinsByWindow]]) on the
+  * shapes the merge must get right: one id rewritten in several live
+  * deltas, a torn delta, a fold point that retires deltas, a store with no
+  * declared schema, and the hinted and unhinted probes. Round16Spec runs
+  * the same comparison over whole `ccStoreStep` streams.
+  */
+class GenStoreMergeSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val LabelSchema = StructType(
+    Seq("id", "label").map(StructField(_, LongType)))
+
+  private def tempRoot(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft_merge_$tag").toString
+
+  /** Stage base g=-1 (ids 0..9 → 0) and three live deltas; id 1 is
+    * rewritten in all three, ids 2..4 in one each, ids 20 and 21 are new.
+    */
+  private def stage(store: GenStore, valueCol: String): Unit = {
+    def put(rows: Seq[(Long, Long)], path: String): Unit =
+      rows.toDF("id", valueCol).write.parquet(path)
+    put((0L until 10L).map((_, 0L)), store.basePath(-1))
+    put(Seq((1L, 10L), (2L, 10L)), store.deltaPath(0))
+    put(Seq((1L, 11L), (3L, 11L), (20L, 11L)), store.deltaPath(1))
+    put(Seq((1L, 12L), (4L, 12L), (21L, 12L)), store.deltaPath(2))
+  }
+
+  private val broadcastHint: DataFrame => DataFrame = broadcast(_)
+
+  /** Merge == ranking reference at every bound, hinted and unhinted. */
+  private def assertSameAsWindow(store: GenStore, what: String): Unit =
+    for (bound <- Seq(0L, 1L, 2L, 3L, Long.MaxValue);
+         (hintName, hint) <- Seq("unhinted" -> identity[DataFrame] _,
+           "broadcast" -> broadcastHint)) {
+      val got = store.latestWinsView(spark, bound, "id", hint)
+      val want = latestWinsByWindow(store, bound, "id")
+      assert(got.columns.toSeq == want.columns.toSeq,
+        s"$what bound=$bound $hintName: column order changed")
+      assert(sortedRows(got) == sortedRows(want),
+        s"$what bound=$bound $hintName: the merge diverged from the ranking")
+    }
+
+  test("latestWinsView's anti-join == the per-id ranking merge: one id " +
+      "rewritten in three live deltas, every bound, hinted and unhinted; " +
+      "resolving the declared-schema view launches no job, and a hinted " +
+      "read launches one broadcast plus its own job however many deltas " +
+      "are live") {
+    val root = tempRoot("rewrite")
+    try {
+      val store = GenStore(s"$root/base", s"$root/upd", "g=", "batch=",
+        Some(LabelSchema))
+      stage(store, "label")
+      assertSameAsWindow(store, "declared schema")
+      for (live <- 1 to 3) {
+        val (view, jobs) = withJobCount(
+          store.latestWinsView(spark, live.toLong, "id", broadcastHint))
+        assert(jobs == 0, s"resolving the view launched $jobs jobs")
+        val (_, readJobs) = withJobCount(view.collect())
+        assert(readJobs == 2,
+          s"a read over $live live deltas launched $readJobs jobs")
+      }
+      val got = sortedRows(store.latestWinsView(spark, Long.MaxValue, "id"))
+      // id 1 reads its newest row; ids 2..4 their one rewrite; 20, 21 new
+      assert(got == ((0L until 10L).map {
+        case 1L => "1,12"; case 2L => "2,10"; case 3L => "3,11"
+        case 4L => "4,12"; case i => s"$i,0"
+      } ++ Seq("20,11", "21,12")).sorted)
+    } finally Dirs.rmTree(root)
+  }
+
+  test("latestWinsView == the ranking merge with a torn delta (no " +
+      "_SUCCESS) and after a fold retires the deltas at or below it") {
+    val root = tempRoot("torn")
+    try {
+      val store = GenStore(s"$root/base", s"$root/upd", "g=", "batch=",
+        Some(LabelSchema))
+      stage(store, "label")
+      // a crashed epoch-3 write: rows for ids 1 and 5 with no _SUCCESS
+      Seq((1L, 13L), (5L, 13L)).toDF("id", "label")
+        .write.parquet(store.deltaPath(3))
+      java.nio.file.Files.delete(
+        java.nio.file.Paths.get(store.deltaPath(3), "_SUCCESS"))
+      assertSameAsWindow(store, "torn delta")
+      assert(!sortedRows(store.latestWinsView(spark, Long.MaxValue, "id"))
+        .exists(_.endsWith(",13")), "the torn delta leaked into the view")
+      // fold epochs <= 1 into base g=1: deltas 0 and 1 leave the merge
+      store.latestWinsView(spark, 2, "id").write.parquet(store.basePath(1))
+      assertSameAsWindow(store, "after a fold")
+    } finally Dirs.rmTree(root)
+  }
+
+  test("latestWinsView == the ranking merge on a store with no declared " +
+      "schema (q264's coreness store shape), and resolving it infers no " +
+      "more schemas than the ranking did") {
+    val root = tempRoot("noschema")
+    try {
+      val store = GenStore(s"$root/core_base", s"$root/core", "g=", "epoch=")
+      stage(store, "coreness")
+      assertSameAsWindow(store, "inferred schema")
+      val (_, mergeJobs) = withJobCount(
+        store.latestWinsView(spark, Long.MaxValue, "id"))
+      val (_, windowJobs) = withJobCount(
+        latestWinsByWindow(store, Long.MaxValue, "id"))
+      assert(mergeJobs <= windowJobs, s"resolving the merge launched " +
+        s"$mergeJobs jobs, the ranking merge $windowJobs")
+    } finally Dirs.rmTree(root)
+  }
+}

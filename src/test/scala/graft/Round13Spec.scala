@@ -76,6 +76,30 @@ class Round13Spec extends SparkSpec {
     } finally graft.util.Dirs.rmTree(state)
   }
 
+  test("ngramSetSizes == ngramPostingSizes over the same docs' postings " +
+      "(the shuffle-free size delta ccStoreStep writes); a doc shorter " +
+      "than k and two identical docs included") {
+    import spark.implicits._
+    val (_, batch0) = split()
+    val copied = batch0.orderBy("doc_id").select("text").head().getString(0)
+    val batch = batch0.select("doc_id", "text").unionByName(Seq(
+      (900001L, "too short"), (900002L, copied), (900003L, copied))
+      .toDF("doc_id", "text"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("i", "na")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    def typed(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => (f.name, f.dataType))
+    val direct = Dedup.ngramSetSizes(batch, "doc_id", "text", 3)
+    val viaPostings = Dedup.ngramPostingSizes(
+      Dedup.ngramPostings(batch, "doc_id", "text", 3))
+    assert(typed(direct) == typed(viaPostings))
+    val want = rows(viaPostings)
+    val got = rows(direct)
+    assert(got.nonEmpty && got == want)
+    assert(!got.exists(_._1 == 900001L) && got.exists(_._1 == 900003L),
+      "fixture edge cases missing")
+  }
+
   test("incremental label updates applied to the persisted state == the " +
       "full CC rebuild (changed ∪ fresh ∪ singles vs q232's relabel)") {
     val (corpus, batch) = split()

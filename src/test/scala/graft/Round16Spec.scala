@@ -11,7 +11,11 @@ class Round16Spec extends SparkSpec {
 
   private val Dir = "/root/testdata/sf0.001"
   /** Jobs of one non-folding ccStoreStep on this fixture, by nBuckets. */
-  private val StepJobBudget = Map(0 -> 25, 8 -> 28)
+  private val StepJobBudget = Map(0 -> 20, 8 -> 23)
+  /** Jobs of one serving read: the live deltas' probe broadcast and the
+    * collect.
+    */
+  private val ReadJobBudget = 2
 
   /** Stage the shared 3-epoch CC ingest (the stageCcIngest layout: "new"
     * docs doc_id%5=0 split by doc_id%15 into one parquet file per epoch)
@@ -198,9 +202,38 @@ class Round16Spec extends SparkSpec {
     } finally { rmTree(rootA); rmTree(rootB) }
   }
 
+  test("every ccStoreStep update delta holds one row per id (the " +
+      "latest-wins writers' contract) and the label view == the per-id " +
+      "ranking merge at every epoch bound, flat and 8 buckets") {
+    for (nBuckets <- Seq(0, 8)) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_r16_onerow").toString
+      try {
+        stage(root, nBuckets)
+        // no folds: all three update deltas stay live
+        assert(!runStream(root, nBuckets, maxLabelDeltas = 999,
+          maxPostingGens = 999, killOnceAt = None))
+        val state = s"$root/state"
+        for (e <- 0 until 3) {
+          val upd = spark.read.parquet(s"$state/updates/batch=$e")
+          val (rows, ids) = (upd.count(), upd.select("id").distinct().count())
+          assert(rows > 0 && rows == ids, s"nBuckets=$nBuckets: update " +
+            s"delta $e holds $rows rows for $ids ids")
+        }
+        val store = graft.util.GenStore(s"$state/gens/label_base",
+          s"$state/updates", "g=", "batch=")
+        for (bound <- 0L to 3L)
+          assert(sortedRows(graft.streaming.Streams
+              .ccStoreLabelsView(spark, state, bound)) ==
+            sortedRows(latestWinsByWindow(store, bound, "id")),
+            s"nBuckets=$nBuckets bound=$bound: the merge diverged")
+      } finally rmTree(root)
+    }
+  }
+
   test("v2 store job budget: ccStoreStep epochs leave no cache entry " +
       "behind, resolving the three views launches no job, a serving read " +
-      "launches at most 4, a non-folding step stays within its measured " +
+      "launches at most 2, a non-folding step stays within its measured " +
       "count; the bucketed posting view still carries a prunable bucket " +
       "column") {
     for (nBuckets <- Seq(0, 8)) {
@@ -232,7 +265,7 @@ class Round16Spec extends SparkSpec {
           s"nBuckets=$nBuckets: resolving the views launched $viewJobs jobs")
         val (labels, readJobs) = withJobCount(
           graft.streaming.Streams.ccStoreLabels(spark, state).collect())
-        assert(labels.nonEmpty && readJobs <= 4,
+        assert(labels.nonEmpty && readJobs <= ReadJobBudget,
           s"nBuckets=$nBuckets: a serving read launched $readJobs jobs")
         assert(stepJobs <= StepJobBudget(nBuckets),
           s"nBuckets=$nBuckets: a non-folding step launched $stepJobs jobs " +

@@ -55,6 +55,35 @@ trait SparkSpec extends AnyFunSuite {
     (comp ++ singles).sorted.toSeq
   }
 
+  /** The latest-wins merge as a per-id ranking: each id's row from the
+    * largest live epoch, picked by a `row_number` window over the live
+    * deltas, and the winners' ids anti-joined out of the base. The
+    * reference [[graft.util.GenStore.latestWinsView]]'s anti-join is
+    * compared with (it is how that view was written before).
+    */
+  def latestWinsByWindow(store: graft.util.GenStore, bound: Long,
+      idCol: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, row_number}
+    val g = store.latestCompleteBase(bound)
+    val base = store.read(spark, store.basePath(g))
+    val live = store.completeDeltaEpochs(g, bound)
+    if (live.isEmpty) base
+    else {
+      val latest = store.read(spark, store.deltaDir)
+        .filter(col(store.deltaCol).isin(live: _*))
+        .withColumn("rn", row_number().over(Window.partitionBy(idCol)
+          .orderBy(col(store.deltaCol).desc)))
+        .filter(col("rn") === 1).drop("rn", store.deltaCol)
+      base.join(latest.select(idCol), Seq(idCol), "left_anti")
+        .unionByName(latest)
+    }
+  }
+
+  /** A frame's rows as sorted strings (column order kept). */
+  def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+
   /** `f`'s result and the Spark jobs it launched, on any thread. A
     * listener counts job starts between two marker jobs: the listener bus
     * delivers in order, so every job `f` submitted arrives between the
