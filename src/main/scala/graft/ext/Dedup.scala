@@ -53,44 +53,23 @@ object Dedup {
   /** Exact n-gram Jaccard near-dup pairs (i < j, jaccard >= threshold).
     * Pairs are generated only for documents sharing at least one shingle
     * (equi-join on the shingle), then scored exactly from the intersection
-    * count — the inverted-index formulation; never |docs|².
+    * count — the inverted-index formulation; never |docs|². It is
+    * [[ngramJaccardPairsFromPostings]] over the docs' lazy
+    * [[ngramPostings]], with nothing cached: a call leaves no cache entry
+    * behind in the session, and each consumer of the postings (the two
+    * self-join sides and the size aggregate) shingles the docs itself.
+    *
+    * NOTE on a rejected "optimization": prefiltering postings to shingles
+    * with document frequency > 1 (unique shingles can never pair) sounds
+    * right for web corpora, but measured 50% SLOWER here — the extra
+    * aggregate + filter join only pays when most shingles are unique,
+    * which a low-entropy corpus (like this synthetic one) violates badly.
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         k: Int, threshold: Double): DataFrame = {
-    val sets = shingleSets(docs, idCol, textCol, k)
-    // join on xxhash64 of the shingle, not the string: 8-byte shuffle keys
-    // instead of ~20-char strings; collision odds (~pairs/2^64) are
-    // negligible against set sizes in the hundreds
-    // NOTE on a rejected "optimization": prefiltering postings to shingles
-    // with document frequency > 1 (unique shingles can never pair) sounds
-    // right for web corpora, but measured 50% SLOWER here — the extra
-    // aggregate + filter join only pays when most shingles are unique,
-    // which a low-entropy corpus (like this synthetic one) violates badly.
-    // The unconditional self-join is the robust default; df-prefiltering
-    // belongs behind corpus statistics, not hardcoded.
-    //
-    // The exploded postings carry ONLY (sid, sk) — 16 bytes/row through the
-    // self-join shuffle; per-document set sizes rejoin onto the (tiny)
-    // intersection-counted pair set afterwards.
-    val ex = sets.select(col("sid"), explode(col("sh")).as("s"))
-      .select(col("sid"), xxhash64(col("s")).as("sk"))
-      .cache() // both sides of the self-join + the size aggregate read this
-    // set size == postings count (shingles are distinct): derived from the
-    // cached postings, not by re-extracting shingles
-    val sizes = ex.groupBy("sid").agg(count(lit(1)).as("n_sh"))
-    val a = ex.select(col("sid").as("i"), col("sk"))
-    val b = ex.select(col("sid").as("j"), col("sk"))
-    a.join(b, a("sk") === b("sk") && col("i") < col("j"))
-      .groupBy(col("i"), col("j"))
-      .agg(count(lit(1)).as("inter"))
-      // plain joins, no broadcast hint: sizes is O(|corpus|) rows, which must
-      // never be forced driver-side; the pair side is tiny, so AQE broadcasts
-      // whichever side actually fits at runtime
-      .join(sizes.select(col("sid").as("i"), col("n_sh").as("na")), "i")
-      .join(sizes.select(col("sid").as("j"), col("n_sh").as("nb")), "j")
-      .withColumn("jaccard", col("inter") / (col("na") + col("nb") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("i", "j", "jaccard")
+    val postings = ngramPostings(docs, idCol, textCol, k)
+    ngramJaccardPairsFromPostings(postings, ngramPostingSizes(postings),
+      threshold)
   }
 
   /** Incremental dedup: exact Jaccard pairs BETWEEN two corpora (indexed
@@ -102,8 +81,9 @@ object Dedup {
   def crossCorpusJaccardPairs(corpus: DataFrame, incoming: DataFrame,
                               idCol: String, textCol: String,
                               k: Int, threshold: Double): DataFrame = {
-    // same narrow-postings discipline as ngramJaccardPairs: only (sid, sk)
-    // rides the big shuffle; set sizes rejoin onto the counted pair set
+    // same narrow-postings discipline as ngramJaccardPairsFromPostings:
+    // only (sid, sk) rides the big shuffle; set sizes rejoin onto the
+    // counted pair set
     def postings(df: DataFrame, as: String) =
       shingleSets(df, idCol, textCol, k)
         .select(col("sid").as(as), explode(col("sh")).as("s"))
@@ -158,9 +138,11 @@ object Dedup {
     * rebuild runs in production: the label table is recomputed from the
     * index already on storage — the corpus text is never re-read, so a
     * rebuild costs one index self-join, not a corpus re-shingle. Pass
-    * `postings` MATERIALIZED (persisted parquet or localCheckpoint): the
-    * self-join reads it twice, and a lazy frame would shingle twice —
-    * exactly the cost this entry point exists to avoid.
+    * `postings` MATERIALIZED (persisted parquet or localCheckpoint) when
+    * the corpus is already indexed: a lazy frame shingles once for the
+    * self-join and again for `sizes` — the cost this entry point avoids.
+    * The postings carry ONLY (i, sk) — 16 bytes/row through the self-join
+    * shuffle; set sizes rejoin onto the intersection-counted pair set.
     */
   def ngramJaccardPairsFromPostings(postings: DataFrame, sizes: DataFrame,
       threshold: Double): DataFrame = {
@@ -169,8 +151,9 @@ object Dedup {
     a.join(b, a("sk") === b("sk") && col("i") < col("j"))
       .groupBy(col("i"), col("j"))
       .agg(count(lit(1)).as("inter"))
-      // plain joins, no broadcast hint — the ngramJaccardPairs rationale:
-      // sizes is O(|corpus|), AQE broadcasts whichever side actually fits
+      // plain joins, no broadcast hint: sizes is O(|corpus|) rows, which
+      // must never be forced driver-side; the pair side is tiny, so AQE
+      // broadcasts whichever side actually fits at runtime
       .join(sizes.select(col("i"), col("na")), "i")
       .join(sizes.select(col("i").as("j"), col("na").as("nb")), "j")
       .withColumn("jaccard",
@@ -288,8 +271,9 @@ object Dedup {
       .filter(!col("own") || col("i") < col("j"))
       .groupBy(col("i"), col("j"))
       .agg(count(lit(1)).as("inter"))
-      // plain joins, no broadcast hint — the ngramJaccardPairs rationale:
-      // sizes is O(|corpus|), AQE broadcasts whichever side actually fits.
+      // plain joins, no broadcast hint — the ngramJaccardPairsFromPostings
+      // rationale: sizes is O(|corpus|), AQE broadcasts whichever side
+      // actually fits.
       // j is always a batch doc, so nb needs only the batch's sizes.
       .join(sizes.select("i", "na").unionByName(bs), "i")
       .join(bs.select(col("i").as("j"), col("na").as("nb")), "j")

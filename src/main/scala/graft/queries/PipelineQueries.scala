@@ -2294,9 +2294,8 @@ object PipelineQueries {
               // write — a crash between the two then re-runs the whole
               // init (heal-on-redelivery, the GenStore discipline) instead
               // of reporting initialized with the census base missing
-              censusOf(init).write.mode("overwrite")
-                .parquet(censusStore.basePath(-1))
-              init.write.mode("overwrite").parquet(scoredStore.basePath(-1))
+              censusStore.writeBase(censusOf(init), -1)
+              scoredStore.writeBase(init, -1)
               graft.util.CheckpointGen.release(s.sparkContext,
                 graft.util.CheckpointGen.pinnedIds(init))
             })
@@ -2325,10 +2324,8 @@ object PipelineQueries {
                   // and land disjoint dirs — overlapped too
                   val sb = scoredOf(batch).pin()
                   graft.util.Par.run(
-                    () => sb.write.mode("overwrite")
-                      .parquet(scoredStore.deltaPath(epoch)),
-                    () => censusOf(sb).write.mode("overwrite")
-                      .parquet(censusStore.deltaPath(epoch)))
+                    () => scoredStore.writeDelta(sb, epoch),
+                    () => censusStore.writeDelta(censusOf(sb), epoch))
                   graft.util.CheckpointGen.release(s.sparkContext,
                     graft.util.CheckpointGen.pinnedIds(sb))
                   // census fold on the shared seam (fold-lag rule: cover
@@ -2339,10 +2336,9 @@ object PipelineQueries {
                   val g = censusStore.latestCompleteBase()
                   if (g < foldPoint &&
                       censusStore.completeDeltaEpochs(g, epoch).size > 1) {
-                    censusStore.unionView(s, epoch)
-                      .groupBy("source", "q_micro").agg(sum("c").as("c"))
-                      .write.mode("overwrite")
-                      .parquet(censusStore.basePath(foldPoint))
+                    censusStore.writeBase(censusStore.unionView(s, epoch)
+                      .groupBy("source", "q_micro").agg(sum("c").as("c")),
+                      foldPoint)
                     censusStore.gc(); ()
                   }
                 })
@@ -2482,10 +2478,9 @@ object PipelineQueries {
                       () => bucketedPairs(pairs, 64).repartition(col("pb"))
                         .write.mode("overwrite").partitionBy("pb")
                         .parquet(pairStore.basePath(-1)),
-                      () => Graph.coreness(pairs
-                          .select(col("i").as("src"), col("j").as("dst")))
-                        .write.mode("overwrite")
-                        .parquet(coreStore.basePath(-1))))
+                      () => coreStore.writeBase(Graph.coreness(pairs
+                          .select(col("i").as("src"), col("j").as("dst"))),
+                        -1)))
                 })))
           // latest-epoch-wins per id — the shared GenStore merge (one
           // implementation, r18 review); no probe hint needed: core
@@ -2556,10 +2551,9 @@ object PipelineQueries {
                   () => bucketedPairs(pairs.select("i", "j"), 64)
                     .repartition(col("pb")).write.mode("overwrite")
                     .partitionBy("pb").parquet(pairStore.deltaPath(epoch)),
-                  () => Graph.coreness(affEdges
-                      .select(col("i").as("src"), col("j").as("dst")))
-                    .write.mode("overwrite")
-                    .parquet(coreStore.deltaPath(epoch))))
+                  () => coreStore.writeDelta(Graph.coreness(affEdges
+                      .select(col("i").as("src"), col("j").as("dst"))),
+                    epoch)))
               graft.util.CheckpointGen.release(s.sparkContext,
                 graft.util.CheckpointGen.pinnedIds(affected))
               }
@@ -2577,8 +2571,7 @@ object PipelineQueries {
               val cg = coreStore.latestCompleteBase()
               if (cg < foldPoint &&
                   coreStore.completeDeltaEpochs(cg, epoch).size > 1) {
-                coreView(epoch).write.mode("overwrite")
-                  .parquet(coreStore.basePath(foldPoint))
+                coreStore.writeBase(coreView(epoch), foldPoint)
                 coreStore.gc(); ()
               }
             }
@@ -2880,9 +2873,8 @@ object PipelineQueries {
               // census base FIRST (the q263 heal-on-redelivery ordering:
               // the guard keys on the docs base's _SUCCESS, so the marker
               // it checks must be the LAST write)
-              censusOf(init).write.mode("overwrite")
-                .parquet(censusStore.basePath(-1))
-              init.write.mode("overwrite").parquet(docsStore.basePath(-1))
+              censusStore.writeBase(censusOf(init), -1)
+              docsStore.writeBase(init, -1)
               graft.util.CheckpointGen.release(s.sparkContext,
                 graft.util.CheckpointGen.pinnedIds(init))
             })
@@ -2908,10 +2900,8 @@ object PipelineQueries {
                   val b = batch.select("doc_id", "source", "text")
                     .pin()
                   graft.util.Par.run(
-                    () => b.write.mode("overwrite")
-                      .parquet(docsStore.deltaPath(epoch)),
-                    () => censusOf(b).write.mode("overwrite")
-                      .parquet(censusStore.deltaPath(epoch)))
+                    () => docsStore.writeDelta(b, epoch),
+                    () => censusStore.writeDelta(censusOf(b), epoch))
                   graft.util.CheckpointGen.release(s.sparkContext,
                     graft.util.CheckpointGen.pinnedIds(b))
                   // census fold (fold-lag rule: cover <= epoch-1 only;
@@ -2920,10 +2910,9 @@ object PipelineQueries {
                   val g = censusStore.latestCompleteBase()
                   if (g < foldPoint &&
                       censusStore.completeDeltaEpochs(g, epoch).size > 1) {
-                    censusStore.unionView(s, epoch)
-                      .groupBy("source", "q_micro").agg(sum("c").as("c"))
-                      .write.mode("overwrite")
-                      .parquet(censusStore.basePath(foldPoint))
+                    censusStore.writeBase(censusStore.unionView(s, epoch)
+                      .groupBy("source", "q_micro").agg(sum("c").as("c")),
+                      foldPoint)
                     censusStore.gc(); ()
                   }
                 })

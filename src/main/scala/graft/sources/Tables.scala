@@ -32,10 +32,14 @@ object Tables {
     * long). Adapt to whichever the file carries: nanos are read as long and
     * truncated to microseconds — exactly what DuckDB does when it casts
     * ns → its native us timestamps, so oracle comparisons stay bit-identical;
-    * native us timestamps pass through untouched.
+    * native us timestamps pass through untouched. The legacy
+    * `nanosAsLong` flag the nanos scan needs is set on the session only
+    * when the file's footer declares `ts` TIMESTAMP(NANOS); a micros file
+    * leaves the session conf as it was.
     */
   def events(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (tsIsNanos(s, path(dir, "events")))
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = s.read.parquet(path(dir, "events"))
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -50,5 +54,35 @@ object Tables {
         df.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
+  }
+
+  /** Whether the `ts` column of the parquet data at `p` (a file or a
+    * directory of part files) is TIMESTAMP(NANOS), read from the first data
+    * file's footer: schema inference rejects such a file unless the legacy
+    * flag is already set.
+    */
+  private def tsIsNanos(s: SparkSession, p: String): Boolean = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit,
+      TimestampLogicalTypeAnnotation}
+    val conf = s.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(p)
+    val files = root.getFileSystem(conf).listFiles(root, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .find(f => !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .exists { f =>
+        val schema = scala.util.Using.resource(
+          ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf)))(
+          _.getFooter.getFileMetaData.getSchema)
+        Option.when(schema.containsField("ts"))(schema
+            .getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation)
+          .exists {
+            case t: TimestampLogicalTypeAnnotation =>
+              t.getUnit == TimeUnit.NANOS
+            case _ => false
+          }
+      }
   }
 }

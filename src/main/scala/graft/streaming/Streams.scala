@@ -586,6 +586,10 @@ object Streams {
   //   gens/posting_base/g=F  — folded postings (bucket-partitioned in
   //                            nBuckets mode); gens/postings/epoch=E deltas
   //   gens/size_base/g=F     — folded posting sizes; gens/sizes/epoch=E
+  // Files per generation follow its bytes (GenStore.writeBase /
+  // writeDelta: max(1, ceil(bytes / maxPartitionBytes))): a delta-sized
+  // epoch write is one file, a fold as many as its bytes need; bucketed
+  // posting generations hold one file per bucket dir.
   // Serving is MERGE-ON-READ: a view = latest complete base ∪ the deltas
   // past its fold point (labels latest-epoch-wins per id — exactly the
   // sequential `applyCcLabelUpdates` fold, since the final label of an id
@@ -614,15 +618,16 @@ object Streams {
   // it read on the first attempt. That rule is also what makes GC safe
   // mid-stream: only state no future (re-)delivery can read is deleted.
 
-  /** Write a posting generation: flat when nBuckets = 0, hive-bucketed by
-    * pmod(sk, nBuckets) otherwise — the win-regime layout
+  /** Write a posting generation: flat and sized by its bytes
+    * ([[graft.util.GenStore.fileCount]]) when nBuckets = 0, hive-bucketed
+    * by pmod(sk, nBuckets) otherwise — the win-regime layout
     * (SCALING.md r15: the pruned probe beats the compact scan 16× once
     * the state outgrows a single scan), giving the maintenance step
     * partition pruning on the batch's bucket set in every generation.
     */
   private def writePostingGen(postings: DataFrame, dir: String,
       nBuckets: Int): Unit =
-    if (nBuckets <= 0) postings.write.mode("overwrite").parquet(dir)
+    if (nBuckets <= 0) graft.util.GenStore.writeSized(postings, dir)
     else postings
       .withColumn("bucket",
         graft.ext.Dedup.postingBucket(col("sk"), nBuckets))
@@ -678,7 +683,7 @@ object Streams {
       onInitPairs: Option[DataFrame => Unit] = None): Unit = {
     val s = corpus.sparkSession
     if (java.nio.file.Files.exists(java.nio.file.Paths
-        .get(s"$stateRoot/gens/label_base/g=-1/_SUCCESS"))) return
+        .get(ccLabelStore(stateRoot).basePath(-1), "_SUCCESS"))) return
     val sc = s.sparkContext
     val postings = DevTiming("step", "init postings ckpt")(graft.ext.Dedup
       .ngramPostings(corpus, "doc_id", "text", k).pin())
@@ -687,17 +692,15 @@ object Streams {
     // disjoint dirs — overlapped (guide §2.6) so the size aggregate's
     // tasks back-fill the posting write's task tail; the label base (the
     // init guard) still commits strictly last, below
+    val post = ccPostingStore(stateRoot)
+    val siz = ccSizeStore(stateRoot)
+    val lab = ccLabelStore(stateRoot)
     DevTiming("step", "init posting+size base writes (overlapped)")(
       graft.util.Par.run(
-        () => writePostingGen(postings,
-          s"$stateRoot/gens/posting_base/g=-1", nBuckets),
-        () => graft.ext.Dedup.ngramPostingSizes(postings)
-          .write.mode("overwrite")
-          .parquet(s"$stateRoot/gens/size_base/g=-1")))
+        () => writePostingGen(postings, post.basePath(-1), nBuckets),
+        () => siz.writeBase(graft.ext.Dedup.ngramPostingSizes(postings), -1)))
     graft.util.CheckpointGen.release(sc, pins)
-    val post = ccPostingStore(stateRoot)
     val p = post.read(s, post.basePath(-1)).select("i", "sk")
-    val siz = ccSizeStore(stateRoot)
     val z = siz.read(s, siz.basePath(-1))
     val pairsLazy = graft.ext.Dedup
       .ngramJaccardPairsFromPostings(p, z, threshold)
@@ -705,9 +708,7 @@ object Streams {
       case None =>
         // the lazy pair join materializes once, inside CC's first round
         DevTiming("step", "init pairs+CC+label_base write")(
-          graft.ext.Dedup.connectedComponents(pairsLazy)
-            .write.mode("overwrite")
-            .parquet(s"$stateRoot/gens/label_base/g=-1"))
+          lab.writeBase(graft.ext.Dedup.connectedComponents(pairsLazy), -1))
       case Some(hook) =>
         // composed init: checkpoint the pair set ONCE; the hook and CC
         // both read the materialized frame (label base still last)
@@ -715,9 +716,7 @@ object Streams {
           pairsLazy.select("i", "j").pin())
         DevTiming("step", "init onInitPairs hook")(hook(pairs))
         DevTiming("step", "init CC+label_base write")(
-          graft.ext.Dedup.connectedComponents(pairs)
-            .write.mode("overwrite")
-            .parquet(s"$stateRoot/gens/label_base/g=-1"))
+          lab.writeBase(graft.ext.Dedup.connectedComponents(pairs), -1))
         graft.util.CheckpointGen.release(sc,
           graft.util.CheckpointGen.pinnedIds(pairs))
     }
@@ -811,24 +810,18 @@ object Streams {
     val labDue = unfolded(lab).exists(es => es.size > maxLabelDeltas ||
       es.map(e => lab.deltaRows(s, e)).sum > maxLabelDeltaRows)
     if (labDue) {
-      ccStoreLabelsView(s, stateRoot, epoch).write.mode("overwrite")
-        .parquet(lab.basePath(foldPoint))
+      lab.writeBase(ccStoreLabelsView(s, stateRoot, epoch), foldPoint)
       folded += "labels"
     }
     val post = ccPostingStore(stateRoot)
     if (unfolded(post).exists(_.size > maxPostingGens)) {
-      val v = ccStorePostingsView(s, stateRoot, epoch)
-      if (nBuckets <= 0) v.write.mode("overwrite")
-        .parquet(post.basePath(foldPoint))
-      else v.repartition(col("bucket")).write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(post.basePath(foldPoint))
+      writePostingGen(ccStorePostingsView(s, stateRoot, epoch),
+        post.basePath(foldPoint), nBuckets)
       folded += "postings"
     }
     val siz = ccSizeStore(stateRoot)
     if (unfolded(siz).exists(_.size > maxPostingGens)) {
-      ccStoreSizesView(s, stateRoot, epoch).write.mode("overwrite")
-        .parquet(siz.basePath(foldPoint))
+      siz.writeBase(ccStoreSizesView(s, stateRoot, epoch), foldPoint)
       folded += "sizes"
     }
     folded.toSeq
@@ -908,11 +901,10 @@ object Streams {
     // commit; a crash in between leaves a complete delta whose readers
     // heal by counting once (GenStore.deltaRows).
     val updObs = org.apache.spark.sql.Observation(s"cc_upd_rows_$epoch")
+    val lab = ccLabelStore(stateRoot)
     DevTiming("step", s"e$epoch update delta write")(
-      updates.observe(updObs, count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$stateRoot/updates/batch=$epoch"))
-    ccLabelStore(stateRoot).writeDeltaRowsSidecar(epoch,
-      updObs.get("n").asInstanceOf[Long])
+      lab.writeDelta(updates.observe(updObs, count(lit(1)).as("n")), epoch))
+    lab.writeDeltaRowsSidecar(epoch, updObs.get("n").asInstanceOf[Long])
     onLabelWrite((System.nanoTime() - labelWriteT0) / 1e9)
     // composed-loop seam: the pair delta stays pinned through the hook
     // (updates' lineage reaches the same pins, so both release together
@@ -936,10 +928,9 @@ object Streams {
     DevTiming("step", s"e$epoch posting+size delta writes (overlapped)")(
       graft.util.Par.run(
         () => writePostingGen(bp,
-          s"$stateRoot/gens/postings/epoch=$epoch", nBuckets),
-        () => Dedup.ngramSetSizes(b, "doc_id", "text", k)
-          .write.mode("overwrite")
-          .parquet(s"$stateRoot/gens/sizes/epoch=$epoch")))
+          ccPostingStore(stateRoot).deltaPath(epoch), nBuckets),
+        () => ccSizeStore(stateRoot)
+          .writeDelta(Dedup.ngramSetSizes(b, "doc_id", "text", k), epoch)))
     CheckpointGen.release(sc, bPins ++ bpPins)
     val folded = DevTiming("step", s"e$epoch fold")(
       ccStoreFoldIfNeeded(s, stateRoot, epoch, nBuckets,

@@ -46,6 +46,16 @@ import org.apache.spark.sql.types.StructType
   * directory, two per view resolution (base and delta dir). Partition
   * columns (the delta epoch, a bucketed layout's `bucket`) are still
   * discovered from the directory names and pruned at the scan.
+  *
+  * Writes: a flat generation lands through [[writeBase]] / [[writeDelta]]
+  * (idempotent overwrites), sized by its bytes —
+  * `nFiles = max(1, ceil(B / spark.sql.files.maxPartitionBytes))`
+  * ([[GenStore.fileCount]]), the bytes/target law of
+  * [[graft.ext.Similarity.compactIndex]] applied at write time. A
+  * delta-sized epoch write then lands as one file instead of one per
+  * inherited partition, and every later view, probe and fold opens that
+  * many fewer files. Bucket-partitioned layouts (`partitionBy` on a bucket
+  * column) keep their own repartition.
   */
 final case class GenStore(baseDir: String, deltaDir: String,
     basePrefix: String = "g=", deltaPrefix: String = "epoch=",
@@ -75,6 +85,14 @@ final case class GenStore(baseDir: String, deltaDir: String,
 
   /** A scan of `path` under the declared [[schema]], else inferred. */
   def read(s: SparkSession, path: String): DataFrame = reader(s).parquet(path)
+
+  /** Write `df` as base generation `g` (overwrite; _SUCCESS-committed). */
+  def writeBase(df: DataFrame, g: Long): Unit =
+    GenStore.writeSized(df, basePath(g))
+
+  /** Write `df` as the delta of epoch `e` (overwrite; _SUCCESS-committed). */
+  def writeDelta(df: DataFrame, e: Long): Unit =
+    GenStore.writeSized(df, deltaPath(e))
 
   def listBases(requireSuccess: Boolean): Seq[Long] =
     listDirs(baseDir, basePrefix, requireSuccess)
@@ -236,4 +254,28 @@ final case class GenStore(baseDir: String, deltaDir: String,
     }
     removed
   }
+}
+
+object GenStore {
+
+  /** Data files for a write of `df`: `max(1, ceil(B / maxPartitionBytes))`,
+    * where B bounds the bytes written from above — the larger of the
+    * optimized plan's `sizeInBytes` and the bytes the block managers hold
+    * for the frame's pinned RDDs. The pinned term is needed: Catalyst sizes
+    * an `explode` as its child, so a pinned posting frame's plan estimate
+    * is a fraction of its real size. Driver-side, no Spark job.
+    */
+  def fileCount(df: DataFrame): Int = {
+    val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    val plan = df.queryExecution.optimizedPlan
+    val bytes = plan.stats.sizeInBytes.max(CheckpointGen.pinnedBytes(plan))
+    ((bytes + target - 1) / target).max(1).min(Int.MaxValue).toInt
+  }
+
+  /** Overwrite `path` with `df` in [[fileCount]] files. `coalesce` adds no
+    * shuffle and never raises the partition count: a large frame keeps its
+    * layout, a delta-sized one lands as one file.
+    */
+  private[graft] def writeSized(df: DataFrame, path: String): Unit =
+    df.coalesce(fileCount(df)).write.mode("overwrite").parquet(path)
 }

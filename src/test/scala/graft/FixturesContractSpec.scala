@@ -129,6 +129,52 @@ class FixturesContractSpec extends SparkSpec
     assert(got(2L) == 1704067201999999L, s"ns->us truncation drifted: $got")
   }
 
+  test("Tables.events on the micros fixture leaves the session conf " +
+      "unchanged") {
+    val before = spark.conf.getAll
+    assert(graft.sources.Tables.events(spark, dir).schema("ts").dataType ==
+      TimestampType)
+    assert(spark.conf.getAll == before,
+      "loading a micros events file changed the session conf")
+  }
+
+  test("a real TIMESTAMP(NANOS) events file is detected from its footer " +
+      "and reads as the truncated micros") {
+    import org.apache.spark.sql.functions._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ns_footer")
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      """message events { required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,true)); required int64 user_id;
+        |  required binary event_type (STRING); required double value;
+        |  required binary props (STRING); }""".stripMargin)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$tmp/events.parquet"))
+      .withType(schema).build()
+    val rows = new org.apache.parquet.example.data.simple
+      .SimpleGroupFactory(schema)
+    try Seq(1L -> 1704067200123456789L, 2L -> 1704067201999999999L)
+      .foreach { case (id, ns) =>
+        w.write(rows.newGroup().append("event_id", id).append("ts", ns)
+          .append("user_id", 7L).append("event_type", "view")
+          .append("value", 1.5).append("props", "{}"))
+      }
+    finally w.close()
+    val prior = spark.conf.getOption(NanosAsLong)
+    spark.conf.unset(NanosAsLong)
+    try {
+      val got = graft.sources.Tables.events(spark, tmp.toString)
+        .select(col("event_id"), unix_micros(col("ts")).as("us"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(spark.conf.getOption(NanosAsLong).contains("true"),
+        "the nanos file did not set the flag its scan needs")
+      assert(got == Map(1L -> 1704067200123456L, 2L -> 1704067201999999L),
+        s"ns->us truncation drifted: $got")
+    } finally {
+      prior.fold(spark.conf.unset(NanosAsLong))(spark.conf.set(NanosAsLong, _))
+      graft.util.Dirs.rmTree(tmp.toString)
+    }
+  }
+
   // registered last, so it runs after every read above
   test("the suite leaves spark.sql.legacy.parquet.nanosAsLong as it " +
       "found it") {

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.functions.{broadcast, col, explode, lit,
+  sequence, sum, xxhash64}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.util.{Dirs, GenStore}
@@ -12,6 +13,11 @@ import graft.util.{Dirs, GenStore}
   * deltas, a torn delta, a fold point that retires deltas, a store with no
   * declared schema, and the hinted and unhinted probes. Round16Spec runs
   * the same comparison over whole `ccStoreStep` streams.
+  *
+  * The write path's file-count rule ([[GenStore.fileCount]]): a tiny
+  * delta lands as one file, a pinned exploded frame whose plan estimate
+  * undercounts it still lands as at least one file per target bytes, and
+  * choosing the count launches no job.
   */
 class GenStoreMergeSpec extends SparkSpec {
   import spark.implicits._
@@ -112,6 +118,77 @@ class GenStoreMergeSpec extends SparkSpec {
         latestWinsByWindow(store, Long.MaxValue, "id"))
       assert(mergeJobs <= windowJobs, s"resolving the merge launched " +
         s"$mergeJobs jobs, the ranking merge $windowJobs")
+    } finally Dirs.rmTree(root)
+  }
+
+  test("writeDelta lands a tiny delta as exactly one data file, whatever " +
+      "partitioning it inherited") {
+    val root = tempRoot("tiny")
+    try {
+      val store = GenStore(s"$root/base", s"$root/upd", "g=", "batch=",
+        Some(LabelSchema))
+      val delta = (0L until 100L).map(i => (i, i % 7)).toDF("id", "label")
+        .repartition(16)
+      store.writeDelta(delta, 0)
+      assert(dataFiles(store.deltaPath(0))._1 == 1)
+      assert(sortedRows(store.read(spark, store.deltaPath(0))) ==
+        sortedRows(delta))
+    } finally Dirs.rmTree(root)
+  }
+
+  test("writeBase sizes a pinned exploded frame by its stored bytes: at " +
+      "least one file per maxPartitionBytes of output, where the plan's " +
+      "estimate alone would give one file") {
+    val root = tempRoot("exploded")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    val target = 256L * 1024
+    spark.conf.set(key, target.toString)
+    try {
+      // 200 ids × 500 hashed keys: Catalyst sizes the explode as its
+      // 200-row child, the output is ~1.6 MB of incompressible longs
+      val postings = spark.range(0, 200, 1, 16)
+        .select(col("id").as("i"),
+          explode(sequence(lit(0L), lit(499L))).as("k"))
+        .select(col("i"), xxhash64(col("i"), col("k")).as("sk"))
+        .localCheckpoint(true)
+      val ids = graft.util.CheckpointGen.pinnedIds(postings)
+      val estimate = postings.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(estimate < target, s"the plan estimate $estimate no longer " +
+        "undercounts the frame; the spec needs a larger one")
+      val store = GenStore(s"$root/base", s"$root/upd")
+      store.writeBase(postings, -1)
+      val (files, bytes) = dataFiles(store.basePath(-1))
+      assert(bytes > 2 * target, s"only $bytes bytes written")
+      assert(files >= (bytes + target - 1) / target, s"$bytes bytes " +
+        s"landed in $files files at a $target-byte target")
+      assert(files <= 16, "coalesce raised the partition count")
+      val back = store.read(spark, store.basePath(-1))
+      assert(back.count() == postings.count() &&
+        back.exceptAll(postings).isEmpty)
+      graft.util.CheckpointGen.release(spark.sparkContext, ids)
+    } finally {
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      Dirs.rmTree(root)
+    }
+  }
+
+  test("choosing the file count launches no job: fileCount of a " +
+      "shuffle-bearing frame runs none, and a sized write launches as " +
+      "many jobs as an unsized one") {
+    val root = tempRoot("jobs")
+    try {
+      val agg = (0L until 1000L).map(i => (i % 37, i)).toDF("id", "label")
+        .groupBy("id").agg(sum("label").as("label"))
+      val (n, countJobs) = withJobCount(GenStore.fileCount(agg))
+      assert(n == 1 && countJobs == 0,
+        s"fileCount gave $n after launching $countJobs jobs")
+      val store = GenStore(s"$root/base", s"$root/upd")
+      val (_, sizedJobs) = withJobCount(store.writeDelta(agg, 0))
+      val (_, plainJobs) = withJobCount(
+        agg.write.mode("overwrite").parquet(s"$root/plain"))
+      assert(sizedJobs == plainJobs, s"a sized write launched $sizedJobs " +
+        s"jobs, an unsized one $plainJobs")
     } finally Dirs.rmTree(root)
   }
 }

@@ -65,6 +65,34 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("jaccard pairs leave no cache entry behind and equal the pairwise " +
+      "set-intersection reference") {
+    val docGen = Gen.listOfN(6, Gen.listOfN(10, Gen.oneOf("p", "q", "r", "s", "t")))
+    val sc = spark.sparkContext
+    samples(docGen, 5).foreach { docs =>
+      val df = docs.zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
+        .toDF("doc_id", "text")
+      // held: the registry keeps entries by weak reference (see the
+      // guardedBatch property below)
+      val held = sc.getPersistentRDDs
+      val got = Dedup.ngramJaccardPairs(df, "doc_id", "text", 3, 0.2)
+        .as[(Long, Long, Double)].collect().sorted.toSeq
+      assert(sc.getPersistentRDDs.keySet == held.keySet,
+        "a call left a cache entry behind")
+      java.lang.ref.Reference.reachabilityFence(held)
+      val sets = Dedup.shingleSets(df, "doc_id", "text", 3)
+      val want = sets.as("a").join(sets.as("b"), col("a.sid") < col("b.sid"))
+        .select(col("a.sid"), col("b.sid"),
+          size(array_intersect(col("a.sh"), col("b.sh"))).as("inter"),
+          col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
+        .filter(col("inter") > 0)
+        .select(col("a.sid"), col("b.sid"),
+          col("inter") / (col("na") + col("nb") - col("inter")))
+        .as[(Long, Long, Double)].collect().filter(_._3 >= 0.2).sorted.toSeq
+      assert(got == want)
+    }
+  }
+
   test("connected components match a union-find reference on random graphs") {
     val graphGen = for {
       n <- Gen.choose(2, 14)

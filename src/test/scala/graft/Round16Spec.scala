@@ -245,9 +245,20 @@ class Round16Spec extends SparkSpec {
         val sc = spark.sparkContext
         // the benchmark's fold policy: epochs 0 and 1 add deltas only,
         // epoch 2 folds and sweeps
-        def step(e: Long): Unit = graft.streaming.Streams.ccStoreStep(state,
-          3, 0.5, nBuckets, maxLabelDeltas = 1, maxPostingGens = 1,
-          gcAfterFold = true)(spark.read.parquet(s"$root/in/e$e.parquet"), e)
+        // each delta-sized write lands as one data file (the GenStore
+        // write path); bucketed posting generations keep their bucket dirs
+        def assertOneFile(dirs: String*): Unit = dirs.foreach { d =>
+          val n = dataFiles(s"$state/$d")._1
+          assert(n == 1, s"nBuckets=$nBuckets: $d holds $n data files")
+        }
+        def flatPostings(d: String) = if (nBuckets > 0) Nil else Seq(d)
+        def step(e: Long): Unit = {
+          graft.streaming.Streams.ccStoreStep(state,
+            3, 0.5, nBuckets, maxLabelDeltas = 1, maxPostingGens = 1,
+            gcAfterFold = true)(spark.read.parquet(s"$root/in/e$e.parquet"), e)
+          assertOneFile(Seq(s"updates/batch=$e", s"gens/sizes/epoch=$e") ++
+            flatPostings(s"gens/postings/epoch=$e"): _*)
+        }
         val before = sc.getPersistentRDDs.size
         step(0)
         val (_, stepJobs) = withJobCount(step(1))
@@ -257,6 +268,8 @@ class Round16Spec extends SparkSpec {
             s"${sc.getPersistentRDDs.size - before} cache entries behind")
         assert(java.nio.file.Files.exists(java.nio.file.Paths
           .get(s"$state/gens/label_base/g=1/_SUCCESS")), "no fold fired")
+        assertOneFile(Seq("gens/label_base/g=1", "gens/size_base/g=1") ++
+          flatPostings("gens/posting_base/g=1"): _*)
         val (views, viewJobs) = withJobCount(Seq(
           graft.streaming.Streams.ccStorePostingsView(spark, state, 3),
           graft.streaming.Streams.ccStoreSizesView(spark, state, 3),

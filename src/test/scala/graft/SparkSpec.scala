@@ -80,6 +80,18 @@ trait SparkSpec extends AnyFunSuite {
     }
   }
 
+  /** Parquet data files under `dir` (partition subdirectories included)
+    * and their total bytes.
+    */
+  def dataFiles(dir: String): (Long, Long) =
+    scala.util.Using.resource(java.nio.file.Files.walk(
+        java.nio.file.Paths.get(dir))) { w =>
+      import scala.jdk.CollectionConverters._
+      val fs = w.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+      (fs.size.toLong, fs.map(java.nio.file.Files.size(_)).sum)
+    }
+
   /** A frame's rows as sorted strings (column order kept). */
   def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
