@@ -1,6 +1,8 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 /** One datapoint value — the faithful encoding of the reference's dynamic
@@ -34,14 +36,15 @@ case class Reading(
 
 object Reading {
 
+  /** Derived once: `spark.implicits._` would derive it again on every call. */
+  private val encoder: Encoder[Reading] = Encoders.product[Reading]
+
   /** Map the `events` table into the Reading model: `event_type`/`user_id`
     * form the series key, `value` and `props` the datapoints (FIXTURES.md §B
     * declares this correspondence). Demonstrates dynamic-map encoding over a
     * columnar source without losing Catalyst pruning on the way in.
     */
-  def fromEvents(events: DataFrame): Dataset[Reading] = {
-    val spark = events.sparkSession
-    import spark.implicits._
+  def fromEvents(events: DataFrame): Dataset[Reading] =
     events.select(
       col("event_type").as("assetCode"),
       col("event_id").as("id"),
@@ -55,18 +58,19 @@ object Reading {
                                lit(null).cast("double").as("doubleV"),
                                lit(null).cast("string").as("stringV"))
       ).as("reading")
-    ).as[Reading]
-  }
+    ).as[Reading](encoder)
 
   /** Promote selected datapoints of the dynamic map to typed top-level
     * columns — the performance path (SURVEY.md §1.3): promoted columns are
     * transparent to Catalyst (pruning/pushdown), the map blob is not.
+    * One `withColumns` projection: a key that is already a column is
+    * replaced in place, new keys are appended in `numericKeys` order.
     */
   def promote(readings: DataFrame, numericKeys: Seq[String]): DataFrame =
-    numericKeys.foldLeft(readings) { (df, k) =>
-      df.withColumn(k, coalesce(col(s"reading.$k.doubleV"),
-                                col(s"reading.$k.longV").cast("double")))
-    }
+    readings.withColumns(ListMap(numericKeys.map { k =>
+      k -> coalesce(col(s"reading.$k.doubleV"),
+                    col(s"reading.$k.longV").cast("double"))
+    }: _*))
 
   /** Inverse of promote: fold typed numeric columns back into a variant map
     * (used to round-trip between the faithful and the fast representation).

@@ -40,6 +40,10 @@ object CheckpointGen {
     roots.foldLeft(Set.empty[Int])((s, r) => walk(r, s))
   }
 
+  /** Whether `rdd` or an RDD of its lineage is persisted. */
+  def isPinned(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+    persistedIn(rdd.sparkContext, Seq(rdd)).nonEmpty
+
   /** Bytes the block managers hold for the pinned RDDs that `plan` reads,
     * found from its RDD leaves, so neither planning nor a job runs (a
     * frame's `rdd` would execute an adaptive plan's exchanges). An RDD

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -259,16 +260,24 @@ final case class GenStore(baseDir: String, deltaDir: String,
 object GenStore {
 
   /** Data files for a write of `df`: `max(1, ceil(B / maxPartitionBytes))`,
-    * where B bounds the bytes written from above — the larger of the
-    * optimized plan's `sizeInBytes` and the bytes the block managers hold
-    * for the frame's pinned RDDs. The pinned term is needed: Catalyst sizes
-    * an `explode` as its child, so a pinned posting frame's plan estimate
-    * is a fraction of its real size. Driver-side, no Spark job.
+    * where B sizes the bytes written. When every leaf of the optimized
+    * plan is a pinned RDD, B is the bytes the block managers hold for
+    * them: there the plan's estimate is off either way — Catalyst sizes an
+    * `explode` as its child (a pinned posting frame's estimate is a
+    * fraction of its real size) and a join as the product of its children
+    * (a pinned join output keeps an estimate far above its stored bytes).
+    * Otherwise B is the larger of the plan's `sizeInBytes` and the pinned
+    * bytes. Driver-side, no Spark job.
     */
   def fileCount(df: DataFrame): Int = {
     val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
     val plan = df.queryExecution.optimizedPlan
-    val bytes = plan.stats.sizeInBytes.max(CheckpointGen.pinnedBytes(plan))
+    val pinned = CheckpointGen.pinnedBytes(plan)
+    val allPinned = pinned > 0 && plan.collectLeaves().forall {
+      case r: LogicalRDD => CheckpointGen.isPinned(r.rdd)
+      case _ => false
+    }
+    val bytes = if (allPinned) BigInt(pinned) else plan.stats.sizeInBytes.max(pinned)
     ((bytes + target - 1) / target).max(1).min(Int.MaxValue).toInt
   }
 

@@ -16,7 +16,8 @@ import graft.util.{Dirs, GenStore}
   *
   * The write path's file-count rule ([[GenStore.fileCount]]): a tiny
   * delta lands as one file, a pinned exploded frame whose plan estimate
-  * undercounts it still lands as at least one file per target bytes, and
+  * undercounts it still lands as at least one file per target bytes, a
+  * pinned join whose plan estimate overcounts it lands as one file, and
   * choosing the count launches no job.
   */
 class GenStoreMergeSpec extends SparkSpec {
@@ -171,6 +172,28 @@ class GenStoreMergeSpec extends SparkSpec {
       prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
       Dirs.rmTree(root)
     }
+  }
+
+  test("fileCount sizes a pinned join output by its stored bytes, not by " +
+      "the plan's product-of-children estimate") {
+    val root = tempRoot("pinned_join")
+    try {
+      def side(name: String) = spark.range(0, 4000, 1, 4)
+        .select(col("id").as("k"), (col("id") * 3).as(name))
+      val joined = side("v").join(side("w"), "k").localCheckpoint(true)
+      val ids = graft.util.CheckpointGen.pinnedIds(joined)
+      val target = spark.sessionState.conf.filesMaxPartitionBytes
+      val estimate = joined.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(estimate > 4 * target, s"the plan estimate $estimate no longer " +
+        "overcounts the join; the spec needs a larger one")
+      assert(GenStore.fileCount(joined) == 1)
+      val store = GenStore(s"$root/base", s"$root/upd")
+      store.writeBase(joined, -1)
+      assert(dataFiles(store.basePath(-1))._1 == 1)
+      assert(sortedRows(store.read(spark, store.basePath(-1))) ==
+        sortedRows(joined))
+      graft.util.CheckpointGen.release(spark.sparkContext, ids)
+    } finally Dirs.rmTree(root)
   }
 
   test("choosing the file count launches no job: fileCount of a " +

@@ -76,6 +76,22 @@ class ReadingModelSpec extends SparkSpec {
     assert(m("power").asDouble.contains(5.0) && m("count").asDouble.contains(10.0))
   }
 
+  test("promote over several keys equals one withColumn per key: a key " +
+      "that is already a column is replaced in place, columns and order kept") {
+    val df = spark.createDataset(sample).toDF().withColumn("count", lit(-1.0))
+    val keys = Seq("power", "count", "absent")
+    val fold = keys.foldLeft(df) { (d, k) =>
+      d.withColumn(k, coalesce(col(s"reading.$k.doubleV"),
+        col(s"reading.$k.longV").cast("double")))
+    }
+    val got = Reading.promote(df, keys)
+    assert(got.columns.toSeq == fold.columns.toSeq)
+    assert(got.columns.toSeq == df.columns.toSeq ++ Seq("power", "absent"))
+    assert(got.schema == fold.schema)
+    assert(got.collect().toSeq.sortBy(_.getAs[Long]("id")) ==
+      fold.collect().toSeq.sortBy(_.getAs[Long]("id")))
+  }
+
   test("fromEvents maps the events table into the Reading model") {
     val ev = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
     val rs = Reading.fromEvents(ev)

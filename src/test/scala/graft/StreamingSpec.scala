@@ -110,9 +110,9 @@ class StreamingSpec extends SparkSpec {
     }(batch)
     assert(out.columns.toSeq == Seq("k", "v")) // original, not the failed pipeline
     assert(out.count() == 2)
-    // a non-local input fails in count(), after cache() registered the
-    // attempt: the fallback must release that entry, since the caller
-    // only ever sees the original batch
+    // a non-local input fails in the guard's pass, after cache()
+    // registered the attempt: the fallback must release that entry, since
+    // the caller only ever sees the original batch
     val rangeBatch = spark.range(2).select(col("id").cast("double").as("v"))
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     var attempt: org.apache.spark.sql.DataFrame = null
@@ -131,6 +131,69 @@ class StreamingSpec extends SparkSpec {
     intercept[InterruptedException] {
       Streams.guardedBatch(_ => throw new InterruptedException("stop"))(batch)
     }
+  }
+
+  /** `f`'s result, the jobs it launched and the shuffle-map stages those
+    * jobs hold, skipped ones included: every stage of a job but its
+    * result stage.
+    */
+  private def withJobStages[T](f: => T): (T, Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        shuffleStages.addAndGet(e.stageInfos.size - 1); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    // withJobCount's closing marker is delivered after f's jobs, on the
+    // same listener queue, so this listener has seen them all by then
+    try {
+      val (out, jobs) = withJobCount(f)
+      (out, jobs, shuffleStages.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("guardedBatch checks a clean batch in one shuffle-free job that " +
+      "fills the cache, and a failure in the last partition passes the " +
+      "batch through leaving no cache entry, with AQE on and off") {
+    val boom = udf((d: Double) => {
+      if (d == 399.0) throw new IllegalStateException("runtime boom")
+      d * 2
+    })
+    val sc = spark.sparkContext
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try Seq("true", "false").foreach { on =>
+      spark.conf.set("spark.sql.adaptive.enabled", on)
+      def batch(n: Long) = spark.range(0, n, 1, 4)
+        .select(col("id"), col("id").cast("double").as("v"))
+      val pipeline = (df: org.apache.spark.sql.DataFrame) =>
+        df.withColumn("w", boom(col("v")))
+      val held = sc.getPersistentRDDs // strong refs: GC cannot shrink the set
+      val before = held.keySet
+      val (out, jobs, shuffles) = withJobStages(
+        Streams.guardedBatch(pipeline)(batch(200)))
+      assert(out.columns.toSeq == Seq("id", "v", "w"), s"AQE $on")
+      assert(jobs == 1 && shuffles == 0, s"AQE $on: the guard launched " +
+        s"$jobs jobs holding $shuffles shuffle stages")
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size == 1, s"AQE $on: ${added.size} new cache entries")
+      val info = sc.getRDDStorageInfo.find(i => added(i.id))
+      assert(info.exists(i => i.numCachedPartitions == i.numPartitions),
+        s"AQE $on: the guard left the cache partly filled: $info")
+      val (rows, readJobs) = withJobCount(out.collect())
+      assert(rows.length == 200 && readJobs == 1,
+        s"AQE $on: reading the guarded frame launched $readJobs jobs")
+      out.unpersist(blocking = true)
+      // row 399 sits in the last of the four partitions
+      val in = batch(400)
+      val passed = Streams.guardedBatch(pipeline)(in)
+      assert(passed.columns.toSeq == Seq("id", "v") &&
+        sortedRows(passed) == sortedRows(in), s"AQE $on: no passthrough")
+      assert(sc.getPersistentRDDs.keySet == before,
+        s"AQE $on: the failed attempt's cache entry survived")
+      java.lang.ref.Reference.reachabilityFence(held)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 
   test("O9 hot reconfigure: checkpointed state survives a config swap (vs reference losing globals)") {
