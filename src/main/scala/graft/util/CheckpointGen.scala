@@ -1,6 +1,8 @@
 package graft.util
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.LogicalRDD
@@ -27,39 +29,52 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object CheckpointGen {
 
-  def pinnedIds(df: DataFrame): Set[Int] =
-    persistedIn(df.sparkSession.sparkContext, Seq(df.rdd))
-
-  private def persistedIn(sc: SparkContext,
-      roots: Seq[org.apache.spark.rdd.RDD[_]]): Set[Int] = {
-    val persisted = sc.getPersistentRDDs
-    def walk(r: org.apache.spark.rdd.RDD[_], acc: Set[Int]): Set[Int] = {
-      val a = if (persisted.contains(r.id)) acc + r.id else acc
-      r.dependencies.foldLeft(a)((s, d) => walk(d.rdd, s))
-    }
-    roots.foldLeft(Set.empty[Int])((s, r) => walk(r, s))
+  def pinnedIds(df: DataFrame): Set[Int] = {
+    val persisted = df.sparkSession.sparkContext.getPersistentRDDs
+    lineage(df.rdd).map(_.id).filter(persisted.contains).toSet
   }
 
-  /** Whether `rdd` or an RDD of its lineage is persisted. */
-  def isPinned(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
-    persistedIn(rdd.sparkContext, Seq(rdd)).nonEmpty
+  private def lineage(r: RDD[_]): Seq[RDD[_]] =
+    r +: r.dependencies.flatMap(d => lineage(d.rdd))
 
-  /** Bytes the block managers hold for the pinned RDDs that `plan` reads,
-    * found from its RDD leaves, so neither planning nor a job runs (a
-    * frame's `rdd` would execute an adaptive plan's exchanges). An RDD
-    * whose storage status lists only some of its partitions is scaled up
-    * to all of them.
+  /** What the pinned RDDs that `plan` reads store: their `bytes`, and
+    * whether `every` leaf of `plan` is a `LogicalRDD` whose lineage holds
+    * one. A pinned RDD is either persisted (a local checkpoint or a
+    * cache), sized by the bytes the block managers hold for it and scaled
+    * up to all its partitions when its storage status lists only some, or
+    * a reliable checkpoint, sized by the lengths of its files. Found from
+    * the plan's RDD leaves and a listing of the checkpoint files, so
+    * neither planning nor a job runs (a frame's `rdd` would execute an
+    * adaptive plan's exchanges).
     */
-  def pinnedBytes(plan: LogicalPlan): Long = {
-    val rdds = plan.collect { case r: LogicalRDD => r.rdd }
-    if (rdds.isEmpty) 0L
-    else {
-      val sc = rdds.head.sparkContext
-      val ids = persistedIn(sc, rdds)
-      sc.getRDDStorageInfo.filter(i => ids(i.id) && i.numCachedPartitions > 0)
+  final case class Pinned(bytes: Long, every: Boolean)
+
+  def pinned(plan: LogicalPlan): Pinned = {
+    val rdds = plan.collectLeaves().map {
+      case r: LogicalRDD => Some(r.rdd)
+      case _ => None
+    }
+    rdds.flatten.headOption.fold(Pinned(0L, every = false)) { head =>
+      val sc = head.sparkContext
+      val persisted = sc.getPersistentRDDs
+      // per leaf: persisted RDD ids and reliable checkpoint dirs
+      val leaves = rdds.map(_.fold((Set.empty[Int], Set.empty[String])) { r =>
+        val l = lineage(r)
+        (l.map(_.id).filter(persisted.contains).toSet,
+          l.flatMap(_.getCheckpointFile).toSet)
+      })
+      val ids = leaves.flatMap(_._1).toSet
+      val cached = sc.getRDDStorageInfo
+        .filter(i => ids(i.id) && i.numCachedPartitions > 0)
         .map(i => (i.memSize + i.diskSize) * i.numPartitions /
           i.numCachedPartitions)
         .sum
+      val written = leaves.flatMap(_._2).distinct.map { dir =>
+        val p = new Path(dir)
+        p.getFileSystem(sc.hadoopConfiguration).getContentSummary(p).getLength
+      }.sum
+      Pinned(cached + written,
+        leaves.forall { case (i, files) => i.nonEmpty || files.nonEmpty })
     }
   }
 

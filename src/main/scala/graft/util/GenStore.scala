@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -261,23 +261,30 @@ object GenStore {
 
   /** Data files for a write of `df`: `max(1, ceil(B / maxPartitionBytes))`,
     * where B sizes the bytes written. When every leaf of the optimized
-    * plan is a pinned RDD, B is the bytes the block managers hold for
-    * them: there the plan's estimate is off either way — Catalyst sizes an
-    * `explode` as its child (a pinned posting frame's estimate is a
-    * fraction of its real size) and a join as the product of its children
-    * (a pinned join output keeps an estimate far above its stored bytes).
-    * Otherwise B is the larger of the plan's `sizeInBytes` and the pinned
-    * bytes. Driver-side, no Spark job.
+    * plan is a pinned RDD (a local or a reliable checkpoint,
+    * [[CheckpointGen.pinned]]) and only row-preserving or shrinking
+    * operators sit above them (projections, filters, aggregates, unions:
+    * no join and no generator), B is the bytes those pins store. There
+    * the plan's estimate is off either way: Catalyst sizes an `explode`
+    * as its child (a pinned posting frame's estimate is a fraction of its
+    * real size) and a join as the product of its children (a pinned join
+    * output keeps an estimate far above its stored bytes). Otherwise B is
+    * the larger of the plan's `sizeInBytes` and the pinned bytes: a join
+    * or explode over pinned inputs can outgrow them many times over, so
+    * their bytes do not size it alone. Pin such an output before writing
+    * it to size it by what it stores. Driver-side, no Spark job.
     */
   def fileCount(df: DataFrame): Int = {
     val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
     val plan = df.queryExecution.optimizedPlan
-    val pinned = CheckpointGen.pinnedBytes(plan)
-    val allPinned = pinned > 0 && plan.collectLeaves().forall {
-      case r: LogicalRDD => CheckpointGen.isPinned(r.rdd)
+    val pinned = CheckpointGen.pinned(plan)
+    val grows = plan.find {
+      case _: Join | _: Generate => true
       case _ => false
-    }
-    val bytes = if (allPinned) BigInt(pinned) else plan.stats.sizeInBytes.max(pinned)
+    }.isDefined
+    val bytes =
+      if (pinned.every && pinned.bytes > 0 && !grows) BigInt(pinned.bytes)
+      else plan.stats.sizeInBytes.max(pinned.bytes)
     ((bytes + target - 1) / target).max(1).min(Int.MaxValue).toInt
   }
 

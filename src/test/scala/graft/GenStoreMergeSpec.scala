@@ -17,8 +17,9 @@ import graft.util.{Dirs, GenStore}
   * The write path's file-count rule ([[GenStore.fileCount]]): a tiny
   * delta lands as one file, a pinned exploded frame whose plan estimate
   * undercounts it still lands as at least one file per target bytes, a
-  * pinned join whose plan estimate overcounts it lands as one file, and
-  * choosing the count launches no job.
+  * pinned join whose plan estimate overcounts it lands as one file, both
+  * for local and for reliable checkpoints, and choosing the count
+  * launches no job.
   */
 class GenStoreMergeSpec extends SparkSpec {
   import spark.implicits._
@@ -137,9 +138,26 @@ class GenStoreMergeSpec extends SparkSpec {
     } finally Dirs.rmTree(root)
   }
 
-  test("writeBase sizes a pinned exploded frame by its stored bytes: at " +
-      "least one file per maxPartitionBytes of output, where the plan's " +
-      "estimate alone would give one file") {
+  /** Pin `df` eagerly through [[graft.util.Pin]] in `mode` ("local" or
+    * "reliable", the latter against a fresh checkpoint dir); returns the
+    * pinned frame and a release of its storage.
+    */
+  private def pinIn(mode: String, df: DataFrame): (DataFrame, () => Unit) =
+    if (mode == "local") {
+      val p = df.localCheckpoint(true)
+      val ids = graft.util.CheckpointGen.pinnedIds(p)
+      (p, () => graft.util.CheckpointGen.release(spark.sparkContext, ids))
+    } else {
+      import graft.util.Pin._
+      val dir = tempRoot("ckpt")
+      spark.sparkContext.setCheckpointDir(dir)
+      spark.conf.set(graft.util.Pin.ModeConf, "reliable")
+      try (df.pin(), () => Dirs.rmTree(dir))
+      finally spark.conf.unset(graft.util.Pin.ModeConf)
+    }
+
+  /** A pinned exploded frame: at least one file per target bytes. */
+  private def explodedCase(mode: String): Unit = {
     val root = tempRoot("exploded")
     val key = "spark.sql.files.maxPartitionBytes"
     val prior = spark.conf.getOption(key)
@@ -148,52 +166,72 @@ class GenStoreMergeSpec extends SparkSpec {
     try {
       // 200 ids × 500 hashed keys: Catalyst sizes the explode as its
       // 200-row child, the output is ~1.6 MB of incompressible longs
-      val postings = spark.range(0, 200, 1, 16)
+      val (postings, release) = pinIn(mode, spark.range(0, 200, 1, 16)
         .select(col("id").as("i"),
           explode(sequence(lit(0L), lit(499L))).as("k"))
-        .select(col("i"), xxhash64(col("i"), col("k")).as("sk"))
-        .localCheckpoint(true)
-      val ids = graft.util.CheckpointGen.pinnedIds(postings)
+        .select(col("i"), xxhash64(col("i"), col("k")).as("sk")))
       val estimate = postings.queryExecution.optimizedPlan.stats.sizeInBytes
-      assert(estimate < target, s"the plan estimate $estimate no longer " +
-        "undercounts the frame; the spec needs a larger one")
+      assert(estimate < target, s"$mode: the plan estimate $estimate no " +
+        "longer undercounts the frame; the spec needs a larger one")
       val store = GenStore(s"$root/base", s"$root/upd")
       store.writeBase(postings, -1)
       val (files, bytes) = dataFiles(store.basePath(-1))
-      assert(bytes > 2 * target, s"only $bytes bytes written")
-      assert(files >= (bytes + target - 1) / target, s"$bytes bytes " +
+      assert(bytes > 2 * target, s"$mode: only $bytes bytes written")
+      assert(files >= (bytes + target - 1) / target, s"$mode: $bytes bytes " +
         s"landed in $files files at a $target-byte target")
-      assert(files <= 16, "coalesce raised the partition count")
+      assert(files <= 16, s"$mode: coalesce raised the partition count")
       val back = store.read(spark, store.basePath(-1))
       assert(back.count() == postings.count() &&
         back.exceptAll(postings).isEmpty)
-      graft.util.CheckpointGen.release(spark.sparkContext, ids)
+      release()
     } finally {
       prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
       Dirs.rmTree(root)
     }
   }
 
-  test("fileCount sizes a pinned join output by its stored bytes, not by " +
-      "the plan's product-of-children estimate") {
+  /** A pinned join output: one file, where its estimate gives many; a
+    * join over the pinned output keeps the estimate's count.
+    */
+  private def joinCase(mode: String): Unit = {
     val root = tempRoot("pinned_join")
     try {
       def side(name: String) = spark.range(0, 4000, 1, 4)
         .select(col("id").as("k"), (col("id") * 3).as(name))
-      val joined = side("v").join(side("w"), "k").localCheckpoint(true)
-      val ids = graft.util.CheckpointGen.pinnedIds(joined)
+      val (joined, release) = pinIn(mode, side("v").join(side("w"), "k"))
       val target = spark.sessionState.conf.filesMaxPartitionBytes
       val estimate = joined.queryExecution.optimizedPlan.stats.sizeInBytes
-      assert(estimate > 4 * target, s"the plan estimate $estimate no longer " +
-        "overcounts the join; the spec needs a larger one")
-      assert(GenStore.fileCount(joined) == 1)
+      assert(estimate > 4 * target, s"$mode: the plan estimate $estimate " +
+        "no longer overcounts the join; the spec needs a larger one")
+      assert(GenStore.fileCount(joined) == 1, mode)
+      val selfJoin = joined.as("a").join(joined.as("b"), "k")
+      assert(GenStore.fileCount(selfJoin) > 1, s"$mode: a join over pinned " +
+        "leaves was sized by their stored bytes alone")
       val store = GenStore(s"$root/base", s"$root/upd")
       store.writeBase(joined, -1)
-      assert(dataFiles(store.basePath(-1))._1 == 1)
+      assert(dataFiles(store.basePath(-1))._1 == 1, mode)
       assert(sortedRows(store.read(spark, store.basePath(-1))) ==
         sortedRows(joined))
-      graft.util.CheckpointGen.release(spark.sparkContext, ids)
+      release()
     } finally Dirs.rmTree(root)
+  }
+
+  test("writeBase sizes a pinned exploded frame by its stored bytes: at " +
+      "least one file per maxPartitionBytes of output, where the plan's " +
+      "estimate alone would give one file") {
+    explodedCase("local")
+  }
+
+  test("fileCount sizes a pinned join output by its stored bytes, not by " +
+      "the plan's product-of-children estimate") {
+    joinCase("local")
+  }
+
+  test("fileCount sizes reliable-checkpoint pins by their checkpoint " +
+      "files: a pinned exploded frame lands as one file per target bytes, " +
+      "a pinned join as one file") {
+    explodedCase("reliable")
+    joinCase("reliable")
   }
 
   test("choosing the file count launches no job: fileCount of a " +

@@ -1,15 +1,16 @@
 #!/usr/bin/env python3
 """Alternated parent/change pairs of one perfbench workload.
 
-    python3 tools/perf_pairs.py --parent <rev|dir> [--change <rev|dir>]
-        --workload <name> [--pairs 10] [--seed 1] [--seconds 20] [--trace 0]
+    python3 tools/perf_pairs.py --parent <rev|dir> --workload <name>
+        [--pairs 10] [--seed 1]
 
-Runs the unchanged perfbench/run.py of each side, one run at a time: pair i
-runs both sides on seed `--seed + i`, the parent first on even pairs and the
-change first on odd ones, so a drift of the host's speed falls on both sides
-alike. A git rev is exported with `git archive` into a directory under the
-system temp dir (kept, so a later call reuses its build); a directory is
-used as it is. `--change` defaults to this checkout's working tree.
+Runs the unchanged perfbench/run.py of each side, one untraced 20-second
+run at a time. The change is this checkout's working tree; the parent is a
+git rev, exported with `git archive` into a directory under the system temp
+dir (kept, so a later call reuses its build), or a directory used as it is.
+Pair i runs both sides on seed `--seed + i`, the parent first on even pairs
+and the change first on odd ones, so a drift of the host's speed falls on
+both sides alike.
 
 Prints, per metric, each side's median and quartiles, the change's median
 delta, and the pairs the change won by the metric's direction in
@@ -44,10 +45,9 @@ def checkout(ref):
     return d
 
 
-def run(d, args, seed):
-    p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", args.workload,
-                        "--seed", str(seed), "--seconds", str(args.seconds),
-                        "--trace", str(args.trace)],
+def run(d, workload, seed):
+    p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
+                        "--seed", str(seed), "--seconds", "20", "--trace", "0"],
                        cwd=d, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     lines = p.stdout.strip().splitlines()
     try:
@@ -69,22 +69,19 @@ def quartiles(xs):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--parent", required=True, help="git rev or directory")
-    ap.add_argument("--change", default=ROOT, help="git rev or directory (default: this tree)")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
-    ap.add_argument("--seconds", type=float, default=20)
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
     bench = json.load(open(os.path.join(ROOT, "BENCHMARK.json")))
-    better = {m["name"]: m["better"] for m in bench["end_to_end"] + bench["per_layer"]}
-    sides = {"parent": checkout(args.parent), "change": checkout(args.change)}
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    sides = {"parent": checkout(args.parent), "change": ROOT}
     runs = {"parent": [], "change": []}
     for i in range(args.pairs):
         seed = args.seed + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            r = run(sides[side], args, seed)
+            r = run(sides[side], args.workload, seed)
             runs[side].append(r)
             print("pair %d seed %d %-6s rc %d correct %s failed %s %s" % (
                 i, seed, side, r["rc"], r["correct"], r["failed"],
