@@ -27,14 +27,15 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // demo-depth tiering (r16 verdict #7): the kill/restart maintenance
-    // DEMONSTRATIONS run their single uninterrupted stream under the bench
-    // (same step/epochs/folds/labels — only the kill + restart leg is a
-    // correctness-run exercise); full depth stays in Verify/ScalaTest and
-    // is available here via GRAFT_BENCH_FULL_DEMOS=1. Stamped into the
-    // JSON (`demo_mode`) so no artifact can be misread across modes.
+    // DEMONSTRATIONS run their bench-depth builder (QueryDef.benchFn: one
+    // uninterrupted stream, same step/epochs/folds/labels — only the
+    // kill + restart leg is a correctness-run exercise); full depth stays
+    // in Verify/ScalaTest and is available here via
+    // GRAFT_BENCH_FULL_DEMOS=1. Stamped into the JSON (`demo_mode`) so no
+    // artifact can be misread across modes.
     val fullDemos = sys.env.get("GRAFT_BENCH_FULL_DEMOS").contains("1")
-    if (!fullDemos)
-      sys.props(graft.util.BenchMode.ReducedDemosProp) = "1"
+    def build(d: graft.queries.QueryDef) =
+      if (fullDemos) d.fn else d.benchFn.getOrElse(d.fn)
     val demoMode = if (fullDemos) "full" else "reduced"
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -234,7 +235,7 @@ object Bench {
     val results = allRun.zipWithIndex
       .map { case (d, qi) =>
         if (qi == midpoint && qi > 0) cal += calibrate()
-        val (name, fn) = (d.name, d.fn)
+        val (name, fn) = (d.name, build(d))
         // eval-class queries (QueryDef.evalOnly — recall/geometry
         // measurements, not pipelines) run min(3, reps) times, reported as
         // the MIN (the less-noisy estimator for back-to-back warm runs),
@@ -304,7 +305,7 @@ object Bench {
         // a fast fail would read as exoneration evidence for a suspect
         // query that never actually re-ran the workload (r15 ADVICE #3).
         // -1.0 is the same failure sentinel the headline medians use.
-        try { d.fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+        try { build(d)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
         catch { case _: Throwable => -1.0 }
       }
       (name.takeWhile(_ != '_'), rs)

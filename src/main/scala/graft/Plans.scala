@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * Mirrors Bench's session settings (same master/shuffle partitions) so the
   * dumped plan is the one the bench actually executes. Note: for the
   * streaming/maintenance demos the returned frame is the final read-back —
-  * invoking fn runs their epochs first, exactly like Bench does.
+  * invoking the builder runs their epochs first, at bench depth
+  * (`benchFn`), exactly like Bench does.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -19,7 +20,6 @@ object Plans {
     val tag = args(2)
     val wanted = args.drop(3).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    sys.props(graft.util.BenchMode.ReducedDemosProp) = "1"
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -35,7 +35,7 @@ object Plans {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
-      val df = d.fn(spark, sfDir)
+      val df = d.benchFn.getOrElse(d.fn)(spark, sfDir)
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       val p = java.nio.file.Paths.get(outDir,

@@ -83,13 +83,14 @@ object Dedup {
                               k: Int, threshold: Double): DataFrame = {
     // same narrow-postings discipline as ngramJaccardPairsFromPostings:
     // only (sid, sk) rides the big shuffle; set sizes rejoin onto the
-    // counted pair set
+    // counted pair set. Both sides are left lazy, as in ngramJaccardPairs:
+    // a call leaves no cache entry
     def postings(df: DataFrame, as: String) =
       shingleSets(df, idCol, textCol, k)
         .select(col("sid").as(as), explode(col("sh")).as("s"))
         .select(col(as), xxhash64(col("s")).as("sk"))
-    val a = postings(corpus, "i").cache()
-    val b = postings(incoming, "j").cache()
+    val a = postings(corpus, "i")
+    val b = postings(incoming, "j")
     val na = a.groupBy("i").agg(count(lit(1)).as("na"))
     val nb = b.groupBy("j").agg(count(lit(1)).as("nb"))
     a.join(b, "sk")
@@ -477,11 +478,9 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String, k: Int,
                       threshold: Double, numHashes: Int = 64, bands: Int = 32,
                       seed: Long = 42L): DataFrame = {
-    val sets = shingleSets(docs, idCol, textCol, k).cache()
-    // cache: the banded self-join in lshCandidates reads signatures twice,
-    // and the signature pipeline (explode + 64 min-aggs) is the expensive
-    // part. At cluster scale this is a shuffle-materialized intermediate.
-    val sigs = minhashSignatures(sets, numHashes, seed).cache()
+    // left lazy, as in ngramJaccardPairs: a call leaves no cache entry
+    val sets = shingleSets(docs, idCol, textCol, k)
+    val sigs = minhashSignatures(sets, numHashes, seed)
     val cands = lshCandidates(sigs, bands, numHashes / bands)
     val ai = sets.select(col("sid").as("i"), col("sh").as("sh_i"), col("n_sh").as("na"))
     val bj = sets.select(col("sid").as("j"), col("sh").as("sh_j"), col("n_sh").as("nb"))
@@ -514,8 +513,8 @@ object Dedup {
                    maxHamming: Int): DataFrame = {
     val nBands = maxHamming + 1
     val bandWidth = SimhashBits / nBands
-    // cached: read twice by the band self-join below
-    val sigs = simhashes(docs, idCol, textCol).cache()
+    // left lazy, as in ngramJaccardPairs: a call leaves no cache entry
+    val sigs = simhashes(docs, idCol, textCol)
     val bandCols = (0 until nBands).map { k =>
       val mask = ((1L << bandWidth) - 1) << (k * bandWidth)
       struct(lit(k).as("band"), col("simhash").bitwiseAND(mask).as("sig"))

@@ -103,11 +103,12 @@ object PipelineQueries {
 
   /** The staged-ingest reader at the requested demo depth: full depth
     * delivers the staged epoch files one micro-batch each
-    * (maxFilesPerTrigger=1); reduced bench depth ([[graft.util
-    * .BenchMode]]) ingests them all in ONE trigger. One definition for
-    * every maintenance demo, so the depth policy cannot drift per site.
+    * (maxFilesPerTrigger=1); `reduced` bench depth ([[QueryDef.benchFn]])
+    * ingests them all in ONE trigger. One definition for every
+    * maintenance demo, text and vector, so the depth policy cannot drift
+    * per site.
     */
-  private def demoIngest(sess: org.apache.spark.sql.SparkSession,
+  private[queries] def demoIngest(sess: org.apache.spark.sql.SparkSession,
       schema: org.apache.spark.sql.types.StructType, root: String,
       reduced: Boolean): org.apache.spark.sql.DataFrame = {
     val src = sess.readStream.schema(schema)
@@ -132,7 +133,7 @@ object PipelineQueries {
     *     every epoch via maxPostingGens=0 — so epoch 2's probe reads
     *     across a fold boundary) and require() that they did. Otherwise
     *     the production cadence runs, which folds nothing in 3 epochs.
-    * Reduced bench depth ([[graft.util.BenchMode]]) runs ONE
+    * `reduced` bench depth ([[QueryDef.benchFn]]) runs ONE
     * uninterrupted one-trigger stream at the production cadence
     * (Round17Spec pins reduced ≡ full). The uninterrupted or resume leg
     * always starts on a FRESH SESSION (r15 verdict #3): recovery — and,
@@ -143,7 +144,7 @@ object PipelineQueries {
     */
   private def ccStoreLoopRun(s: org.apache.spark.sql.SparkSession,
       corpus: org.apache.spark.sql.DataFrame, k: Int, nBuckets: Int,
-      kill: Boolean, midStreamFolds: Boolean)
+      kill: Boolean, midStreamFolds: Boolean, reduced: Boolean)
       : org.apache.spark.sql.DataFrame = {
     import graft.streaming.Streams
     val root = java.nio.file.Files
@@ -158,7 +159,6 @@ object PipelineQueries {
         () => Streams.ccStoreInit(corpus.filter(col("doc_id") % 5 =!= 0),
           s"$root/state", k = k, nBuckets = nBuckets))
       val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
-      val reduced = graft.util.BenchMode.reducedDemos
       val folds = midStreamFolds && !reduced
       def start(killLeg: Boolean) = {
         val killAt = if (killLeg) Some((1L, armed)) else None
@@ -1889,9 +1889,16 @@ object PipelineQueries {
         val newPairs = Dedup.incrementalCcPairsFromPostings(postings, sizes,
             bp, 0.5)
           .pin()
-        Dedup.incrementalCcLabelUpdates(labels, newPairs,
+        // pin the result, then release the state pins it no longer reads
+        // (the ccStoreLoopRun / q263 discipline): a call leaves only the
+        // result's own pins behind
+        val upd = Dedup.incrementalCcLabelUpdates(labels, newPairs,
             docs.filter(isNew).select(col("doc_id").as("id")))
-          .orderBy("id")
+        val out = upd.orderBy("id").pin()
+        graft.util.CheckpointGen.release(s.sparkContext,
+          Seq(postings, labels, bp, newPairs, upd)
+            .flatMap(graft.util.CheckpointGen.pinnedIds).toSet)
+        out
       },
       Some(s"""WITH RECURSIVE ${ccCtesFor("o_", "doc_id % 5 <> 0")},
         |${ccCtesFor("", "TRUE")},
@@ -1924,9 +1931,9 @@ object PipelineQueries {
     // SQL-oracle-able: full-closure components ∪ self-labels for streamed
     // docs that never pair. Flat postings, no kill, and the default fold
     // cadence (no fold in 3 epochs): the plainest run of the store.
-    QueryDef("q242_stream_cc_maintenance",
-      (s, dir) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
-        nBuckets = 0, kill = false, midStreamFolds = false),
+    QueryDef.demo("q242_stream_cc_maintenance",
+      (s, dir, reduced) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
+        nBuckets = 0, kill = false, midStreamFolds = false, reduced),
       Some(ccStreamOracle),
       // at bench depth this is the same one-trigger flat store stream as
       // q252 (whose kill leg only runs at full depth), so the default
@@ -1943,9 +1950,9 @@ object PipelineQueries {
     // overwrite, so the re-run converges to the uninterrupted answer.
     // Round15Spec pins killed+restarted ≡ uninterrupted q242; the oracle
     // is q242's (full closure ∪ batch-singleton self-labels).
-    QueryDef("q252_stream_cc_restart_resume",
-      (s, dir) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
-        nBuckets = 0, kill = true, midStreamFolds = false),
+    QueryDef.demo("q252_stream_cc_restart_resume",
+      (s, dir, reduced) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
+        nBuckets = 0, kill = true, midStreamFolds = false, reduced),
       Some(ccStreamOracle)),
 
     // ---- the PRODUCTION-SHAPED maintenance loop: restartable AND
@@ -1960,9 +1967,9 @@ object PipelineQueries {
     // runs on top. Result must equal q242/q252 exactly (pruned buckets
     // hold no batch key; the bucket dimension is invisible to the pairs),
     // so the oracle is theirs, shared.
-    QueryDef("q260_stream_cc_bucketed_restart",
-      (s, dir) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
-        nBuckets = 64, kill = true, midStreamFolds = false),
+    QueryDef.demo("q260_stream_cc_bucketed_restart",
+      (s, dir, reduced) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
+        nBuckets = 64, kill = true, midStreamFolds = false, reduced),
       Some(ccStreamOracle)),
 
     // ---- the maintenance loop with folds and GC firing MID-STREAM ----
@@ -1976,9 +1983,9 @@ object PipelineQueries {
     // require()s both folds fired and a post-stream sweep finds nothing
     // left). (Round16Spec adds the separate-PROCESS restart.) Labels are
     // bitwise the q242/q252/q260 answer — the oracle is theirs, shared.
-    QueryDef("q261_stream_cc_store_fold_gc",
-      (s, dir) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
-        nBuckets = 64, kill = true, midStreamFolds = true),
+    QueryDef.demo("q261_stream_cc_store_fold_gc",
+      (s, dir, reduced) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
+        nBuckets = 64, kill = true, midStreamFolds = true, reduced),
       Some(ccStreamOracle)),
 
     // ---- MODALITY-BLIND maintenance: the media ingest runs the SAME
@@ -1996,8 +2003,8 @@ object PipelineQueries {
     // payload) carry no dedup evidence and are out of the screen's scope
     // on BOTH sides (the "" token would otherwise alias all of them into
     // one fake component).
-    QueryDef("q262_stream_media_cc_maintenance",
-      (s, dir) => {
+    QueryDef.demo("q262_stream_media_cc_maintenance",
+      (s, dir, reduced) => {
         import graft.ext.Multimodal
         val ftext = Multimodal.frames(
             Multimodal.asMedia(Tables.documents(s, dir)), frameBytes = 16)
@@ -2006,7 +2013,7 @@ object PipelineQueries {
             .as("text"))
           .select(col("media_id").as("doc_id"), col("text"))
         ccStoreLoopRun(s, ftext, k = 1, nBuckets = 16, kill = true,
-          midStreamFolds = true)
+          midStreamFolds = true, reduced)
       },
       Some("""WITH RECURSIVE f AS (
         |  SELECT DISTINCT doc_id AS i,
@@ -2249,8 +2256,8 @@ object PipelineQueries {
     // accumulated corpus (batch-boundary independence). No kill/restart
     // leg here — q261/q262 + Round16Spec own the restart proof; this
     // query's claim is the composition, at one stream's cost.
-    QueryDef("q263_stream_incremental_curation",
-      (s, dir) => {
+    QueryDef.demo("q263_stream_incremental_curation",
+      (s, dir, reduced) => {
         import graft.streaming.Streams
         import graft.util.GenStore
         val docs = Tables.documents(s, dir)
@@ -2299,10 +2306,9 @@ object PipelineQueries {
               graft.util.CheckpointGen.release(s.sparkContext,
                 graft.util.CheckpointGen.pinnedIds(init))
             })
-          val reduced = graft.util.BenchMode.reducedDemos
-          // bench depth (BenchMode): production fold cadence + one
-          // trigger, like the other maintenance demos; full depth folds
-          // aggressively so the serve reads across fold boundaries
+          // bench depth: production fold cadence + one trigger, like the
+          // other maintenance demos; full depth folds aggressively so the
+          // serve reads across fold boundaries
           val ccStep: (org.apache.spark.sql.DataFrame, Long) => Unit =
             if (reduced) Streams.ccStoreStep(s"$root/state", 3, 0.5, 64,
               gcAfterFold = true)
@@ -2442,8 +2448,8 @@ object PipelineQueries {
     // proof; this query's claim is incremental graph depth at one
     // stream's cost. Oracle = q248's full-graph recompute over the
     // accumulated corpus: batch-boundary independence for coreness.
-    QueryDef("q264_stream_incremental_coreness",
-      (s, dir) => {
+    QueryDef.demo("q264_stream_incremental_coreness",
+      (s, dir, reduced) => {
         import graft.streaming.Streams
         import graft.util.GenStore
         val docs = Tables.documents(s, dir)
@@ -2487,7 +2493,6 @@ object PipelineQueries {
           // deltas are component-sized and the demo serve reads once
           def coreView(bound: Long): org.apache.spark.sql.DataFrame =
             coreStore.latestWinsView(s, bound, "id")
-          val reduced = graft.util.BenchMode.reducedDemos
           val onPairs: (org.apache.spark.sql.DataFrame, Long) => Unit =
             (pairs, epoch) => DevTiming("demo", s"q264 epoch $epoch onPairs") {
               // an epoch whose batch pairs with NOTHING changes no
@@ -2575,9 +2580,9 @@ object PipelineQueries {
                 coreStore.gc(); ()
               }
             }
-          // bench depth (BenchMode): production fold cadence + one
-          // trigger; full depth folds aggressively so the serve reads
-          // across fold boundaries
+          // bench depth: production fold cadence + one trigger; full
+          // depth folds aggressively so the serve reads across fold
+          // boundaries
           val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
             if (reduced) Streams.ccStoreStep(s"$root/state", 3, 0.3, 64,
               gcAfterFold = true, onEpochPairs = onPairs)
@@ -2840,8 +2845,8 @@ object PipelineQueries {
     // discipline). No kill/restart leg — q261/q262 + Round16Spec own
     // that proof; this query's claim is the composition at one stream's
     // cost.
-    QueryDef("q270_stream_tokenized_tail",
-      (s, dir) => {
+    QueryDef.demo("q270_stream_tokenized_tail",
+      (s, dir, reduced) => {
         import graft.streaming.Streams
         import graft.util.GenStore
         val docs = Tables.documents(s, dir)
@@ -2878,7 +2883,6 @@ object PipelineQueries {
               graft.util.CheckpointGen.release(s.sparkContext,
                 graft.util.CheckpointGen.pinnedIds(init))
             })
-          val reduced = graft.util.BenchMode.reducedDemos
           val ccStep: (org.apache.spark.sql.DataFrame, Long) => Unit =
             if (reduced) Streams.ccStoreStep(s"$root/state", 3, 0.5, 64,
               gcAfterFold = true)

@@ -29,11 +29,31 @@ case class QueryDef(
     evalOnly: Boolean = false,
     /** Demonstration query whose bench-depth run duplicates another
       * benched query. q242, the uninterrupted flat CC store stream: at
-      * bench depth ([[graft.util.BenchMode]]) q252 runs the same
-      * one-trigger flat store stream (its kill leg is full-depth only),
-      * so timing both measures one loop twice. Bench's default tier
-      * skips it and stamps the skip into the JSON (`bench_skipped`).
-      * GRAFT_BENCH_FULL_DEMOS=1 restores it. Verify/CORRECTNESS and the
-      * ScalaTest suites always run it (r17 verdict #6).
+      * bench depth (its [[benchFn]]) q252 runs the same one-trigger flat
+      * store stream (its kill leg is full-depth only), so timing both
+      * measures one loop twice. Bench's default tier skips it and stamps
+      * the skip into the JSON (`bench_skipped`). GRAFT_BENCH_FULL_DEMOS=1
+      * restores it. Verify/CORRECTNESS and the ScalaTest suites always
+      * run it (r17 verdict #6).
       */
-    benchSkip: Boolean = false)
+    benchSkip: Boolean = false,
+    /** The bench-depth builder of a maintenance demo: ONE uninterrupted
+      * stream that ingests every staged epoch file in a single trigger at
+      * the production fold cadence, with no kill leg. It serves exactly
+      * what `fn` (full depth: a trigger per file, forced folds, the kill
+      * and restart) serves — batch-boundary independence, pinned per demo
+      * by a reduced ≡ full spec. Bench runs it unless
+      * GRAFT_BENCH_FULL_DEMOS=1; Verify and the suites run `fn`.
+      */
+    benchFn: Option[(SparkSession, String) => DataFrame] = None)
+
+object QueryDef {
+  /** A maintenance demo from its one body `run(session, dir, reduced)`:
+    * `fn` runs it at full depth (`reduced = false`), `benchFn` at bench
+    * depth (`reduced = true`).
+    */
+  def demo(name: String, run: (SparkSession, String, Boolean) => DataFrame,
+      oracle: Option[String], benchSkip: Boolean = false): QueryDef =
+    QueryDef(name, run(_, _, false), oracle, benchSkip = benchSkip,
+      benchFn = Some(run(_, _, true)))
+}

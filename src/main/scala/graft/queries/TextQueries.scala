@@ -1441,9 +1441,16 @@ object TextQueries {
         require(untouched.count() > 0,
           "the delta touched every component — the bounded-scope " +
             "demonstration is vacuous on this fixture")
-        untouched.unionByName(recomputed)
+        // pin the result, then release the state pins it no longer reads
+        // (the q240 discipline): a call leaves only the result's own pins
+        val out = untouched.unionByName(recomputed)
           .select(col("id").as("doc_id"), col("coreness"))
-          .orderBy("doc_id")
+          .orderBy("doc_id").pin()
+        graft.util.CheckpointGen.release(s.sparkContext,
+          Seq(oldEdges, oldCore, labels, postings, sizes, bp, newPairs,
+            affected, untouched).flatMap(graft.util.CheckpointGen.pinnedIds)
+            .toSet)
+        out
       },
       Some(fullCorenessOracleSql)),
 

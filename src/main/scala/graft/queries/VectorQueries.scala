@@ -2417,8 +2417,8 @@ object VectorQueries {
     // At scale this is the stream-static join pattern: the index is the
     // static side (persisted, cell-partitioned), each micro-batch joins
     // its routed cells only — no per-epoch index scan, no stream state.
-    QueryDef("q245_stream_ann_search",
-      (s, dir) => {
+    QueryDef.demo("q245_stream_ann_search",
+      (s, dir, reduced) => {
         val (xq, index, _, routing) = externalAnnSetup(s, dir)
         val sc = s.sparkContext
         import graft.util.CheckpointGen
@@ -2441,10 +2441,7 @@ object VectorQueries {
           // oracle already rests on; full depth (Verify/ScalaTest)
           // keeps the 4-micro-batch serving demonstration. Round21Spec
           // pins reduced ≡ full.
-          val src = s.readStream.schema(schema)
-          val ingest = (if (graft.util.BenchMode.reducedDemos) src
-            else src.option("maxFilesPerTrigger", "1"))
-            .parquet(s"$root/in/*")
+          val ingest = PipelineQueries.demoIngest(s, schema, root, reduced)
           val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
             (batch, epoch) => {
               val b = batch.pin()
@@ -2553,8 +2550,8 @@ object VectorQueries {
     // policy mechanics (fires over threshold, idles under it, count
     // drops, content identical, a crashed fold's _SUCCESS-less dir is
     // invisible, GC removes exactly the out-of-view dirs).
-    QueryDef("q253_compaction_policy_stream",
-      (s, dir) => {
+    QueryDef.demo("q253_compaction_policy_stream",
+      (s, dir, reduced) => {
         val emb = Tables.embeddings(s, dir)
         val cells = math.max(8L, emb.count() / 100L).toInt
         val nCoarse = math.max(4, math.ceil(math.sqrt(cells.toDouble)).toInt)
@@ -2594,10 +2591,7 @@ object VectorQueries {
           // is fragmented to 12 > 10 files, so the FIRST append folds —
           // the require()s below hold at either depth). Full depth keeps
           // the 3-epoch deltas-land-on-compacted-generation exercise.
-          val src253 = s.readStream.schema(schema)
-          val ingest = (if (graft.util.BenchMode.reducedDemos) src253
-            else src253.option("maxFilesPerTrigger", "1"))
-            .parquet(s"$root/in/*")
+          val ingest = PipelineQueries.demoIngest(s, schema, root, reduced)
           val events =
             new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]
           val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
@@ -2858,8 +2852,8 @@ object VectorQueries {
     // restarted driver has nothing else (the coarse/fine routing tables
     // would likewise reload from their persisted copies). Search over
     // the recovered view is hash-exact vs q235/q253's shared oracle.
-    QueryDef("q259_store_restart_resume",
-      (s, dir) => {
+    QueryDef.demo("q259_store_restart_resume",
+      (s, dir, reduced) => {
         val emb = Tables.embeddings(s, dir)
         val cells = math.max(8L, emb.count() / 100L).toInt
         val nCoarse = math.max(4, math.ceil(math.sqrt(cells.toDouble)).toInt)
@@ -2923,14 +2917,10 @@ object VectorQueries {
           // view batch-boundary independent — the oracle's own
           // argument). Full depth (Verify/ScalaTest) keeps the
           // 3-micro-batch kill + checkpoint-restart demonstration.
-          val reduced = graft.util.BenchMode.reducedDemos
-          def start(kill: Boolean) = {
-            val src = s.readStream.schema(schema)
-            (if (reduced) src else src.option("maxFilesPerTrigger", "1"))
-              .parquet(s"$root/in/*")
+          def start(kill: Boolean) =
+            PipelineQueries.demoIngest(s, schema, root, reduced)
               .writeStream.option("checkpointLocation", s"$root/ckpt")
               .foreachBatch(step(kill)).start()
-          }
           if (reduced) {
             val q = start(kill = false)
             try q.processAllAvailable() finally q.stop()

@@ -43,6 +43,25 @@ class PipelineSpec extends SparkSpec {
       s"pageRank left ${pinned - before - 1} extra pinned RDDs (want ≤1: the ranks)")
   }
 
+  test("q240 and q258 leave only their result's own pins behind") {
+    import graft.util.CheckpointGen
+    val sc = spark.sparkContext
+    for (name <- Seq("q240_incremental_cc_updates",
+        "q258_incremental_coreness")) {
+      // held: the registry keeps entries by weak reference, so a GC could
+      // otherwise drop an entry and hide a leak or fake a release
+      val held = sc.getPersistentRDDs
+      val out = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+      val added = sc.getPersistentRDDs.keySet -- held.keySet
+      val own = CheckpointGen.pinnedIds(out)
+      assert(own.nonEmpty, s"$name returned an unpinned frame")
+      assert(added == own,
+        s"$name left ${(added -- own).size} intermediate pins behind")
+      CheckpointGen.release(sc, own)
+      java.lang.ref.Reference.reachabilityFence(held)
+    }
+  }
+
   test("hash split is a pure function of the key: stable across recomputation") {
     val docs = (1L to 200L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val h = conv(substring(md5(col("doc_id").cast("string")), 1, 12), 16, 10)

@@ -77,6 +77,11 @@ class PropertySpec extends SparkSpec {
       val held = sc.getPersistentRDDs
       val got = Dedup.ngramJaccardPairs(df, "doc_id", "text", 3, 0.2)
         .as[(Long, Long, Double)].collect().sorted.toSeq
+      // ...and neither do the other pair finders
+      Dedup.crossCorpusJaccardPairs(df.filter(col("doc_id") < 3),
+        df.filter(col("doc_id") >= 3), "doc_id", "text", 3, 0.2).collect()
+      Dedup.minhashLshPairs(df, "doc_id", "text", 3, 0.2).collect()
+      Dedup.simhashPairs(df, "doc_id", "text", 3).collect()
       assert(sc.getPersistentRDDs.keySet == held.keySet,
         "a call left a cache entry behind")
       java.lang.ref.Reference.reachabilityFence(held)

@@ -168,43 +168,35 @@ class Round17Spec extends SparkSpec {
       "serves output identical to the full kill+restart demonstration, " +
       "on EVERY reduced-aware demo — flat/bucketed (q242 q252 q260), " +
       "folding text/media (q261 q262)") {
-    val dir = "/root/testdata/sf0.001"
     // EXPECTED LOG NOISE: the full-depth runs below inject kills, so
     // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND traces from the killed sessions'
     // unusable localCheckpoint blocks are the intended outcome of a
     // green run (recovery is from disk) — see Round15Spec's note.
-    def run(name: String): Seq[(Long, Long)] =
-      SparkEntry.queries(name)(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // q263: one-trigger production-cadence depth must cut the identical
+    // training snapshot the aggressive-fold 3-epoch depth cuts.
     for (name <- Seq("q242_stream_cc_maintenance",
         "q252_stream_cc_restart_resume",
         "q260_stream_cc_bucketed_restart",
         "q261_stream_cc_store_fold_gc",
-        "q262_stream_media_cc_maintenance")) {
-      assert(!graft.util.BenchMode.reducedDemos)
-      val full = run(name)
-      sys.props(graft.util.BenchMode.ReducedDemosProp) = "1"
-      val reduced =
-        try run(name)
-        finally { sys.props.remove(graft.util.BenchMode.ReducedDemosProp); () }
-      assert(reduced.nonEmpty && reduced == full,
-        s"$name: reduced-demo labels diverged from the full " +
-          s"kill+restart run (${reduced.size} vs ${full.size} rows)")
-    }
-    // ...and the composed incremental-curation serve (q263): one-trigger
-    // production-cadence depth must cut the identical training snapshot
-    // the aggressive-fold 3-epoch depth cuts
-    def runCur(): Seq[String] =
-      SparkEntry.queries("q263_stream_incremental_curation")(spark, dir)
-        .collect().map(_.mkString("|")).toSeq
-    val fullCur = runCur()
-    sys.props(graft.util.BenchMode.ReducedDemosProp) = "1"
-    val reducedCur =
-      try runCur()
-      finally { sys.props.remove(graft.util.BenchMode.ReducedDemosProp); () }
-    assert(reducedCur.nonEmpty && reducedCur == fullCur,
-      s"q263: reduced-demo snapshot diverged from full depth " +
-        s"(${reducedCur.size} vs ${fullCur.size} rows)")
+        "q262_stream_media_cc_maintenance",
+        "q263_stream_incremental_curation"))
+      assertBenchDepthMatchesFull(name, "/root/testdata/sf0.001")
+  }
+
+  test("every registered bench-depth builder has its reduced ≡ full pin: " +
+      "the defs with a benchFn are exactly the 11 pinned demos") {
+    // pinned by Round17Spec (q242 q252 q260 q261 q262 q263), Round18Spec
+    // (q264), Round20Spec (q270) and Round21Spec (q245 q253 q259); a new
+    // depth variant needs its own assertBenchDepthMatchesFull pin first
+    val pinned = Set("q242_stream_cc_maintenance",
+      "q252_stream_cc_restart_resume", "q260_stream_cc_bucketed_restart",
+      "q261_stream_cc_store_fold_gc", "q262_stream_media_cc_maintenance",
+      "q263_stream_incremental_curation",
+      "q264_stream_incremental_coreness", "q270_stream_tokenized_tail",
+      "q245_stream_ann_search", "q253_compaction_policy_stream",
+      "q259_store_restart_resume")
+    assert(SparkEntry.allDefs.filter(_.benchFn.isDefined).map(_.name)
+      .toSet == pinned)
   }
 
   test("vector-store GC retention: retainBases=2 keeps the superseded " +

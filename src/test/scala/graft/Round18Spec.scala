@@ -324,18 +324,7 @@ class Round18Spec extends SparkSpec {
       "depth serves") {
     // EXPECTED LOG NOISE: none here (no kill leg) — q264's restart story
     // is owned by q261/q262; this pins batch-boundary independence.
-    val dir = "/root/testdata/sf0.001"
-    def run(): Seq[(Long, Long)] =
-      SparkEntry.queries("q264_stream_incremental_coreness")(spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(!graft.util.BenchMode.reducedDemos)
-    val full = run()
-    sys.props(graft.util.BenchMode.ReducedDemosProp) = "1"
-    val reduced =
-      try run()
-      finally { sys.props.remove(graft.util.BenchMode.ReducedDemosProp); () }
-    assert(reduced.nonEmpty && reduced == full,
-      s"q264: reduced-demo coreness diverged from full depth " +
-        s"(${reduced.size} vs ${full.size} rows)")
+    assertBenchDepthMatchesFull("q264_stream_incremental_coreness",
+      "/root/testdata/sf0.001")
   }
 }

@@ -108,18 +108,7 @@ class Round20Spec extends SparkSpec {
   test("q270: reduced-demo depth cuts the identical tokenized snapshot " +
       "the production-cadence 3-epoch depth cuts (the q263/Round17Spec " +
       "pin, extended through the shard-parallel tokenized serve)") {
-    def run(): Seq[String] =
-      SparkEntry.queries("q270_stream_tokenized_tail")(spark, Dir)
-        .collect().map(_.mkString("|")).toSeq
-    assert(!graft.util.BenchMode.reducedDemos)
-    val full = run()
-    sys.props(graft.util.BenchMode.ReducedDemosProp) = "1"
-    val reduced =
-      try run()
-      finally { sys.props.remove(graft.util.BenchMode.ReducedDemosProp); () }
-    assert(reduced.nonEmpty && reduced == full,
-      s"q270: reduced-demo snapshot diverged from full depth " +
-        s"(${reduced.size} vs ${full.size} rows)")
+    assertBenchDepthMatchesFull("q270_stream_tokenized_tail", Dir)
   }
 
   test("bench re-pass policy (r19 verdict #4): the synthetic r19 replay " +

@@ -79,23 +79,10 @@ class Round21Spec extends SparkSpec {
     // the Round17Spec reduced≡full discipline extended to the vector
     // stores (wave-2 tiering). EXPECTED LOG NOISE on q259's full leg:
     // the injected kill, as in Round15/17Spec.
-    val dir = "/root/testdata/sf0.001"
-    def run(name: String): Seq[String] =
-      SparkEntry.queries(name)(spark, dir)
-        .collect().map(_.mkString("|")).toSeq
     for (name <- Seq("q245_stream_ann_search",
         "q253_compaction_policy_stream",
-        "q259_store_restart_resume")) {
-      assert(!graft.util.BenchMode.reducedDemos)
-      val full = run(name)
-      sys.props(graft.util.BenchMode.ReducedDemosProp) = "1"
-      val reduced =
-        try run(name)
-        finally { sys.props.remove(graft.util.BenchMode.ReducedDemosProp); () }
-      assert(reduced.nonEmpty && reduced == full,
-        s"$name: reduced-demo output diverged from full depth " +
-          s"(${reduced.size} vs ${full.size} rows)")
-    }
+        "q259_store_restart_resume"))
+      assertBenchDepthMatchesFull(name, "/root/testdata/sf0.001")
   }
 
   test("fold_baseline: slow-day minima enter cal-normalized; fast day moves the stamp") {
@@ -142,6 +129,18 @@ class Round21Spec extends SparkSpec {
     }
   }
 
+  /** Every `.scala` file under src/main, with its text. */
+  private def mainSources: List[(java.nio.file.Path, String)] = {
+    val files = scala.util.Using.resource(java.nio.file.Files
+        .walk(java.nio.file.Paths.get("src/main"))) { w =>
+      import scala.jdk.CollectionConverters._
+      w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    }
+    assert(files.nonEmpty, "src/main not found from the working directory")
+    files.map(f =>
+      (f, new String(java.nio.file.Files.readAllBytes(f), "UTF-8")))
+  }
+
   test("src/main defines exactly the known mains (no per-round harness)") {
     // Bench/Verify/SmokeEntry are the driver contract, Plans/PlanProbes
     // dump plans, and the three *Driver objects are child JVMs the
@@ -151,14 +150,7 @@ class Round21Spec extends SparkSpec {
       "PlanProbes", "CcServeDriver", "CcRestartDriver", "GenServeDriver")
     val objectDecl = """(?m)^\s*(?:private\S*\s+|case\s+)*object\s+(\w+)""".r
     val mainDecl = """\bdef\s+main\s*\(|\bextends\s+App\b""".r
-    val files = scala.util.Using.resource(java.nio.file.Files
-        .walk(java.nio.file.Paths.get("src/main"))) { w =>
-      import scala.jdk.CollectionConverters._
-      w.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-    }
-    assert(files.nonEmpty, "src/main not found from the working directory")
-    val mains = files.flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    val mains = mainSources.flatMap { case (f, src) =>
       val objs = objectDecl.findAllMatchIn(src)
         .map(m => (m.start, m.group(1))).toList
       // each main belongs to the nearest object declared above it
@@ -170,5 +162,23 @@ class Round21Spec extends SparkSpec {
     assert(mains == expected,
       s"unexpected: ${(mains -- expected).toSeq.sorted}; " +
         s"missing: ${(expected -- mains).toSeq.sorted}")
+  }
+
+  test("src/main writes no JVM system property: run depth and modes are " +
+      "explicit values, not process-global switches") {
+    // a system property is JVM-wide mutable state: a write by one query
+    // or main is seen by every session and suite in the process. Reading
+    // one (java.io.tmpdir) is fine.
+    val write = Seq("""\bsys\.props\s*\([^)]*\)\s*=(?!=)""",
+      """\bsys\.props\s*(?:\+=|-=|\.(?:put|update|addOne|remove|clear)\b)""",
+      """\bSystem\.(?:setProperty|clearProperty|setProperties)\b""")
+      .mkString("|").r
+    val hits = mainSources.flatMap { case (f, src) =>
+      src.linesIterator.zipWithIndex.collect {
+        case (l, i) if write.findFirstIn(l).isDefined =>
+          s"$f:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("system property writes:\n", "\n", ""))
   }
 }

@@ -92,6 +92,25 @@ trait SparkSpec extends AnyFunSuite {
       (fs.size.toLong, fs.map(java.nio.file.Files.size(_)).sum)
     }
 
+  /** Pins a maintenance demo's bench depth to its full depth: the
+    * registered `benchFn` (one trigger, production fold cadence, no kill
+    * leg) serves exactly the rows, in order, that `fn` serves on `dir` —
+    * the batch-boundary independence that lets Bench time the cheaper
+    * depth.
+    */
+  def assertBenchDepthMatchesFull(name: String, dir: String): Unit = {
+    val d = SparkEntry.allDefs.find(_.name == name)
+      .getOrElse(fail(s"no query named $name"))
+    val benchFn = d.benchFn.getOrElse(fail(s"$name has no benchFn"))
+    def rows(f: (SparkSession, String) => org.apache.spark.sql.DataFrame) =
+      f(spark, dir).collect().map(_.mkString("|")).toSeq
+    val full = rows(d.fn)
+    val bench = rows(benchFn)
+    assert(bench.nonEmpty && bench == full,
+      s"$name: bench-depth output diverged from full depth " +
+        s"(${bench.size} vs ${full.size} rows)")
+  }
+
   /** A frame's rows as sorted strings (column order kept). */
   def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
