@@ -98,9 +98,8 @@ object Bench {
       implicit val sc = spark.sqlContext
       val mem = MemoryStream[Long]
       mem.addData(1L, 2L, 3L)
-      val q = mem.toDF().toDF("v").groupBy("v").count()
-        .writeStream.format("memory").queryName("bench_warmup")
-        .outputMode("complete").start()
+      val q = graft.streaming.Streams.start(mem.toDF().toDF("v").groupBy("v").count())(
+        _.format("memory").queryName("bench_warmup").outputMode("complete"))
       q.processAllAvailable(); q.stop()
     }
     // dev loop: SPARK_GRAFT_ONLY=q41,q70 benches a subset (shared rule:

@@ -31,10 +31,9 @@ object CcRestartDriver {
     val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
       graft.streaming.Streams.ccStoreStep(s"$root/state", 3, 0.5,
         nBuckets.toInt, maxLabelDeltas.toInt, maxPostingGens.toInt)
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$root/in/*")
-      .writeStream.option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch(step).start()
+    val q = graft.streaming.Streams.start(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$root/in/*"))(
+      _.option("checkpointLocation", s"$root/ckpt").foreachBatch(step))
     try q.processAllAvailable() finally q.stop()
     spark.stop()
   }

@@ -168,9 +168,8 @@ object PipelineQueries {
             killOnceAt = killAt)
           else Streams.ccStoreStep(s"$root/state", k, 0.5, nBuckets,
             gcAfterFold = true, killOnceAt = killAt)
-        demoIngest(if (killLeg) s else s.newSession(), schema, root, reduced)
-          .writeStream.option("checkpointLocation", s"$root/ckpt")
-          .foreachBatch(step).start()
+        Streams.start(demoIngest(if (killLeg) s else s.newSession(), schema, root,
+            reduced))(_.option("checkpointLocation", s"$root/ckpt").foreachBatch(step))
       }
       if (kill && !reduced) {
         val q1 = start(killLeg = true)
@@ -2349,9 +2348,8 @@ object PipelineQueries {
                   }
                 })
             }
-          val q = demoIngest(s, schema, root, reduced)
-            .writeStream.option("checkpointLocation", s"$root/ckpt")
-            .foreachBatch(step).start()
+          val q = Streams.start(demoIngest(s, schema, root, reduced))(
+            _.option("checkpointLocation", s"$root/ckpt").foreachBatch(step))
           try q.processAllAvailable() finally q.stop()
           if (!reduced) require(censusStore.latestCompleteBase() >= 1,
             "the census fold did not fire mid-stream")
@@ -2589,9 +2587,8 @@ object PipelineQueries {
             else Streams.ccStoreStep(s"$root/state", 3, 0.3, 64,
               maxLabelDeltas = 1, maxPostingGens = 0, gcAfterFold = true,
               onEpochPairs = onPairs)
-          val q = demoIngest(s, schema, root, reduced)
-            .writeStream.option("checkpointLocation", s"$root/ckpt")
-            .foreachBatch(step).start()
+          val q = Streams.start(demoIngest(s, schema, root, reduced))(
+            _.option("checkpointLocation", s"$root/ckpt").foreachBatch(step))
           DevTiming("demo", "q264 stream (ccStoreStep incl. onPairs)")(
             try q.processAllAvailable() finally q.stop())
           if (!reduced) {
@@ -2921,9 +2918,8 @@ object PipelineQueries {
                   }
                 })
             }
-          val q = demoIngest(s, schema, root, reduced)
-            .writeStream.option("checkpointLocation", s"$root/ckpt")
-            .foreachBatch(step).start()
+          val q = Streams.start(demoIngest(s, schema, root, reduced))(
+            _.option("checkpointLocation", s"$root/ckpt").foreachBatch(step))
           try q.processAllAvailable() finally q.stop()
           if (!reduced) require(censusStore.latestCompleteBase() >= 1,
             "the census fold did not fire mid-stream")

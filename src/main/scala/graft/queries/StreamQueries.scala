@@ -369,7 +369,7 @@ object StreamQueries {
             (b, epoch) => {
               b.write.mode("overwrite").parquet(s"$outRoot/batch=$epoch"); ()
             }
-          val q = smoothed.writeStream.foreachBatch(write).start()
+          val q = Streams.start(smoothed)(_.foreachBatch(write))
           try q.processAllAvailable() finally q.stop()
           // per-term floor(ewma·1e6) into int64: the smoothed doubles are
           // bit-identical across engines (q118's hash proves it) and ×1e6 +

@@ -3,6 +3,7 @@ import graft.util.Pin._
 
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.streaming.Streams
 import graft.ext.{Dedup, Graph, Multimodal, Similarity}
 import graft.util.OracleSafe._
 
@@ -1958,7 +1959,7 @@ object VectorQueries {
               ingestScreenBatch(batch, routing, corpProbes)
                 .write.mode("overwrite").parquet(s"$outRoot/batch=$epoch")
             }
-          val q = ingest.writeStream.foreachBatch(screen).start()
+          val q = Streams.start(ingest)(_.foreachBatch(screen))
           try q.processAllAvailable() finally q.stop()
           s.read.parquet(outRoot.toString).drop("batch")
             .orderBy("vec_id").pin()
@@ -2051,7 +2052,7 @@ object VectorQueries {
                   SemDedupProbes)
                 .write.mode("overwrite").parquet(s"$outRoot/batch=$epoch")
             }
-          val q = ingest.writeStream.foreachBatch(step).start()
+          val q = Streams.start(ingest)(_.foreachBatch(step))
           try q.processAllAvailable() finally q.stop()
           val merged = index0.unionByName(
               s.read.parquet(outRoot.toString).drop("batch"))
@@ -2453,7 +2454,7 @@ object VectorQueries {
                   .write.mode("overwrite").parquet(s"$root/out/batch=$epoch")
               } finally CheckpointGen.release(sc, bPins)
             }
-          val q = ingest.writeStream.foreachBatch(step).start()
+          val q = Streams.start(ingest)(_.foreachBatch(step))
           try q.processAllAvailable() finally q.stop()
           s.read.parquet(s"$root/out").drop("batch")
             .orderBy("qid", "rn").pin()
@@ -2615,7 +2616,7 @@ object VectorQueries {
                   .foreach { case (bf, af) => events.add((epoch, bf, af)); () }
               } finally CheckpointGen.release(sc, bPins)
             }
-          val q = ingest.writeStream.foreachBatch(step).start()
+          val q = Streams.start(ingest)(_.foreachBatch(step))
           try q.processAllAvailable() finally q.stop()
           import scala.jdk.CollectionConverters._
           val ev = events.asScala.toSeq.sortBy(_._1)
@@ -2918,9 +2919,8 @@ object VectorQueries {
           // argument). Full depth (Verify/ScalaTest) keeps the
           // 3-micro-batch kill + checkpoint-restart demonstration.
           def start(kill: Boolean) =
-            PipelineQueries.demoIngest(s, schema, root, reduced)
-              .writeStream.option("checkpointLocation", s"$root/ckpt")
-              .foreachBatch(step(kill)).start()
+            Streams.start(PipelineQueries.demoIngest(s, schema, root, reduced))(
+              _.option("checkpointLocation", s"$root/ckpt").foreachBatch(step(kill)))
           if (reduced) {
             val q = start(kill = false)
             try q.processAllAvailable() finally q.stop()

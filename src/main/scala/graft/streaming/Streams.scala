@@ -5,7 +5,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 
 /** Structured Streaming surface — the native re-expression of the reference's
   * micro-batch pipeline (`plugin_ingest`, `/root/reference/plugin.cpp:226-352`):
@@ -132,6 +133,33 @@ object Streams {
     }
   }
 
+  /** The one start seam of every graft streaming query: `sink` configures
+    * the query's writer and this starts it. If the stream's session names
+    * no checkpoint file manager, it first names graft's
+    * [[CheckpointFileManager]], which commits each trigger's offset- and
+    * commit-log entries on a local checkpoint without forking a process
+    * per rename. A manager the caller named (session conf, or the
+    * SparkContext's Hadoop conf) wins, and then nothing is written.
+    *
+    * The choice has to live in the session conf, like the state-store
+    * provider [[runningStats]] sets. Spark 4.1.2 builds the offset and
+    * commit logs lazily (`StreamingQueryCheckpointMetadata`) on the stream
+    * thread, from `sparkSession.sessionState.newHadoopConf()`. So no
+    * `DataStreamWriter` option reaches them, and a set/restore window
+    * around `start()` is not sure to cover them. The setting stays on the
+    * session, so every later stream of that session writes its log the
+    * same way whichever graft query started first.
+    */
+  def start[T](ds: Dataset[T])(sink: DataStreamWriter[T] => DataStreamWriter[T])
+      : StreamingQuery = {
+    val spark = ds.sparkSession
+    val key = CheckpointFileManager.ClassKey
+    if (spark.conf.getOption(key).isEmpty &&
+        spark.sparkContext.hadoopConfiguration.get(key) == null)
+      spark.conf.set(key, classOf[CheckpointFileManager].getName)
+    sink(ds.writeStream).start()
+  }
+
   /** Drive a streaming DataFrame to completion through a memory sink and
     * return the materialized result — lets streaming operators flow through
     * the same verify/oracle gate as batch ones. Runs with whatever session
@@ -141,7 +169,7 @@ object Streams {
     */
   def runToTable(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
     val spark = df.sparkSession
-    val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
+    val q = start(df)(_.format("memory").queryName(name).outputMode(mode))
     try q.processAllAvailable() finally q.stop()
     spark.table(name)
   }
@@ -418,10 +446,8 @@ object Streams {
                   sinkTable: String, mode: OutputMode)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     current.foreach(_.stop())
-    rebuilt.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .format("memory").queryName(sinkTable).outputMode(mode)
-      .start()
+    start(rebuilt)(_.option("checkpointLocation", checkpointDir)
+      .format("memory").queryName(sinkTable).outputMode(mode))
   }
 
   /** Mutable configuration cell for [[hotScaledStream]]: the query holds a
@@ -462,14 +488,25 @@ object Streams {
     * changes (different aggregation/state shape), where a restart is
     * semantically required.
     *
-    * @param events  streaming events (event_type, value, ... columns)
-    * @param cfg     live config cell; swap() between batches to retune
-    * @param deliver per-batch sink callback (batch output, batch id)
+    * The query starts through [[start]], so its offset and commit logs
+    * (the exactly-once write-ahead log) go through graft's
+    * [[CheckpointFileManager]]: on a local checkpoint each trigger's log
+    * entries are written and renamed without the `readlink` process that
+    * Hadoop's FileContext rename forks per call. The log's files are
+    * the same either way, so a query can resume a checkpoint that Spark's
+    * default manager wrote.
+    *
+    * @param events        streaming events (event_type, value, ... columns)
+    * @param cfg           live config cell; swap() between batches to retune
+    * @param checkpointDir checkpoint to resume from and commit to (None: a
+    *                      temporary one, deleted when the query stops)
+    * @param deliver       per-batch sink callback (batch output, batch id)
     */
-  def hotScaledStream(events: DataFrame, cfg: HotConfig)
+  def hotScaledStream(events: DataFrame, cfg: HotConfig,
+                      checkpointDir: Option[String] = None)
                      (deliver: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    events.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+      : StreamingQuery = {
+    val perBatch: (DataFrame, Long) => Unit = (batch, id) => {
       val c = cfg.get // one config per batch: the batch boundary is the swap point
       val spark = batch.sparkSession
       import spark.implicits._
@@ -489,7 +526,9 @@ object Streams {
           gated.withColumn("scaled", col("value") * lit(c.scale) + lit(c.offset))
         }
       deliver(out, id)
-    }.start()
+    }
+    start(events)(w =>
+      checkpointDir.fold(w)(w.option("checkpointLocation", _)).foreachBatch(perBatch))
   }
 
   /** O7 error-passthrough host around a per-batch pipeline: on any
@@ -566,7 +605,7 @@ object Streams {
         b.write.mode("overwrite").parquet(s"$outRoot/batch=$id")
         delivered.add(id); ()
       }
-      val q = st.writeStream.foreachBatch(write).start()
+      val q = start(st)(_.foreachBatch(write))
       try q.processAllAvailable() finally q.stop()
       import scala.jdk.CollectionConverters._
       delivered.asScala.toSet

@@ -181,4 +181,29 @@ class Round21Spec extends SparkSpec {
     }
     assert(hits.isEmpty, hits.mkString("system property writes:\n", "\n", ""))
   }
+
+  test("src/main starts every streaming query through Streams.start") {
+    // Streams.start names the session's checkpoint file manager before the
+    // query starts; a query started around it would write its offset and
+    // commit logs through whichever manager the session happened to have.
+    // `Streams.start(` itself and the bare `start(` calls inside Streams
+    // do not match; the helper's own `.start()` is the one allowed hit.
+    val starts = """(?<!\bStreams)\.(?:start|toTable)\s*\(""".r
+    val hits = mainSources.flatMap { case (f, src) =>
+      val helper =
+        if (f.getFileName.toString != "Streams.scala") 0 until 0
+        else {
+          val at = src.indexOf("  def start[")
+          if (at < 0) 0 until 0 else at until src.indexOf("\n  }\n", at)
+        }
+      starts.findAllMatchIn(src).filterNot(m => helper.contains(m.start)).map { m =>
+        val line = src.substring(0, m.start).count(_ == '\n')
+        s"$f:${line + 1}: ${src.linesIterator.drop(line).next().trim}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("streaming starts outside Streams.start:\n", "\n", ""))
+    val helper = mainSources.collect {
+      case (f, src) if f.getFileName.toString == "Streams.scala" => src }.mkString
+    assert(helper.contains("sink(ds.writeStream).start()"), "Streams.start not found")
+  }
 }

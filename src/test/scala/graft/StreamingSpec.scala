@@ -4,6 +4,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.Streams
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.streaming.checkpointing.{
+  CheckpointFileManager => SparkCheckpointFileManager,
+  FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
 /** Multi-batch streaming semantics that the single-batch verify queries
   * can't exercise: watermark lateness, cross-batch state, streaming dedup
@@ -359,4 +363,142 @@ class StreamingSpec extends SparkSpec {
       assert(last("b") == (("b", 1L, 7L, 1.0)))
     } finally q.stop()
   }
+
+  // ---- The streaming WAL's checkpoint file manager (graft.streaming.CheckpointFileManager) ----
+
+  private val managerKey = graft.streaming.CheckpointFileManager.ClassKey
+
+  /** The manager Spark builds for `path` under `s`'s Hadoop conf, as the
+    * offset and commit logs get it.
+    */
+  private def walManager(s: org.apache.spark.sql.SparkSession, path: String,
+                         extra: Map[String, String] = Map.empty) = {
+    val conf = s.sessionState.newHadoopConf()
+    extra.foreach { case (k, v) => conf.set(k, v) }
+    SparkCheckpointFileManager.create(new Path(path), conf)
+  }
+
+  /** Runs one hotScaledStream trigger on `s`; returns `s`. */
+  private def oneHotTrigger(s: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession = {
+    implicit val sc = s.sqlContext
+    val mem = MemoryStream[(Long, String, Double)]
+    val cfg = new Streams.HotConfig(graft.ops.FilterConfig(
+      scale = 1.0, offset = 0.0, assetAllowlist = None))
+    val q = Streams.hotScaledStream(mem.toDF().toDF("event_id", "event_type", "value"),
+      cfg)((out, _) => { out.collect(); () })
+    try { mem.addData((1L, "a", 1.0)); q.processAllAvailable() } finally q.stop()
+    s
+  }
+
+  test("a graft stream start names the fork-free WAL manager: file: paths " +
+      "get Spark's FileSystem-based manager, other schemes Spark's own choice") {
+    val s2 = oneHotTrigger(spark.newSession())
+    val dir = java.nio.file.Files.createTempDirectory("graft_wal").toString
+    for (p <- Seq(dir, s"file:$dir")) walManager(s2, p) match {
+      case g: graft.streaming.CheckpointFileManager =>
+        assert(g.delegate.isInstanceOf[FileSystemBasedCheckpointFileManager], p)
+        assert(g.isLocal, p)
+      case other => fail(s"$p: offset log would use ${other.getClass.getName}")
+    }
+    // a non-file scheme with a FileContext binding: the delegate is the
+    // manager Spark picks when no class is named (FileContext-based)
+    val fc = Map("fs.graftfc.impl" -> classOf[GraftFcLocalFileSystem].getName,
+      "fs.AbstractFileSystem.graftfc.impl" -> classOf[GraftFcFs].getName)
+    val remote = s"graftfc://$dir/ckpt"
+    val sparkChoice = walManager(spark.newSession(), remote, fc).getClass
+    assert(sparkChoice == classOf[FileContextBasedCheckpointFileManager])
+    walManager(s2, remote, fc) match {
+      case g: graft.streaming.CheckpointFileManager =>
+        assert(g.delegate.getClass == sparkChoice)
+      case other => fail(s"$remote: offset log would use ${other.getClass.getName}")
+    }
+    // the scheme decision itself, for schemes no FileContext can be built
+    // for offline
+    val conf = new org.apache.hadoop.conf.Configuration()
+    for ((p, local) <- Seq("/tmp/c" -> true, "file:///tmp/c" -> true,
+        "hdfs://nn:8020/c" -> false, "s3a://bucket/c" -> false, "graftfc:///c" -> false))
+      assert(graft.streaming.CheckpointFileManager.isFileScheme(new Path(p), conf) == local, p)
+  }
+
+  test("a session that already names a checkpoint file manager keeps it; " +
+      "the graft start writes no conf") {
+    val s2 = spark.newSession()
+    val named = classOf[FileContextBasedCheckpointFileManager].getName
+    s2.conf.set(managerKey, named)
+    val before = s2.conf.getAll
+    oneHotTrigger(s2)
+    assert(s2.conf.getAll == before)
+    assert(walManager(s2, "/tmp/c").isInstanceOf[FileContextBasedCheckpointFileManager])
+    // the same choice made in the SparkContext's Hadoop conf
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    hadoop.set(managerKey, named)
+    try {
+      val s3 = oneHotTrigger(spark.newSession())
+      assert(s3.conf.getOption(managerKey).isEmpty)
+      assert(walManager(s3, "/tmp/c").isInstanceOf[FileContextBasedCheckpointFileManager])
+    } finally hadoop.unset(managerKey)
+  }
+
+  test("a checkpoint written by Spark's default manager resumes under graft's: " +
+      "every row delivered exactly once, the same .crc files on both sides") {
+    val root = java.nio.file.Files.createTempDirectory("graft_wal_resume").toString
+    val (in, ckpt) = (s"$root/in", s"$root/ckpt")
+    def land(rows: Seq[(Long, String, Double)]): Unit =
+      rows.toDF("event_id", "event_type", "value").coalesce(1)
+        .write.mode("append").parquet(in)
+    land(Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)))
+    val schema = spark.read.parquet(in).schema
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    def collect(b: org.apache.spark.sql.DataFrame): Unit =
+      b.select("event_id").as[Long].collect().foreach(got.add)
+    // leg 1: Spark's default manager (nothing named), one trigger, stop
+    val s1 = spark.newSession()
+    assert(s1.conf.getOption(managerKey).isEmpty)
+    assert(walManager(s1, ckpt).isInstanceOf[FileContextBasedCheckpointFileManager])
+    val first: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, _) => collect(b)
+    val q1 = s1.readStream.schema(schema).parquet(in).writeStream
+      .option("checkpointLocation", ckpt).foreachBatch(first).start()
+    try q1.processAllAvailable() finally q1.stop()
+    def crcs(log: String) = new java.io.File(s"$ckpt/$log").list().filter(_.endsWith(".crc")).toSet
+    assert(crcs("offsets") == Set(".0.crc") && crcs("commits") == Set(".0.crc"))
+    // leg 2: new rows, resumed by hotScaledStream on a fresh session
+    land(Seq((4L, "a", 4.0), (5L, "b", 5.0)))
+    val s2 = spark.newSession()
+    val cfg = new Streams.HotConfig(graft.ops.FilterConfig(
+      scale = 1.0, offset = 0.0, assetAllowlist = None))
+    val q2 = Streams.hotScaledStream(s2.readStream.schema(schema).parquet(in), cfg,
+      checkpointDir = Some(ckpt))((out, _) => collect(out))
+    try q2.processAllAvailable() finally q2.stop()
+    assert(walManager(s2, ckpt).isInstanceOf[graft.streaming.CheckpointFileManager])
+    import scala.jdk.CollectionConverters._
+    assert(got.asScala.toSeq.sorted == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(crcs("offsets") == Set(".0.crc", ".1.crc") &&
+      crcs("commits") == Set(".0.crc", ".1.crc"))
+    // each side's files verify against their checksums when read by the
+    // other side's API (ChecksumFileSystem vs ChecksumFs)
+    val conf = s2.sessionState.newHadoopConf()
+    val fsRead = org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    val fcRead = org.apache.hadoop.fs.FileContext.getLocalFSFileContext(conf)
+    def read(open: Path => java.io.InputStream, p: String) = {
+      val is = open(new Path(p))
+      try new String(is.readAllBytes(), "UTF-8") finally is.close()
+    }
+    for (log <- Seq("offsets", "commits")) {
+      assert(read(fsRead.open(_), s"$ckpt/$log/0").startsWith("v"), log)
+      assert(read(fcRead.open(_), s"$ckpt/$log/1").startsWith("v"), log)
+    }
+  }
 }
+
+/** A local disk under the `graftfc:` scheme, for a FileContext binding
+  * that is not `file:` (StreamingSpec's WAL manager choice).
+  */
+class GraftFcLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftfc:///")
+}
+
+/** The FileContext side of [[GraftFcLocalFileSystem]]. */
+class GraftFcFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new GraftFcLocalFileSystem,
+      conf, "graftfc", false)

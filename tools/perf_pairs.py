@@ -12,10 +12,18 @@ Pair i runs both sides on seed `--seed + i`, the parent first on even pairs
 and the change first on odd ones, so a drift of the host's speed falls on
 both sides alike.
 
+Each run's record (.bench_build/perfbench/results/<workload>-seed<n>-trace0.json
+under its side's checkout) gives the run's host steal share and its load
+sentinel at the end of the run; both are printed per run. A pair is
+contended when either side's steal share is above 5%.
+
 Prints, per metric, each side's median and quartiles, the change's median
 delta, and the pairs the change won by the metric's direction in
-BENCHMARK.json (lower or higher is better), then each side's runs that were
-not `correct` and its failed operations. Exits 1 if any run was not correct.
+BENCHMARK.json (lower or higher is better): once over all pairs and once
+over the uncontended pairs only. A summary that includes a contended pair
+is labelled CONTENDED: such a number is recorded as contended and is not
+evidence. Then each side's runs that were not `correct` and its failed
+operations. Exits 1 if any run was not correct.
 """
 import argparse
 import json
@@ -26,6 +34,7 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+STEAL_CONTENDED = 0.05
 
 
 def checkout(ref):
@@ -54,9 +63,22 @@ def run(d, workload, seed):
         res = json.loads(lines[-1])
     except (IndexError, ValueError):
         res = {}
+    record = os.path.join(d, ".bench_build", "perfbench", "results",
+                          "%s-seed%d-trace0.json" % (workload, seed))
+    try:
+        rec = json.load(open(record))
+    except (OSError, ValueError):
+        rec = {}
     return {"rc": p.returncode, "correct": res.get("correct") is True,
             "failed": res.get("failed"),
+            "steal": rec.get("host_steal_share"),
+            "sentinel_end": (rec.get("load_sentinel_s") or {}).get("end"),
             "metrics": {k: v["value"] for k, v in res.get("metrics", {}).items()}}
+
+
+def contended(r):
+    """Unknown steal counts as contended: the run cannot show it was not."""
+    return r["steal"] is None or r["steal"] > STEAL_CONTENDED
 
 
 def quartiles(xs):
@@ -64,6 +86,29 @@ def quartiles(xs):
         return xs[0], xs[0], xs[0]
     q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, q2, q3
+
+
+def summary(title, runs, idx, better):
+    print("\n%s (%d pairs)" % (title, len(idx)))
+    if not idx:
+        return
+    print("%-26s %-28s %-28s %8s %6s" % ("metric", "parent median (q1-q3)",
+                                       "change median (q1-q3)", "delta", "wins"))
+    names = [n for n in better if any(n in runs["change"][i]["metrics"] for i in idx)]
+    for n in names:
+        pairs = [(runs["parent"][i]["metrics"][n], runs["change"][i]["metrics"][n])
+                 for i in idx
+                 if n in runs["parent"][i]["metrics"] and n in runs["change"][i]["metrics"]]
+        if not pairs:
+            continue
+        pq = quartiles(sorted(p for p, _ in pairs))
+        cq = quartiles(sorted(c for _, c in pairs))
+        sign = -1 if better[n] == "lower" else 1
+        wins = sum(1 for p, c in pairs if sign * (c - p) > 0)
+        delta = (cq[1] - pq[1]) / pq[1] * 100 if pq[1] else float("nan")
+        print("%-26s %-28s %-28s %+7.1f%% %3d/%d" % (
+            n, "%.4g (%.4g-%.4g)" % (pq[1], pq[0], pq[2]),
+            "%.4g (%.4g-%.4g)" % (cq[1], cq[0], cq[2]), delta, wins, len(pairs)))
 
 
 def main():
@@ -83,26 +128,20 @@ def main():
         for side in order:
             r = run(sides[side], args.workload, seed)
             runs[side].append(r)
-            print("pair %d seed %d %-6s rc %d correct %s failed %s %s" % (
+            print("pair %d seed %d %-6s rc %d correct %s failed %s steal %s sentinel_end %s %s" % (
                 i, seed, side, r["rc"], r["correct"], r["failed"],
+                "?" if r["steal"] is None else "%.3f" % r["steal"],
+                "?" if r["sentinel_end"] is None else "%.3fs" % r["sentinel_end"],
                 json.dumps({k: round(v, 3) for k, v in r["metrics"].items()})), flush=True)
-    names = [n for n in better if any(n in r["metrics"] for r in runs["change"])]
-    print("\n%-26s %-28s %-28s %8s %6s" % ("metric", "parent median (q1-q3)",
-                                            "change median (q1-q3)", "delta", "wins"))
-    for n in names:
-        pairs = [(p["metrics"][n], c["metrics"][n])
-                 for p, c in zip(runs["parent"], runs["change"])
-                 if n in p["metrics"] and n in c["metrics"]]
-        if not pairs:
-            continue
-        pq = quartiles(sorted(p for p, _ in pairs))
-        cq = quartiles(sorted(c for _, c in pairs))
-        sign = -1 if better[n] == "lower" else 1
-        wins = sum(1 for p, c in pairs if sign * (c - p) > 0)
-        delta = (cq[1] - pq[1]) / pq[1] * 100 if pq[1] else float("nan")
-        print("%-26s %-28s %-28s %+7.1f%% %3d/%d" % (
-            n, "%.4g (%.4g-%.4g)" % (pq[1], pq[0], pq[2]),
-            "%.4g (%.4g-%.4g)" % (cq[1], cq[0], cq[2]), delta, wins, len(pairs)))
+    every = list(range(args.pairs))
+    hot = [i for i in every if contended(runs["parent"][i]) or contended(runs["change"][i])]
+    clean = [i for i in every if i not in hot]
+    print("\ncontended pairs (steal above %.0f%% on either side): %s" % (
+        STEAL_CONTENDED * 100, ", ".join(map(str, hot)) or "none"))
+    summary("all pairs" + (": CONTENDED, recorded as contended, not evidence" if hot else ""),
+            runs, every, better)
+    summary("uncontended pairs" + ("" if clean else ": none, so every number above is contended"),
+            runs, clean, better)
     bad = False
     for side in ("parent", "change"):
         rs = runs[side]
