@@ -149,6 +149,16 @@ object Streams {
     * around `start()` is not sure to cover them. The setting stays on the
     * session, so every later stream of that session writes its log the
     * same way whichever graft query started first.
+    *
+    * Spark reads the key for every checkpoint file manager it builds, so
+    * once it is set, every checkpoint file of the session's streams goes
+    * through graft's manager, not only the offset and commit logs: the
+    * state-store files (HDFS-backed and RocksDB providers), the file
+    * source's and file sink's metadata logs, and the checkpoints of
+    * streams the caller later starts on the same session outside graft.
+    * The delegate writes the same files as Spark's default manager, so a
+    * checkpoint written under either, state included, resumes under the
+    * other.
     */
   def start[T](ds: Dataset[T])(sink: DataStreamWriter[T] => DataStreamWriter[T])
       : StreamingQuery = {
@@ -493,20 +503,16 @@ object Streams {
     * [[CheckpointFileManager]]: on a local checkpoint each trigger's log
     * entries are written and renamed without the `readlink` process that
     * Hadoop's FileContext rename forks per call. The log's files are
-    * the same either way, so a query can resume a checkpoint that Spark's
-    * default manager wrote.
+    * the same either way.
     *
-    * @param events        streaming events (event_type, value, ... columns)
-    * @param cfg           live config cell; swap() between batches to retune
-    * @param checkpointDir checkpoint to resume from and commit to (None: a
-    *                      temporary one, deleted when the query stops)
-    * @param deliver       per-batch sink callback (batch output, batch id)
+    * @param events  streaming events (event_type, value, ... columns)
+    * @param cfg     live config cell; swap() between batches to retune
+    * @param deliver per-batch sink callback (batch output, batch id)
     */
-  def hotScaledStream(events: DataFrame, cfg: HotConfig,
-                      checkpointDir: Option[String] = None)
+  def hotScaledStream(events: DataFrame, cfg: HotConfig)
                      (deliver: (DataFrame, Long) => Unit)
       : StreamingQuery = {
-    val perBatch: (DataFrame, Long) => Unit = (batch, id) => {
+    start(events)(_.foreachBatch { (batch: DataFrame, id: Long) =>
       val c = cfg.get // one config per batch: the batch boundary is the swap point
       val spark = batch.sparkSession
       import spark.implicits._
@@ -526,9 +532,7 @@ object Streams {
           gated.withColumn("scaled", col("value") * lit(c.scale) + lit(c.offset))
         }
       deliver(out, id)
-    }
-    start(events)(w =>
-      checkpointDir.fold(w)(w.option("checkpointLocation", _)).foreachBatch(perBatch))
+    })
   }
 
   /** O7 error-passthrough host around a per-batch pipeline: on any

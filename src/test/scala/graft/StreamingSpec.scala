@@ -440,8 +440,9 @@ class StreamingSpec extends SparkSpec {
     } finally hadoop.unset(managerKey)
   }
 
-  test("a checkpoint written by Spark's default manager resumes under graft's: " +
-      "every row delivered exactly once, the same .crc files on both sides") {
+  test("a checkpoint written by Spark's default manager, state included, resumes " +
+      "under graft's: every row counted exactly once, the same .crc files on both sides") {
+    import scala.jdk.CollectionConverters._
     val root = java.nio.file.Files.createTempDirectory("graft_wal_resume").toString
     val (in, ckpt) = (s"$root/in", s"$root/ckpt")
     def land(rows: Seq[(Long, String, Double)]): Unit =
@@ -449,32 +450,45 @@ class StreamingSpec extends SparkSpec {
         .write.mode("append").parquet(in)
     land(Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)))
     val schema = spark.read.parquet(in).schema
-    val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    def collect(b: org.apache.spark.sql.DataFrame): Unit =
-      b.select("event_id").as[Long].collect().foreach(got.add)
+    // a stateful query, so the checkpoint holds state-store files and the
+    // file source's metadata log besides the offset and commit logs
+    def counts(s: org.apache.spark.sql.SparkSession) =
+      s.readStream.schema(schema).parquet(in).groupBy("event_type").count()
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long)]()
+    val deliver: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, id) =>
+      b.as[(String, Long)].collect().foreach { case (t, n) => got.add((id, t, n)) }
     // leg 1: Spark's default manager (nothing named), one trigger, stop
     val s1 = spark.newSession()
     assert(s1.conf.getOption(managerKey).isEmpty)
     assert(walManager(s1, ckpt).isInstanceOf[FileContextBasedCheckpointFileManager])
-    val first: (org.apache.spark.sql.DataFrame, Long) => Unit = (b, _) => collect(b)
-    val q1 = s1.readStream.schema(schema).parquet(in).writeStream
-      .option("checkpointLocation", ckpt).foreachBatch(first).start()
+    val q1 = counts(s1).writeStream.option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Update).foreachBatch(deliver).start()
     try q1.processAllAvailable() finally q1.stop()
     def crcs(log: String) = new java.io.File(s"$ckpt/$log").list().filter(_.endsWith(".crc")).toSet
+    val statePart = new java.io.File(s"$ckpt/state/0/0")
+    def stateFiles = statePart.listFiles().filter(_.isFile).map(_.getName).toSet
     assert(crcs("offsets") == Set(".0.crc") && crcs("commits") == Set(".0.crc"))
-    // leg 2: new rows, resumed by hotScaledStream on a fresh session
+    // Hadoop's `.crc` beside each file, and beside Spark's own state
+    // checksum file when that is on
+    val leg1State = stateFiles
+    assert(leg1State("1.delta") && leg1State(".1.delta.crc"), leg1State)
+    // leg 2: new rows, the same query resumed through Streams.start on a
+    // fresh session
     land(Seq((4L, "a", 4.0), (5L, "b", 5.0)))
     val s2 = spark.newSession()
-    val cfg = new Streams.HotConfig(graft.ops.FilterConfig(
-      scale = 1.0, offset = 0.0, assetAllowlist = None))
-    val q2 = Streams.hotScaledStream(s2.readStream.schema(schema).parquet(in), cfg,
-      checkpointDir = Some(ckpt))((out, _) => collect(out))
+    val q2 = Streams.start(counts(s2))(_.option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Update).foreachBatch(deliver))
     try q2.processAllAvailable() finally q2.stop()
     assert(walManager(s2, ckpt).isInstanceOf[graft.streaming.CheckpointFileManager])
-    import scala.jdk.CollectionConverters._
-    assert(got.asScala.toSeq.sorted == Seq(1L, 2L, 3L, 4L, 5L))
+    assert(walManager(s2, statePart.toString).isInstanceOf[graft.streaming.CheckpointFileManager])
+    // leg 2 counts on from leg 1's state: a and b reach 2, batch 0 is not
+    // replayed
+    assert(got.asScala.toSet == Set((0L, "a", 1L), (0L, "b", 1L), (0L, "c", 1L),
+      (1L, "a", 2L), (1L, "b", 2L)))
+    assert(got.size == 5)
     assert(crcs("offsets") == Set(".0.crc", ".1.crc") &&
       crcs("commits") == Set(".0.crc", ".1.crc"))
+    assert(stateFiles == leg1State ++ leg1State.map(_.replace("1.delta", "2.delta")))
     // each side's files verify against their checksums when read by the
     // other side's API (ChecksumFileSystem vs ChecksumFs)
     val conf = s2.sessionState.newHadoopConf()
@@ -482,12 +496,14 @@ class StreamingSpec extends SparkSpec {
     val fcRead = org.apache.hadoop.fs.FileContext.getLocalFSFileContext(conf)
     def read(open: Path => java.io.InputStream, p: String) = {
       val is = open(new Path(p))
-      try new String(is.readAllBytes(), "UTF-8") finally is.close()
+      try is.readAllBytes() finally is.close()
     }
     for (log <- Seq("offsets", "commits")) {
-      assert(read(fsRead.open(_), s"$ckpt/$log/0").startsWith("v"), log)
-      assert(read(fcRead.open(_), s"$ckpt/$log/1").startsWith("v"), log)
+      assert(new String(read(fsRead.open(_), s"$ckpt/$log/0"), "UTF-8").startsWith("v"), log)
+      assert(new String(read(fcRead.open(_), s"$ckpt/$log/1"), "UTF-8").startsWith("v"), log)
     }
+    assert(read(fsRead.open(_), s"$statePart/1.delta").nonEmpty)
+    assert(read(fcRead.open(_), s"$statePart/2.delta").nonEmpty)
   }
 }
 

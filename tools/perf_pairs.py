@@ -12,9 +12,9 @@ Pair i runs both sides on seed `--seed + i`, the parent first on even pairs
 and the change first on odd ones, so a drift of the host's speed falls on
 both sides alike.
 
-Each run's record (.bench_build/perfbench/results/<workload>-seed<n>-trace0.json
-under its side's checkout) gives the run's host steal share and its load
-sentinel at the end of the run; both are printed per run. A pair is
+Each run's `perfbench {...}` summary line on stdout gives the run's host
+steal share and its load sentinel at the end of the run; both are printed
+per run. A pair is
 contended when either side's steal share is above 5%.
 
 Prints, per metric, each side's median and quartiles, the change's median
@@ -63,12 +63,13 @@ def run(d, workload, seed):
         res = json.loads(lines[-1])
     except (IndexError, ValueError):
         res = {}
-    record = os.path.join(d, ".bench_build", "perfbench", "results",
-                          "%s-seed%d-trace0.json" % (workload, seed))
-    try:
-        rec = json.load(open(record))
-    except (OSError, ValueError):
-        rec = {}
+    rec = {}
+    for line in lines:
+        if line.startswith("perfbench "):
+            try:
+                rec = json.loads(line[len("perfbench "):])
+            except ValueError:
+                pass
     return {"rc": p.returncode, "correct": res.get("correct") is True,
             "failed": res.get("failed"),
             "steal": rec.get("host_steal_share"),
