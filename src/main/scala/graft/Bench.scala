@@ -255,8 +255,8 @@ object Bench {
           // run one at a time and every streaming query a defn started has
           // been stopped before its timing returns, so nothing concurrent can
           // own a persistent RDD here. A concurrent harness must switch to
-          // per-query lineage tracking (Dedup.connectedComponents's pinnedIds
-          // pattern) instead of sweeping the context-global registry.
+          // per-query lineage tracking (the `Pin.scope` pattern) instead of
+          // sweeping the context-global registry.
           spark.sparkContext.getPersistentRDDs.values
             .foreach(_.unpersist(blocking = false))
           val t0 = System.nanoTime()

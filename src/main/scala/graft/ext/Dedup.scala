@@ -363,50 +363,40 @@ object Dedup {
     * deltas past the local-fold guard: endpoint labels by a broadcast
     * semi-join, the collapsed graph through [[connectedComponents]], and
     * every intermediate generation released before returning
-    * (CheckpointGen).
+    * ([[graft.util.Pin.scope]]).
     */
   private[graft] def incrementalCcLabelUpdatesDistributed(labels: DataFrame,
-      newPairs: DataFrame, batchIds: DataFrame): DataFrame = {
-    val sc = labels.sparkSession.sparkContext
-    var pins = Set.empty[Int]
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.pin()
-      pins ++= graft.util.CheckpointGen.pinnedIds(c)
-      c
+      newPairs: DataFrame, batchIds: DataFrame): DataFrame =
+    graft.util.Pin.scope { pins =>
+      val ends = pins(newPairs.select(col("i").as("id"))
+        .unionAll(newPairs.select(col("j").as("id"))).distinct())
+      // endpoint label lookup WITHOUT shuffling the label table: the
+      // delta-sized endpoint set broadcasts into a semi join, labels
+      // stream map-side (q232's plain left join would SMJ-shuffle the
+      // corpus-sized label table — fine at oracle scale, not at 100 TB)
+      val endLabels =
+        pins(labels.join(broadcast(ends), Seq("id"), "left_semi"))
+      val collapsed = newPairs
+        .join(endLabels.select(col("id").as("i"), col("label").as("li")),
+          Seq("i"), "left")
+        .join(endLabels.select(col("id").as("j"), col("label").as("lj")),
+          Seq("j"), "left")
+        .select(coalesce(col("li"), col("i")).as("i"),
+          coalesce(col("lj"), col("j")).as("j"))
+      val delta = pins.adopt(connectedComponents(collapsed))
+        .select(col("id").as("dl"), col("label").as("nlabel"))
+      val changed = labels.join(broadcast(delta), col("label") === col("dl"))
+        .filter(col("nlabel") =!= col("label"))
+        .select(col("id"), col("nlabel").as("label"))
+      val fresh = ends
+        .join(endLabels.select(col("id")), Seq("id"), "left_anti")
+        .join(delta, col("id") === col("dl"), "left")
+        .select(col("id"), coalesce(col("nlabel"), col("id")).as("label"))
+      val singles = batchIds.select(col(batchIds.columns.head).as("id"))
+        .join(ends, Seq("id"), "left_anti")
+        .select(col("id"), col("id").as("label"))
+      changed.unionByName(fresh).unionByName(singles).pin()
     }
-    val ends = ckpt(newPairs.select(col("i").as("id"))
-      .unionAll(newPairs.select(col("j").as("id"))).distinct())
-    // endpoint label lookup WITHOUT shuffling the label table: the
-    // delta-sized endpoint set broadcasts into a semi join, labels stream
-    // map-side (q232's plain left join would SMJ-shuffle the corpus-sized
-    // label table — fine at oracle scale, not at 100 TB)
-    val endLabels = ckpt(labels.join(broadcast(ends), Seq("id"), "left_semi"))
-    val collapsed = newPairs
-      .join(endLabels.select(col("id").as("i"), col("label").as("li")),
-        Seq("i"), "left")
-      .join(endLabels.select(col("id").as("j"), col("label").as("lj")),
-        Seq("j"), "left")
-      .select(coalesce(col("li"), col("i")).as("i"),
-        coalesce(col("lj"), col("j")).as("j"))
-    val delta = connectedComponents(collapsed)
-      .select(col("id").as("dl"), col("label").as("nlabel"))
-    pins ++= graft.util.CheckpointGen.pinnedIds(delta)
-    val changed = labels.join(broadcast(delta), col("label") === col("dl"))
-      .filter(col("nlabel") =!= col("label"))
-      .select(col("id"), col("nlabel").as("label"))
-    val fresh = ends
-      .join(endLabels.select(col("id")), Seq("id"), "left_anti")
-      .join(delta, col("id") === col("dl"), "left")
-      .select(col("id"), coalesce(col("nlabel"), col("id")).as("label"))
-    val singles = batchIds.select(col(batchIds.columns.head).as("id"))
-      .join(ends, Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("label"))
-    val updates = changed.unionByName(fresh).unionByName(singles)
-      .pin()
-    graft.util.CheckpointGen.release(sc,
-      pins -- graft.util.CheckpointGen.pinnedIds(updates))
-    updates
-  }
 
   /** Apply an [[incrementalCcLabelUpdates]] set to a label table: updated
     * ids override, new ids insert (the label table streams against the
@@ -628,39 +618,20 @@ object Dedup {
     val caller = pairs.sparkSession
     val spark = caller.newSession()
     spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    val sc = spark.sparkContext
-    // Each localCheckpoint pins its blocks in the block manager until the
-    // session dies — a convergence loop that checkpoints every 2 rounds
-    // would otherwise GROW memory linearly in rounds (and CC on a 100 TB
-    // corpus graph can run tens of rounds). Track the persistent RDDs each
-    // checkpoint creates and release every generation as soon as the next
-    // one is materialized; only the RETURNED labels stay pinned (|V| rows —
-    // the caller reads them through the re-anchor below). Ids are derived
-    // from the checkpointed frame's OWN rdd lineage (the persistent
-    // ancestors of its truncated plan), never by diffing the registry:
-    // getPersistentRDDs is SparkContext-GLOBAL (newSession shares the
-    // context), so a registry diff could capture blocks a concurrent query
-    // or streaming trigger pinned during the window and wrongly release
-    // them. Lineage truncation also keeps the walk from reaching caller-
-    // pinned upstreams — only this checkpoint's generation is collected
-    // (shared discipline: graft.util.CheckpointGen).
-    def checkpointed(df: => DataFrame): (DataFrame, Set[Int]) = {
-      val out = df
-      (out, graft.util.CheckpointGen.pinnedIds(out))
-    }
-    def release(ids: Set[Int]): Unit =
-      graft.util.CheckpointGen.release(sc, ids)
-    val result = locally {
+    // Each pin holds its blocks until released: a convergence loop that
+    // pins every 2 rounds would otherwise GROW memory linearly in rounds
+    // (and CC on a 100 TB corpus graph can run tens of rounds). Every
+    // generation is released as soon as the next one is materialized;
+    // only the RETURNED labels stay pinned (|V| rows — the caller reads
+    // them through the re-anchor below). See graft.util.Pin.
+    graft.util.Pin.scope { pins =>
       // materialize the caller-built pair list ONCE before doubling it:
       // the two union branches would otherwise each recompute the full
       // upstream pair pipeline (same measured hazard as in
       // Graph.pageRank — exchange reuse does not cross union branches)
       val pairsSrc = pairs.select(col("i").as("src"), col("j").as("dst"))
-      val (base, baseIds) = checkpointed {
-        spark.createDataFrame(pairsSrc.rdd, pairsSrc.schema)
-          .repartition(partitions)
-          .pin()
-      }
+      val base = pins(spark.createDataFrame(pairsSrc.rdd, pairsSrc.schema)
+        .repartition(partitions))
       // guarded local fixpoint (see [[LocalCcMaxEdges]]): probe the
       // checkpointed edge list; a driver-bounded long-keyed graph folds
       // in one union-find pass ([[unionFindMinRoots]] — EXACTLY the
@@ -668,7 +639,7 @@ object Dedup {
       // endpoint keep the distributed loop.
       localEdges(base) match {
         case Some(edgeRows) =>
-          release(baseIds)
+          pins.release(base)
           val root = unionFindMinRoots(edgeRows.iterator)
           import scala.jdk.CollectionConverters._
           val labelRows: java.util.List[org.apache.spark.sql.Row] =
@@ -679,82 +650,82 @@ object Dedup {
               org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField("label",
               org.apache.spark.sql.types.LongType)))
-          return (caller.createDataFrame(labelRows, schema),
-            root.size.toLong)
-        case None => ()
+          (caller.createDataFrame(labelRows, schema), root.size.toLong)
+        case None =>
+          val edges = pins(base.unionAll(
+            base.select(col("dst").as("src"), col("src").as("dst"))))
+          pins.release(base) // edges is truncated — the one-directional copy is dead
+          val (labels, n) = propagate(edges, maxRounds, pins)
+          // hand the (checkpointed, tiny) labels back on the CALLER's
+          // session: returning the child-session DataFrame would silently
+          // run every downstream join/aggregate chained onto it at the
+          // narrow pair-graph width — exactly the corpus-scale-work-
+          // inherits-4-partitions hazard this function's width isolation
+          // exists to prevent
+          (caller.createDataFrame(labels.rdd, labels.schema),
+            n.getOrElse(labels.count()))
       }
-      val (edges, edgeIds) = checkpointed {
-        base.unionAll(base.select(col("dst").as("src"), col("src").as("dst")))
-          .pin() // computed once, re-read every iteration
-      }
-      release(baseIds) // edges is truncated — the one-directional copy is dead
-      // one propagation round: neighbor hop (min label over incoming edges)
-      // then pointer jump (label := label of label) — reach doubles per
-      // round, so any diameter converges in O(log d) rounds. The plan stays
-      // LAZY so two rounds fuse into a single materialization below.
-      def oneRound(l: DataFrame): DataFrame = {
-        val prop = edges.join(l, col("src") === col("id"))
-          .groupBy(col("dst")).agg(min(col("label")).as("nlabel"))
-        val p1 = l.join(prop, col("id") === col("dst"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        val byLabel = p1.select(col("id").as("jid"), col("label").as("jlabel"))
-        p1.join(byLabel, col("label") === col("jid"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("jlabel"), col("label"))).as("label"))
-      }
-      var (labels, labelIds) = checkpointed {
-        edges.select(col("src").as("id")).distinct()
-          .withColumn("label", col("id"))
-          .pin()
-      }
-      var round = 0
-      var converged = false
-      // |labels| rides each generation's checkpoint job as an observed
-      // metric (a piggybacked count agg — no separate job); the LAST
-      // generation's value is the result's row count
-      var lastN: Option[Long] = None
-      while (!converged && round < maxRounds) {
-        // TWO rounds per materialization (reach ×4), then ONE checkpoint:
-        // the lineage must be truncated each outer iteration (the update
-        // references its input twice → 2^k plan blowup measured at 132 s
-        // vs ~2 s) but a bounded 2-round unroll is fine. On a cluster use
-        // checkpoint() instead of localCheckpoint().
-        val observed = oneRound(oneRound(labels))
-          .observe(s"cc_n_$round", count(lit(1)).as("n"))
-        val (next, nextIds) = checkpointed {
-          observed.pin()
-        }
-        // non-blocking read: the eager checkpoint already ran the plan, so
-        // the metric row is present; if the action ever bypassed metric
-        // collection this stays None and the caller-side count() fallback
-        // fires instead of hanging
-        lastN = observed.queryExecution.observedMetrics.get(s"cc_n_$round")
-          .map(_.getLong(0)).orElse(lastN)
-        labels = next
-        release(labelIds) // previous generation is dead once `next` is live
-        labelIds = nextIds
-        round += 2
-        // fixpoint test with NO history: a labeling is converged iff every
-        // edge has equal endpoint labels (labels are always component
-        // member ids, so edge-uniformity implies label(label)=label too).
-        // take(1)-style isEmpty, not a full count.
-        val l1 = labels.select(col("id").as("sid"), col("label").as("slabel"))
-        val l2 = labels.select(col("id").as("did"), col("label").as("dlabel"))
-        converged = edges
-          .join(l1, col("src") === col("sid")).join(l2, col("dst") === col("did"))
-          .filter(col("slabel") =!= col("dlabel")).isEmpty
-      }
-      release(edgeIds) // final labels are checkpointed — the edge list is dead
-      (labels, lastN)
     }
-    // hand the (checkpointed, tiny) labels back on the CALLER's session:
-    // returning the child-session DataFrame would silently run every
-    // downstream join/aggregate chained onto it at the narrow pair-graph
-    // width — exactly the corpus-scale-work-inherits-4-partitions hazard
-    // this function's width isolation exists to prevent
-    val (labels, observedN) = result
-    (caller.createDataFrame(labels.rdd, labels.schema),
-      observedN.getOrElse(labels.count()))
+  }
+
+  /** The distributed min-label propagation of [[connectedComponentsCounted]]
+    * over pinned doubled `edges`: the final labels and, when the last
+    * generation's observed metric arrived, their row count. Every
+    * generation pins into `pins`; each is released once its successor is
+    * live.
+    */
+  private def propagate(edges: DataFrame, maxRounds: Int,
+      pins: graft.util.Pin.Scope): (DataFrame, Option[Long]) = {
+    // one propagation round: neighbor hop (min label over incoming edges)
+    // then pointer jump (label := label of label) — reach doubles per
+    // round, so any diameter converges in O(log d) rounds. The plan stays
+    // LAZY so two rounds fuse into a single materialization below.
+    def oneRound(l: DataFrame): DataFrame = {
+      val prop = edges.join(l, col("src") === col("id"))
+        .groupBy(col("dst")).agg(min(col("label")).as("nlabel"))
+      val p1 = l.join(prop, col("id") === col("dst"), "left")
+        .select(col("id"),
+          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
+      val byLabel = p1.select(col("id").as("jid"), col("label").as("jlabel"))
+      p1.join(byLabel, col("label") === col("jid"), "left")
+        .select(col("id"),
+          least(col("label"), coalesce(col("jlabel"), col("label"))).as("label"))
+    }
+    var labels = pins(edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")))
+    var round = 0
+    var converged = false
+    // |labels| rides each generation's checkpoint job as an observed
+    // metric (a piggybacked count agg — no separate job); the LAST
+    // generation's value is the result's row count
+    var lastN: Option[Long] = None
+    while (!converged && round < maxRounds) {
+      // TWO rounds per materialization (reach ×4), then ONE checkpoint:
+      // the lineage must be truncated each outer iteration (the update
+      // references its input twice → 2^k plan blowup measured at 132 s
+      // vs ~2 s) but a bounded 2-round unroll is fine.
+      val observed = oneRound(oneRound(labels))
+        .observe(s"cc_n_$round", count(lit(1)).as("n"))
+      val next = pins(observed)
+      // non-blocking read: the eager checkpoint already ran the plan, so
+      // the metric row is present; if the action ever bypassed metric
+      // collection this stays None and the caller-side count() fallback
+      // fires instead of hanging
+      lastN = observed.queryExecution.observedMetrics.get(s"cc_n_$round")
+        .map(_.getLong(0)).orElse(lastN)
+      pins.release(labels) // previous generation is dead once `next` is live
+      labels = next
+      round += 2
+      // fixpoint test with NO history: a labeling is converged iff every
+      // edge has equal endpoint labels (labels are always component
+      // member ids, so edge-uniformity implies label(label)=label too).
+      // take(1)-style isEmpty, not a full count.
+      val l1 = labels.select(col("id").as("sid"), col("label").as("slabel"))
+      val l2 = labels.select(col("id").as("did"), col("label").as("dlabel"))
+      converged = edges
+        .join(l1, col("src") === col("sid")).join(l2, col("dst") === col("did"))
+        .filter(col("slabel") =!= col("dlabel")).isEmpty
+    }
+    (labels, lastN)
   }
 }

@@ -66,34 +66,19 @@ object Graph {
     // iterative chain of sub-second jobs whose shapes are already known —
     // off for the loop (session-scoped; the caller's conf is untouched)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val sc = spark.sparkContext
-    // checkpoint-generation tracking, same discipline as
-    // [[Dedup.connectedComponents]]: every pinned block set is released as
-    // soon as its successor is materialized, so the operator's resident
-    // footprint is ONE edge copy during the loop and only the |V|-row final
-    // ranks after it returns — not session-lifetime pins of 2|E| rows.
-    // Ids come from the checkpointed frame's own (truncated) rdd lineage,
-    // not a getPersistentRDDs diff — the registry is SparkContext-global,
-    // so a diff could capture and wrongly release blocks pinned by a
-    // concurrent query or streaming trigger during the window (shared
-    // discipline: graft.util.CheckpointGen).
-    def checkpointed(df: => DataFrame): (DataFrame, Set[Int]) = {
-      val out = df
-      (out, graft.util.CheckpointGen.pinnedIds(out))
-    }
-    def release(ids: Set[Int]): Unit =
-      graft.util.CheckpointGen.release(sc, ids)
-    val result = locally {
+    // every pin is released as soon as its successor is materialized
+    // (graft.util.Pin), so the operator's resident footprint is ONE edge
+    // copy during the loop and only the |V|-row final ranks after it
+    // returns — not session-lifetime pins of 2|E| rows
+    graft.util.Pin.scope { pins =>
       // materialize the caller-built edge list ONCE before doubling it:
       // the two union branches below would otherwise each recompute the
       // full upstream build (exchange reuse does not cross union branches
       // here — measured as the dominant cost of the whole operator)
-      val (pairs0, pairs0Ids) = checkpointed {
-        DevTiming("pr", "edge build ckpt")(spark.createDataFrame(
+      val pairs0 = DevTiming("pr", "edge build ckpt")(pins(
+        spark.createDataFrame(
           undirectedEdges.select(col("src"), col("dst")).rdd,
-          undirectedEdges.select(col("src"), col("dst")).schema)
-          .pin())
-      }
+          undirectedEdges.select(col("src"), col("dst")).schema)))
       val both = pairs0.unionAll(
         pairs0.select(col("dst").as("src"), col("src").as("dst")))
       // the degree table is checkpointed EAGERLY (it is tiny — |V| rows)
@@ -102,29 +87,23 @@ object Graph {
       // it twice), and (b) nothing downstream references pairs0 once
       // edgesW is live — releasing pairs0 early with a live lazy `deg`
       // would lose its checkpoint blocks mid-broadcast.
-      val (deg, degIds) = checkpointed {
-        DevTiming("pr", "degree ckpt")(
-          both.groupBy("src").agg(count(lit(1)).as("deg")).pin())
-      }
-      val (edgesW, edgesWIds) = checkpointed {
-        DevTiming("pr", "edgesW ckpt")(both.join(broadcast(deg), "src").pin())
-      }
-      release(pairs0Ids) // edgesW is truncated — the raw pair copy is dead
+      val deg = DevTiming("pr", "degree ckpt")(
+        pins(both.groupBy("src").agg(count(lit(1)).as("deg"))))
+      val edgesW = DevTiming("pr", "edgesW ckpt")(
+        pins(both.join(broadcast(deg), "src")))
+      pins.release(pairs0) // edgesW is truncated — the raw pair copy is dead
       var ranks = deg.select(col("src").as("id"), lit(1000000L).as("r"))
       for (_ <- 1 to iterations) ranks = rankStep(edgesW, ranks)
       // materialize the final ranks (|V| rows) so the 2|E| weighted edge
-      // list can be released NOW instead of staying pinned for the session,
-      // and so downstream actions replay a table read, not the whole loop
+      // list is released when the scope exits instead of staying pinned
+      // for the session, and so downstream actions replay a table read,
+      // not the whole loop
       val out = DevTiming("pr", s"$iterations rank rounds + final ckpt")(
-        ranks.select(col("id"), (col("r") / 1000000.0).as("rank"))
-          .pin())
-      release(edgesWIds)
-      release(degIds)
-      out
+        ranks.select(col("id"), (col("r") / 1000000.0).as("rank")).pin())
+      // re-anchor on the caller's session so downstream ops do not
+      // silently inherit the narrow loop width
+      caller.createDataFrame(out.rdd, out.schema)
     }
-    // re-anchor on the caller's session so downstream ops do not silently
-    // inherit the narrow loop width
-    caller.createDataFrame(result.rdd, result.schema)
   }
 
   /** One propagation round over `(src, dst, deg)` edges and `(id, r)`
@@ -223,8 +202,8 @@ object Graph {
     * by induction), hence the changed set is eventually empty and the
     * loop stops on the first round that moves nothing. Rounds needed are
     * small (tight near-dup clusters converge in 1–2; bounded by a
-    * diameter-ish quantity); each round localCheckpoints and releases
-    * its predecessor (CheckpointGen), bounding resident state to one
+    * diameter-ish quantity); each round pins and releases its
+    * predecessor ([[graft.util.Pin.scope]]), bounding resident state to one
     * edge copy + two |V|-row tables + a frontier. Fails loudly if
     * `maxRounds` is hit without convergence rather than returning a
     * non-fixpoint.
@@ -362,34 +341,33 @@ object Graph {
       nBuckets: Int): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive (got $nBuckets)")
     val s = undirectedEdges.sparkSession
-    // materialize once before doubling (union branches do not share
-    // exchanges — the pageRank lesson)
-    val pairs0 = undirectedEdges.select(col("src"), col("dst"))
-      .pin()
-    val pins = graft.util.CheckpointGen.pinnedIds(pairs0)
-    pairs0.unionAll(
-        pairs0.select(col("dst").as("src"), col("src").as("dst")))
-      .select(col("src").as("v"), col("dst").as("u"))
-      .withColumn("b", edgeBucket(col("v"), nBuckets))
-      .repartition(col("b"))
-      .sortWithinPartitions(col("b"), col("v"))
-      // finer pages than the 20k-row default: the page is the reader's
-      // within-rowgroup pruning unit (column-index min-max), and this
-      // layout exists to serve NARROW v-range probes — 4096-row pages
-      // (~64 KB of raw longs) put the pruning floor at
-      // 4096·files instead of 20000·files for ~0.5% metadata overhead.
-      // Measured on the 500k-vertex tree peel: the mid-width rounds'
-      // probe reads floor at 1 page per hit file either way, so finer
-      // pages cut the floor 5×.
-      .write.mode("overwrite").partitionBy("b")
-      .option("parquet.page.row.count.limit", "4096")
-      .parquet(dir)
+    graft.util.Pin.scope { pins =>
+      // materialize once before doubling (union branches do not share
+      // exchanges — the pageRank lesson)
+      val pairs0 = pins(undirectedEdges.select(col("src"), col("dst")))
+      pairs0.unionAll(
+          pairs0.select(col("dst").as("src"), col("src").as("dst")))
+        .select(col("src").as("v"), col("dst").as("u"))
+        .withColumn("b", edgeBucket(col("v"), nBuckets))
+        .repartition(col("b"))
+        .sortWithinPartitions(col("b"), col("v"))
+        // finer pages than the 20k-row default: the page is the reader's
+        // within-rowgroup pruning unit (column-index min-max), and this
+        // layout exists to serve NARROW v-range probes — 4096-row pages
+        // (~64 KB of raw longs) put the pruning floor at
+        // 4096·files instead of 20000·files for ~0.5% metadata overhead.
+        // Measured on the 500k-vertex tree peel: the mid-width rounds'
+        // probe reads floor at 1 page per hit file either way, so finer
+        // pages cut the floor 5×.
+        .write.mode("overwrite").partitionBy("b")
+        .option("parquet.page.row.count.limit", "4096")
+        .parquet(dir)
+    }
     // sidecar AFTER the data write (overwrite mode clears the dir first)
     val p = new org.apache.hadoop.fs.Path(dir, "_buckets")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try out.write(nBuckets.toString.getBytes("UTF-8")) finally out.close()
-    graft.util.CheckpointGen.release(s.sparkContext, pins)
   }
 
   /** The bucket count a [[writeBucketedEdges]] layout was written with
@@ -550,342 +528,331 @@ object Graph {
     val spark = caller.newSession()
     spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val sc = spark.sparkContext
-    def release(ids: Set[Int]): Unit =
-      graft.util.CheckpointGen.release(sc, ids)
-    val result = locally {
-      // edge source: in-memory (Left) doubles + pre-partitions +
-      // checkpoints the caller's frame; bucketed (Right) reads the
-      // persisted doubled layout — nothing 2|E|-sized is ever pinned,
-      // and frontier-local rounds prune the scan to hit buckets.
-      val (bothAll, both, bothIds, nBuckets) = edgesIn match {
+    // every pin is released once its successor is live (graft.util.Pin)
+    graft.util.Pin.scope { pins =>
+      // the distributed h-index fixpoint over the doubled edges `both`
+      // (`bothAll` keeps the bucket column in bucketed mode)
+      def fixpoint(bothAll: DataFrame, both: DataFrame,
+          nBuckets: Int): DataFrame = {
+        val bucketedMode = nBuckets > 0
+        // the value table carries each vertex's INITIAL degree alongside its
+        // current value for the whole loop: deg is what makes the frontier's
+        // exact incident-edge count (Σ deg over the frontier) a free
+        // aggregate over the already-checkpointed frontier — the quantity
+        // that decides each round's join direction (see scaladoc).
+        var c = DevTiming("coreness", "setup: degrees")(pins(
+          both.groupBy("v").agg(count(lit(1)).as("c"))
+            .select(col("v").as("id"), col("c"), col("c").as("deg"))))
+        val nVerts = c.count()
+        // DELTA SCHEDULING (the asynchronous variant of Lü et al. 2016,
+        // r15 verdict #4): a vertex's h value is a function of its
+        // NEIGHBORS' values only, so a vertex none of whose neighbors
+        // changed last round cannot change this round. Each round
+        // re-evaluates exactly the neighbors of last round's changed set;
+        // the iterates equal the full synchronous schedule's round for
+        // round (the restriction drops only provably-unchanged work), so
+        // checksums, convergence depth, and the maxRounds pin are
+        // unchanged — only the per-round work shrinks, from Θ(|E|) every
+        // round to |edges incident to the still-moving frontier|.
+        // Broadcast-vs-shuffle is decided per frame by the same ceiling:
+        // the frontier frames (active/evald/changed) are frontier-sized
+        // and broadcast long after the value table stops fitting.
+        val auto = schedule == "auto"
+        // current schedule mode; auto starts synchronous (no frontier
+        // bookkeeping) and flips permanently when the rule fires
+        var delta = schedule == "delta"
+        var active: Option[DataFrame] = None // None = all vertices (round 1)
+        var nActive = nVerts
+        // bucketed mode: the frontier's bucket set (≤ nBuckets ints,
+        // collected on the SAME stats action that sizes the frontier) —
+        // next round's pruned-probe in-filter — plus its [min(v), max(v)]
+        // id-range, pushed into the scan so parquet rowgroup/page min-max
+        // stats on the v-sorted layout prune WITHIN hit files (the
+        // mid-width regime, r18 verdict #2)
+        var hitBuckets: Seq[Int] = Seq.empty
+        var vRange: Option[(Any, Any)] = None
+        // exact incident-edge count of the current frontier (Σ deg), the
+        // quantity that decides this round's join direction; MaxValue while
+        // the frontier is "all vertices" (round 1 / sync rounds)
+        var nIncident = Long.MaxValue
+        var rounds = 0
+        val byV = org.apache.spark.sql.expressions.Window
+          .partitionBy("v").orderBy(col("cu").desc)
+        while (nActive > 0) {
+          require(rounds < maxRounds,
+            s"coreness did not converge within $maxRounds h-index rounds")
+          onRoundStats(rounds, nActive)
+          // FRONTIER-LOCAL round (see scaladoc): once the frontier's
+          // incident edges fit the broadcast ceiling and undercut |V|, the
+          // touched edges are materialized once and broadcast into
+          // stream-scans of the value table — no |V|-row driver builds.
+          val frontierLocal = delta && active.isDefined &&
+            nIncident <= broadcastVertexCeiling && nIncident < nVerts
+          val touched = active match {
+            case None => both
+            case Some(a) =>
+              val aSide =
+                if (nActive <= broadcastVertexCeiling) broadcast(a) else a
+              // bucketed mode, frontier-local round: prune the probe to
+              // the frontier's bucket set AT THE SCAN — the in-filter on
+              // the partition column reaches PartitionFilters, so non-hit
+              // bucket dirs are never read. Dropped rows cannot survive
+              // the v semi-join (their bucket holds no frontier vertex),
+              // so the iterates are unchanged (Round18Spec pins both the
+              // equality and, via onRoundScan, the file-count shrink).
+              val src =
+                if (bucketedMode && frontierLocal) {
+                  // every frontier vertex satisfies both pushed predicates
+                  // by construction (its bucket is in the hit set, its id
+                  // inside the frontier's [min, max]), so no edge that
+                  // could survive the v semi-join is dropped; the range
+                  // reaches the parquet reader's rowgroup/page stats on
+                  // the v-sorted layout
+                  val pruned = bothAll
+                    .filter(col("b").isInCollection(hitBuckets))
+                  vRange.fold(pruned) { case (lo, hi) =>
+                    pruned.filter(col("v").between(lit(lo), lit(hi)))
+                  }.drop("b")
+                } else both
+              val t = src.join(aSide, Seq("v"), "left_semi")
+              if (!frontierLocal) t
+              else {
+                val tPlan = t.select(col("v"), col("u"))
+                val tm = DevTiming("coreness", s"round $rounds: touched")(
+                  pins(tPlan))
+                if (bucketedMode) {
+                  // scan telemetry off the just-executed plan (driver-side
+                  // metric walk, no extra job): files read, and the rows
+                  // the file scan OUTPUT — after parquet rowgroup/page
+                  // pruning on the pushed v-range, so the mid-width
+                  // within-file prune is visible per round
+                  val fileLeaves = tPlan.queryExecution.executedPlan
+                    .collectLeaves()
+                    .filter(_.metrics.contains("numFiles"))
+                  val files =
+                    fileLeaves.flatMap(_.metrics.get("numFiles")).map(_.value).sum
+                  val rowsOut = fileLeaves
+                    .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
+                  onRoundScan(rounds, files, hitBuckets.size.toLong, rowsOut)
+                }
+                tm
+              }
+          }
+          // h-index over DISTINCT neighbor values: h = max_d min(d, N>=d)
+          // for d ranging over the distinct values (exact — see scaladoc).
+          // The groupBy(v, cu) partial-aggregates map-side, so the shuffle
+          // and the window sort see (vertex, distinct value) rows — on a
+          // clustered graph a few per vertex — instead of one row PER EDGE
+          // (the former row_number formulation sorted all 2|E| rows every
+          // round; on the 29M-edge ring-of-cliques that sort was the whole
+          // cost). Join direction by round shape: wide rounds broadcast the
+          // value table into the edge scan (ceiling-guarded);
+          // frontier-local rounds broadcast the touched edges and STREAM
+          // the value table.
+          val neighborVals =
+            if (frontierLocal)
+              c.join(broadcast(touched), c("id") === touched("u"))
+            else {
+              val cSide =
+                if (nVerts <= broadcastVertexCeiling) broadcast(c) else c
+              touched.join(cSide, touched("u") === cSide("id"))
+            }
+          val evald = neighborVals
+            .select(col("v"), col("c").as("cu"))
+            .groupBy("v", "cu").agg(count(lit(1)).as("cnt"))
+            .withColumn("cum", sum(col("cnt")).over(byV
+              .rowsBetween(org.apache.spark.sql.expressions
+                .Window.unboundedPreceding, 0)))
+            .groupBy("v").agg(max(least(col("cu"), col("cum"))).as("h"))
+          // merge the (active-only) evaluation back into the value table;
+          // `chg` marks the rows that actually moved. evald is
+          // frontier-sized, so it broadcasts into the left join and the
+          // |V|-row value table streams map-side.
+          val eSide =
+            if (nActive <= broadcastVertexCeiling && nActive * 2 < nVerts)
+              broadcast(evald)
+            else evald
+          val merged = DevTiming("coreness", s"round $rounds: eval+merge")(
+            pins(c.join(eSide, c("id") === eSide("v"), "left")
+            .select(col("id"), coalesce(col("h"), col("c")).as("c"),
+              col("deg"),
+              (col("h").isNotNull && col("h") =!= col("c")).as("chg"))))
+          // VALUE-AWARE frontier pass (see scaladoc): a changed neighbor
+          // whose NEW value is still >= h_v cannot move v — for every
+          // d <= h_v both the old and the new value count toward N_{>=d},
+          // so N_{>=h_v} is untouched and h_v stays attainable (values
+          // only decrease, so h cannot rise). Hence v re-evaluates ONLY if
+          // SOME changed neighbor's new value undercuts its current h.
+          // Termination is frontier-empty (implied by nothing-changed).
+          // Shared by the delta schedule's per-round advance and the auto
+          // schedule's sync→delta flip (which passes its already-known
+          // changed count so no job repeats).
+          def advanceFrontier(knownChanged: Option[Long]): Unit = {
+            val changed = merged.filter(col("chg"))
+              .select(col("id").as("chid"), col("c").as("cnew"))
+            val nextActive = DevTiming("coreness", s"round $rounds: frontier")(
+              pins(if (frontierLocal) {
+                // reuse the materialized touched edges: both is symmetric
+                // and changed ⊆ active, so edges INTO the changed set are
+                // the mirror of touched rows whose v changed. min(cnew)
+                // per candidate partial-aggregates map-side
+                // (candidate-sized shuffle), then ONE broadcast-filtered
+                // scan of merged; merged ids are unique, so no distinct.
+                val candMin = touched
+                  .join(broadcast(changed), touched("v") === col("chid"))
+                  .groupBy(touched("u").as("cand"))
+                  .agg(min(col("cnew")).as("cmin"))
+                merged.join(broadcast(candMin), col("id") === col("cand"))
+                  .filter(col("cmin") < col("c"))
+                  .select(col("id").as("v"), col("deg"))
+              } else {
+                // wide-frontier shape: scan the edge table against the
+                // changed set and attach v's current value broadcast-side;
+                // only the survivors reach the distinct + checkpoint.
+                // Broadcast guard on the CHANGED count, not the active
+                // count: a wide round can evaluate >ceiling vertices yet
+                // move only a handful, and losing the changed-set
+                // broadcast there degrades the frontier pass to a full
+                // 2|E| keyed shuffle. nActive <= ceiling already bounds
+                // nChanged (changed ⊆ evaluated) with no action; only in
+                // the >ceiling regime — where the round is already
+                // full-shuffle-expensive — is one count job spent to
+                // decide (skipped when the auto flip already measured it).
+                // The count runs as its own TIMED val (visible in
+                // GRAFT_DEMO_TIMING, computed exactly once per round)
+                // rather than inline in the broadcast condition.
+                val chBounded = nActive <= broadcastVertexCeiling ||
+                  knownChanged.getOrElse {
+                    DevTiming("coreness", s"round $rounds: changed count")(
+                      merged.filter(col("chg")).count())
+                  } <= broadcastVertexCeiling
+                val chSide = if (chBounded) broadcast(changed) else changed
+                val cNow = merged.select(col("id").as("cid"),
+                  col("c").as("cv"), col("deg"))
+                val cvSide =
+                  if (nVerts <= broadcastVertexCeiling) broadcast(cNow)
+                  else cNow
+                both.join(chSide, col("u") === col("chid"))
+                  .join(cvSide, col("v") === col("cid"))
+                  .filter(col("cnew") < col("cv"))
+                  .select(col("v"), col("deg")).distinct()
+              }))
+            // ONE tiny action on the checkpointed frontier yields its
+            // size, its exact incident-edge count (Σ deg) — next round's
+            // join-direction decision — and, in bucketed mode, its bucket
+            // set (≤ nBuckets ints) plus id-range for the pruned probe.
+            val statAggs = Seq(count(lit(1)), sum(col("deg"))) ++
+              (if (bucketedMode)
+                Seq(collect_set(edgeBucket(col("v"), nBuckets)),
+                  min(col("v")), max(col("v")))
+              else Nil)
+            val stats = DevTiming("coreness", s"round $rounds: stats")(
+              nextActive.agg(statAggs.head, statAggs.tail: _*).head())
+            nActive = stats.getLong(0)
+            nIncident = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+            hitBuckets =
+              if (bucketedMode && nActive > 0) stats.getSeq[Int](2)
+              else Seq.empty
+            vRange =
+              if (bucketedMode && nActive > 0)
+                Some((stats.get(3), stats.get(4)))
+              else None
+            active.foreach(pins.release)
+            if (nActive == 0) { pins.release(nextActive); active = None }
+            else active = Some(nextActive.select(col("v")))
+          }
+          if (delta) advanceFrontier(knownChanged = None)
+          else if (!auto) {
+            // synchronous schedule: terminate on a no-change round, else
+            // re-evaluate ALL vertices next round (active stays None = full
+            // width); the frontier machinery never runs
+            val nChanged = DevTiming("coreness", s"round $rounds: count changed")(
+              merged.filter(col("chg")).count())
+            nActive = if (nChanged == 0) 0 else nVerts
+          } else {
+            // ADAPTIVE schedule, sync phase: the termination action is
+            // widened to (count, Σ deg) over the changed set — the same
+            // single job — and the flip rule compares the next round's
+            // candidate bound (Σ deg(changed): each changed vertex can
+            // activate at most deg neighbors) against |V|/2 (see
+            // corenessAdaptive's scaladoc for the measured rationale).
+            val chStats = DevTiming("coreness", s"round $rounds: changed stats")(
+              merged.filter(col("chg"))
+                .agg(count(lit(1)), sum(col("deg"))).head())
+            val nChanged = chStats.getLong(0)
+            val chDeg = if (chStats.isNullAt(1)) 0L else chStats.getLong(1)
+            if (nChanged == 0) nActive = 0
+            else if (2 * chDeg < nVerts) {
+              delta = true
+              advanceFrontier(knownChanged = Some(nChanged))
+            } else nActive = nVerts
+          }
+          if (frontierLocal) pins.release(touched)
+          pins.release(c)
+          c = merged.select(col("id"), col("c"), col("deg"))
+          rounds += 1
+        }
+        val out = c.select(col("id"), col("c"))
+        caller.createDataFrame(out.rdd, out.schema)
+          .select(col("id"), col("c").as("coreness"))
+      }
+      // edge source: in-memory (Left) doubles + pre-partitions + pins
+      // the caller's frame; bucketed (Right) reads the persisted doubled
+      // layout — nothing 2|E|-sized is ever pinned, and frontier-local
+      // rounds prune the scan to hit buckets.
+      edgesIn match {
         case Left(undirectedEdges) =>
           // materialize the caller-built edges once before doubling
           // (union branches do not share exchanges — the pageRank lesson)
-          val pairs0 = spark.createDataFrame(
-              undirectedEdges.select(col("src"), col("dst")).rdd,
-              undirectedEdges.select(col("src"), col("dst")).schema)
-            .pin()
-          val pairs0Ids = graft.util.CheckpointGen.pinnedIds(pairs0)
+          val pairs0 = pins(spark.createDataFrame(
+            undirectedEdges.select(col("src"), col("dst")).rdd,
+            undirectedEdges.select(col("src"), col("dst")).schema))
           // guarded local fixpoint (see [[corenessLocal]]): only when no
           // telemetry consumer is attached (the schedule specs read
           // per-round vectors from the distributed loop) and the
           // checkpointed edge list probes driver-bounded
-          if ((onRoundStats eq noStats) && (onRoundScan eq noScan) &&
-              pairs0.schema.fields.forall(
-                _.dataType == org.apache.spark.sql.types.LongType)) {
-            val h = pairs0.limit(Dedup.LocalCcMaxEdges + 1).collect()
-            if (h.length <= Dedup.LocalCcMaxEdges &&
-                !h.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-              release(pairs0Ids)
-              val local = corenessLocal(
-                h.map(r => (r.getLong(0), r.getLong(1))), schedule,
-                maxRounds)
-              import scala.jdk.CollectionConverters._
-              val rows: java.util.List[org.apache.spark.sql.Row] =
-                local.map { case (id, cv) =>
-                  org.apache.spark.sql.Row(id, cv) }.asJava
-              val schema = org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("id",
-                  org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("coreness",
-                  org.apache.spark.sql.types.LongType)))
-              return caller.createDataFrame(rows, schema)
-            }
+          val probe =
+            if ((onRoundStats eq noStats) && (onRoundScan eq noScan) &&
+                pairs0.schema.fields.forall(
+                  _.dataType == org.apache.spark.sql.types.LongType))
+              Some(pairs0.limit(Dedup.LocalCcMaxEdges + 1).collect())
+                .filter(h => h.length <= Dedup.LocalCcMaxEdges &&
+                  !h.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+            else None
+          probe.fold {
+            // pre-partition the doubled edges BY v once: every per-round
+            // consumer clusters on v (the active-set semi join, the h-eval
+            // window+groupBy, the next-active distinct), and the pin
+            // preserves the physical partitioning, so the edge table pays
+            // its exchange ONCE for the whole fixpoint instead of once
+            // per round.
+            val b = DevTiming("coreness", "setup: double+repartition edges")(
+              pins(pairs0.unionAll(
+                  pairs0.select(col("dst").as("src"), col("src").as("dst")))
+                .select(col("src").as("v"), col("dst").as("u"))
+                .repartition(partitions, col("v"))))
+            pins.release(pairs0) // b is truncated — pairs0 is dead
+            fixpoint(b, b, 0)
+          } { h =>
+            pins.release(pairs0)
+            val local = corenessLocal(
+              h.map(r => (r.getLong(0), r.getLong(1))), schedule, maxRounds)
+            import scala.jdk.CollectionConverters._
+            val rows: java.util.List[org.apache.spark.sql.Row] =
+              local.map { case (id, cv) =>
+                org.apache.spark.sql.Row(id, cv) }.asJava
+            val schema = org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("id",
+                org.apache.spark.sql.types.LongType),
+              org.apache.spark.sql.types.StructField("coreness",
+                org.apache.spark.sql.types.LongType)))
+            caller.createDataFrame(rows, schema)
           }
-          // pre-partition the doubled edges BY v once: every per-round
-          // consumer clusters on v (the active-set semi join, the h-eval
-          // window+groupBy, the next-active distinct), and localCheckpoint
-          // preserves the physical partitioning, so the edge table pays its
-          // exchange ONCE for the whole fixpoint instead of once per round.
-          val b = DevTiming("coreness", "setup: double+repartition edges")(
-            pairs0.unionAll(
-                pairs0.select(col("dst").as("src"), col("src").as("dst")))
-              .select(col("src").as("v"), col("dst").as("u"))
-              .repartition(partitions, col("v"))
-              .pin())
-          val ids = graft.util.CheckpointGen.pinnedIds(b)
-          release(pairs0Ids)
-          (b, b, ids, 0)
         case Right((dir, nb)) =>
           require(nb > 0, s"nBuckets must be positive (got $nb)")
           val all = spark.read.parquet(dir) // (v, u, b)
-          (all, all.drop("b"), Set.empty[Int], nb)
+          fixpoint(all, all.drop("b"), nb)
       }
-      val bucketedMode = nBuckets > 0
-      // the value table carries each vertex's INITIAL degree alongside its
-      // current value for the whole loop: deg is what makes the frontier's
-      // exact incident-edge count (Σ deg over the frontier) a free
-      // aggregate over the already-checkpointed frontier — the quantity
-      // that decides each round's join direction (see scaladoc).
-      var c = DevTiming("coreness", "setup: degrees")(
-        both.groupBy("v").agg(count(lit(1)).as("c"))
-          .select(col("v").as("id"), col("c"), col("c").as("deg"))
-          .pin())
-      var cIds = graft.util.CheckpointGen.pinnedIds(c)
-      val nVerts = c.count()
-      // DELTA SCHEDULING (the asynchronous variant of Lü et al. 2016,
-      // r15 verdict #4): a vertex's h value is a function of its
-      // NEIGHBORS' values only, so a vertex none of whose neighbors
-      // changed last round cannot change this round. Each round
-      // re-evaluates exactly the neighbors of last round's changed set;
-      // the iterates equal the full synchronous schedule's round for
-      // round (the restriction drops only provably-unchanged work), so
-      // checksums, convergence depth, and the maxRounds pin are
-      // unchanged — only the per-round work shrinks, from Θ(|E|) every
-      // round to |edges incident to the still-moving frontier|.
-      // Broadcast-vs-shuffle is decided per frame by the same ceiling:
-      // the frontier frames (active/evald/changed) are frontier-sized
-      // and broadcast long after the value table stops fitting.
-      val auto = schedule == "auto"
-      // current schedule mode; auto starts synchronous (no frontier
-      // bookkeeping) and flips permanently when the rule fires
-      var delta = schedule == "delta"
-      var active: Option[DataFrame] = None // None = all vertices (round 1)
-      var activeIds = Set.empty[Int]
-      var nActive = nVerts
-      // bucketed mode: the frontier's bucket set (≤ nBuckets ints,
-      // collected on the SAME stats action that sizes the frontier) —
-      // next round's pruned-probe in-filter — plus its [min(v), max(v)]
-      // id-range, pushed into the scan so parquet rowgroup/page min-max
-      // stats on the v-sorted layout prune WITHIN hit files (the
-      // mid-width regime, r18 verdict #2)
-      var hitBuckets: Seq[Int] = Seq.empty
-      var vRange: Option[(Any, Any)] = None
-      // exact incident-edge count of the current frontier (Σ deg), the
-      // quantity that decides this round's join direction; MaxValue while
-      // the frontier is "all vertices" (round 1 / sync rounds)
-      var nIncident = Long.MaxValue
-      var rounds = 0
-      val byV = org.apache.spark.sql.expressions.Window
-        .partitionBy("v").orderBy(col("cu").desc)
-      while (nActive > 0) {
-        require(rounds < maxRounds,
-          s"coreness did not converge within $maxRounds h-index rounds")
-        onRoundStats(rounds, nActive)
-        // FRONTIER-LOCAL round (see scaladoc): once the frontier's
-        // incident edges fit the broadcast ceiling and undercut |V|, the
-        // touched edges are materialized once and broadcast into
-        // stream-scans of the value table — no |V|-row driver builds.
-        val frontierLocal = delta && active.isDefined &&
-          nIncident <= broadcastVertexCeiling && nIncident < nVerts
-        val (touched, touchedIds) = active match {
-          case None => (both, Set.empty[Int])
-          case Some(a) =>
-            val aSide =
-              if (nActive <= broadcastVertexCeiling) broadcast(a) else a
-            // bucketed mode, frontier-local round: prune the probe to
-            // the frontier's bucket set AT THE SCAN — the in-filter on
-            // the partition column reaches PartitionFilters, so non-hit
-            // bucket dirs are never read. Dropped rows cannot survive
-            // the v semi-join (their bucket holds no frontier vertex),
-            // so the iterates are unchanged (Round18Spec pins both the
-            // equality and, via onRoundScan, the file-count shrink).
-            val src =
-              if (bucketedMode && frontierLocal) {
-                // every frontier vertex satisfies both pushed predicates
-                // by construction (its bucket is in the hit set, its id
-                // inside the frontier's [min, max]), so no edge that
-                // could survive the v semi-join is dropped; the range
-                // reaches the parquet reader's rowgroup/page stats on
-                // the v-sorted layout
-                val pruned = bothAll
-                  .filter(col("b").isInCollection(hitBuckets))
-                vRange.fold(pruned) { case (lo, hi) =>
-                  pruned.filter(col("v").between(lit(lo), lit(hi)))
-                }.drop("b")
-              } else both
-            val t = src.join(aSide, Seq("v"), "left_semi")
-            if (!frontierLocal) (t, Set.empty[Int])
-            else {
-              val tPlan = t.select(col("v"), col("u"))
-              val tm = DevTiming("coreness", s"round $rounds: touched")(
-                tPlan.pin())
-              if (bucketedMode) {
-                // scan telemetry off the just-executed plan (driver-side
-                // metric walk, no extra job): files read, and the rows
-                // the file scan OUTPUT — after parquet rowgroup/page
-                // pruning on the pushed v-range, so the mid-width
-                // within-file prune is visible per round
-                val fileLeaves = tPlan.queryExecution.executedPlan
-                  .collectLeaves()
-                  .filter(_.metrics.contains("numFiles"))
-                val files =
-                  fileLeaves.flatMap(_.metrics.get("numFiles")).map(_.value).sum
-                val rowsOut = fileLeaves
-                  .flatMap(_.metrics.get("numOutputRows")).map(_.value).sum
-                onRoundScan(rounds, files, hitBuckets.size.toLong, rowsOut)
-              }
-              (tm, graft.util.CheckpointGen.pinnedIds(tm))
-            }
-        }
-        // h-index over DISTINCT neighbor values: h = max_d min(d, N>=d)
-        // for d ranging over the distinct values (exact — see scaladoc).
-        // The groupBy(v, cu) partial-aggregates map-side, so the shuffle
-        // and the window sort see (vertex, distinct value) rows — on a
-        // clustered graph a few per vertex — instead of one row PER EDGE
-        // (the former row_number formulation sorted all 2|E| rows every
-        // round; on the 29M-edge ring-of-cliques that sort was the whole
-        // cost). Join direction by round shape: wide rounds broadcast the
-        // value table into the edge scan (ceiling-guarded);
-        // frontier-local rounds broadcast the touched edges and STREAM
-        // the value table.
-        val neighborVals =
-          if (frontierLocal)
-            c.join(broadcast(touched), c("id") === touched("u"))
-          else {
-            val cSide =
-              if (nVerts <= broadcastVertexCeiling) broadcast(c) else c
-            touched.join(cSide, touched("u") === cSide("id"))
-          }
-        val evald = neighborVals
-          .select(col("v"), col("c").as("cu"))
-          .groupBy("v", "cu").agg(count(lit(1)).as("cnt"))
-          .withColumn("cum", sum(col("cnt")).over(byV
-            .rowsBetween(org.apache.spark.sql.expressions
-              .Window.unboundedPreceding, 0)))
-          .groupBy("v").agg(max(least(col("cu"), col("cum"))).as("h"))
-        // merge the (active-only) evaluation back into the value table;
-        // `chg` marks the rows that actually moved. evald is
-        // frontier-sized, so it broadcasts into the left join and the
-        // |V|-row value table streams map-side.
-        val eSide =
-          if (nActive <= broadcastVertexCeiling && nActive * 2 < nVerts)
-            broadcast(evald)
-          else evald
-        val merged = DevTiming("coreness", s"round $rounds: eval+merge") {
-          c.join(eSide, c("id") === eSide("v"), "left")
-          .select(col("id"), coalesce(col("h"), col("c")).as("c"),
-            col("deg"),
-            (col("h").isNotNull && col("h") =!= col("c")).as("chg"))
-          .pin()
-        }
-        val mergedIds = graft.util.CheckpointGen.pinnedIds(merged)
-        // VALUE-AWARE frontier pass (see scaladoc): a changed neighbor
-        // whose NEW value is still >= h_v cannot move v — for every
-        // d <= h_v both the old and the new value count toward N_{>=d},
-        // so N_{>=h_v} is untouched and h_v stays attainable (values
-        // only decrease, so h cannot rise). Hence v re-evaluates ONLY if
-        // SOME changed neighbor's new value undercuts its current h.
-        // Termination is frontier-empty (implied by nothing-changed).
-        // Shared by the delta schedule's per-round advance and the auto
-        // schedule's sync→delta flip (which passes its already-known
-        // changed count so no job repeats).
-        def advanceFrontier(knownChanged: Option[Long]): Unit = {
-          val changed = merged.filter(col("chg"))
-            .select(col("id").as("chid"), col("c").as("cnew"))
-          val nextActive = DevTiming("coreness", s"round $rounds: frontier")(
-            if (frontierLocal) {
-              // reuse the materialized touched edges: both is symmetric
-              // and changed ⊆ active, so edges INTO the changed set are
-              // the mirror of touched rows whose v changed. min(cnew)
-              // per candidate partial-aggregates map-side
-              // (candidate-sized shuffle), then ONE broadcast-filtered
-              // scan of merged; merged ids are unique, so no distinct.
-              val candMin = touched
-                .join(broadcast(changed), touched("v") === col("chid"))
-                .groupBy(touched("u").as("cand"))
-                .agg(min(col("cnew")).as("cmin"))
-              merged.join(broadcast(candMin), col("id") === col("cand"))
-                .filter(col("cmin") < col("c"))
-                .select(col("id").as("v"), col("deg"))
-                .pin()
-            } else {
-              // wide-frontier shape: scan the edge table against the
-              // changed set and attach v's current value broadcast-side;
-              // only the survivors reach the distinct + checkpoint.
-              // Broadcast guard on the CHANGED count, not the active
-              // count: a wide round can evaluate >ceiling vertices yet
-              // move only a handful, and losing the changed-set
-              // broadcast there degrades the frontier pass to a full
-              // 2|E| keyed shuffle. nActive <= ceiling already bounds
-              // nChanged (changed ⊆ evaluated) with no action; only in
-              // the >ceiling regime — where the round is already
-              // full-shuffle-expensive — is one count job spent to
-              // decide (skipped when the auto flip already measured it).
-              // The count runs as its own TIMED val (visible in
-              // GRAFT_DEMO_TIMING, computed exactly once per round)
-              // rather than inline in the broadcast condition.
-              val chBounded = nActive <= broadcastVertexCeiling ||
-                knownChanged.getOrElse {
-                  DevTiming("coreness", s"round $rounds: changed count")(
-                    merged.filter(col("chg")).count())
-                } <= broadcastVertexCeiling
-              val chSide = if (chBounded) broadcast(changed) else changed
-              val cNow = merged.select(col("id").as("cid"),
-                col("c").as("cv"), col("deg"))
-              val cvSide =
-                if (nVerts <= broadcastVertexCeiling) broadcast(cNow)
-                else cNow
-              both.join(chSide, col("u") === col("chid"))
-                .join(cvSide, col("v") === col("cid"))
-                .filter(col("cnew") < col("cv"))
-                .select(col("v"), col("deg")).distinct()
-                .pin()
-            })
-          val naIds = graft.util.CheckpointGen.pinnedIds(nextActive)
-          // ONE tiny action on the checkpointed frontier yields its
-          // size, its exact incident-edge count (Σ deg) — next round's
-          // join-direction decision — and, in bucketed mode, its bucket
-          // set (≤ nBuckets ints) plus id-range for the pruned probe.
-          val statAggs = Seq(count(lit(1)), sum(col("deg"))) ++
-            (if (bucketedMode)
-              Seq(collect_set(edgeBucket(col("v"), nBuckets)),
-                min(col("v")), max(col("v")))
-            else Nil)
-          val stats = DevTiming("coreness", s"round $rounds: stats")(
-            nextActive.agg(statAggs.head, statAggs.tail: _*).head())
-          nActive = stats.getLong(0)
-          nIncident = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-          hitBuckets =
-            if (bucketedMode && nActive > 0) stats.getSeq[Int](2)
-            else Seq.empty
-          vRange =
-            if (bucketedMode && nActive > 0)
-              Some((stats.get(3), stats.get(4)))
-            else None
-          release(activeIds)
-          if (nActive == 0) {
-            release(naIds); active = None; activeIds = Set.empty
-          } else {
-            active = Some(nextActive.select(col("v"))); activeIds = naIds
-          }
-        }
-        if (delta) advanceFrontier(knownChanged = None)
-        else if (!auto) {
-          // synchronous schedule: terminate on a no-change round, else
-          // re-evaluate ALL vertices next round (active stays None = full
-          // width); the frontier machinery never runs
-          val nChanged = DevTiming("coreness", s"round $rounds: count changed")(
-            merged.filter(col("chg")).count())
-          nActive = if (nChanged == 0) 0 else nVerts
-        } else {
-          // ADAPTIVE schedule, sync phase: the termination action is
-          // widened to (count, Σ deg) over the changed set — the same
-          // single job — and the flip rule compares the next round's
-          // candidate bound (Σ deg(changed): each changed vertex can
-          // activate at most deg neighbors) against |V|/2 (see
-          // corenessAdaptive's scaladoc for the measured rationale).
-          val chStats = DevTiming("coreness", s"round $rounds: changed stats")(
-            merged.filter(col("chg"))
-              .agg(count(lit(1)), sum(col("deg"))).head())
-          val nChanged = chStats.getLong(0)
-          val chDeg = if (chStats.isNullAt(1)) 0L else chStats.getLong(1)
-          if (nChanged == 0) nActive = 0
-          else if (2 * chDeg < nVerts) {
-            delta = true
-            advanceFrontier(knownChanged = Some(nChanged))
-          } else nActive = nVerts
-        }
-        release(touchedIds)
-        release(cIds)
-        c = merged.select(col("id"), col("c"), col("deg")); cIds = mergedIds
-        rounds += 1
-      }
-      release(bothIds ++ activeIds)
-      c.select(col("id"), col("c"))
     }
-    caller.createDataFrame(result.rdd, result.schema)
-      .select(col("id"), col("c").as("coreness"))
   }
 }

@@ -1141,7 +1141,6 @@ object Similarity {
     require(k > 0, s"kmeansPlusPlusInit needs k > 0 (got k=$k)")
     val spark = emb.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     // seeded uniform in (0,1): pmod keeps the hash in [0, MaxValue), the
     // +0.5 centers it away from both endpoints (u = 0 would make -ln(u)
     // infinite, u = 1 would make it 0 and always win the race)
@@ -1195,29 +1194,27 @@ object Similarity {
       s"kmeansPlusPlusInit needs at least k corpus rows (k=$k, rows=$n)")
     val first = (fr.getLong(0), fr.getSeq[Double](1))
     var chosen = List(first)
-    // generation discipline (ADVICE r12): each round's checkpoint is
-    // released as soon as its successor materializes — without this the
-    // k-1 generations stay pinned in the block manager until session end
-    // (O(k·n) storage), the exact leak CheckpointGen exists to prevent
+    // generation discipline (ADVICE r12, graft.util.Pin): each round's
+    // pin is released as soon as its successor materializes — without
+    // this the k-1 generations stay pinned until session end (O(k·n))
     var (obs, cur0) = observedPick(keyed(
       e0.withColumn("d2", d2To(first._2)), round = 1))
-    var cur = cur0.pin()
-    var pinned = graft.util.CheckpointGen.pinnedIds(cur)
-    for (t <- 1 until k) {
-      val next = pickOf(obs)
-      chosen ::= next
-      if (t < k - 1) {
-        val (ob2, succ0) = observedPick(keyed(
-          cur.withColumn("d2", least(col("d2"), d2To(next._2))),
-          round = t + 1))
-        val succ = succ0.pin()
-        graft.util.CheckpointGen.release(sc, pinned)
-        obs = ob2
-        cur = succ
-        pinned = graft.util.CheckpointGen.pinnedIds(cur)
+    graft.util.Pin.scope { pins =>
+      var cur = pins(cur0)
+      for (t <- 1 until k) {
+        val next = pickOf(obs)
+        chosen ::= next
+        if (t < k - 1) {
+          val (ob2, succ0) = observedPick(keyed(
+            cur.withColumn("d2", least(col("d2"), d2To(next._2))),
+            round = t + 1))
+          val succ = pins(succ0)
+          pins.release(cur)
+          obs = ob2
+          cur = succ
+        }
       }
     }
-    graft.util.CheckpointGen.release(sc, pinned)
     // explicit throw, NOT assert: the duplicate-centroid failure mode must
     // fail loudly even in an assertions-elided build (ADVICE r13)
     if (chosen.map(_._1).distinct.length != k)
@@ -1285,7 +1282,6 @@ object Similarity {
     val l = if (oversample > 0) oversample else 2 * k
     val spark = emb.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
     def u(round: Int): Column =
       (pmod(xxhash64(lit(seed), lit(round), col("vec_id")), lit(Long.MaxValue))
         .cast("double") + lit(0.5)) / lit(Long.MaxValue.toDouble)
@@ -1311,28 +1307,26 @@ object Similarity {
     require(n >= k,
       s"kmeansParallelInit needs at least k corpus rows (k=$k, rows=$n)")
     var cands = Vector((first.getLong(0), first.getSeq[Double](1)))
-    var cur = e0.withColumn("d2", minD2(Seq(cands.head._2)))
-      .pin()
-    var pinned = graft.util.CheckpointGen.pinnedIds(cur)
-    for (t <- 1 to rounds) {
-      val phi = cur.agg(sum(col("d2"))).head().getDouble(0)
-      if (phi > 0) {
-        val knownIds = cands.map(_._1).toSet
-        val batch = cur
-          .filter(u(t) < lit(l.toDouble) * col("d2") / lit(phi))
-          .select(col("vec_id"), col("v")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1)))
-          .filter(c => !knownIds.contains(c._1))
-          .sortBy(_._1)
-        if (batch.nonEmpty) {
-          cands ++= batch
-          // tighten d² against the whole batch in ONE narrow projection
-          val succ = cur.withColumn("d2",
-              least(col("d2"), minD2(batch.map(_._2).toSeq)))
-            .pin()
-          graft.util.CheckpointGen.release(sc, pinned)
-          cur = succ
-          pinned = graft.util.CheckpointGen.pinnedIds(cur)
+    graft.util.Pin.scope { pins =>
+      var cur = pins(e0.withColumn("d2", minD2(Seq(cands.head._2))))
+      for (t <- 1 to rounds) {
+        val phi = cur.agg(sum(col("d2"))).head().getDouble(0)
+        if (phi > 0) {
+          val knownIds = cands.map(_._1).toSet
+          val batch = cur
+            .filter(u(t) < lit(l.toDouble) * col("d2") / lit(phi))
+            .select(col("vec_id"), col("v")).collect()
+            .map(r => (r.getLong(0), r.getSeq[Double](1)))
+            .filter(c => !knownIds.contains(c._1))
+            .sortBy(_._1)
+          if (batch.nonEmpty) {
+            cands ++= batch
+            // tighten d² against the whole batch in ONE narrow projection
+            val succ = pins(cur.withColumn("d2",
+                least(col("d2"), minD2(batch.map(_._2).toSeq))))
+            pins.release(cur)
+            cur = succ
+          }
         }
       }
     }
@@ -1354,7 +1348,6 @@ object Similarity {
         .nearestInSet(col("v"), candMatrix, dim).getField("cid").as("cid"))
       .groupBy("cid").agg(count(lit(1)).as("w"))
       .collect().map(r => r.getInt(0).toLong -> r.getLong(1)).toMap
-    graft.util.CheckpointGen.release(sc, pinned)
     val weighted = cands.zipWithIndex.map { case ((_, cv), i) =>
       (cv, weights.getOrElse(i.toLong, 0L).toDouble)
     }

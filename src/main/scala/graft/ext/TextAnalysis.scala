@@ -131,7 +131,7 @@ object TextAnalysis {
     *    the pass);
     *  - each generation localCheckpoints (lineage would otherwise grow
     *    linearly in merges) and the previous generation is released via
-    *    [[graft.util.CheckpointGen]].
+    *    [[graft.util.Pin.scope]].
     * Pair counting matches q212: ALL adjacent index pairs (overlapping
     * occurrences count — "aaa" contributes (a,a) twice), tie-break on
     * (count DESC, left ASC, right ASC).
@@ -200,47 +200,43 @@ object TextAnalysis {
   private[graft] def bpeTrainDistributed(censusDf: org.apache.spark.sql.DataFrame,
       nMerges: Int): org.apache.spark.sql.DataFrame = {
     val spark = censusDf.sparkSession
-    val sc = spark.sparkContext
     import spark.implicits._
-    var words = censusDf
-      .select(expr(
-        "transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-        .as("syms"), col("cnt"))
-      .pin()
-    var wordIds = graft.util.CheckpointGen.pinnedIds(words)
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
-    for (step <- 1 to nMerges) {
-      // sequence(1, size-1) flips to a DESCENDING range on single-symbol
-      // words — guard to an empty pair list (explode then drops the row)
-      val pairs = words
-        .select(explode(when(size(col("syms")) >= 2, expr(
-            "transform(sequence(1, size(syms) - 1)," +
-              " i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))"))
-          .otherwise(expr("cast(array() as array<struct<l:string,r:string>>)")))
-          .as("p"), col("cnt"))
-      val best = pairs
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("c"))
-        .agg(min(struct((-col("c")).as("nc"), col("l"), col("r"))).as("b"))
-        .select(col("b.l"), col("b.r"), (-col("b.nc")).as("c"))
-        .collect()
-      if (best.nonEmpty && !best(0).isNullAt(0)) {
-        val (l, r, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges += ((step, l, r, l + r, c))
-        val next = words.select(
-            aggregate(col("syms"), expr("cast(array() as array<string>)"),
-              (acc, s) => when(size(acc) > 0
-                  && element_at(acc, -1) === lit(l) && s === lit(r),
-                concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-                .otherwise(concat(acc, array(s)))).as("syms"),
-            col("cnt"))
-          .pin()
-        graft.util.CheckpointGen.release(sc, wordIds)
-        words = next
-        wordIds = graft.util.CheckpointGen.pinnedIds(words)
+    graft.util.Pin.scope { pins =>
+      var words = pins(censusDf
+        .select(expr(
+          "transform(sequence(1, length(w)), i -> substring(w, i, 1))")
+          .as("syms"), col("cnt")))
+      for (step <- 1 to nMerges) {
+        // sequence(1, size-1) flips to a DESCENDING range on single-symbol
+        // words — guard to an empty pair list (explode then drops the row)
+        val pairs = words
+          .select(explode(when(size(col("syms")) >= 2, expr(
+              "transform(sequence(1, size(syms) - 1)," +
+                " i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r))"))
+            .otherwise(expr("cast(array() as array<struct<l:string,r:string>>)")))
+            .as("p"), col("cnt"))
+        val best = pairs
+          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+          .agg(sum(col("cnt")).as("c"))
+          .agg(min(struct((-col("c")).as("nc"), col("l"), col("r"))).as("b"))
+          .select(col("b.l"), col("b.r"), (-col("b.nc")).as("c"))
+          .collect()
+        if (best.nonEmpty && !best(0).isNullAt(0)) {
+          val (l, r, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+          merges += ((step, l, r, l + r, c))
+          val next = pins(words.select(
+              aggregate(col("syms"), expr("cast(array() as array<string>)"),
+                (acc, s) => when(size(acc) > 0
+                    && element_at(acc, -1) === lit(l) && s === lit(r),
+                  concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
+                  .otherwise(concat(acc, array(s)))).as("syms"),
+              col("cnt")))
+          pins.release(words)
+          words = next
+        }
       }
     }
-    graft.util.CheckpointGen.release(sc, wordIds) // the merge table is the result
     merges.toSeq.toDF("step", "left", "right", "merged", "cnt")
   }
 

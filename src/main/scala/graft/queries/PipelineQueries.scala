@@ -1869,35 +1869,26 @@ object PipelineQueries {
     // Min-label canonicality makes the two formulations provably equal
     // (q232's argument); this query makes the equality HASH-CHECKED.
     QueryDef("q240_incremental_cc_updates",
-      (s, dir) => {
+      (s, dir) => graft.util.Pin.scope { pins =>
         val docs = Tables.documents(s, dir)
         val isNew = col("doc_id") % 5 === 0
         val oldDocs = docs.filter(!isNew)
         // the persisted state (in production: parquet tables)
-        val postings = Dedup.ngramPostings(oldDocs, "doc_id", "text", 3)
-          .pin()
+        val postings = pins(Dedup.ngramPostings(oldDocs, "doc_id", "text", 3))
         val sizes = Dedup.ngramPostingSizes(postings)
         // the label state rebuilds from the persisted index, not by
         // re-shingling the corpus (ngramJaccardPairsFromPostings ≡
         // ngramJaccardPairs, spec-pinned) — one shingle pass total
-        val labels = Dedup.connectedComponents(
-            Dedup.ngramJaccardPairsFromPostings(postings, sizes, 0.5))
-          .pin()
-        val bp = Dedup.ngramPostings(docs.filter(isNew), "doc_id", "text", 3)
-          .pin()
-        val newPairs = Dedup.incrementalCcPairsFromPostings(postings, sizes,
-            bp, 0.5)
-          .pin()
-        // pin the result, then release the state pins it no longer reads
-        // (the ccStoreLoopRun / q263 discipline): a call leaves only the
-        // result's own pins behind
-        val upd = Dedup.incrementalCcLabelUpdates(labels, newPairs,
-            docs.filter(isNew).select(col("doc_id").as("id")))
-        val out = upd.orderBy("id").pin()
-        graft.util.CheckpointGen.release(s.sparkContext,
-          Seq(postings, labels, bp, newPairs, upd)
-            .flatMap(graft.util.CheckpointGen.pinnedIds).toSet)
-        out
+        val labels = pins(pins.adopt(Dedup.connectedComponents(
+          Dedup.ngramJaccardPairsFromPostings(postings, sizes, 0.5))))
+        val bp = pins(
+          Dedup.ngramPostings(docs.filter(isNew), "doc_id", "text", 3))
+        val newPairs = pins(Dedup.incrementalCcPairsFromPostings(postings,
+          sizes, bp, 0.5))
+        // the scope keeps only the pinned result's own pins
+        pins.adopt(Dedup.incrementalCcLabelUpdates(labels, newPairs,
+            docs.filter(isNew).select(col("doc_id").as("id"))))
+          .orderBy("id").pin()
       },
       Some(s"""WITH RECURSIVE ${ccCtesFor("o_", "doc_id % 5 <> 0")},
         |${ccCtesFor("", "TRUE")},
@@ -2294,16 +2285,17 @@ object PipelineQueries {
               k = 3, nBuckets = 64),
             () => if (!java.nio.file.Files.exists(java.nio.file.Paths
                 .get(scoredStore.basePath(-1), "_SUCCESS"))) {
-              val init = scoredOf(docs.filter(!isNew)).pin()
-              // census base FIRST: the guard above keys on the scored
-              // base's _SUCCESS, so the marker it checks must be the LAST
-              // write — a crash between the two then re-runs the whole
-              // init (heal-on-redelivery, the GenStore discipline) instead
-              // of reporting initialized with the census base missing
-              censusStore.writeBase(censusOf(init), -1)
-              scoredStore.writeBase(init, -1)
-              graft.util.CheckpointGen.release(s.sparkContext,
-                graft.util.CheckpointGen.pinnedIds(init))
+              graft.util.Pin.scope { pins =>
+                val init = pins(scoredOf(docs.filter(!isNew)))
+                // census base FIRST: the guard above keys on the scored
+                // base's _SUCCESS, so the marker it checks must be the
+                // LAST write — a crash between the two then re-runs the
+                // whole init (heal-on-redelivery, the GenStore discipline)
+                // instead of reporting initialized with the census base
+                // missing
+                censusStore.writeBase(censusOf(init), -1)
+                scoredStore.writeBase(init, -1)
+              }
             })
           // bench depth: production fold cadence + one trigger, like the
           // other maintenance demos; full depth folds aggressively so the
@@ -2327,12 +2319,12 @@ object PipelineQueries {
                   // the same re-delivery contract as the CC stores; the
                   // two delta writes both read the pinned scored batch
                   // and land disjoint dirs — overlapped too
-                  val sb = scoredOf(batch).pin()
-                  graft.util.Par.run(
-                    () => scoredStore.writeDelta(sb, epoch),
-                    () => censusStore.writeDelta(censusOf(sb), epoch))
-                  graft.util.CheckpointGen.release(s.sparkContext,
-                    graft.util.CheckpointGen.pinnedIds(sb))
+                  graft.util.Pin.scope { pins =>
+                    val sb = pins(scoredOf(batch))
+                    graft.util.Par.run(
+                      () => scoredStore.writeDelta(sb, epoch),
+                      () => censusStore.writeDelta(censusOf(sb), epoch))
+                  }
                   // census fold on the shared seam (fold-lag rule: cover
                   // epochs <= epoch-1 only; skip when a base already
                   // reached the fold point — the re-delivered-epoch
@@ -2498,7 +2490,7 @@ object PipelineQueries {
               // entirely (append-only content — a missing epoch is
               // simply nothing to add; idempotent under re-delivery)
               val nPairs = pairs.count()
-              if (nPairs > 0) {
+              if (nPairs > 0) graft.util.Pin.scope { pins =>
               val labelsPost = Streams.ccStoreLabelsView(s,
                 s"$root/state", epoch + 1)
               // broadcast hints COUNT-GUARDED (the r16/r17 merge-storm
@@ -2522,12 +2514,11 @@ object PipelineQueries {
               // separate post-checkpoint aggregate job is gone
               val affObs = org.apache.spark.sql.Observation(
                 s"q264_aff_$epoch")
-              val affected = labelsPost
+              val affected = pins(labelsPost
                 .join(hint(touchedComps, 2 * nPairs), "label")
                 .select("id")
                 .observe(affObs, count(lit(1)).as("n"),
-                  collect_set(Dedup.postingBucket(col("id"), 64)).as("pbs"))
-                .pin()
+                  collect_set(Dedup.postingBucket(col("id"), 64)).as("pbs")))
               val nAff = affObs.get("n").asInstanceOf[Long]
               val hit = affObs.get("pbs").asInstanceOf[Seq[Int]]
               // the pair-state probe is PRUNED to the affected buckets
@@ -2554,11 +2545,9 @@ object PipelineQueries {
                   () => bucketedPairs(pairs.select("i", "j"), 64)
                     .repartition(col("pb")).write.mode("overwrite")
                     .partitionBy("pb").parquet(pairStore.deltaPath(epoch)),
-                  () => coreStore.writeDelta(Graph.coreness(affEdges
-                      .select(col("i").as("src"), col("j").as("dst"))),
+                  () => coreStore.writeDelta(pins.adopt(Graph.coreness(
+                      affEdges.select(col("i").as("src"), col("j").as("dst")))),
                     epoch)))
-              graft.util.CheckpointGen.release(s.sparkContext,
-                graft.util.CheckpointGen.pinnedIds(affected))
               }
               // threshold fold + GC (fold-lag rule: cover <= epoch-1
               // only; skip when a base already reached the fold point)
@@ -2870,15 +2859,15 @@ object PipelineQueries {
               k = 3, nBuckets = 64),
             () => if (!java.nio.file.Files.exists(java.nio.file.Paths
                 .get(docsStore.basePath(-1), "_SUCCESS"))) {
-              val init = docs.filter(!isNew)
-                .select("doc_id", "source", "text").pin()
-              // census base FIRST (the q263 heal-on-redelivery ordering:
-              // the guard keys on the docs base's _SUCCESS, so the marker
-              // it checks must be the LAST write)
-              censusStore.writeBase(censusOf(init), -1)
-              docsStore.writeBase(init, -1)
-              graft.util.CheckpointGen.release(s.sparkContext,
-                graft.util.CheckpointGen.pinnedIds(init))
+              graft.util.Pin.scope { pins =>
+                val init =
+                  pins(docs.filter(!isNew).select("doc_id", "source", "text"))
+                // census base FIRST (the q263 heal-on-redelivery ordering:
+                // the guard keys on the docs base's _SUCCESS, so the
+                // marker it checks must be the LAST write)
+                censusStore.writeBase(censusOf(init), -1)
+                docsStore.writeBase(init, -1)
+              }
             })
           val ccStep: (org.apache.spark.sql.DataFrame, Long) => Unit =
             if (reduced) Streams.ccStoreStep(s"$root/state", 3, 0.5, 64,
@@ -2898,13 +2887,12 @@ object PipelineQueries {
                   // contract shared with every store in the loop; the
                   // two delta writes read the pinned batch and land
                   // disjoint dirs — overlapped too
-                  val b = batch.select("doc_id", "source", "text")
-                    .pin()
-                  graft.util.Par.run(
-                    () => docsStore.writeDelta(b, epoch),
-                    () => censusStore.writeDelta(censusOf(b), epoch))
-                  graft.util.CheckpointGen.release(s.sparkContext,
-                    graft.util.CheckpointGen.pinnedIds(b))
+                  graft.util.Pin.scope { pins =>
+                    val b = pins(batch.select("doc_id", "source", "text"))
+                    graft.util.Par.run(
+                      () => docsStore.writeDelta(b, epoch),
+                      () => censusStore.writeDelta(censusOf(b), epoch))
+                  }
                   // census fold (fold-lag rule: cover <= epoch-1 only;
                   // skip when a base already reached the fold point)
                   val foldPoint = epoch - 1

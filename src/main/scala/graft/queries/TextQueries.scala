@@ -1401,56 +1401,46 @@ object TextQueries {
     // nothing. The oracle is q248's FULL-graph recompute verbatim —
     // incremental must equal from-scratch exactly.
     QueryDef("q258_incremental_coreness",
-      (s, dir) => {
+      (s, dir) => graft.util.Pin.scope { pins =>
         val docs = Tables.documents(s, dir)
         val isNew = col("doc_id") % 5 === 0
         // persisted graph state a deployment carries: the corpus edge
         // list, its coreness table, and the CC labels (component ids)
-        val oldEdges = Dedup.ngramJaccardPairs(docs.filter(!isNew),
-            "doc_id", "text", 3, 0.3)
-          .select("i", "j").pin()
-        val oldCore = Graph.coreness(oldEdges
-            .select(col("i").as("src"), col("j").as("dst")))
-          .pin()
-        val labels = Dedup.connectedComponents(oldEdges).pin()
-        val postings = Dedup.ngramPostings(docs.filter(!isNew),
-          "doc_id", "text", 3).pin()
-        val sizes = Dedup.ngramPostingSizes(postings).pin()
-        val bp = Dedup.ngramPostings(docs.filter(isNew), "doc_id", "text", 3)
-          .pin()
-        val newPairs = Dedup.incrementalCcPairsFromPostings(postings, sizes,
-            bp, 0.3)
-          .pin()
+        val oldEdges = pins(Dedup.ngramJaccardPairs(docs.filter(!isNew),
+            "doc_id", "text", 3, 0.3).select("i", "j"))
+        val oldCore = pins(pins.adopt(Graph.coreness(oldEdges
+            .select(col("i").as("src"), col("j").as("dst")))))
+        val labels = pins(pins.adopt(Dedup.connectedComponents(oldEdges)))
+        val postings = pins(Dedup.ngramPostings(docs.filter(!isNew),
+          "doc_id", "text", 3))
+        val sizes = pins(Dedup.ngramPostingSizes(postings))
+        val bp = pins(
+          Dedup.ngramPostings(docs.filter(isNew), "doc_id", "text", 3))
+        val newPairs = pins(Dedup.incrementalCcPairsFromPostings(postings,
+          sizes, bp, 0.3))
         // affected scope: components touched by any delta endpoint — the
         // delta-sized endpoint set broadcasts, labels stream map-side
         val ends = newPairs.select(col("i").as("id"))
           .unionAll(newPairs.select(col("j").as("id"))).distinct()
         val touched = labels.join(broadcast(ends), Seq("id"), "left_semi")
           .select("label").distinct()
-        val affected = labels.join(broadcast(touched), "label").select("id")
-          .pin()
+        val affected =
+          pins(labels.join(broadcast(touched), "label").select("id"))
         // a component-closed subgraph: an edge is in a touched component
         // iff EITHER endpoint is (both are), so one semi-join suffices
         val affEdges = oldEdges
           .join(affected.select(col("id").as("i")), Seq("i"), "left_semi")
           .unionByName(newPairs)
-        val recomputed = Graph.coreness(
-          affEdges.select(col("i").as("src"), col("j").as("dst")))
-        val untouched = oldCore.join(affected, Seq("id"), "left_anti")
-          .pin()
+        val recomputed = pins.adopt(Graph.coreness(
+          affEdges.select(col("i").as("src"), col("j").as("dst"))))
+        val untouched = pins(oldCore.join(affected, Seq("id"), "left_anti"))
         require(untouched.count() > 0,
           "the delta touched every component — the bounded-scope " +
             "demonstration is vacuous on this fixture")
-        // pin the result, then release the state pins it no longer reads
-        // (the q240 discipline): a call leaves only the result's own pins
-        val out = untouched.unionByName(recomputed)
+        // the scope keeps only the pinned result's own pins
+        untouched.unionByName(recomputed)
           .select(col("id").as("doc_id"), col("coreness"))
           .orderBy("doc_id").pin()
-        graft.util.CheckpointGen.release(s.sparkContext,
-          Seq(oldEdges, oldCore, labels, postings, sizes, bp, newPairs,
-            affected, untouched).flatMap(graft.util.CheckpointGen.pinnedIds)
-            .toSet)
-        out
       },
       Some(fullCorenessOracleSql)),
 

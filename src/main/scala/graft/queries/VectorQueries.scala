@@ -1517,9 +1517,8 @@ object VectorQueries {
         val queries = clustered.filter(col("vec_id") % 200 === 0)
         val truth = Similarity.bruteForceTopK(queries, clustered, 3)
           .select(col("qid"), col("nid")).cache()
-        // per-knob candidate pins, released with the corpus pins below
-        val candPins = scala.collection.mutable.Set.empty[Int]
-        def knob(bands: Int, bits: Int): DataFrame = {
+        def knob(pins: graft.util.Pin.Scope, bands: Int,
+            bits: Int): DataFrame = {
           // ONE candidate derivation per knob (r21, guide §1.2): the
           // ranked-hits leg and the candidate-mass leg each used to run
           // the full signature/bucket-join/distinct chain — two corpus
@@ -1528,12 +1527,8 @@ object VectorQueries {
           // and shared: hits rank it, ncand counts it. Same expressions,
           // same pair set — the measured recalls/masses are unchanged
           // (hash-green at both SFs).
-          val cand = Similarity
-            .lshBandedCandidates(queries, clustered, 64, bands, bits)
-            .pin()
-          candPins.synchronized {
-            candPins ++= graft.util.CheckpointGen.pinnedIds(cand); ()
-          }
+          val cand = pins(Similarity
+            .lshBandedCandidates(queries, clustered, 64, bands, bits))
           val approx = Similarity
             .lshBandedTopKFromCandidates(cand, queries, clustered, 3)
           val hits = truth.join(approx
@@ -1559,24 +1554,23 @@ object VectorQueries {
         // cache, and two concurrent first-readers would each compute the
         // expensive brute-force truth before one wins the cache write
         truth.count()
-        // the two knob legs are independent job chains over the (now
-        // cached) shared inputs — overlapped (guide §2.6); each leg's
-        // candidate pin is the expensive part and they no longer
-        // serialize behind each other
-        val legs = new Array[DataFrame](2)
-        graft.util.Par.run(
-          () => legs(0) = knob(48, 6),
-          () => legs(1) = knob(32, 16))
         // ivfPqTopK's pin lifecycle (ADVICE r9): the 2-row result
         // materializes eagerly, then the corpus-scale pins are released —
         // nothing corpus-sized stays pinned after the fn returns, and
         // Bench reps don't accumulate checkpoint blocks
-        try legs(0).unionAll(legs(1)).orderBy("method")
-          .pin()
-        finally {
+        try graft.util.Pin.scope { pins =>
+          // the two knob legs are independent job chains over the (now
+          // cached) shared inputs — overlapped (guide §2.6); each leg's
+          // candidate pin is the expensive part and they no longer
+          // serialize behind each other
+          val legs = new Array[DataFrame](2)
+          graft.util.Par.run(
+            () => legs(0) = knob(pins, 48, 6),
+            () => legs(1) = knob(pins, 32, 16))
+          legs(0).unionAll(legs(1)).orderBy("method").pin()
+        } finally {
           clustered.unpersist(blocking = false)
           truth.unpersist(blocking = false)
-          graft.util.CheckpointGen.release(s.sparkContext, candPins.toSet)
         }
       },
       Some(s"""WITH base AS (
@@ -2421,8 +2415,6 @@ object VectorQueries {
     QueryDef.demo("q245_stream_ann_search",
       (s, dir, reduced) => {
         val (xq, index, _, routing) = externalAnnSetup(s, dir)
-        val sc = s.sparkContext
-        import graft.util.CheckpointGen
         val root = java.nio.file.Files
           .createTempDirectory("graft_stream_ann").toString
         try {
@@ -2444,15 +2436,11 @@ object VectorQueries {
           // pins reduced ≡ full.
           val ingest = PipelineQueries.demoIngest(s, schema, root, reduced)
           val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            (batch, epoch) => {
-              val b = batch.pin()
-              val bPins = CheckpointGen.pinnedIds(b)
-              try {
-                val qcells = routing.queryCells(b, SemDedupProbes)
-                Similarity.ivfPqSearchQueries(index, b, qcells, 5,
-                    IvfPqRerank)
-                  .write.mode("overwrite").parquet(s"$root/out/batch=$epoch")
-              } finally CheckpointGen.release(sc, bPins)
+            (batch, epoch) => graft.util.Pin.scope { pins =>
+              val b = pins(batch)
+              val qcells = routing.queryCells(b, SemDedupProbes)
+              Similarity.ivfPqSearchQueries(index, b, qcells, 5, IvfPqRerank)
+                .write.mode("overwrite").parquet(s"$root/out/batch=$epoch")
             }
           val q = Streams.start(ingest)(_.foreachBatch(step))
           try q.processAllAvailable() finally q.stop()
@@ -2567,8 +2555,6 @@ object VectorQueries {
         val index0 = Similarity.buildIvfPqIndexWith(old, routing,
             SemDedupProbes)
           .persist()
-        val sc = s.sparkContext
-        import graft.util.CheckpointGen
         val root = java.nio.file.Files
           .createTempDirectory("graft_compact_policy").toString
         try {
@@ -2596,25 +2582,22 @@ object VectorQueries {
           val events =
             new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]
           val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            (batch, epoch) => {
-              val b = batch.pin()
-              val bPins = CheckpointGen.pinnedIds(b)
-              try {
-                val asg = routing.assign(Similarity.asV(b), SemDedupProbes)
-                val dupIds = Similarity
-                  .cellLocalScreen(asg, corpProbes, SemDedupTau)
-                  .select(col("vec_id").as("dup_id")).distinct()
-                val survivors = b.join(dupIds,
-                  col("vec_id") === col("dup_id"), "left_anti")
-                Similarity.buildIvfPqIndexWith(survivors, routing,
-                    SemDedupProbes)
-                  .repartition(3)
-                  .write.mode("overwrite")
-                  .parquet(s"$root/store/deltas/epoch=$epoch")
-                Similarity.compactStoreIfNeeded(s, s"$root/store",
-                    maxFiles = 10L, targetFiles = 2, epoch)
-                  .foreach { case (bf, af) => events.add((epoch, bf, af)); () }
-              } finally CheckpointGen.release(sc, bPins)
+            (batch, epoch) => graft.util.Pin.scope { pins =>
+              val b = pins(batch)
+              val asg = routing.assign(Similarity.asV(b), SemDedupProbes)
+              val dupIds = Similarity
+                .cellLocalScreen(asg, corpProbes, SemDedupTau)
+                .select(col("vec_id").as("dup_id")).distinct()
+              val survivors = b.join(dupIds,
+                col("vec_id") === col("dup_id"), "left_anti")
+              Similarity.buildIvfPqIndexWith(survivors, routing,
+                  SemDedupProbes)
+                .repartition(3)
+                .write.mode("overwrite")
+                .parquet(s"$root/store/deltas/epoch=$epoch")
+              Similarity.compactStoreIfNeeded(s, s"$root/store",
+                  maxFiles = 10L, targetFiles = 2, epoch)
+                .foreach { case (bf, af) => events.add((epoch, bf, af)); () }
             }
           val q = Streams.start(ingest)(_.foreachBatch(step))
           try q.processAllAvailable() finally q.stop()
@@ -2869,8 +2852,6 @@ object VectorQueries {
         val index0 = Similarity.buildIvfPqIndexWith(old, routing,
             SemDedupProbes)
           .persist()
-        val sc = s.sparkContext
-        import graft.util.CheckpointGen
         val root = java.nio.file.Files
           .createTempDirectory("graft_store_restart").toString
         try {
@@ -2887,28 +2868,25 @@ object VectorQueries {
           val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
           def step(kill: Boolean)
               : (org.apache.spark.sql.DataFrame, Long) => Unit =
-            (batch, epoch) => {
-              val b = batch.pin()
-              val bPins = CheckpointGen.pinnedIds(b)
-              try {
-                val asg = routing.assign(Similarity.asV(b), SemDedupProbes)
-                val dupIds = Similarity
-                  .cellLocalScreen(asg, corpProbes, SemDedupTau)
-                  .select(col("vec_id").as("dup_id")).distinct()
-                val survivors = b.join(dupIds,
-                  col("vec_id") === col("dup_id"), "left_anti")
-                Similarity.buildIvfPqIndexWith(survivors, routing,
-                    SemDedupProbes)
-                  .repartition(3)
-                  .write.mode("overwrite")
-                  .parquet(s"$root/store/deltas/epoch=$epoch")
-                if (kill && epoch == 1L && armed.compareAndSet(true, false))
-                  throw new IllegalStateException("injected kill: epoch 1 " +
-                    "died after its delta write, before the fold policy ran")
-                Similarity.compactStoreIfNeeded(s, s"$root/store",
-                  maxFiles = 10L, targetFiles = 2, epoch)
-                ()
-              } finally CheckpointGen.release(sc, bPins)
+            (batch, epoch) => graft.util.Pin.scope { pins =>
+              val b = pins(batch)
+              val asg = routing.assign(Similarity.asV(b), SemDedupProbes)
+              val dupIds = Similarity
+                .cellLocalScreen(asg, corpProbes, SemDedupTau)
+                .select(col("vec_id").as("dup_id")).distinct()
+              val survivors = b.join(dupIds,
+                col("vec_id") === col("dup_id"), "left_anti")
+              Similarity.buildIvfPqIndexWith(survivors, routing,
+                  SemDedupProbes)
+                .repartition(3)
+                .write.mode("overwrite")
+                .parquet(s"$root/store/deltas/epoch=$epoch")
+              if (kill && epoch == 1L && armed.compareAndSet(true, false))
+                throw new IllegalStateException("injected kill: epoch 1 " +
+                  "died after its delta write, before the fold policy ran")
+              Similarity.compactStoreIfNeeded(s, s"$root/store",
+                maxFiles = 10L, targetFiles = 2, epoch)
+              ()
             }
           // demo-depth tiering (r16 verdict #7, extended to the vector
           // stores — the q252 treatment): bench depth runs ONE

@@ -736,41 +736,42 @@ object Streams {
     val s = corpus.sparkSession
     if (java.nio.file.Files.exists(java.nio.file.Paths
         .get(ccLabelStore(stateRoot).basePath(-1), "_SUCCESS"))) return
-    val sc = s.sparkContext
-    val postings = DevTiming("step", "init postings ckpt")(graft.ext.Dedup
-      .ngramPostings(corpus, "doc_id", "text", k).pin())
-    val pins = graft.util.CheckpointGen.pinnedIds(postings)
-    // the two base writes both read the checkpointed postings and write
-    // disjoint dirs — overlapped (guide §2.6) so the size aggregate's
-    // tasks back-fill the posting write's task tail; the label base (the
-    // init guard) still commits strictly last, below
-    val post = ccPostingStore(stateRoot)
-    val siz = ccSizeStore(stateRoot)
-    val lab = ccLabelStore(stateRoot)
-    DevTiming("step", "init posting+size base writes (overlapped)")(
-      graft.util.Par.run(
-        () => writePostingGen(postings, post.basePath(-1), nBuckets),
-        () => siz.writeBase(graft.ext.Dedup.ngramPostingSizes(postings), -1)))
-    graft.util.CheckpointGen.release(sc, pins)
-    val p = post.read(s, post.basePath(-1)).select("i", "sk")
-    val z = siz.read(s, siz.basePath(-1))
-    val pairsLazy = graft.ext.Dedup
-      .ngramJaccardPairsFromPostings(p, z, threshold)
-    onInitPairs match {
-      case None =>
-        // the lazy pair join materializes once, inside CC's first round
-        DevTiming("step", "init pairs+CC+label_base write")(
-          lab.writeBase(graft.ext.Dedup.connectedComponents(pairsLazy), -1))
-      case Some(hook) =>
-        // composed init: checkpoint the pair set ONCE; the hook and CC
-        // both read the materialized frame (label base still last)
-        val pairs = DevTiming("step", "init pairs ckpt")(
-          pairsLazy.select("i", "j").pin())
-        DevTiming("step", "init onInitPairs hook")(hook(pairs))
-        DevTiming("step", "init CC+label_base write")(
-          lab.writeBase(graft.ext.Dedup.connectedComponents(pairs), -1))
-        graft.util.CheckpointGen.release(sc,
-          graft.util.CheckpointGen.pinnedIds(pairs))
+    graft.util.Pin.scope { pins =>
+      val postings = DevTiming("step", "init postings ckpt")(pins(graft.ext
+        .Dedup.ngramPostings(corpus, "doc_id", "text", k)))
+      // the two base writes both read the checkpointed postings and write
+      // disjoint dirs — overlapped (guide §2.6) so the size aggregate's
+      // tasks back-fill the posting write's task tail; the label base
+      // (the init guard) still commits strictly last, below
+      val post = ccPostingStore(stateRoot)
+      val siz = ccSizeStore(stateRoot)
+      val lab = ccLabelStore(stateRoot)
+      DevTiming("step", "init posting+size base writes (overlapped)")(
+        graft.util.Par.run(
+          () => writePostingGen(postings, post.basePath(-1), nBuckets),
+          () => siz.writeBase(graft.ext.Dedup.ngramPostingSizes(postings),
+            -1)))
+      pins.release(postings)
+      val p = post.read(s, post.basePath(-1)).select("i", "sk")
+      val z = siz.read(s, siz.basePath(-1))
+      val pairsLazy = graft.ext.Dedup
+        .ngramJaccardPairsFromPostings(p, z, threshold)
+      onInitPairs match {
+        case None =>
+          // the lazy pair join materializes once, inside CC's first round
+          DevTiming("step", "init pairs+CC+label_base write")(
+            lab.writeBase(pins.adopt(
+              graft.ext.Dedup.connectedComponents(pairsLazy)), -1))
+        case Some(hook) =>
+          // composed init: checkpoint the pair set ONCE; the hook and CC
+          // both read the materialized frame (label base still last)
+          val pairs = DevTiming("step", "init pairs ckpt")(
+            pins(pairsLazy.select("i", "j")))
+          DevTiming("step", "init onInitPairs hook")(hook(pairs))
+          DevTiming("step", "init CC+label_base write")(
+            lab.writeBase(pins.adopt(
+              graft.ext.Dedup.connectedComponents(pairs)), -1))
+      }
     }
   }
 
@@ -922,68 +923,60 @@ object Streams {
       onEpochPairs: (DataFrame, Long) => Unit = (_, _) => ())(
       batch: DataFrame, epoch: Long): Unit = {
     val s = batch.sparkSession
-    val sc = s.sparkContext
     import graft.ext.Dedup
-    import graft.util.CheckpointGen
-    val b = DevTiming("step", s"e$epoch batch ckpt")(batch.pin())
-    val bPins = CheckpointGen.pinnedIds(b)
-    val bp = DevTiming("step", s"e$epoch batch postings ckpt")(
-      Dedup.ngramPostings(b, "doc_id", "text", k).pin())
-    val bpPins = CheckpointGen.pinnedIds(bp)
-    val postingsAll = ccStorePostingsView(s, stateRoot, epoch)
-    val postings =
-      if (nBuckets <= 0) postingsAll
-      else DevTiming("step", s"e$epoch bucket prune")(
-        Dedup.pruneToBatchBuckets(postingsAll, bp, nBuckets))
-    val sizes = ccStoreSizesView(s, stateRoot, epoch)
-    val labels = ccStoreLabelsView(s, stateRoot, epoch)
-    val newPairs = DevTiming("step", s"e$epoch pair delta ckpt")(
-      Dedup.incrementalCcPairsFromPostings(postings, sizes, bp, threshold)
-        .pin())
-    val pairPins = CheckpointGen.pinnedIds(newPairs)
-    val updates = DevTiming("step", s"e$epoch label updates")(
-      Dedup.incrementalCcLabelUpdates(labels, newPairs,
-        b.select(col("doc_id").as("id"))))
-    val labelWriteT0 = System.nanoTime()
-    // `_rows` sidecar: the delta's row count, observed ON the write job
-    // itself (r20 optimization: the count formerly re-read the written
-    // parquet — one extra job per epoch for a number the write already
-    // knows) — the broadcast guard and the row-based fold trigger consume
-    // it driver-side with no further jobs. Written after the parquet
-    // commit; a crash in between leaves a complete delta whose readers
-    // heal by counting once (GenStore.deltaRows).
-    val updObs = org.apache.spark.sql.Observation(s"cc_upd_rows_$epoch")
-    val lab = ccLabelStore(stateRoot)
-    DevTiming("step", s"e$epoch update delta write")(
-      lab.writeDelta(updates.observe(updObs, count(lit(1)).as("n")), epoch))
-    lab.writeDeltaRowsSidecar(epoch, updObs.get("n").asInstanceOf[Long])
-    onLabelWrite((System.nanoTime() - labelWriteT0) / 1e9)
-    // composed-loop seam: the pair delta stays pinned through the hook
-    // (updates' lineage reaches the same pins, so both release together
-    // after it)
-    onEpochPairs(newPairs, epoch)
-    CheckpointGen.release(sc, pairPins ++ CheckpointGen.pinnedIds(updates))
-    killOnceAt.foreach { case (at, armed) =>
-      if (epoch == at && armed.compareAndSet(true, false)) {
-        CheckpointGen.release(sc, bPins ++ bpPins)
-        throw new IllegalStateException(
-          s"injected kill: epoch $epoch died after its update-delta " +
-            "write, before its posting/size writes")
+    graft.util.Pin.scope { pins =>
+      val b = DevTiming("step", s"e$epoch batch ckpt")(pins(batch))
+      val bp = DevTiming("step", s"e$epoch batch postings ckpt")(
+        pins(Dedup.ngramPostings(b, "doc_id", "text", k)))
+      val postingsAll = ccStorePostingsView(s, stateRoot, epoch)
+      val postings =
+        if (nBuckets <= 0) postingsAll
+        else DevTiming("step", s"e$epoch bucket prune")(
+          Dedup.pruneToBatchBuckets(postingsAll, bp, nBuckets))
+      val sizes = ccStoreSizesView(s, stateRoot, epoch)
+      val labels = ccStoreLabelsView(s, stateRoot, epoch)
+      val newPairs = DevTiming("step", s"e$epoch pair delta ckpt")(pins(
+        Dedup.incrementalCcPairsFromPostings(postings, sizes, bp, threshold)))
+      val updates = DevTiming("step", s"e$epoch label updates")(pins.adopt(
+        Dedup.incrementalCcLabelUpdates(labels, newPairs,
+          b.select(col("doc_id").as("id")))))
+      val labelWriteT0 = System.nanoTime()
+      // `_rows` sidecar: the delta's row count, observed ON the write job
+      // itself (r20 optimization: the count formerly re-read the written
+      // parquet — one extra job per epoch for a number the write already
+      // knows) — the broadcast guard and the row-based fold trigger
+      // consume it driver-side with no further jobs. Written after the
+      // parquet commit; a crash in between leaves a complete delta whose
+      // readers heal by counting once (GenStore.deltaRows).
+      val updObs = org.apache.spark.sql.Observation(s"cc_upd_rows_$epoch")
+      val lab = ccLabelStore(stateRoot)
+      DevTiming("step", s"e$epoch update delta write")(
+        lab.writeDelta(updates.observe(updObs, count(lit(1)).as("n")), epoch))
+      lab.writeDeltaRowsSidecar(epoch, updObs.get("n").asInstanceOf[Long])
+      onLabelWrite((System.nanoTime() - labelWriteT0) / 1e9)
+      // composed-loop seam: the pair delta stays pinned through the hook
+      onEpochPairs(newPairs, epoch)
+      pins.release(newPairs)
+      pins.release(updates)
+      killOnceAt.foreach { case (at, armed) =>
+        if (epoch == at && armed.compareAndSet(true, false))
+          throw new IllegalStateException(
+            s"injected kill: epoch $epoch died after its update-delta " +
+              "write, before its posting/size writes")
       }
+      // the posting delta reads the checkpointed batch postings, the size
+      // delta the pinned batch's shingle sets (ngramSetSizes: no aggregate
+      // shuffle); they write disjoint epoch dirs — overlapped (guide
+      // §2.6). The kill-point contract ("after the update delta, before
+      // the posting/size deltas") is untouched: the kill check above
+      // still precedes both.
+      DevTiming("step", s"e$epoch posting+size delta writes (overlapped)")(
+        graft.util.Par.run(
+          () => writePostingGen(bp,
+            ccPostingStore(stateRoot).deltaPath(epoch), nBuckets),
+          () => ccSizeStore(stateRoot)
+            .writeDelta(Dedup.ngramSetSizes(b, "doc_id", "text", k), epoch)))
     }
-    // the posting delta reads the checkpointed batch postings, the size
-    // delta the pinned batch's shingle sets (ngramSetSizes: no aggregate
-    // shuffle); they write disjoint epoch dirs — overlapped (guide §2.6).
-    // The kill-point contract ("after the update delta, before the
-    // posting/size deltas") is untouched: the kill check above still
-    // precedes both.
-    DevTiming("step", s"e$epoch posting+size delta writes (overlapped)")(
-      graft.util.Par.run(
-        () => writePostingGen(bp,
-          ccPostingStore(stateRoot).deltaPath(epoch), nBuckets),
-        () => ccSizeStore(stateRoot)
-          .writeDelta(Dedup.ngramSetSizes(b, "doc_id", "text", k), epoch)))
-    CheckpointGen.release(sc, bPins ++ bpPins)
     val folded = DevTiming("step", s"e$epoch fold")(
       ccStoreFoldIfNeeded(s, stateRoot, epoch, nBuckets,
         maxLabelDeltas, maxPostingGens, maxLabelDeltaRows))

@@ -262,7 +262,7 @@ object GenStore {
   /** Data files for a write of `df`: `max(1, ceil(B / maxPartitionBytes))`,
     * where B sizes the bytes written. When every leaf of the optimized
     * plan is a pinned RDD (a local or a reliable checkpoint,
-    * [[CheckpointGen.pinned]]) and only row-preserving or shrinking
+    * [[Pin.pinned]]) and only row-preserving or shrinking
     * operators sit above them (projections, filters, aggregates, unions:
     * no join and no generator), B is the bytes those pins store. There
     * the plan's estimate is off either way: Catalyst sizes an `explode`
@@ -277,7 +277,7 @@ object GenStore {
   def fileCount(df: DataFrame): Int = {
     val target = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
     val plan = df.queryExecution.optimizedPlan
-    val pinned = CheckpointGen.pinned(plan)
+    val pinned = Pin.pinned(plan)
     val grows = plan.find {
       case _: Join | _: Generate => true
       case _ => false

@@ -139,22 +139,18 @@ class GenStoreMergeSpec extends SparkSpec {
   }
 
   /** Pin `df` eagerly through [[graft.util.Pin]] in `mode` ("local" or
-    * "reliable", the latter against a fresh checkpoint dir); returns the
-    * pinned frame and a release of its storage.
+    * "reliable", the latter against the fresh checkpoint dir `ckpt`);
+    * callers free it with `Pin.release`, in either mode.
     */
-  private def pinIn(mode: String, df: DataFrame): (DataFrame, () => Unit) =
-    if (mode == "local") {
-      val p = df.localCheckpoint(true)
-      val ids = graft.util.CheckpointGen.pinnedIds(p)
-      (p, () => graft.util.CheckpointGen.release(spark.sparkContext, ids))
-    } else {
-      import graft.util.Pin._
-      val dir = tempRoot("ckpt")
-      spark.sparkContext.setCheckpointDir(dir)
+  private def pinIn(mode: String, df: DataFrame, ckpt: String): DataFrame = {
+    import graft.util.Pin._
+    if (mode == "local") df.pin()
+    else {
+      spark.sparkContext.setCheckpointDir(ckpt)
       spark.conf.set(graft.util.Pin.ModeConf, "reliable")
-      try (df.pin(), () => Dirs.rmTree(dir))
-      finally spark.conf.unset(graft.util.Pin.ModeConf)
+      try df.pin() finally spark.conf.unset(graft.util.Pin.ModeConf)
     }
+  }
 
   /** A pinned exploded frame: at least one file per target bytes. */
   private def explodedCase(mode: String): Unit = {
@@ -166,10 +162,11 @@ class GenStoreMergeSpec extends SparkSpec {
     try {
       // 200 ids × 500 hashed keys: Catalyst sizes the explode as its
       // 200-row child, the output is ~1.6 MB of incompressible longs
-      val (postings, release) = pinIn(mode, spark.range(0, 200, 1, 16)
+      val postings = pinIn(mode, spark.range(0, 200, 1, 16)
         .select(col("id").as("i"),
           explode(sequence(lit(0L), lit(499L))).as("k"))
-        .select(col("i"), xxhash64(col("i"), col("k")).as("sk")))
+        .select(col("i"), xxhash64(col("i"), col("k")).as("sk")),
+        s"$root/ckpt")
       val estimate = postings.queryExecution.optimizedPlan.stats.sizeInBytes
       assert(estimate < target, s"$mode: the plan estimate $estimate no " +
         "longer undercounts the frame; the spec needs a larger one")
@@ -183,7 +180,7 @@ class GenStoreMergeSpec extends SparkSpec {
       val back = store.read(spark, store.basePath(-1))
       assert(back.count() == postings.count() &&
         back.exceptAll(postings).isEmpty)
-      release()
+      graft.util.Pin.release(postings)
     } finally {
       prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
       Dirs.rmTree(root)
@@ -198,7 +195,8 @@ class GenStoreMergeSpec extends SparkSpec {
     try {
       def side(name: String) = spark.range(0, 4000, 1, 4)
         .select(col("id").as("k"), (col("id") * 3).as(name))
-      val (joined, release) = pinIn(mode, side("v").join(side("w"), "k"))
+      val joined =
+        pinIn(mode, side("v").join(side("w"), "k"), s"$root/ckpt")
       val target = spark.sessionState.conf.filesMaxPartitionBytes
       val estimate = joined.queryExecution.optimizedPlan.stats.sizeInBytes
       assert(estimate > 4 * target, s"$mode: the plan estimate $estimate " +
@@ -212,7 +210,7 @@ class GenStoreMergeSpec extends SparkSpec {
       assert(dataFiles(store.basePath(-1))._1 == 1, mode)
       assert(sortedRows(store.read(spark, store.basePath(-1))) ==
         sortedRows(joined))
-      release()
+      graft.util.Pin.release(joined)
     } finally Dirs.rmTree(root)
   }
 

@@ -23,42 +23,62 @@ class PipelineSpec extends SparkSpec {
     assert(labels.values.toSet == Set(0L))
   }
 
+  /** Runs `body` once per pin storage mode, passing the mode and the pins
+    * alive now: the persisted RDD ids in local mode, the `rdd-*` dirs under
+    * a fresh checkpoint dir in reliable mode.
+    */
+  private def inEachPinMode(body: (String, () => Set[String]) => Unit): Unit = {
+    body("local",
+      () => spark.sparkContext.getPersistentRDDs.keySet.map(_.toString).toSet)
+    inReliableMode(dir => body("reliable", () => checkpointEntries(dir)
+      .filter(_.split('/').last.startsWith("rdd-")).toSet))
+  }
+
   test("iterative loops release every checkpoint generation but the result") {
-    // a convergence loop that pins a localCheckpoint per materialization
-    // would grow the block manager linearly in rounds — the operators must
-    // leave ONLY the returned table pinned, however many rounds they ran
-    def pinned: Int = spark.sparkContext.getPersistentRDDs
-      .values.count(_.getStorageLevel.useMemory)
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    val before = pinned
-    // 64-node path → multiple outer iterations (reach ×4 per checkpoint)
-    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("i", "j")
-    val labels = Dedup.connectedComponents(chain)
-    assert(labels.as[(Long, Long)].collect().toMap.values.toSet == Set(0L))
-    assert(pinned - before <= 1,
-      s"connectedComponents left ${pinned - before} pinned RDDs (want ≤1: the labels)")
-    val ranks = graft.ext.Graph.pageRank(chain.toDF("src", "dst"), iterations = 6)
-    assert(ranks.count() == 64)
-    assert(pinned - before <= 2,
-      s"pageRank left ${pinned - before - 1} extra pinned RDDs (want ≤1: the ranks)")
+    // a convergence loop that pins a checkpoint per materialization would
+    // grow its storage linearly in rounds — the operators must leave ONLY
+    // the returned table pinned, however many rounds they ran
+    inEachPinMode { (mode, live) =>
+      // held: see the q240/q258 test below
+      val held = spark.sparkContext.getPersistentRDDs
+      val before = live()
+      def pinned: Int = (live() -- before).size
+      // 64-node path → multiple outer iterations (reach ×4 per checkpoint)
+      val chain = (0L until 63L).map(i => (i, i + 1)).toDF("i", "j")
+      val labels = Dedup.connectedComponents(chain)
+      assert(labels.as[(Long, Long)].collect().toMap.values.toSet == Set(0L))
+      assert(pinned <= 1, s"$mode: connectedComponents left " +
+        s"$pinned pins (want ≤1: the labels)")
+      val ranks = graft.ext.Graph.pageRank(chain.toDF("src", "dst"),
+        iterations = 6)
+      assert(ranks.count() == 64)
+      assert(pinned <= 2, s"$mode: pageRank left ${pinned - 1} extra " +
+        "pins (want ≤1: the ranks)")
+      graft.util.Pin.release(labels)
+      graft.util.Pin.release(ranks)
+      assert(pinned == 0, s"$mode: $pinned pins left after releasing the " +
+        "results")
+      java.lang.ref.Reference.reachabilityFence(held)
+    }
   }
 
   test("q240 and q258 leave only their result's own pins behind") {
-    import graft.util.CheckpointGen
-    val sc = spark.sparkContext
-    for (name <- Seq("q240_incremental_cc_updates",
-        "q258_incremental_coreness")) {
-      // held: the registry keeps entries by weak reference, so a GC could
-      // otherwise drop an entry and hide a leak or fake a release
-      val held = sc.getPersistentRDDs
-      val out = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-      val added = sc.getPersistentRDDs.keySet -- held.keySet
-      val own = CheckpointGen.pinnedIds(out)
-      assert(own.nonEmpty, s"$name returned an unpinned frame")
-      assert(added == own,
-        s"$name left ${(added -- own).size} intermediate pins behind")
-      CheckpointGen.release(sc, own)
-      java.lang.ref.Reference.reachabilityFence(held)
+    inEachPinMode { (mode, live) =>
+      for (name <- Seq("q240_incremental_cc_updates",
+          "q258_incremental_coreness")) {
+        // held: the registry keeps entries by weak reference, so a GC could
+        // otherwise drop an entry and hide a leak or fake a release
+        val held = spark.sparkContext.getPersistentRDDs
+        val before = live()
+        val out = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+        assert((live() -- before).nonEmpty,
+          s"$mode: $name returned an unpinned frame")
+        graft.util.Pin.release(out)
+        val left = live() -- before
+        assert(left.isEmpty,
+          s"$mode: $name left ${left.size} intermediate pins behind")
+        java.lang.ref.Reference.reachabilityFence(held)
+      }
     }
   }
 

@@ -4,8 +4,10 @@ import org.apache.spark.sql.functions._
 
 /** Round-21 optimization pins:
   *   - the Pin seam (r20 verdict #8): `.pin()` in reliable mode produces
-  *     the same rows as the default localCheckpoint mode, and the mode
-  *     knob actually switches the storage path;
+  *     the same rows as the default localCheckpoint mode, the mode knob
+  *     actually switches the storage path, releasing a reliable pin
+  *     deletes its files, and nothing under src/main checkpoints around
+  *     Pin;
   *   - the index-build pq fusion: pq_encode over the carried double
   *     vector ≡ the retired productQuantize join, row for row;
   *   - Par.run: all branches complete before return, failures rethrow
@@ -37,6 +39,10 @@ class Round21Spec extends SparkSpec {
         w.filter(java.nio.file.Files.isRegularFile(_)).count()
       }
       assert(wrote > 0, "reliable mode wrote nothing to the checkpoint dir")
+      // ...and releasing the pin deletes them
+      graft.util.Pin.release(reliable)
+      assert(checkpointEntries(dir).isEmpty,
+        s"released reliable pin kept ${checkpointEntries(dir)}")
     } finally {
       spark.conf.unset(graft.util.Pin.ModeConf)
       scala.util.Using.resource(java.nio.file.Files.walk(dir)) { w =>
@@ -180,6 +186,20 @@ class Round21Spec extends SparkSpec {
       }
     }
     assert(hits.isEmpty, hits.mkString("system property writes:\n", "\n", ""))
+  }
+
+  test("src/main pins only through graft.util.Pin: no checkpoint call " +
+      "outside it") {
+    // Pin decides the storage and owns the release; a checkpoint made
+    // around it would pick its own storage, and no scope would free it
+    val call = """\blocalCheckpoint\(|\.checkpoint\(""".r
+    val hits = mainSources.flatMap { case (f, src) =>
+      if (f.getFileName.toString == "Pin.scala") Nil
+      else src.linesIterator.zipWithIndex.collect {
+        case (l, i) if call.findFirstIn(l).isDefined => s"$f:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("checkpoints outside Pin:\n", "\n", ""))
   }
 
   test("src/main starts every streaming query through Streams.start") {

@@ -111,6 +111,33 @@ trait SparkSpec extends AnyFunSuite {
         s"(${bench.size} vs ${full.size} rows)")
   }
 
+  /** Runs `body` with `.pin()` in reliable mode against a fresh checkpoint
+    * dir, which `body` is passed; local mode is restored and the dir
+    * deleted afterwards.
+    */
+  def inReliableMode[A](body: java.nio.file.Path => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_reliable")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    spark.conf.set(graft.util.Pin.ModeConf, "reliable")
+    try body(dir)
+    finally {
+      spark.conf.unset(graft.util.Pin.ModeConf)
+      graft.util.Dirs.rmTree(dir.toString)
+    }
+  }
+
+  /** What reliable pins hold under checkpoint dir `dir`: its `rdd-*` dirs
+    * and every file, as paths relative to `dir`, sorted.
+    */
+  def checkpointEntries(dir: java.nio.file.Path): Seq[String] =
+    scala.util.Using.resource(java.nio.file.Files.walk(dir)) { w =>
+      import scala.jdk.CollectionConverters._
+      w.iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p) ||
+          p.getFileName.toString.startsWith("rdd-"))
+        .map(dir.relativize(_).toString).toSeq.sorted
+    }
+
   /** A frame's rows as sorted strings (column order kept). */
   def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
