@@ -2,6 +2,7 @@ package graft.queries
 import graft.util.Pin._
 import graft.util.DevTiming
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
@@ -116,13 +117,41 @@ object PipelineQueries {
       .parquet(s"$root/in/*")
   }
 
+  /** What a composed CC stream demo keeps beside the CC store, built by
+    * [[ccStoreLoopRun]] from the run's root (so every store it names
+    * lives, and dies, under that root):
+    *   - `init`: its own stores' init, called with the init corpus and
+    *     overlapped with the ingest staging and `ccStoreInit` (q263,
+    *     q270) — disjoint dirs, each with its own idempotency guard;
+    *   - `step`: its own per-epoch writes, overlapped with `ccStoreStep`
+    *     (q263, q270) — disjoint state dirs, both derived from the
+    *     delivered batch only, every write an epoch-keyed idempotent
+    *     overwrite, so a crash in either re-delivers the epoch and
+    *     re-runs both;
+    *   - `onInitPairs` / `onEpochPairs`: passed through to `ccStoreInit`
+    *     / `ccStoreStep` (q264 reuses the pairs the CC store computes);
+    *   - `serve`: the result from the merge-on-read labels, pinned before
+    *     the root is deleted (the plain demos serve the labels);
+    *   - `folds`: its stores whose folds must fire mid-stream at full
+    *     depth, by name.
+    */
+  private final case class CcCompose(
+      init: DataFrame => Unit = _ => (),
+      step: (DataFrame, Long) => Unit = (_, _) => (),
+      onInitPairs: Option[DataFrame => Unit] = None,
+      onEpochPairs: (DataFrame, Long) => Unit = (_, _) => (),
+      serve: DataFrame => DataFrame = _.orderBy("id").pin(),
+      folds: Seq[(String, graft.util.GenStore)] = Nil)
+
   /** The v2-store maintenance run over a `(doc_id, text)` corpus — the
-    * one loop body of every CC stream demo (q242, q252, q260 and q261 on
-    * text 3-grams, q262 on media frame tokens with k=1), so the demos
-    * differ only in the knobs below and the corpus prep; the
-    * modality-blind claim holds BY CONSTRUCTION. Stages the 3-epoch
-    * ingest, inits the store from the rest of the corpus, runs the
-    * stream, and serves the merge-on-read labels.
+    * one loop body of every CC stream demo: q242, q252, q260 and q261 on
+    * text 3-grams, q262 on media frame tokens with k=1, and the composed
+    * demos q263 (curation), q264 (coreness, threshold 0.3) and q270
+    * (tokenized tail), which add their own stores through a
+    * [[CcCompose]]. The demos differ only in the knobs below and the
+    * corpus prep; the modality-blind claim holds BY CONSTRUCTION. Stages
+    * the 3-epoch ingest (the `staged` columns), inits the store from the
+    * rest of the corpus, runs the stream, and serves.
     *   - `nBuckets`: posting layout, flat (0) or hive-bucketed.
     *   - `kill`: at full depth, inject the mid-epoch-1 kill, require()
     *     that it fired (a silently-surviving first run would demote the
@@ -131,7 +160,8 @@ object PipelineQueries {
     *   - `midStreamFolds`: at full depth, force both folds to fire
     *     mid-stream (labels at epoch 2 via maxLabelDeltas=1; postings
     *     every epoch via maxPostingGens=0 — so epoch 2's probe reads
-    *     across a fold boundary) and require() that they did. Otherwise
+    *     across a fold boundary) and require() that they did, and that
+    *     every store in the composition's `folds` folded too. Otherwise
     *     the production cadence runs, which folds nothing in 3 epochs.
     * `reduced` bench depth ([[QueryDef.benchFn]]) runs ONE
     * uninterrupted one-trigger stream at the production cadence
@@ -139,35 +169,47 @@ object PipelineQueries {
     * always starts on a FRESH SESSION (r15 verdict #3): recovery — and,
     * uninterrupted, the whole run — depends on disk state + checkpoint
     * only, nothing session-held. GC runs as the gcAfterFold policy, so
-    * the oracle hash over the returned labels also pins fold and
+    * the oracle hash over the served result also pins fold and
     * mid-stream GC view-invariance.
     */
   private def ccStoreLoopRun(s: org.apache.spark.sql.SparkSession,
-      corpus: org.apache.spark.sql.DataFrame, k: Int, nBuckets: Int,
-      kill: Boolean, midStreamFolds: Boolean, reduced: Boolean)
-      : org.apache.spark.sql.DataFrame = {
+      corpus: DataFrame, k: Int, nBuckets: Int,
+      kill: Boolean, midStreamFolds: Boolean, reduced: Boolean,
+      threshold: Double = 0.5, staged: Seq[String] = Seq("doc_id", "text"),
+      compose: String => CcCompose = _ => CcCompose()): DataFrame = {
     import graft.streaming.Streams
     val root = java.nio.file.Files
       .createTempDirectory("graft_cc_store").toString
     try {
-      // the ingest staging (files under $root/in) and the store init
-      // (state under $root/state) read the same static corpus and write
-      // disjoint dirs — independent, overlapped (guide §2.6)
+      val c = compose(root)
+      val state = s"$root/state"
+      val initCorpus = corpus.filter(col("doc_id") % 5 =!= 0)
+      // the ingest staging (files under $root/in), the store init (state
+      // under $root/state) and the composition's init read the same
+      // static corpus and write disjoint dirs — independent, overlapped
+      // (guide §2.6); each keeps its internal ordering contract (the
+      // label base commits last inside ccStoreInit)
       var schema: org.apache.spark.sql.types.StructType = null
       graft.util.Par.run(
-        () => schema = stageCcIngest(s, corpus, root),
-        () => Streams.ccStoreInit(corpus.filter(col("doc_id") % 5 =!= 0),
-          s"$root/state", k = k, nBuckets = nBuckets))
+        () => schema = stageCcIngest(s, corpus, root, staged),
+        () => Streams.ccStoreInit(initCorpus, state, k = k,
+          threshold = threshold, nBuckets = nBuckets,
+          onInitPairs = c.onInitPairs),
+        () => c.init(initCorpus))
       val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
       val folds = midStreamFolds && !reduced
       def start(killLeg: Boolean) = {
         val killAt = if (killLeg) Some((1L, armed)) else None
-        val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-          if (folds) Streams.ccStoreStep(s"$root/state", k, 0.5, nBuckets,
+        val ccStep: (DataFrame, Long) => Unit =
+          if (folds) Streams.ccStoreStep(state, k, threshold, nBuckets,
             maxLabelDeltas = 1, maxPostingGens = 0, gcAfterFold = true,
-            killOnceAt = killAt)
-          else Streams.ccStoreStep(s"$root/state", k, 0.5, nBuckets,
-            gcAfterFold = true, killOnceAt = killAt)
+            killOnceAt = killAt, onEpochPairs = c.onEpochPairs)
+          else Streams.ccStoreStep(state, k, threshold, nBuckets,
+            gcAfterFold = true, killOnceAt = killAt,
+            onEpochPairs = c.onEpochPairs)
+        val step: (DataFrame, Long) => Unit = (batch, epoch) =>
+          graft.util.Par.run(() => ccStep(batch, epoch),
+            () => c.step(batch, epoch))
         Streams.start(demoIngest(if (killLeg) s else s.newSession(), schema, root,
             reduced))(_.option("checkpointLocation", s"$root/ckpt").foreachBatch(step))
       }
@@ -182,22 +224,81 @@ object PipelineQueries {
       val q = start(killLeg = false)
       try q.processAllAvailable() finally q.stop()
       def committed(p: String) = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/state/$p/_SUCCESS"))
+        java.nio.file.Paths.get(s"$state/$p/_SUCCESS"))
       if (folds) {
         require(committed("gens/label_base/g=1"),
           "the label fold did not fire mid-stream")
         require(committed("gens/posting_base/g=1"),
           "the posting fold did not fire mid-stream")
+        c.folds.foreach { case (name, st) =>
+          require(st.latestCompleteBase() >= 1,
+            s"the $name fold did not fire mid-stream")
+        }
       }
       // GC ran as the gcAfterFold POLICY inside the stream — a
       // post-stream sweep must find nothing superseded left
-      require(Streams.ccStoreGc(s"$root/state") == 0,
+      require(Streams.ccStoreGc(state) == 0,
         "the mid-stream GC policy left superseded state behind")
-      Streams.ccStoreLabels(s, s"$root/state")
-        .orderBy("id").pin()
+      c.serve(Streams.ccStoreLabels(s, state))
     } finally {
       graft.util.Dirs.rmTree(root)
     }
+  }
+
+  /** The two-store sidecar of the curation demos (q263, q270): a rows
+    * store of per-epoch `rowsOf(batch)` deltas (the corpus never
+    * rewrites) and a census store of per-epoch (source, q_micro, c)
+    * counts over those rows, `q` scoring a row. The census covers ALL
+    * ingested docs, not survivors: the cut is set by each source's RAW
+    * quality distribution, which is what keeps census state append-only
+    * (survivorship shifts as later epochs merge components). Init writes
+    * the census base FIRST: its guard keys on the rows base's _SUCCESS,
+    * so the marker it checks is the LAST write and a crash between the
+    * two re-runs the whole init (heal-on-redelivery, the GenStore
+    * discipline). Each epoch writes both deltas — epoch-keyed idempotent
+    * overwrites that read the pinned rows and land disjoint dirs,
+    * overlapped — then folds the census once more than one delta is live
+    * (the shared seam on a non-union merge: a grouped re-sum) and sweeps
+    * what the fold retired. `serve` gets the labels, the rows view and
+    * the census totals, and pins its result.
+    */
+  private def curationSidecar(root: String, rowsOf: DataFrame => DataFrame,
+      q: org.apache.spark.sql.Column)(
+      serve: (DataFrame, DataFrame, DataFrame) => DataFrame): CcCompose = {
+    import graft.util.{GenStore, Pin}
+    val rows = GenStore(s"$root/state/side/rows_base",
+      s"$root/state/side/rows")
+    val census = GenStore(s"$root/state/side/census_base",
+      s"$root/state/side/census")
+    def censusOf(d: DataFrame) =
+      d.groupBy(col("source"), q.as("q_micro")).agg(count(lit(1)).as("c"))
+    def totals(sess: org.apache.spark.sql.SparkSession, bound: Long) =
+      census.unionView(sess, bound)
+        .groupBy("source", "q_micro").agg(sum("c").as("c"))
+    CcCompose(
+      init = initCorpus => if (!java.nio.file.Files.exists(java.nio
+          .file.Paths.get(rows.basePath(-1), "_SUCCESS")))
+        Pin.scope { pins =>
+          val r = pins(rowsOf(initCorpus))
+          census.writeBase(censusOf(r), -1)
+          rows.writeBase(r, -1)
+        },
+      step = (batch, epoch) => {
+        Pin.scope { pins =>
+          val r = pins(rowsOf(batch))
+          graft.util.Par.run(
+            () => rows.writeDelta(r, epoch),
+            () => census.writeDelta(censusOf(r), epoch))
+        }
+        census.foldIfDue(epoch)(_.size > 1) { g =>
+          census.writeBase(totals(batch.sparkSession, epoch), g)
+          census.gc(); ()
+        }
+        ()
+      },
+      serve = labels => serve(labels, rows.unionView(labels.sparkSession),
+        totals(labels.sparkSession, Long.MaxValue)),
+      folds = Seq("census" -> census))
   }
 
   /** Per-source top-quintile cut table (source, cut_micro) from a
@@ -2217,24 +2318,15 @@ object PipelineQueries {
     // this is the production leg the r16 verdict named as the last
     // missing composition: per-epoch ingest maintained incrementally, a
     // training snapshot CUT as a serve-time view. The q233/q261
-    // discipline, applied to curation state:
+    // discipline, applied to curation state, on the ccStoreLoopRun body:
     //   - dedup labels: the existing v2 CC store (Streams.ccStoreStep —
     //     delta-sized update writes, merge-on-read view, mid-stream
     //     folds + GC), byte-identical code path to q261;
-    //   - quality census: a GenStore of per-epoch (source, q_micro,
-    //     count) deltas — each epoch's write is CENSUS-OF-BATCH-sized,
-    //     the serve-time cut reads ONLY census state (grid-bounded,
-    //     never the corpus), and a >1-delta threshold fold + GC exercise
-    //     the shared seam on a non-union merge (grouped re-sum). The
-    //     census covers ALL ingested docs, not survivors: the cut is set
-    //     by each source's RAW quality distribution, which is what makes
-    //     census state append-only — survivorship shifts as later epochs
-    //     merge components, so a survivors-only census would need
-    //     retroactive decrements (dedup and quality act as independent
-    //     screens; both ARE applied to the final pool below);
-    //   - scored docs: a GenStore of per-epoch (doc_id, source, q_micro,
-    //     n_tok) deltas — the per-epoch write is delta-sized; the corpus
-    //     never rewrites.
+    //   - quality census: curationSidecar's census GenStore — each
+    //     epoch's write is CENSUS-OF-BATCH-sized, the serve-time cut
+    //     reads ONLY census state (grid-bounded, never the corpus);
+    //   - scored docs: its rows store, per-epoch (doc_id, source,
+    //     q_micro, n_tok) deltas.
     // The SERVE is one pass: survivors = merge-on-read labels filtered
     // to min-id cluster reps (label NULL = never saw an edge; label =
     // doc_id = its component's representative) ⋈ broadcast census cut →
@@ -2247,121 +2339,23 @@ object PipelineQueries {
     // leg here — q261/q262 + Round16Spec own the restart proof; this
     // query's claim is the composition, at one stream's cost.
     QueryDef.demo("q263_stream_incremental_curation",
-      (s, dir, reduced) => {
-        import graft.streaming.Streams
-        import graft.util.GenStore
-        val docs = Tables.documents(s, dir)
-        val isNew = col("doc_id") % 5 === 0
-        def scoredOf(d: org.apache.spark.sql.DataFrame) =
-          d.select(col("doc_id"), col("source"),
-            qualityMicro.as("q_micro"),
-            size(split(col("text"), " ", -1)).cast("long").as("n_tok"))
-        def censusOf(d: org.apache.spark.sql.DataFrame) =
-          d.groupBy("source", "q_micro").agg(count(lit(1)).as("c"))
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_inc_curation").toString
-        try {
-          // the ingest carries `source` alongside (doc_id, text): the
-          // curation census is per-source; the CC step ignores the
-          // extra column
-          val scoredStore = GenStore(s"$root/state/cur/scored_base",
-            s"$root/state/cur/scored", "g=", "epoch=")
-          val censusStore = GenStore(s"$root/state/cur/census_base",
-            s"$root/state/cur/census", "g=", "epoch=")
-          // the ingest staging, the CC-store init and the curation-state
-          // init touch DISJOINT dirs ($root/in, the CC state, the
-          // curation state), read the same static corpus, and each
-          // carries its own idempotency guard (staged files / label base
-          // _SUCCESS / scored base _SUCCESS) — a crash between them
-          // re-runs whichever guard is incomplete. Independent by
-          // construction → overlapped (guide §2.6); each branch keeps
-          // its INTERNAL ordering contract (label base commits last
-          // inside ccStoreInit; census base before scored base below).
-          var schema: org.apache.spark.sql.types.StructType = null
-          graft.util.Par.run(
-            () => schema = stageCcIngest(s, docs, root,
-              cols = Seq("doc_id", "source", "text")),
-            () => Streams.ccStoreInit(docs.filter(!isNew), s"$root/state",
-              k = 3, nBuckets = 64),
-            () => if (!java.nio.file.Files.exists(java.nio.file.Paths
-                .get(scoredStore.basePath(-1), "_SUCCESS"))) {
-              graft.util.Pin.scope { pins =>
-                val init = pins(scoredOf(docs.filter(!isNew)))
-                // census base FIRST: the guard above keys on the scored
-                // base's _SUCCESS, so the marker it checks must be the
-                // LAST write — a crash between the two then re-runs the
-                // whole init (heal-on-redelivery, the GenStore discipline)
-                // instead of reporting initialized with the census base
-                // missing
-                censusStore.writeBase(censusOf(init), -1)
-                scoredStore.writeBase(init, -1)
-              }
-            })
-          // bench depth: production fold cadence + one trigger, like the
-          // other maintenance demos; full depth folds aggressively so the
-          // serve reads across fold boundaries
-          val ccStep: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            if (reduced) Streams.ccStoreStep(s"$root/state", 3, 0.5, 64,
-              gcAfterFold = true)
-            else Streams.ccStoreStep(s"$root/state", 3, 0.5, 64,
-              maxLabelDeltas = 1, maxPostingGens = 0, gcAfterFold = true)
-          val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            (batch, epoch) => {
-              // the CC step and the curation-state block are INDEPENDENT
-              // (disjoint state dirs, both derive from the delivered
-              // batch only; every write on both sides is an epoch-keyed
-              // idempotent overwrite, so a crash in either re-delivers
-              // the epoch and re-runs both) — overlapped, guide §2.6
-              graft.util.Par.run(
-                () => ccStep(batch, epoch),
-                () => {
-                  // curation state: epoch-keyed idempotent overwrites,
-                  // the same re-delivery contract as the CC stores; the
-                  // two delta writes both read the pinned scored batch
-                  // and land disjoint dirs — overlapped too
-                  graft.util.Pin.scope { pins =>
-                    val sb = pins(scoredOf(batch))
-                    graft.util.Par.run(
-                      () => scoredStore.writeDelta(sb, epoch),
-                      () => censusStore.writeDelta(censusOf(sb), epoch))
-                  }
-                  // census fold on the shared seam (fold-lag rule: cover
-                  // epochs <= epoch-1 only; skip when a base already
-                  // reached the fold point — the re-delivered-epoch
-                  // guard)
-                  val foldPoint = epoch - 1
-                  val g = censusStore.latestCompleteBase()
-                  if (g < foldPoint &&
-                      censusStore.completeDeltaEpochs(g, epoch).size > 1) {
-                    censusStore.writeBase(censusStore.unionView(s, epoch)
-                      .groupBy("source", "q_micro").agg(sum("c").as("c")),
-                      foldPoint)
-                    censusStore.gc(); ()
-                  }
-                })
-            }
-          val q = Streams.start(demoIngest(s, schema, root, reduced))(
-            _.option("checkpointLocation", s"$root/ckpt").foreachBatch(step))
-          try q.processAllAvailable() finally q.stop()
-          if (!reduced) require(censusStore.latestCompleteBase() >= 1,
-            "the census fold did not fire mid-stream")
-          // ---- serve: cut the training snapshot from state only ----
-          val snapshot = incrementalCurationServe(
-            Streams.ccStoreLabels(s, s"$root/state"),
-            scoredStore.unionView(s),
-            censusStore.unionView(s)
-              .groupBy("source", "q_micro").agg(sum("c").as("c")))
-          // ---- ...and LAND it (r17 verdict #5): the q254 treatment
-          // inside the same run — one file per shard dir, and the query
-          // RETURNS the read-back, so the oracle hash pins the disk
-          // round trip trainers actually consume, not the pre-write view
-          writeShardSnapshot(snapshot, s"$root/snapshot")
+      (s, dir, reduced) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
+        nBuckets = 64, kill = false, midStreamFolds = true, reduced,
+        staged = Seq("doc_id", "source", "text"),
+        compose = root => curationSidecar(root,
+          _.select(col("doc_id"), col("source"), qualityMicro.as("q_micro"),
+            size(split(col("text"), " ", -1)).cast("long").as("n_tok")),
+          col("q_micro")) { (labels, scored, census) =>
+          // ---- serve: cut the training snapshot from state only, and
+          // LAND it (r17 verdict #5): the q254 treatment inside the same
+          // run — one file per shard dir, and the query RETURNS the
+          // read-back, so the oracle hash pins the disk round trip
+          // trainers actually consume, not the pre-write view
+          writeShardSnapshot(incrementalCurationServe(labels, scored, census),
+              s"$root/snapshot")
             .orderBy("doc_id")
             .pin() // materialize before the state dir dies
-        } finally {
-          graft.util.Dirs.rmTree(root)
-        }
-      },
+        }),
       Some(s"""WITH RECURSIVE $ccOracleCte,
         |q AS (SELECT doc_id, source,
         |  CAST(floor((0.4 * least(1.0, len(string_split(text, ' ')) / 50.0)
@@ -2433,74 +2427,66 @@ object PipelineQueries {
     // (delta-sized builds, the |V|-row label view streams), and
     // recomputes coreness on the component-closed subgraph only. All
     // writes are epoch-keyed idempotent overwrites (the re-delivery
-    // contract); folds obey the fold-lag rule on the shared GenStore
-    // seam. No kill/restart leg — q261/q262 + Round16Spec own that
+    // contract); folds go through GenStore.foldIfDue (the fold-lag
+    // rule), and the loop is ccStoreLoopRun's. No kill/restart leg — q261/q262 + Round16Spec own that
     // proof; this query's claim is incremental graph depth at one
     // stream's cost. Oracle = q248's full-graph recompute over the
     // accumulated corpus: batch-boundary independence for coreness.
     QueryDef.demo("q264_stream_incremental_coreness",
-      (s, dir, reduced) => {
-        import graft.streaming.Streams
+      (s, dir, reduced) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
+        nBuckets = 64, kill = false, midStreamFolds = true, reduced,
+        threshold = 0.3, compose = root => {
         import graft.util.GenStore
-        val docs = Tables.documents(s, dir)
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_inc_core").toString
-        try {
-          val pairStore = GenStore(s"$root/state/core/pairs_base",
-            s"$root/state/core/pairs")
-          val coreStore = GenStore(s"$root/state/core/core_base",
-            s"$root/state/core/core")
+        val pairStore = GenStore(s"$root/state/core/pairs_base",
+          s"$root/state/core/pairs")
+        val coreStore = GenStore(s"$root/state/core/core_base",
+          s"$root/state/core/core")
+        // the pair state's one layout: hive-partitioned by pb = pmod(i, 64)
+        def writePairs(pairs: DataFrame, path: String): Unit =
+          pairs.repartition(col("pb")).write.mode("overwrite")
+            .partitionBy("pb").parquet(path)
+        // latest-epoch-wins per id — the shared GenStore merge (one
+        // implementation, r18 review); no probe hint needed: core
+        // deltas are component-sized and the demo serve reads once
+        def coreView(sess: org.apache.spark.sql.SparkSession, bound: Long) =
+          coreStore.latestWinsView(sess, bound, "id")
+        CcCompose(
           // init rides ccStoreInit's onInitPairs seam: ONE materialized
           // pair set feeds the pairs base, the coreness base, and the CC
           // label base (which commits last = the init guard, so a torn
           // init re-runs whole — heal-on-redelivery, r17 ADVICE #3).
-          // The ingest staging is independent of all of it (disjoint
-          // $root/in) and overlaps the whole init (guide §2.6).
-          var schema: org.apache.spark.sql.types.StructType = null
-          graft.util.Par.run(
-            () => schema = DevTiming("demo", "q264 stage-ingest")(
-              stageCcIngest(s, docs, root)),
-            () => DevTiming("demo", "q264 init: postings+pairs+coreness bases")(
-              Streams.ccStoreInit(docs.filter(col("doc_id") % 5 =!= 0),
-                s"$root/state", k = 3, threshold = 0.3, nBuckets = 64,
-                onInitPairs = Some { pairs =>
-                  // both base writes read the checkpointed pair set and
-                  // write disjoint stores — overlapped (guide §2.6); the
-                  // label base (the init guard) still commits last,
-                  // inside ccStoreInit
-                  DevTiming("demo",
-                      "q264 init: pairs+coreness bases (overlapped)")(
-                    graft.util.Par.run(
-                      () => bucketedPairs(pairs, 64).repartition(col("pb"))
-                        .write.mode("overwrite").partitionBy("pb")
-                        .parquet(pairStore.basePath(-1)),
-                      () => coreStore.writeBase(Graph.coreness(pairs
-                          .select(col("i").as("src"), col("j").as("dst"))),
-                        -1)))
-                })))
-          // latest-epoch-wins per id — the shared GenStore merge (one
-          // implementation, r18 review); no probe hint needed: core
-          // deltas are component-sized and the demo serve reads once
-          def coreView(bound: Long): org.apache.spark.sql.DataFrame =
-            coreStore.latestWinsView(s, bound, "id")
-          val onPairs: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            (pairs, epoch) => DevTiming("demo", s"q264 epoch $epoch onPairs") {
+          onInitPairs = Some { pairs =>
+            // both base writes read the checkpointed pair set and
+            // write disjoint stores — overlapped (guide §2.6); the
+            // label base (the init guard) still commits last,
+            // inside ccStoreInit
+            DevTiming("demo", "q264 init: pairs+coreness bases (overlapped)")(
+              graft.util.Par.run(
+                () => writePairs(bucketedPairs(pairs, 64),
+                  pairStore.basePath(-1)),
+                () => coreStore.writeBase(Graph.coreness(pairs
+                    .select(col("i").as("src"), col("j").as("dst"))),
+                  -1)))
+          },
+          onEpochPairs = (pairs, epoch) =>
+            DevTiming("demo", s"q264 epoch $epoch onPairs") {
+              val sess = pairs.sparkSession
               // an epoch whose batch pairs with NOTHING changes no
               // component and no coreness: skip both delta writes
               // entirely (append-only content — a missing epoch is
               // simply nothing to add; idempotent under re-delivery)
               val nPairs = pairs.count()
               if (nPairs > 0) graft.util.Pin.scope { pins =>
-              val labelsPost = Streams.ccStoreLabelsView(s,
-                s"$root/state", epoch + 1)
+              val labelsPost = graft.streaming.Streams.ccStoreLabelsView(
+                sess, s"$root/state", epoch + 1)
               // broadcast hints COUNT-GUARDED (the r16/r17 merge-storm
               // discipline): a batch bridging into a megacomponent makes
               // ends pair-delta-sized and affected component-sized —
               // past the cap the hint drops and the planner falls back
               // to a shuffle join, correct-but-slower for that epoch.
               // Counts are cheap: pairs and affected are checkpointed.
-              val cap = Streams.CcLabelBroadcastMaxRows
-              def hint(df: org.apache.spark.sql.DataFrame, n: Long) =
+              val cap = graft.streaming.Streams.CcLabelBroadcastMaxRows
+              def hint(df: DataFrame, n: Long) =
                 if (n <= cap) broadcast(df) else df
               val ends = pairs.select(col("i").as("id"))
                 .unionAll(pairs.select(col("j").as("id"))).distinct()
@@ -2534,7 +2520,7 @@ object PipelineQueries {
               // re-delivery), which decouples it from the delta WRITE and
               // lets the two run overlapped (guide §2.6).
               val affEdges = pruneToPairBuckets(
-                  pairStore.unionView(s, epoch), hit)
+                  pairStore.unionView(sess, epoch), hit)
                 .unionAll(bucketedPairs(pairs.select("i", "j"), 64)
                   .filter(col("pb").isInCollection(hit)).drop("pb"))
                 .join(hint(affected.select(col("id").as("i")), nAff),
@@ -2542,59 +2528,31 @@ object PipelineQueries {
               DevTiming("demo", s"q264 epoch $epoch pair delta + coreness " +
                   "(overlapped)")(
                 graft.util.Par.run(
-                  () => bucketedPairs(pairs.select("i", "j"), 64)
-                    .repartition(col("pb")).write.mode("overwrite")
-                    .partitionBy("pb").parquet(pairStore.deltaPath(epoch)),
+                  () => writePairs(bucketedPairs(pairs.select("i", "j"), 64),
+                    pairStore.deltaPath(epoch)),
                   () => coreStore.writeDelta(pins.adopt(Graph.coreness(
                       affEdges.select(col("i").as("src"), col("j").as("dst")))),
                     epoch)))
               }
-              // threshold fold + GC (fold-lag rule: cover <= epoch-1
-              // only; skip when a base already reached the fold point)
-              val foldPoint = epoch - 1
-              val pg = pairStore.latestCompleteBase()
-              if (pg < foldPoint &&
-                  pairStore.completeDeltaEpochs(pg, epoch).size > 1) {
-                pairStore.unionView(s, epoch)
-                  .repartition(col("pb")).write.mode("overwrite")
-                  .partitionBy("pb").parquet(pairStore.basePath(foldPoint))
+              // threshold folds + GC on the shared seam
+              pairStore.foldIfDue(epoch)(_.size > 1) { g =>
+                writePairs(pairStore.unionView(sess, epoch),
+                  pairStore.basePath(g))
                 pairStore.gc(); ()
               }
-              val cg = coreStore.latestCompleteBase()
-              if (cg < foldPoint &&
-                  coreStore.completeDeltaEpochs(cg, epoch).size > 1) {
-                coreStore.writeBase(coreView(epoch), foldPoint)
+              coreStore.foldIfDue(epoch)(_.size > 1) { g =>
+                coreStore.writeBase(coreView(sess, epoch), g)
                 coreStore.gc(); ()
               }
-            }
-          // bench depth: production fold cadence + one trigger; full
-          // depth folds aggressively so the serve reads across fold
-          // boundaries
-          val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            if (reduced) Streams.ccStoreStep(s"$root/state", 3, 0.3, 64,
-              gcAfterFold = true, onEpochPairs = onPairs)
-            else Streams.ccStoreStep(s"$root/state", 3, 0.3, 64,
-              maxLabelDeltas = 1, maxPostingGens = 0, gcAfterFold = true,
-              onEpochPairs = onPairs)
-          val q = Streams.start(demoIngest(s, schema, root, reduced))(
-            _.option("checkpointLocation", s"$root/ckpt").foreachBatch(step))
-          DevTiming("demo", "q264 stream (ccStoreStep incl. onPairs)")(
-            try q.processAllAvailable() finally q.stop())
-          if (!reduced) {
-            require(pairStore.latestCompleteBase() >= 1,
-              "the pair fold did not fire mid-stream")
-            require(coreStore.latestCompleteBase() >= 1,
-              "the coreness fold did not fire mid-stream")
-          }
-          DevTiming("demo", "q264 serve: coreness view")(
-            coreView(Long.MaxValue)
+              ()
+            },
+          serve = _ => DevTiming("demo", "q264 serve: coreness view")(
+            coreView(s, Long.MaxValue)
               .select(col("id").as("doc_id"), col("coreness"))
               .orderBy("doc_id")
-              .pin()) // materialize before the root dies
-        } finally {
-          graft.util.Dirs.rmTree(root)
-        }
-      },
+              .pin()), // materialize before the root dies
+          folds = Seq("pair" -> pairStore, "coreness" -> coreStore))
+      }),
       Some(TextQueries.fullCorenessOracleSql)),
 
     // ---- the TOKENIZED training tail, composed end to end (r18 #4) ----
@@ -2808,15 +2766,14 @@ object PipelineQueries {
     // ---- the tokenized tail INCREMENTAL on the v2 store (r19 #5) ----
     // q263's serve stops at doc-level serpentine striping; the
     // trainer-consumable artifact had a batch recipe (q267/q269) but no
-    // incremental one. Same state discipline as q263 — the v2 CC store
-    // (ccStoreStep at the curation threshold 0.5: delta label writes,
-    // merge-on-read view, mid-stream folds + GC) + the quality-census
-    // GenStore (grid-sized deltas; >1-delta threshold fold + GC on the
-    // non-union seam) — plus the DOCS store: the per-epoch ingest LANDED
-    // as delta parquet (the corpus never rewrites; production's ingested
-    // files ARE this store). No scored store: the serve must read the
-    // corpus store anyway to tokenize, so q_micro is recomputed from the
-    // stored text while the CUT still comes from census STATE
+    // incremental one. Same state as q263 — the v2 CC store at the
+    // curation threshold 0.5 plus the same curation sidecar
+    // (curationSidecar: the census GenStore and its fold), whose rows
+    // store here holds the DOCS: the per-epoch ingest LANDED as delta
+    // parquet (production's ingested files ARE this store). No scored
+    // store: the serve must read the corpus store anyway to tokenize, so
+    // q_micro is recomputed from the stored text while the CUT still
+    // comes from census STATE
     // (grid-bounded, maintained incrementally). The SERVE is the batch
     // tail re-expressed over state views: survivors = merge-on-read
     // labels filtered to min-id reps ⋈ broadcast census quintile cut →
@@ -2832,102 +2789,23 @@ object PipelineQueries {
     // that proof; this query's claim is the composition at one stream's
     // cost.
     QueryDef.demo("q270_stream_tokenized_tail",
-      (s, dir, reduced) => {
-        import graft.streaming.Streams
-        import graft.util.GenStore
-        val docs = Tables.documents(s, dir)
-        val isNew = col("doc_id") % 5 === 0
-        def censusOf(d: org.apache.spark.sql.DataFrame) =
-          d.select(col("source"), qualityMicro.as("q_micro"))
-            .groupBy("source", "q_micro").agg(count(lit(1)).as("c"))
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_inc_tok").toString
-        try {
-          val docsStore = GenStore(s"$root/state/tok/docs_base",
-            s"$root/state/tok/docs", "g=", "epoch=")
-          val censusStore = GenStore(s"$root/state/tok/census_base",
-            s"$root/state/tok/census", "g=", "epoch=")
-          // stage ∥ CC-store init ∥ docs/census-store init — disjoint
-          // dirs, independent guards, heal-on-redelivery each (the q263
-          // argument verbatim); internal ordering contracts stay inside
-          // their branches
-          var schema: org.apache.spark.sql.types.StructType = null
-          graft.util.Par.run(
-            () => schema = stageCcIngest(s, docs, root,
-              cols = Seq("doc_id", "source", "text")),
-            () => Streams.ccStoreInit(docs.filter(!isNew), s"$root/state",
-              k = 3, nBuckets = 64),
-            () => if (!java.nio.file.Files.exists(java.nio.file.Paths
-                .get(docsStore.basePath(-1), "_SUCCESS"))) {
-              graft.util.Pin.scope { pins =>
-                val init =
-                  pins(docs.filter(!isNew).select("doc_id", "source", "text"))
-                // census base FIRST (the q263 heal-on-redelivery ordering:
-                // the guard keys on the docs base's _SUCCESS, so the
-                // marker it checks must be the LAST write)
-                censusStore.writeBase(censusOf(init), -1)
-                docsStore.writeBase(init, -1)
-              }
-            })
-          val ccStep: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            if (reduced) Streams.ccStoreStep(s"$root/state", 3, 0.5, 64,
-              gcAfterFold = true)
-            else Streams.ccStoreStep(s"$root/state", 3, 0.5, 64,
-              maxLabelDeltas = 1, maxPostingGens = 0, gcAfterFold = true)
-          val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            (batch, epoch) => {
-              // CC step ∥ docs/census block — independent state dirs,
-              // both derive from the delivered batch only, every write
-              // an epoch-keyed idempotent overwrite (the q263 overlap
-              // argument verbatim; guide §2.6)
-              graft.util.Par.run(
-                () => ccStep(batch, epoch),
-                () => {
-                  // epoch-keyed idempotent overwrites, the re-delivery
-                  // contract shared with every store in the loop; the
-                  // two delta writes read the pinned batch and land
-                  // disjoint dirs — overlapped too
-                  graft.util.Pin.scope { pins =>
-                    val b = pins(batch.select("doc_id", "source", "text"))
-                    graft.util.Par.run(
-                      () => docsStore.writeDelta(b, epoch),
-                      () => censusStore.writeDelta(censusOf(b), epoch))
-                  }
-                  // census fold (fold-lag rule: cover <= epoch-1 only;
-                  // skip when a base already reached the fold point)
-                  val foldPoint = epoch - 1
-                  val g = censusStore.latestCompleteBase()
-                  if (g < foldPoint &&
-                      censusStore.completeDeltaEpochs(g, epoch).size > 1) {
-                    censusStore.writeBase(censusStore.unionView(s, epoch)
-                      .groupBy("source", "q_micro").agg(sum("c").as("c")),
-                      foldPoint)
-                    censusStore.gc(); ()
-                  }
-                })
-            }
-          val q = Streams.start(demoIngest(s, schema, root, reduced))(
-            _.option("checkpointLocation", s"$root/ckpt").foreachBatch(step))
-          try q.processAllAvailable() finally q.stop()
-          if (!reduced) require(censusStore.latestCompleteBase() >= 1,
-            "the census fold did not fire mid-stream")
+      (s, dir, reduced) => ccStoreLoopRun(s, Tables.documents(s, dir), k = 3,
+        nBuckets = 64, kill = false, midStreamFolds = true, reduced,
+        staged = Seq("doc_id", "source", "text"),
+        compose = root => curationSidecar(root,
+          _.select("doc_id", "source", "text"), qualityMicro) {
+          (labels, docsAll, census) =>
           // ---- serve: the batch tail over state views only ----
-          val docsAll = docsStore.unionView(s)
-          val labels = Streams.ccStoreLabels(s, s"$root/state")
-          val cuts = censusQuintileCuts(censusStore.unionView(s)
-            .groupBy("source", "q_micro").agg(sum("c").as("c")))
           val kept = poolSurvivors(
-              docsAll.withColumn("q_micro", qualityMicro), labels, cuts)
+              docsAll.withColumn("q_micro", qualityMicro), labels,
+              censusQuintileCuts(census))
             .select("doc_id", "source", "text")
           writeShardSnapshot(
               shardParallelTokenizedSnapshot(docsAll, kept),
               s"$root/snapshot")
             .orderBy("doc_id", "chunk_idx")
             .pin() // materialize before the state dir dies
-        } finally {
-          graft.util.Dirs.rmTree(root)
-        }
-      },
+        }),
       Some(shardParallelTailOracleSql))
   )
 

@@ -651,11 +651,7 @@ object ScaleOpsQueries {
             .orderBy("i", "j")
             .pin() // materialize before the state dir dies
         } finally {
-          scala.util.Using.resource(java.nio.file.Files
-              .walk(java.nio.file.Paths.get(state))) { w =>
-            w.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          }
+          graft.util.Dirs.rmTree(state)
         }
       },
       Some("""WITH docs AS (SELECT doc_id, string_split(text, ' ') w FROM documents),

@@ -20,13 +20,7 @@ object SourceQueries {
   private val scratchRoot: java.nio.file.Path = {
     val p = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), s"graft_scratch_${ProcessHandle.current().pid()}")
-    sys.addShutdownHook {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(p))
-        Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-    }
+    sys.addShutdownHook(graft.util.Dirs.rmTree(p.toString))
     p
   }
 

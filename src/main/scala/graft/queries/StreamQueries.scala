@@ -383,10 +383,7 @@ object StreamQueries {
                 .as("sum_ewma_micro"))
             .orderBy("user_id").pin()
         } finally {
-          scala.util.Using.resource(java.nio.file.Files.walk(outRoot)) { w =>
-            w.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          }
+          graft.util.Dirs.rmTree(outRoot.toString)
         }
       },
       Some(s"""WITH RECURSIVE base AS (

@@ -1340,10 +1340,7 @@ object VectorQueries {
               col("vec_id") % 50 === 0, IvfPqRerank)
             .orderBy("qid", "rn").pin()
         } finally {
-          scala.util.Using.resource(java.nio.file.Files.walk(idxDir)) { w =>
-            w.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          }
+          graft.util.Dirs.rmTree(idxDir.toString)
         }
       },
       Some(s"""WITH $ivfPqCtes
@@ -1850,10 +1847,7 @@ object VectorQueries {
             .orderBy("qid", "rn").pin()
           finally index.unpersist(blocking = false)
         } finally {
-          scala.util.Using.resource(java.nio.file.Files.walk(idxDir)) { w =>
-            w.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          }
+          graft.util.Dirs.rmTree(idxDir.toString)
         }
       },
       Some(s"""WITH ${ivfPqSearchCtesWith(twoLevelAsgpCtes,
@@ -1959,10 +1953,7 @@ object VectorQueries {
             .orderBy("vec_id").pin()
         } finally {
           index.unpersist(blocking = false)
-          scala.util.Using.resource(java.nio.file.Files.walk(outRoot)) { w =>
-            w.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          }
+          graft.util.Dirs.rmTree(outRoot.toString)
         }
       },
       Some(s"""WITH $twoLevelAsgpCtes,
@@ -2062,10 +2053,7 @@ object VectorQueries {
           finally merged.unpersist(blocking = false)
         } finally {
           index0.unpersist(blocking = false)
-          scala.util.Using.resource(java.nio.file.Files.walk(outRoot)) { w =>
-            w.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          }
+          graft.util.Dirs.rmTree(outRoot.toString)
         }
       },
       Some(streamIngestAppendOracleSql)),
@@ -2448,11 +2436,7 @@ object VectorQueries {
             .orderBy("qid", "rn").pin()
         } finally {
           index.unpersist(blocking = false)
-          scala.util.Using.resource(java.nio.file.Files
-              .walk(java.nio.file.Paths.get(root))) { w =>
-            w.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          }
+          graft.util.Dirs.rmTree(root)
         }
       },
       Some(externalSearchOracleSql)),
@@ -2504,11 +2488,7 @@ object VectorQueries {
             .orderBy("qid", "rn").pin()
           finally index.unpersist(blocking = false)
         } finally {
-          scala.util.Using.resource(java.nio.file.Files
-              .walk(java.nio.file.Paths.get(root))) { w =>
-            w.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          }
+          graft.util.Dirs.rmTree(root)
         }
       },
       Some(s"""WITH $ivfPqCtes
@@ -2540,94 +2520,7 @@ object VectorQueries {
     // drops, content identical, a crashed fold's _SUCCESS-less dir is
     // invisible, GC removes exactly the out-of-view dirs).
     QueryDef.demo("q253_compaction_policy_stream",
-      (s, dir, reduced) => {
-        val emb = Tables.embeddings(s, dir)
-        val cells = math.max(8L, emb.count() / 100L).toInt
-        val nCoarse = math.max(4, math.ceil(math.sqrt(cells.toDouble)).toInt)
-        val isNew = col("vec_id") >= cells && col("vec_id") % 5 === 0
-        val old = emb.filter(!isNew)
-        val coarse = Similarity.ivfCoarseCentroids(old, nCoarse)
-          .pin()
-        val froute = Similarity
-          .routeFineCentroids(Similarity.ivfCentroids(old, cells), coarse)
-          .pin()
-        val routing = Similarity.TwoLevel(coarse, froute, 2)
-        val index0 = Similarity.buildIvfPqIndexWith(old, routing,
-            SemDedupProbes)
-          .persist()
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_compact_policy").toString
-        try {
-          // base generation, deliberately fragmented — the store starts
-          // where a naive wide writer leaves it
-          // base-generation write ∥ ingest staging — disjoint dirs,
-          // independent inputs (guide §2.6)
-          var schema: org.apache.spark.sql.types.StructType = null
-          graft.util.Par.run(
-            () => index0.repartition(12).write.mode("overwrite")
-              .parquet(s"$root/store/gens/g=-1"),
-            () => schema = stageVecIngest(s, emb.filter(isNew), root))
-          val corpProbes = index0.select(col("vec_id").as("nid"),
-            explode(col("cells")).as("cell"), col("v").as("nv"))
-          // demo-depth tiering (r16 verdict #7, extended to the vector
-          // stores): bench depth delivers the staged files in ONE
-          // trigger — the screen is vs the STATIC base index and
-          // appends/compaction are row-preserving, so the final view is
-          // batch-boundary independent (the oracle's own argument); the
-          // compaction policy still fires mid-stream at this depth (base
-          // is fragmented to 12 > 10 files, so the FIRST append folds —
-          // the require()s below hold at either depth). Full depth keeps
-          // the 3-epoch deltas-land-on-compacted-generation exercise.
-          val ingest = PipelineQueries.demoIngest(s, schema, root, reduced)
-          val events =
-            new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]
-          val step: (org.apache.spark.sql.DataFrame, Long) => Unit =
-            (batch, epoch) => graft.util.Pin.scope { pins =>
-              val b = pins(batch)
-              val asg = routing.assign(Similarity.asV(b), SemDedupProbes)
-              val dupIds = Similarity
-                .cellLocalScreen(asg, corpProbes, SemDedupTau)
-                .select(col("vec_id").as("dup_id")).distinct()
-              val survivors = b.join(dupIds,
-                col("vec_id") === col("dup_id"), "left_anti")
-              Similarity.buildIvfPqIndexWith(survivors, routing,
-                  SemDedupProbes)
-                .repartition(3)
-                .write.mode("overwrite")
-                .parquet(s"$root/store/deltas/epoch=$epoch")
-              Similarity.compactStoreIfNeeded(s, s"$root/store",
-                  maxFiles = 10L, targetFiles = 2, epoch)
-                .foreach { case (bf, af) => events.add((epoch, bf, af)); () }
-            }
-          val q = Streams.start(ingest)(_.foreachBatch(step))
-          try q.processAllAvailable() finally q.stop()
-          import scala.jdk.CollectionConverters._
-          val ev = events.asScala.toSeq.sortBy(_._1)
-          // the policy must have fired MID-stream (a delta landed after
-          // the fold) and actually shrunk the view — otherwise this query
-          // is just q246 wearing a stream
-          require(ev.nonEmpty && ev.head._1 < 2,
-            s"compaction policy did not fire mid-stream (events: $ev)")
-          require(ev.forall { case (_, bf, af) => af < bf },
-            s"compaction did not shrink the view (events: $ev)")
-          // GC the folded-away dirs; the search below proves the view
-          // (and thus the result) is invariant across the deletion
-          val gced = Similarity.gcStore(s"$root/store")
-          require(gced > 0, "gc removed nothing after a committed fold")
-          val merged = Similarity.indexStoreView(s, s"$root/store").persist()
-          try Similarity.ivfPqSearchIndexed(merged, 5,
-              col("vec_id") % 49 === 0, IvfPqRerank)
-            .orderBy("qid", "rn").pin()
-          finally merged.unpersist(blocking = false)
-        } finally {
-          index0.unpersist(blocking = false)
-          scala.util.Using.resource(java.nio.file.Files
-              .walk(java.nio.file.Paths.get(root))) { w =>
-            w.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          }
-        }
-      },
+      (s, dir, reduced) => vecStoreLoopRun(s, dir, reduced, killAt = None),
       Some(streamIngestAppendOracleSql)),
 
     // ---- multimodal: shared-segment graph → k-core over MEDIA ---------
@@ -2834,101 +2727,124 @@ object VectorQueries {
     // uninterrupted store. Disk-faithful screen: the dedup screen reads
     // the PERSISTED base generation, not an in-memory handle — a
     // restarted driver has nothing else (the coarse/fine routing tables
-    // would likewise reload from their persisted copies). Search over
-    // the recovered view is hash-exact vs q235/q253's shared oracle.
+    // would likewise reload from their persisted copies). The recovered
+    // store is GC'd as q253's is, and the search over it is hash-exact
+    // vs q235/q253's shared oracle.
     QueryDef.demo("q259_store_restart_resume",
-      (s, dir, reduced) => {
-        val emb = Tables.embeddings(s, dir)
-        val cells = math.max(8L, emb.count() / 100L).toInt
-        val nCoarse = math.max(4, math.ceil(math.sqrt(cells.toDouble)).toInt)
-        val isNew = col("vec_id") >= cells && col("vec_id") % 5 === 0
-        val old = emb.filter(!isNew)
-        val coarse = Similarity.ivfCoarseCentroids(old, nCoarse)
-          .pin()
-        val froute = Similarity
-          .routeFineCentroids(Similarity.ivfCentroids(old, cells), coarse)
-          .pin()
-        val routing = Similarity.TwoLevel(coarse, froute, 2)
-        val index0 = Similarity.buildIvfPqIndexWith(old, routing,
-            SemDedupProbes)
-          .persist()
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_store_restart").toString
-        try {
-          // base-generation write ∥ ingest staging — disjoint dirs,
-          // independent inputs (guide §2.6)
-          var schema: org.apache.spark.sql.types.StructType = null
-          graft.util.Par.run(
-            () => index0.repartition(12).write.mode("overwrite")
-              .parquet(s"$root/store/gens/g=-1"),
-            () => schema = stageVecIngest(s, emb.filter(isNew), root))
-          val baseGen = s.read.parquet(s"$root/store/gens/g=-1")
-          val corpProbes = baseGen.select(col("vec_id").as("nid"),
-            explode(col("cells")).as("cell"), col("v").as("nv"))
-          val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
-          def step(kill: Boolean)
-              : (org.apache.spark.sql.DataFrame, Long) => Unit =
-            (batch, epoch) => graft.util.Pin.scope { pins =>
-              val b = pins(batch)
-              val asg = routing.assign(Similarity.asV(b), SemDedupProbes)
-              val dupIds = Similarity
-                .cellLocalScreen(asg, corpProbes, SemDedupTau)
-                .select(col("vec_id").as("dup_id")).distinct()
-              val survivors = b.join(dupIds,
-                col("vec_id") === col("dup_id"), "left_anti")
-              Similarity.buildIvfPqIndexWith(survivors, routing,
-                  SemDedupProbes)
-                .repartition(3)
-                .write.mode("overwrite")
-                .parquet(s"$root/store/deltas/epoch=$epoch")
-              if (kill && epoch == 1L && armed.compareAndSet(true, false))
-                throw new IllegalStateException("injected kill: epoch 1 " +
-                  "died after its delta write, before the fold policy ran")
-              Similarity.compactStoreIfNeeded(s, s"$root/store",
-                maxFiles = 10L, targetFiles = 2, epoch)
-              ()
-            }
-          // demo-depth tiering (r16 verdict #7, extended to the vector
-          // stores — the q252 treatment): bench depth runs ONE
-          // uninterrupted one-trigger stream (the kill + restart leg is
-          // a correctness-run exercise; screen vs the static base,
-          // row-local appends and a row-preserving fold make the final
-          // view batch-boundary independent — the oracle's own
-          // argument). Full depth (Verify/ScalaTest) keeps the
-          // 3-micro-batch kill + checkpoint-restart demonstration.
-          def start(kill: Boolean) =
-            Streams.start(PipelineQueries.demoIngest(s, schema, root, reduced))(
-              _.option("checkpointLocation", s"$root/ckpt").foreachBatch(step(kill)))
-          if (reduced) {
-            val q = start(kill = false)
-            try q.processAllAvailable() finally q.stop()
-          } else {
-            val q1 = start(kill = true)
-            val died =
-              try { q1.processAllAvailable(); false }
-              catch { case _: Throwable => true }
-              finally q1.stop()
-            require(died && !armed.get,
-              "the injected epoch-1 kill did not fire")
-            val q2 = start(kill = false)
-            try q2.processAllAvailable() finally q2.stop()
-          }
-          val merged = Similarity.indexStoreView(s, s"$root/store").persist()
-          try Similarity.ivfPqSearchIndexed(merged, 5,
-              col("vec_id") % 49 === 0, IvfPqRerank)
-            .orderBy("qid", "rn").pin()
-          finally merged.unpersist(blocking = false)
-        } finally {
-          index0.unpersist(blocking = false)
-          scala.util.Using.resource(java.nio.file.Files
-              .walk(java.nio.file.Paths.get(root))) { w =>
-            w.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          }
-        }
-      },
+      (s, dir, reduced) => vecStoreLoopRun(s, dir, reduced,
+        killAt = Some(1L)),
       Some(streamIngestAppendOracleSql))
   )
+
+  /** The vector-store append stream — the one loop body of q253 and
+    * q259. Routes the corpus through a two-level IVF-PQ table and writes
+    * the base generation deliberately fragmented (12 files > the
+    * policy's threshold 10, so the FIRST append folds at any SF — the
+    * store starts where a naive wide writer leaves it) ∥ stages the
+    * 3-epoch ingest (disjoint dirs, independent inputs — guide §2.6).
+    * Each epoch screens the batch against the PERSISTED base generation
+    * (disk-faithful: a restarted driver has nothing else), appends the
+    * survivors as the epoch's delta (an idempotent overwrite keyed by
+    * epoch), and runs the compaction policy
+    * ([[Similarity.compactStoreIfNeeded]]). After the stream it
+    * require()s that the policy fired MID-stream and shrank the view
+    * (otherwise the demo is just q246 wearing a stream), GCs the
+    * folded-away dirs ([[Similarity.gcStore]]) and require()s that
+    * something went, then searches the view — so the oracle hash pins
+    * search invariance across the mid-stream fold, the GC and, with a
+    * kill, the restart.
+    *
+    * `killAt` (q259): at full depth the first leg dies at that epoch
+    * after its delta write, before the policy runs — the store's nastiest
+    * partial-commit point — and the stream resumes from the checkpoint.
+    * `reduced` bench depth ([[QueryDef.benchFn]]) runs ONE uninterrupted
+    * one-trigger stream: the screen is vs the static base, appends are
+    * row-local and the fold row-preserving, so the final view is
+    * batch-boundary independent (the oracle's own argument), and the
+    * policy still fires on the first append.
+    */
+  private def vecStoreLoopRun(s: org.apache.spark.sql.SparkSession,
+      dir: String, reduced: Boolean, killAt: Option[Long])
+      : org.apache.spark.sql.DataFrame = {
+    val emb = Tables.embeddings(s, dir)
+    val cells = math.max(8L, emb.count() / 100L).toInt
+    val nCoarse = math.max(4, math.ceil(math.sqrt(cells.toDouble)).toInt)
+    val isNew = col("vec_id") >= cells && col("vec_id") % 5 === 0
+    val old = emb.filter(!isNew)
+    val coarse = Similarity.ivfCoarseCentroids(old, nCoarse)
+      .pin()
+    val froute = Similarity
+      .routeFineCentroids(Similarity.ivfCentroids(old, cells), coarse)
+      .pin()
+    val routing = Similarity.TwoLevel(coarse, froute, 2)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_vec_store").toString
+    try {
+      val store = s"$root/store"
+      var schema: org.apache.spark.sql.types.StructType = null
+      graft.util.Par.run(
+        () => Similarity.buildIvfPqIndexWith(old, routing, SemDedupProbes)
+          .repartition(12).write.mode("overwrite")
+          .parquet(s"$store/gens/g=-1"),
+        () => schema = stageVecIngest(s, emb.filter(isNew), root))
+      val corpProbes = s.read.parquet(s"$store/gens/g=-1")
+        .select(col("vec_id").as("nid"), explode(col("cells")).as("cell"),
+          col("v").as("nv"))
+      val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+      val events =
+        new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Long)]
+      def step(kill: Option[Long])
+          : (org.apache.spark.sql.DataFrame, Long) => Unit =
+        (batch, epoch) => graft.util.Pin.scope { pins =>
+          val b = pins(batch)
+          val asg = routing.assign(Similarity.asV(b), SemDedupProbes)
+          val dupIds = Similarity
+            .cellLocalScreen(asg, corpProbes, SemDedupTau)
+            .select(col("vec_id").as("dup_id")).distinct()
+          val survivors = b.join(dupIds,
+            col("vec_id") === col("dup_id"), "left_anti")
+          Similarity.buildIvfPqIndexWith(survivors, routing, SemDedupProbes)
+            .repartition(3)
+            .write.mode("overwrite")
+            .parquet(s"$store/deltas/epoch=$epoch")
+          if (kill.contains(epoch) && armed.compareAndSet(true, false))
+            throw new IllegalStateException(s"injected kill: epoch $epoch " +
+              "died after its delta write, before the fold policy ran")
+          Similarity.compactStoreIfNeeded(s, store,
+              maxFiles = 10L, targetFiles = 2, epoch)
+            .foreach { case (bf, af) => events.add((epoch, bf, af)); () }
+        }
+      def start(kill: Option[Long]) =
+        Streams.start(PipelineQueries.demoIngest(s, schema, root, reduced))(
+          _.option("checkpointLocation", s"$root/ckpt")
+            .foreachBatch(step(kill)))
+      if (killAt.nonEmpty && !reduced) {
+        val q1 = start(killAt)
+        val died =
+          try { q1.processAllAvailable(); false }
+          catch { case _: Throwable => true }
+          finally q1.stop()
+        require(died && !armed.get, "the injected kill did not fire")
+      }
+      val q = start(None)
+      try q.processAllAvailable() finally q.stop()
+      import scala.jdk.CollectionConverters._
+      val ev = events.asScala.toSeq.sortBy(_._1)
+      require(ev.nonEmpty && ev.head._1 < 2,
+        s"compaction policy did not fire mid-stream (events: $ev)")
+      require(ev.forall { case (_, bf, af) => af < bf },
+        s"compaction did not shrink the view (events: $ev)")
+      require(Similarity.gcStore(store) > 0,
+        "gc removed nothing after a committed fold")
+      val merged = Similarity.indexStoreView(s, store).persist()
+      try Similarity.ivfPqSearchIndexed(merged, 5,
+          col("vec_id") % 49 === 0, IvfPqRerank)
+        .orderBy("qid", "rn").pin()
+      finally merged.unpersist(blocking = false)
+    } finally {
+      graft.util.Dirs.rmTree(root)
+    }
+  }
 
   /** Stage the q253/q259 vector ingest: the streamed embeddings split
     * into 3 single-file epochs (pmod(vec_id, 3)) under `$root/in`, so

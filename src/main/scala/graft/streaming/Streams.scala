@@ -662,7 +662,8 @@ object Streams {
   // a replayable source plus epoch-keyed idempotent writes gives
   // exactly-once output. q252/q260/q261 kill their own stream and resume
   // on a fresh session; Round15Spec pins killed ≡ uninterrupted. Folds add
-  // one rule: a fold at epoch E covers epochs <= E-1 ONLY (named
+  // one rule, owned by graft.util.GenStore.foldIfDue (every fold below
+  // goes through it): a fold at epoch E covers epochs <= E-1 ONLY (named
   // g = E-1). Inside foreachBatch at E every epoch < E is
   // checkpoint-committed (in-order single-stream file source), so nothing
   // at or below the fold point can ever re-deliver — a re-delivered E
@@ -821,10 +822,9 @@ object Streams {
   def ccStoreLabelsView(s: SparkSession, stateRoot: String,
       bound: Long): DataFrame = {
     val st = ccLabelStore(stateRoot)
-    val updRows = st.completeDeltaEpochs(st.latestCompleteBase(bound), bound)
-      .map(e => st.deltaRows(s, e)).sum
     st.latestWinsView(s, bound, "id",
-      if (updRows <= CcLabelBroadcastMaxRows) broadcast(_) else identity)
+      if (st.liveDeltaRows(s, bound) <= CcLabelBroadcastMaxRows) broadcast(_)
+      else identity)
   }
 
   /** The current label table (post-stream serving read). */
@@ -834,9 +834,10 @@ object Streams {
   /** Threshold fold: when more than `maxDeltas` unfolded delta epochs —
     * or, for labels, more than `maxLabelDeltaRows` unfolded delta ROWS —
     * sit past a store's fold point, materialize its view at
-    * `bound = epoch` into base g = epoch−1 (covering epochs <= epoch−1
-    * ONLY — see the recovery rule above). The row trigger is the merge-
-    * storm valve (r16 verdict #1): an epoch-count bound never notices one
+    * `bound = epoch` into base g = epoch−1 through
+    * [[graft.util.GenStore.foldIfDue]], which owns the fold-lag rule and
+    * the re-delivered-epoch guard. The row trigger is the merge-storm
+    * valve (r16 verdict #1): an epoch-count bound never notices one
     * component-sized update delta, so the fold ALSO fires when the `_rows`
     * sidecar sum crosses the threshold — at the step after a storm the
     * huge delta folds into a base and the label view returns to the
@@ -844,40 +845,25 @@ object Streams {
     * [[CcLabelBroadcastMaxRows]] aligns the two policies: the view only
     * ever shuffles for the single epoch a storm is live in. Pass
     * `Long.MaxValue` to disable the row trigger (bench comparators that
-    * time the fold separately). Skipped when a complete base at or past
-    * the fold point exists (the re-delivered-epoch guard). Returns the
-    * stores folded this call, for the caller's logs/specs.
+    * time the fold separately). Returns the stores folded this call, for
+    * the caller's logs/specs.
     */
   def ccStoreFoldIfNeeded(s: SparkSession, stateRoot: String, epoch: Long,
       nBuckets: Int, maxLabelDeltas: Int, maxPostingGens: Int,
       maxLabelDeltaRows: Long = CcLabelBroadcastMaxRows): Seq[String] = {
-    val foldPoint = epoch - 1
-    val folded = scala.collection.mutable.ArrayBuffer.empty[String]
-    // the unfolded delta epochs of a store, None when its base already
-    // reached the fold point (the re-delivered-epoch guard)
-    def unfolded(st: graft.util.GenStore): Option[Seq[Long]] = {
-      val g = st.latestCompleteBase()
-      if (g >= foldPoint) None else Some(st.completeDeltaEpochs(g, epoch))
-    }
     val lab = ccLabelStore(stateRoot)
-    val labDue = unfolded(lab).exists(es => es.size > maxLabelDeltas ||
-      es.map(e => lab.deltaRows(s, e)).sum > maxLabelDeltaRows)
-    if (labDue) {
-      lab.writeBase(ccStoreLabelsView(s, stateRoot, epoch), foldPoint)
-      folded += "labels"
-    }
     val post = ccPostingStore(stateRoot)
-    if (unfolded(post).exists(_.size > maxPostingGens)) {
-      writePostingGen(ccStorePostingsView(s, stateRoot, epoch),
-        post.basePath(foldPoint), nBuckets)
-      folded += "postings"
-    }
     val siz = ccSizeStore(stateRoot)
-    if (unfolded(siz).exists(_.size > maxPostingGens)) {
-      siz.writeBase(ccStoreSizesView(s, stateRoot, epoch), foldPoint)
-      folded += "sizes"
-    }
-    folded.toSeq
+    Seq(
+      "labels" -> lab.foldIfDue(epoch)(es => es.size > maxLabelDeltas ||
+          lab.liveDeltaRows(s, epoch) > maxLabelDeltaRows)(
+        lab.writeBase(ccStoreLabelsView(s, stateRoot, epoch), _)),
+      "postings" -> post.foldIfDue(epoch)(_.size > maxPostingGens)(g =>
+        writePostingGen(ccStorePostingsView(s, stateRoot, epoch),
+          post.basePath(g), nBuckets)),
+      "sizes" -> siz.foldIfDue(epoch)(_.size > maxPostingGens)(
+        siz.writeBase(ccStoreSizesView(s, stateRoot, epoch), _))
+    ).collect { case (name, true) => name }
   }
 
   /** One maintenance epoch — the foreachBatch body. Shingles the batch

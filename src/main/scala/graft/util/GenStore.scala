@@ -31,7 +31,9 @@ import org.apache.spark.sql.types.StructType
   *     epoch < E is checkpoint-committed before E runs, so nothing at or
   *     below the fold point can ever re-deliver — a re-delivered E reads
   *     the folded base, which is content-identical to the pre-fold view
-  *     it read on the first attempt.
+  *     it read on the first attempt. [[foldIfDue]] is the one
+  *     implementation: every epoch-lagged store fold (the CC stores, the
+  *     demos' sidecar stores) goes through it.
   *   - [[gc]] deletes exactly what left every retained read path:
   *     superseded bases, _SUCCESS-less base stubs (crash leftovers — no
   *     fold is in flight under the run-from-the-step contract), and
@@ -183,6 +185,32 @@ final case class GenStore(baseDir: String, deltaDir: String,
     }
   }
 
+  /** The fold-lag rule, once: at epoch `epoch` the fold point is
+    * `epoch − 1`. The fold is skipped when the latest COMPLETE base
+    * already reached it (the re-delivered-epoch guard: a torn base
+    * without `_SUCCESS` does not count, so its fold re-runs and
+    * overwrites it); otherwise `due` sees the complete delta epochs in
+    * (g, epoch), sorted, and when it holds `write` lands the view at
+    * bound `epoch` as base generation `epoch − 1`. Returns whether it
+    * folded. Driver-side dir listings only; launches no job itself.
+    */
+  def foldIfDue(epoch: Long)(due: Seq[Long] => Boolean)(
+      write: Long => Unit): Boolean = {
+    val foldPoint = epoch - 1
+    val g = latestCompleteBase()
+    val folds = g < foldPoint && due(completeDeltaEpochs(g, epoch))
+    if (folds) write(foldPoint)
+    folds
+  }
+
+  /** Rows in the live deltas of the view at `bound` — the sum of their
+    * `_rows` sidecars ([[deltaRows]]; driver-side file reads, no job
+    * while every sidecar is present).
+    */
+  def liveDeltaRows(s: SparkSession, bound: Long): Long =
+    completeDeltaEpochs(latestCompleteBase(bound), bound)
+      .map(deltaRows(s, _)).sum
+
   /** Data-file count of the CURRENT view (not the whole root — folded
     * deltas and superseded bases are out of the read path and must not
     * retrigger compaction). Driver-side walk; generation counts are
@@ -231,8 +259,6 @@ final case class GenStore(baseDir: String, deltaDir: String,
 
   // ---- GC ----
 
-  private def rmTree(dir: String): Unit = Dirs.rmTree(dir)
-
   /** Delete what left every RETAINED read path: bases older than the
     * newest `retainBases` complete ones, _SUCCESS-less base stubs, and
     * deltas at or below the oldest retained base (a reader holding base b
@@ -248,10 +274,10 @@ final case class GenStore(baseDir: String, deltaDir: String,
     var removed = 0
     listBases(requireSuccess = false)
       .filter(e => e < oldestKept || !completeSet(e)).foreach { e =>
-        rmTree(basePath(e)); removed += 1
+        Dirs.rmTree(basePath(e)); removed += 1
       }
     listDeltas(requireSuccess = false).filter(_ <= oldestKept).foreach { e =>
-      rmTree(deltaPath(e)); removed += 1
+      Dirs.rmTree(deltaPath(e)); removed += 1
     }
     removed
   }

@@ -14,6 +14,11 @@ import graft.util.{Dirs, GenStore}
   * declared schema, and the hinted and unhinted probes. Round16Spec runs
   * the same comparison over whole `ccStoreStep` streams.
   *
+  * `GenStore.foldIfDue`, the fold-lag rule every epoch-lagged store
+  * fold goes through: fold point E−1, a trigger over exactly the
+  * complete deltas in (g, E), the re-delivered-epoch skip and the torn
+  * base that does not count.
+  *
   * The write path's file-count rule ([[GenStore.fileCount]]): a tiny
   * delta lands as one file, a pinned exploded frame whose plan estimate
   * undercounts it still lands as at least one file per target bytes, a
@@ -103,6 +108,58 @@ class GenStoreMergeSpec extends SparkSpec {
       // fold epochs <= 1 into base g=1: deltas 0 and 1 leave the merge
       store.latestWinsView(spark, 2, "id").write.parquet(store.basePath(1))
       assertSameAsWindow(store, "after a fold")
+    } finally Dirs.rmTree(root)
+  }
+
+  test("foldIfDue folds into g = E-1, shows its trigger exactly the " +
+      "complete deltas in (g, E), skips a re-delivered E once a complete " +
+      "base is at E-1, and re-runs over a torn base at E-1") {
+    val root = tempRoot("fold")
+    try {
+      val store = GenStore(s"$root/base", s"$root/upd", "g=", "batch=",
+        Some(LabelSchema))
+      stage(store, "label") // base g=-1, complete deltas 0, 1, 2
+      def put(rows: Seq[(Long, Long)], e: Long): Unit =
+        rows.toDF("id", "label").write.parquet(store.deltaPath(e))
+      // a torn epoch-3 delta, complete deltas 4 and 5 (5 is the epoch
+      // being stepped: written before its fold runs, never in the fold)
+      put(Seq((1L, 13L)), 3)
+      java.nio.file.Files.delete(
+        java.nio.file.Paths.get(store.deltaPath(3), "_SUCCESS"))
+      put(Seq((2L, 14L), (22L, 14L)), 4)
+      put(Seq((1L, 15L)), 5)
+      assert(store.liveDeltaRows(spark, 3) == 8L, "rows of deltas 0..2")
+      val seen = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
+      def fold(e: Long): Boolean = store.foldIfDue(e) { es =>
+        seen += es; es.size > 1
+      }(g => store.writeBase(store.latestWinsView(spark, e, "id"), g))
+      val want = sortedRows(store.latestWinsView(spark, 5, "id"))
+      def base4 = sortedRows(store.read(spark, store.basePath(4)))
+
+      assert(fold(5), "four live deltas and a > 1 trigger: the fold is due")
+      assert(seen.toSeq == Seq(Seq(0L, 1L, 2L, 4L)),
+        "the trigger must see the complete deltas in (-1, 5) only")
+      assert(store.latestCompleteBase() == 4L, "the fold point is E-1")
+      assert(base4 == want, "the folded base differs from the view at E")
+      assert(store.liveDeltaRows(spark, 6) == 1L, "only delta 5 is live")
+
+      // a re-delivered epoch 5 (and a later step at 4 <= g) reads the
+      // base at the fold point: no trigger call, no write
+      assert(!fold(5) && !fold(4) && seen.size == 1,
+        "a complete base at E-1 must skip the fold")
+
+      // a crash mid-fold: base 4 holds other rows and no _SUCCESS — it
+      // is not complete, so the re-delivered epoch folds again over it
+      Seq((7L, 99L)).toDF("id", "label").write.mode("overwrite")
+        .parquet(store.basePath(4))
+      java.nio.file.Files.delete(
+        java.nio.file.Paths.get(store.basePath(4), "_SUCCESS"))
+      assert(store.latestCompleteBase() == -1L)
+      assert(fold(5), "a torn base at E-1 must not count")
+      assert(seen.last == Seq(0L, 1L, 2L, 4L) && seen.size == 2)
+      assert(store.latestCompleteBase() == 4L && base4 == want,
+        "the re-run fold must overwrite the torn base")
+      assert(!fold(5), "and a second re-delivery skips again")
     } finally Dirs.rmTree(root)
   }
 

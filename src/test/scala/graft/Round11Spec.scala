@@ -149,10 +149,7 @@ class Round11Spec extends SparkSpec {
     } finally {
       index.unpersist(blocking = false)
       Seq(srcDir, outDir).foreach { d =>
-        scala.util.Using.resource(java.nio.file.Files.walk(d)) { w =>
-          w.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        graft.util.Dirs.rmTree(d.toString)
       }
     }
   }

@@ -68,11 +68,7 @@ class Round14Spec extends SparkSpec {
         s"scan read $prunedFiles files for $hit hit buckets — partition " +
           "pruning did not reach the scan")
     } finally {
-      scala.util.Using.resource(
-          java.nio.file.Files.walk(java.nio.file.Paths.get(state))) { w =>
-        w.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      graft.util.Dirs.rmTree(state)
     }
   }
 
@@ -155,11 +151,7 @@ class Round14Spec extends SparkSpec {
       assert(before.nonEmpty && before.length == emb.count() * 2)
       assert(after.sameElements(before))
     } finally {
-      scala.util.Using.resource(java.nio.file.Files
-          .walk(java.nio.file.Paths.get(root))) { w =>
-        w.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      graft.util.Dirs.rmTree(root)
     }
   }
 

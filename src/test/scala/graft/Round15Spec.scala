@@ -136,11 +136,7 @@ class Round15Spec extends SparkSpec {
       assert(java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$store/deltas/epoch=2")))
     } finally {
-      scala.util.Using.resource(java.nio.file.Files
-          .walk(java.nio.file.Paths.get(root))) { w =>
-        w.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      graft.util.Dirs.rmTree(root)
     }
   }
 
@@ -190,11 +186,7 @@ class Round15Spec extends SparkSpec {
         s"token spread ${per.map(_._2).max - per.map(_._2).min} exceeds " +
           s"the largest doc ($maxDoc)")
     } finally {
-      scala.util.Using.resource(java.nio.file.Files
-          .walk(java.nio.file.Paths.get(root))) { w =>
-        w.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      graft.util.Dirs.rmTree(root)
     }
   }
 }

@@ -67,12 +67,7 @@ class Round16Spec extends SparkSpec {
     graft.streaming.Streams.ccStoreLabels(spark, s"$root/state")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
 
-  private def rmTree(root: String): Unit =
-    scala.util.Using.resource(java.nio.file.Files
-        .walk(java.nio.file.Paths.get(root))) { w =>
-      w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    }
+  import graft.util.Dirs.rmTree
 
   private def dirNames(p: String): Set[String] = {
     val path = java.nio.file.Paths.get(p)

@@ -9,12 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class Round17Spec extends SparkSpec {
 
-  private def rmTree(root: String): Unit =
-    scala.util.Using.resource(java.nio.file.Files
-        .walk(java.nio.file.Paths.get(root))) { w =>
-      w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    }
+  import graft.util.Dirs.rmTree
 
   private def exists(p: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(p))

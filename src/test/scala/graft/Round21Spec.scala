@@ -17,7 +17,10 @@ import org.apache.spark.sql.functions._
   *     run moves the stamp and its own entries fold raw;
   *   - the set of runnable mains under src/main is exactly the driver
   *     contract plus the spec-driven drivers: measurements go through
-  *     Bench and perfbench/, never a new per-round harness main.
+  *     Bench and perfbench/, never a new per-round harness main;
+  *   - one owner per seam, by source scan: checkpoints only in Pin,
+  *     delta-epoch listings (the fold-lag rule) only in GenStore, tree
+  *     deletes only in Dirs, stream starts only through Streams.start.
   */
 class Round21Spec extends SparkSpec {
 
@@ -45,10 +48,7 @@ class Round21Spec extends SparkSpec {
         s"released reliable pin kept ${checkpointEntries(dir)}")
     } finally {
       spark.conf.unset(graft.util.Pin.ModeConf)
-      scala.util.Using.resource(java.nio.file.Files.walk(dir)) { w =>
-        w.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      }
+      graft.util.Dirs.rmTree(dir.toString)
     }
   }
 
@@ -129,10 +129,7 @@ class Round21Spec extends SparkSpec {
     assert(field("cal_min") === 0.05)
     assert(field("q1") === 0.3)
     assert(field("q2") === 1.0)
-    scala.util.Using.resource(java.nio.file.Files.walk(dir)) { w =>
-      w.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    }
+    graft.util.Dirs.rmTree(dir.toString)
   }
 
   /** Every `.scala` file under src/main, with its text. */
@@ -188,18 +185,42 @@ class Round21Spec extends SparkSpec {
     assert(hits.isEmpty, hits.mkString("system property writes:\n", "\n", ""))
   }
 
+  /** `file:line: text` of every src/main line matching `call`, outside
+    * the one file allowed to hold it.
+    */
+  private def callsOutside(call: scala.util.matching.Regex,
+      owner: String): List[String] = mainSources.flatMap { case (f, src) =>
+    if (f.getFileName.toString == owner) Nil
+    else src.linesIterator.zipWithIndex.collect {
+      case (l, i) if call.findFirstIn(l).isDefined => s"$f:${i + 1}: ${l.trim}"
+    }
+  }
+
   test("src/main pins only through graft.util.Pin: no checkpoint call " +
       "outside it") {
     // Pin decides the storage and owns the release; a checkpoint made
     // around it would pick its own storage, and no scope would free it
-    val call = """\blocalCheckpoint\(|\.checkpoint\(""".r
-    val hits = mainSources.flatMap { case (f, src) =>
-      if (f.getFileName.toString == "Pin.scala") Nil
-      else src.linesIterator.zipWithIndex.collect {
-        case (l, i) if call.findFirstIn(l).isDefined => s"$f:${i + 1}: ${l.trim}"
-      }
-    }
+    val hits = callsOutside("""\blocalCheckpoint\(|\.checkpoint\(""".r,
+      "Pin.scala")
     assert(hits.isEmpty, hits.mkString("checkpoints outside Pin:\n", "\n", ""))
+  }
+
+  test("src/main folds only through GenStore.foldIfDue: no delta-epoch " +
+      "arithmetic outside GenStore") {
+    // the fold-lag rule (fold point E-1, skip once a complete base is
+    // there) lives in GenStore; a caller listing delta epochs itself is
+    // writing the rule out again
+    val hits = callsOutside("""completeDeltaEpochs\(""".r, "GenStore.scala")
+    assert(hits.isEmpty, hits.mkString("delta-epoch listings outside " +
+      "GenStore:\n", "\n", ""))
+  }
+
+  test("src/main deletes directory trees only through Dirs.rmTree") {
+    // Dirs.rmTree is the walk + reverse-order delete, and a missing root
+    // is a no-op there instead of a throw from a finally
+    val hits = callsOutside("""Comparator\.reverseOrder""".r, "Dirs.scala")
+    assert(hits.isEmpty, hits.mkString("tree deletes outside Dirs:\n",
+      "\n", ""))
   }
 
   test("src/main starts every streaming query through Streams.start") {
